@@ -22,7 +22,7 @@ object BenchSome {
     spark.sparkContext.setLogLevel("WARN")
     // same warmup as Bench
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    spark.read.parquet(s"$sfDir/documents.parquet").limit(64)
+    graft.sources.Corpus.table(spark, sfDir, "documents").limit(64)
       .selectExpr("doc_id", "explode(split(text, '\\\\s+')) AS tok")
       .where("tok != '' AND tok RLIKE '^[a-z]+$'")
       .groupBy("tok").count()

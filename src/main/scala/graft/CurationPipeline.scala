@@ -83,7 +83,7 @@ object CurationPipeline {
     // would. Map-only; unrepairable damage passes through untouched (the
     // mojibake_stats audit still reports it).
     val rawSurvivors = graft.operators.Curation.fixMojibakeStage(
-      spark.read.parquet(s"$sfDir/documents.parquet")
+      graft.sources.Corpus.table(spark, sfDir, "documents")
         .join(survivors, "doc_id"))
       .drop("mojibake_repaired")
     // stage 1.25 (when on): C4 content rules FIRST (the map-only line
@@ -135,7 +135,7 @@ object CurationPipeline {
       .collect()(0).getLong(0)
 
     val manifest = (Map(
-      "raw_docs" -> spark.read.parquet(s"$sfDir/documents.parquet").count(),
+      "raw_docs" -> graft.sources.Corpus.table(spark, sfDir, "documents").count(),
       "curated_docs" -> spark.read.parquet(s"$corpusDir/documents.parquet").count(),
       "exported_docs" -> exportDocs)
       ++ stageCounts)

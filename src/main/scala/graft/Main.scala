@@ -57,7 +57,7 @@ object Main {
     try names.foreach { name =>
       val df =
         if (sqlMode) {
-          graft.sources.Tables.register(spark, sfDir)
+          graft.sources.Corpus.register(spark, sfDir)
           spark.sql(what)
         } else SparkEntry.queries(name)(spark, sfDir)
       outDir match {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.TextFns._
+import graft.sources.Corpus
 
 /** The reference's product pipeline (anagram groups over a corpus), §2 #1-14,
   * re-expressed as declarative Spark plans. One wide transform end-to-end:
@@ -16,9 +17,6 @@ import graft.functions.TextFns._
   * sharing one signature (≤ dozens). See SURVEY.md §4.
   */
 object Anagrams {
-
-  def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   /** Clean words WITHOUT any distinct: the downstream `collect_set` dedups
     * (map-side partially, then globally), so the anagram plan needs exactly
@@ -47,7 +45,7 @@ object Anagrams {
     * and six downstream queries read a frame that fits in one executor. */
   def cleanWords(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(vocabCache, spark, dir)(
-      cleanWordsOf(docs(spark, dir)).persist(StorageLevel.MEMORY_AND_DISK))
+      cleanWordsOf(Corpus.table(spark, dir, "documents")).persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Signature → sorted distinct word set. Two-stage: dedup words first
     * (shuffle on word, map-side partial — shuffle bytes ≈ distinct words
@@ -88,14 +86,14 @@ object Anagrams {
 
   // ---- #1 ingest: pushed-filter + pruned-column scan --------------------
   def ingestDocuments(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(col("doc_id"), col("source"), col("n_chars"))
+    Corpus.table(spark, dir, "documents").select(col("doc_id"), col("source"), col("n_chars"))
       .where(col("n_chars") > 0)
   val ingestDocumentsSql =
     "SELECT doc_id, source, n_chars FROM documents WHERE n_chars > 0"
 
   // ---- #2 byte→string normalization (mapphase/split.go:78-87) -----------
   def utf8Normalize(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Corpus.table(spark, dir, "documents").select(
       col("doc_id"),
       md5(decode(encode(col("text"), "UTF-8"), "UTF-8")).as("text_md5"),
     )
@@ -104,7 +102,7 @@ object Anagrams {
   // ---- #2b Unicode NFC normalization (custom expression; DuckDB twin is
   // the native nfc_normalize) ---------------------------------------------
   def normalizeUnicode(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Corpus.table(spark, dir, "documents").select(
       col("doc_id"),
       md5(org.apache.spark.sql.graft.NormalizeNfc(col("text"))).as("nfc_md5"),
       length(org.apache.spark.sql.graft.NormalizeNfc(col("text"))).cast("long").as("nfc_len"))
@@ -115,7 +113,7 @@ object Anagrams {
 
   // ---- #3 Gutenberg header/footer strip (mapphase/split.go:90-116) ------
   def stripGutenbergQ(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Corpus.table(spark, dir, "documents").select(
       col("doc_id"),
       length(stripGutenberg(col("text"))).cast("long").as("stripped_len"),
       md5(stripGutenberg(col("text"))).as("stripped_md5"),
@@ -128,7 +126,7 @@ object Anagrams {
 
   // ---- #4 tokenize (mapphase/split.go:68) -------------------------------
   def tokenize(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), WsTokenRe)).as("token"))
       .where(col("token") =!= "")
   val tokenizeSql =
@@ -142,7 +140,7 @@ object Anagrams {
   // no (doc, word) exchange. Population guard (≥1 token) matches the
   // explode+groupBy form.
   def docUniqueWords(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), filter(
         transform(split(col("text"), WsTokenRe), t => lower(t)),
         t => t =!= "").as("toks"))
@@ -158,7 +156,7 @@ object Anagrams {
 
   // ---- #6 partition sizing (mapphase/split.go:137-161); rows-only -------
   def partitionStats(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).repartition(32)
+    Corpus.table(spark, dir, "documents").repartition(32)
       .groupBy(spark_partition_id().as("pid"))
       .agg(count(lit(1)).as("n_docs"))
 
@@ -180,7 +178,7 @@ object Anagrams {
   // the query is a map-only projection (the relational form needed a
   // (doc, word)-distinct exchange plus a (doc, sig) aggregation exchange).
   def combinePerDoc(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
         explode(org.apache.spark.sql.graft.SigGroups(
           split(col("text"), WsTokenRe), Stopwords)).as("g"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Corpus
 
 /** Byte-level BPE (SURVEY.md §2 #25t-m..o) — the GPT-family production
   * tokenizer base. The char-level families (`bpe_*`, `unigram_*`,
@@ -25,9 +26,6 @@ import org.apache.spark.sql.functions._
   * back to corpus grain. */
 object Bbpe {
 
-  private def docs(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   /** Raw whitespace tokens, NO lowercasing, NO alphabet filter — the
     * byte-level contract (case carries information a byte-level vocab
     * keeps; `termCounts` would fold it). */
@@ -42,7 +40,7 @@ object Bbpe {
     * materialized once per (session, corpus). */
   private[operators] def wordFreq(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(wordFreqCache, spark, dir)(
-      docs(spark, dir)
+      Corpus.table(spark, dir, "documents")
         .select(explode(rawToks(col("text"))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("freq"))
         .select(col("word"), col("freq"),
@@ -172,7 +170,7 @@ object Bbpe {
         }.toDF("word", "n_bytes", "n_syms")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), explode(rawToks(col("text"))).as("word"))
       .join(encodedVocab, Seq("word"))
       .groupBy(col("doc_id"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Corpus
 
 /** TRAINED document classification (SURVEY.md §2 #38) — the supervised
   * complement of the heuristic `lang_id` profile gate: a multinomial
@@ -34,9 +35,6 @@ import org.apache.spark.sql.functions._
   * across engines.
   */
 object Classify {
-
-  private def docs(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   /** Per-(doc, token) occurrence counts under the shared tokenizer —
     * the corpus-sized frame both training and scoring read; materialized
@@ -77,9 +75,9 @@ object Classify {
     val ct = tc.groupBy(col("lang").as("c"), col("t"))
       .agg(sum(col("cnt")).as("n"))
     // class table: doc prior + token-mass normalizer (|classes| rows)
-    val nDocs = docs(spark, dir).count()
+    val nDocs = Corpus.table(spark, dir, "documents").count()
     val vocab = tc.select("t").distinct().count()
-    val cls = docs(spark, dir).groupBy(col("lang").as("c"))
+    val cls = Corpus.table(spark, dir, "documents").groupBy(col("lang").as("c"))
       .agg(count(lit(1)).as("c_docs"))
       .join(ct.groupBy("c").agg(sum(col("n")).as("c_toks")), "c")
       .select(col("c"),
@@ -101,7 +99,7 @@ object Classify {
     // text tokenizes to NOTHING still gets a row — len=0 makes the
     // normalizer term vanish and it scores on the class prior alone, so
     // "classification of every document" holds literally.
-    val base = docs(spark, dir).select(col("doc_id"), col("lang"))
+    val base = Corpus.table(spark, dir, "documents").select(col("doc_id"), col("lang"))
       .join(tc.groupBy(col("doc_id")).agg(sum(col("cnt")).as("len")),
         Seq("doc_id"), "left")
       .na.fill(0L, Seq("len"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns._
+import graft.sources.Corpus
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
   * between raw ingest and training (SURVEY.md §2 #25i-25k): segment-level
@@ -18,9 +19,6 @@ import graft.functions.TextFns._
   * never leaves its row).
   */
 object Curation {
-
-  private def docs(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   private def toks = filter(
     transform(split(col("text"), WsTokenRe), t => lower(t)), t => t =!= "")
@@ -47,7 +45,7 @@ object Curation {
     transform(segStrArr, s => md5Long(s))
 
   private[operators] def segments(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), toks.as("toks"))
       .where(size(col("toks")) >= 1)
       // join/count key is the shared 60-bit md5, not the segment text:
@@ -82,7 +80,7 @@ object Curation {
     * segment's rows all land in one partition but are bounded by its
     * corpus count, which trimming itself caps the damage of). */
   def trimSegments(spark: SparkSession, dir: String): DataFrame = {
-    val segsP = docs(spark, dir)
+    val segsP = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), toks.as("toks"))
       .where(size(col("toks")) >= 1)
       .select(col("doc_id"), posexplode(segStrArr).as(Seq("pos", "seg")))
@@ -139,7 +137,7 @@ object Curation {
     * adversarial all-duplicate-lines doc costs its own line count, capped
     * by doc length — no cross-doc amplification by construction). */
   def trimRepeatedLines(spark: SparkSession, dir: String): DataFrame =
-    trimRepeatedLinesOf(docs(spark, dir))
+    trimRepeatedLinesOf(Corpus.table(spark, dir, "documents"))
 
   /** [[trimRepeatedLines]] over any (doc_id, text) frame — what
     * CurationPipeline calls on the SURVIVOR-joined corpus so the explode/
@@ -205,7 +203,7 @@ object Curation {
     * the doc-keyed rebuild — the honest price of corpus-wide line
     * identity. */
   def trimCommonLines(spark: SparkSession, dir: String): DataFrame = {
-    val lines = docs(spark, dir)
+    val lines = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
         posexplode(split(col("text"), "\n", -1)).as(Seq("pos", "line")))
       .withColumn("lh", md5Long(col("line")))
@@ -257,7 +255,7 @@ object Curation {
     * `trim_common_lines`, because blank/boilerplate paragraphs are real
     * hot keys at 100 TB. */
   def trimCommonParagraphs(spark: SparkSession, dir: String): DataFrame = {
-    val paras = docs(spark, dir)
+    val paras = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
         posexplode(split(col("text"), "\n\n", -1)).as(Seq("pos", "para")))
       .withColumn("ph", md5Long(col("para")))
@@ -334,7 +332,7 @@ object Curation {
       (length(t) - length(replace(t, lit("?"))))).cast("long")
 
   def c4LineFilters(spark: SparkSession, dir: String): DataFrame =
-    c4LineFiltersOf(docs(spark, dir))
+    c4LineFiltersOf(Corpus.table(spark, dir, "documents"))
 
   /** [[c4LineFilters]] over any (doc_id, text) frame — what
     * CurationPipeline calls on the survivor-joined corpus. */
@@ -423,7 +421,7 @@ object Curation {
     * the per-doc rollup reuses the same partitioning. The 8-byte hash
     * ships instead of paragraph text. No cross-doc amplification. */
   def paragraphRepetition(spark: SparkSession, dir: String): DataFrame = {
-    val paras = docs(spark, dir)
+    val paras = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
         explode(filter(split(col("text"), "\n\n", -1), p => trim(p) =!= ""))
           .as("p"))
@@ -517,7 +515,7 @@ object Curation {
     // twice and cost 16 s steady — this shape is ZERO-exchange (the only
     // post-scan operator is the 6-rows-per-doc explode) and the 100 TB
     // story collapses to "runs at scan speed".
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), toks.as("toks"))
       .where(size(col("toks")) >= 1)
       .select(col("doc_id"),
@@ -613,7 +611,7 @@ object Curation {
       .groupBy("doc_id")
       .agg(sum(when(col("viol"), 1L).otherwise(0L)).as("nv"),
         min(when(col("viol"), col("n"))).as("mn"))
-    docs(spark, dir).select("doc_id")
+    Corpus.table(spark, dir, "documents").select("doc_id")
       .join(v, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("nv"), lit(0L)).as("n_violations"),
@@ -810,7 +808,7 @@ object Curation {
   private[operators] def splitLabel(u: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     when(u < SplitTrainBp, "train").when(u < SplitValBp, "val").otherwise("test")
   def trainSplit(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), col("source"), splitU.as("u"))
       .withColumn("split", splitLabel(col("u")))
 
@@ -824,7 +822,7 @@ object Curation {
     * are bounded frames and the corpus total is a 1-row UNCONDITIONED
     * broadcast. */
   def splitBalance(spark: SparkSession, dir: String): DataFrame = {
-    val cells = docs(spark, dir)
+    val cells = Corpus.table(spark, dir, "documents")
       .select(col("lang"), splitLabel(splitU).as("split"))
       .groupBy(col("split"), col("lang")).agg(count(lit(1)).as("n_docs"))
     val ws = org.apache.spark.sql.expressions.Window.partitionBy("split")
@@ -927,7 +925,7 @@ object Curation {
 
   def curatedCorpus(spark: SparkSession, dir: String): DataFrame = {
     val cap = broadcastDocCap(spark)
-    val kept = docs(spark, dir)
+    val kept = Corpus.table(spark, dir, "documents")
       .where(col("doc_id") >= ContamProbeDocs)
       // ONE codegen'd pass per row scores quality and all five language
       // profiles (TokenProfileHits) — no token array materializes
@@ -980,7 +978,7 @@ object Curation {
     * frame) cross-joined as 1-row frames — no corpus-sized shuffle beyond
     * the term frame it reuses. */
   def corpusCard(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Corpus.table(spark, dir, "documents")
     val base = d.select(col("doc_id"), col("lang"), col("source"),
         col("n_chars"), md5Long(col("text")).as("th"),
         TextAnalysis.qualityBpFrom(TextAnalysis.profileCol).as("q"))
@@ -1043,7 +1041,7 @@ object Curation {
   val StratModulus = 1000000L
 
   def sampleStratified(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Corpus.table(spark, dir, "documents")
     val counts = d.groupBy("lang").agg(count(lit(1)).as("n_lang"))
     val minc = counts.agg(min(col("n_lang")).as("min_lang"))
     // integral division on BOTH engines: `div` here, `//` in the oracle.
@@ -1087,7 +1085,7 @@ object Curation {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("source")
       .orderBy(md5Long(col("doc_id").cast("string")), col("doc_id"))
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), col("source"))
       .withColumn("rk", row_number().over(w).cast("long"))
       .where(col("rk") <= SourceCapN)
@@ -1112,7 +1110,7 @@ object Curation {
     * formulation, so the two shapes are proven equivalent on every run. */
   val KmvK = 8
   def kmvSample(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .groupBy(col("source"))
       .agg(org.apache.spark.sql.graft.BottomKHashes.column(
         md5Long(col("doc_id").cast("string")), col("doc_id"), KmvK).as("bk"))
@@ -1138,7 +1136,7 @@ object Curation {
     * oracle row instead of a rows-only sketch check. */
   private val KmvSpace = 1L << 60
   def kmvDistinct(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .groupBy(col("source"))
       .agg(org.apache.spark.sql.graft.BottomKHashes.column(
         md5Long(col("doc_id").cast("string")), col("doc_id"), KmvK).as("bk"))
@@ -1208,7 +1206,7 @@ object Curation {
   val ChunkStride = 24
 
   def chunkDocuments(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), toks.as("t"))
       .where(size(col("t")) >= 1)
       .select(col("doc_id"), col("t"), size(col("t")).as("n"))
@@ -1278,7 +1276,7 @@ object Curation {
   }
 
   def gopherFilters(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), toks.as("t"))
       .where(size(col("t")) > 0)
       .select(col("doc_id"),
@@ -1331,7 +1329,7 @@ object Curation {
     * with ZERO exchanges (plan-asserted in ScaleSpec) — the fused
     * expressions exist precisely so this projection stays map-only. */
   def docFeatures(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
         col("text"), TextAnalysis.toksCol.as("__toks"),
         TextAnalysis.profileCol.as("__p"))
@@ -1395,7 +1393,7 @@ object Curation {
     * entropy average through DECIMAL sums (order-insensitive, §6); the
     * dup-membership list is bounded by the pair graph and broadcasts. */
   def sourceQualityReport(spark: SparkSession, dir: String): DataFrame = {
-    val scored = docs(spark, dir)
+    val scored = Corpus.table(spark, dir, "documents")
       .select(col("source"), col("doc_id"), TextAnalysis.profileCol.as("__p"),
         col("text"))
       .where(col("__p").getField("n_toks") > 0)
@@ -1480,7 +1478,7 @@ object Curation {
   val SpanK = 20
 
   def dupSpanStats(spark: SparkSession, dir: String): DataFrame = {
-    val pos = docs(spark, dir)
+    val pos = Corpus.table(spark, dir, "documents")
       .where(length(col("text")) >= SpanK)
       .select(col("doc_id"),
         posexplode(org.apache.spark.sql.graft.ShinglePolyHash(
@@ -1500,7 +1498,7 @@ object Curation {
     // totals side reads the 2-integer-column projection (n_chars ≡
     // length(text) in this schema), not the text column — the third
     // corpus-text scan the first plan audit showed is gone
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .where(col("n_chars") >= SpanK)
       .select(col("doc_id"),
         (col("n_chars") - SpanK + 1).cast("long").as("n_positions"))
@@ -1565,7 +1563,7 @@ object Curation {
     *     sort the full corpus bytes — strictly more traffic for this
     *     fixed-threshold query. */
   def dupSpanExact(spark: SparkSession, dir: String): DataFrame = {
-    val pos = docs(spark, dir)
+    val pos = Corpus.table(spark, dir, "documents")
       .where(length(col("text")) >= SpanK)
       .select(col("doc_id"),
         posexplode(org.apache.spark.sql.graft.ShinglePolyHash(
@@ -1587,7 +1585,7 @@ object Curation {
     // the duplicated fraction of the corpus — corpus-scale at 100 TB and
     // never broadcastable.
     val cand = candPos.hint("shuffle_hash")
-      .join(docs(spark, dir).select(col("doc_id"), col("text")), Seq("doc_id"))
+      .join(Corpus.table(spark, dir, "documents").select(col("doc_id"), col("text")), Seq("doc_id"))
       .select(col("doc_id"), col("pos"),
         expr(s"substring(text, pos, $SpanK)").as("s"))
     // exact recount over the real substring, same count-over-window shape
@@ -1603,7 +1601,7 @@ object Curation {
       .groupBy("doc_id", "grp").agg(count(lit(1)).as("run"))
       .groupBy("doc_id")
       .agg(max(col("run")).as("max_run"), sum(col("run")).as("n_dup_positions"))
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .where(col("n_chars") >= SpanK)
       .select(col("doc_id"),
         (col("n_chars") - SpanK + 1).cast("long").as("n_positions"))
@@ -1655,7 +1653,7 @@ object Curation {
     * classes and every emitted ratio is exact basis points (§6). */
   def charClassStats(spark: SparkSession, dir: String): DataFrame = {
     def cnt(re: String) = regexp_count(col("text"), lit(re)).cast("long")
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .where(length(col("text")) > 0)
       .select(col("doc_id"),
         length(col("text")).cast("long").as("n_chars"),
@@ -1702,7 +1700,7 @@ object Curation {
   val PackBuckets = 32L
 
   def packSequences(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
         regexp_count(col("text"), lit("\\S+")).cast("long").as("n_tokens"))
       .where(col("n_tokens") > 0)
@@ -1747,7 +1745,7 @@ object Curation {
     * PackBuckets output rows regardless of corpus size. */
   def packStats(spark: SparkSession, dir: String): DataFrame = {
     val iDiv = org.apache.spark.sql.graft.ExactMath.intDiv _
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
         regexp_count(col("text"), lit("\\S+")).cast("long").as("n_tokens"))
       .where(col("n_tokens") > 0)
@@ -1798,7 +1796,7 @@ object Curation {
   val ShuffleSalt = "epoch-0"
 
   def trainingOrder(spark: SparkSession, dir: String): DataFrame = {
-    val keyed = docs(spark, dir).select(
+    val keyed = Corpus.table(spark, dir, "documents").select(
       col("doc_id"),
       md5Long(concat(col("doc_id").cast("string"), lit(":" + ShuffleSalt)))
         .as("shuffle_key"))
@@ -1836,7 +1834,7 @@ object Curation {
   val QualityPct = 0.25
 
   def qualityPercentileGate(spark: SparkSession, dir: String): DataFrame = {
-    val scored = docs(spark, dir)
+    val scored = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), TextAnalysis.profileCol.as("__p"))
       .where(col("__p").getField("n_toks") > 0)
       .select(col("doc_id"),
@@ -1906,7 +1904,7 @@ object Curation {
     * at any scale — the relational formulation would explode the corpus
     * into characters through two shuffles to compute a row-local value. */
   def charStats(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Corpus.table(spark, dir, "documents").select(
       col("doc_id"),
       length(col("text")).cast("long").as("n_chars"),
       size(array_distinct(filter(split(col("text"), ""), c => c =!= "")))
@@ -2021,7 +2019,7 @@ object Curation {
     import org.apache.spark.sql.graft.ExactMath.intDiv
     // deflate columns fused into the scan projection — ONE corpus scan,
     // one uniform source-keyed exchange (plan-audited r13)
-    docs(spark, dir).select(col("source") +: deflateCols(col("text")): _*)
+    Corpus.table(spark, dir, "documents").select(col("source") +: deflateCols(col("text")): _*)
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_bytes")).as("raw_bytes"),
@@ -2047,7 +2045,7 @@ object Curation {
     import org.apache.spark.sql.graft.ExactMath.intDiv
     import graft.functions.TextFns.bp
     // both verdicts are row-local projections fused into ONE corpus scan
-    val sig = docs(spark, dir).select(
+    val sig = Corpus.table(spark, dir, "documents").select(
       (TextAnalysis.qualityBpFrom(TextAnalysis.profileCol)
         >= lit(CuratedQualityMinBp)).as("qk"),
       compressionKeepCol.as("zk"))
@@ -2105,7 +2103,7 @@ object Curation {
       length(t) - length(replace(t, lit(s))), lit(s.length.toLong))
 
   def mojibakeStats(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("source"),
         occ(col("text"), Fffd).as("fffd"),
         MojibakeDoubleEncMarkers.map(occ(col("text"), _)).reduce(_ + _)
@@ -2282,7 +2280,7 @@ object Curation {
   private val SymCharRe = "[{};=()<>\\[\\]]"
 
   def codeDetect(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .where(length(col("text")) > 0)
       .select(col("doc_id"), col("text"),
         split(col("text"), "\n", -1).as("ls"),
@@ -2359,7 +2357,7 @@ object Curation {
   val WordBlocklist: Seq[String] = Seq("vector", "casino", "spam")
 
   def wordBlocklistGate(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
         filter(filter(transform(split(col("text"), WsTokenRe),
           t => lower(t)), t => t =!= ""), w => w.isin(WordBlocklist: _*))
@@ -2421,7 +2419,7 @@ object Curation {
 
   def qualityEnsemble(spark: SparkSession, dir: String): DataFrame = {
     val (g, c, f) = ensembleVotes
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), g.as("gopher_keep"), c.as("c4_keep"),
         f.as("clf_keep"))
       .withColumn("n_votes",
@@ -2505,7 +2503,7 @@ object Curation {
     val ktext = array_join(kept, "\n")
     val dropped = instr(lower(col("text")), "lorem ipsum") > 0 ||
       instr(col("text"), "{") > 0 || sentCount(ktext) < C4MinSentences
-    val byStatus = docs(spark, dir)
+    val byStatus = Corpus.table(spark, dir, "documents")
       .select(col("source"),
         when(dropped, "dropped")
           .when(ktext =!= col("text"), "changed")
@@ -2592,7 +2590,7 @@ object Curation {
     * re-keyed docs (doc_id % 101 == 7, shifted by 10⁹ — disjoint ids →
     * added), so all four statuses are live in one oracled row. */
   def corpusDiff(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Corpus.table(spark, dir, "documents")
     val next = d.where(col("doc_id") % 13 =!= 3)
       .select(col("doc_id"), col("source"),
         substring(col("text"), 1, DiffMaxChars).as("text"))

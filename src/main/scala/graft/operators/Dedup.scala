@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.TextFns._
+import graft.sources.Corpus
 
 /** LLM-pipeline deduplication (SURVEY.md §2 #15-19).
   *
@@ -17,9 +18,6 @@ import graft.functions.TextFns._
   * and survivors queries instead of being recomputed from raw text by each.
   */
 object Dedup {
-
-  private def docs(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   /** Per-(session, corpus) materialized intermediates. Local analog of
     * writing the signature table to parquet once and reading it from every
@@ -37,7 +35,7 @@ object Dedup {
 
   // ---- #15 exact dedup --------------------------------------------------
   def dedupExact(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .groupBy(sha2(col("text"), 256).as("text_hash"))
       .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"))
   val dedupExactSql: String =
@@ -52,7 +50,7 @@ object Dedup {
     * Same scale shape as #15: row-local canonicalization, one shuffle on a
     * uniform 16-byte key. */
   def dedupCanonical(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .groupBy(md5(trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " ")))
         .as("canon_hash"))
       .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"))
@@ -124,7 +122,7 @@ object Dedup {
     * snapshot, and writing it is a map-only job. */
   def sigSets(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(sigSetCache, spark, dir)(
-      docs(spark, dir)
+      Corpus.table(spark, dir, "documents")
         // same population as the explode formulation: ≥1 shingle
         .where(length(col("text")) >= ShingleK)
         .select(col("doc_id"), org.apache.spark.sql.graft.ShinglePolyHash(
@@ -961,7 +959,7 @@ object Dedup {
     * representatives (min id per component) plus all docs outside the
     * near-dup graph. This is the frame a training pipeline feeds onward. */
   def dedupSurvivors(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select("doc_id")
+    Corpus.table(spark, dir, "documents").select("doc_id")
       .join(droppedDocs(spark, dir), Seq("doc_id"), "left_anti")
   val dedupSurvivorsSql: String =
     s"""WITH comp AS (
@@ -987,7 +985,7 @@ object Dedup {
     // the pair-graph-bounded component frame — the semi-join prunes the
     // corpus BEFORE the per-doc regex profile pass, which previously ran
     // over every document on every invocation.
-    val q = docs(spark, dir)
+    val q = Corpus.table(spark, dir, "documents")
       .join(comp.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
         TextAnalysis.qualityBpFrom(TextAnalysis.profileCol).as("quality_bp"))
@@ -1039,7 +1037,7 @@ object Dedup {
     * the pruned (doc_id, source) scan; the rollup runs on ~10¹ source
     * keys with map-side partials. */
   def dupInflationBySource(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(col("doc_id"), col("source"))
+    Corpus.table(spark, dir, "documents").select(col("doc_id"), col("source"))
       .join(droppedDocs(spark, dir).withColumn("dropped", lit(1L)),
         Seq("doc_id"), "left")
       .groupBy(col("source"))
@@ -1108,7 +1106,7 @@ object Dedup {
     * a pruned (doc_id, source) scan; the agg runs on ≤|sources|² keys. */
   def dedupReport(spark: SparkSession, dir: String): DataFrame = {
     val pairs = minhashPairs(spark, dir)
-    val src = docs(spark, dir).select(col("doc_id"), col("source"))
+    val src = Corpus.table(spark, dir, "documents").select(col("doc_id"), col("source"))
     src.as("a").join(broadcast(pairs), col("doc_a") === col("a.doc_id"))
       .join(src.as("b"), col("doc_b") === col("b.doc_id"))
       .groupBy(
@@ -1328,7 +1326,7 @@ object Dedup {
     Materialized.cached(simhashCache, spark, dir) {
       val toks = array_distinct(filter(
         transform(split(col("text"), WsTokenRe), t => lower(t)), t => t =!= ""))
-      docs(spark, dir)
+      Corpus.table(spark, dir, "documents")
         .select(col("doc_id"),
           org.apache.spark.sql.graft.Simhash60(toks).as("simhash"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1407,7 +1405,7 @@ object Dedup {
     * the dashboard costs five tiny aggregations, never re-running LSH. */
   def dedupSummary(spark: SparkSession, dir: String): DataFrame = {
     def one(df: DataFrame, as: String) = df.agg(count(lit(1)).as(as))
-    val docsN = one(spark.read.parquet(s"$dir/documents.parquet"), "n_docs")
+    val docsN = one(Corpus.table(spark, dir, "documents"), "n_docs")
     val exactN = one(dedupExact(spark, dir), "n_exact_groups")
     val pairsN = one(minhashPairs(spark, dir), "n_neardup_pairs")
     val compN = one(dedupComponents(spark, dir), "n_clustered_docs")
@@ -1455,7 +1453,7 @@ object Dedup {
     * The oracle mirrors the same blocking — identical pairs both engines. */
   def dedupEmbedding(spark: SparkSession, dir: String): DataFrame = {
     // Norms once per vector (not per pair): 3× less math in the pair loop.
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = Corpus.table(spark, dir, "embeddings")
       .select(col("vec_id") +: col("embedding") +:
         sqrt(dotExpr("embedding", "embedding")).as("nrm") +:
         (0 until Similarity.NumTables).map(t =>
@@ -1588,7 +1586,7 @@ object Dedup {
     * ~20M Levenshtein calls for the SAME 64×64 distinct-name grid — the
     * benchmark-measured reason this shape is mandatory. */
   def fuzzyNamePairs(spark: SparkSession, dir: String): DataFrame = {
-    val names = spark.read.parquet(s"$dir/part.parquet")
+    val names = Corpus.table(spark, dir, "part")
       .groupBy(col("p_name").as("nm"))
       .agg(count(lit(1)).as("m"))
       .select(col("nm"), col("m"),

@@ -23,7 +23,7 @@ object Materialized {
 
   /** Register a non-DataFrame cache's reset hook so clearAll() covers it
     * (e.g. Curation's memoized broadcast-cap probe decisions). */
-  private[operators] def registerClearable(f: () => Unit): Unit =
+  private[graft] def registerClearable(f: () => Unit): Unit =
     caches.synchronized { clearables += f }
 
   /** Cache key scoped to the SparkSession INSTANCE, not just the
@@ -32,7 +32,7 @@ object Materialized {
     * session must not be served to another (ADVICE r3). The identity hash
     * disambiguates sessions within the app; applicationId separates
     * distinct local test apps that could reuse identity hashes after GC. */
-  private[operators] def sessionKey(spark: SparkSession, dir: String): (String, String) =
+  private[graft] def sessionKey(spark: SparkSession, dir: String): (String, String) =
     (spark.sparkContext.applicationId + ":" +
       java.lang.System.identityHashCode(spark).toHexString, dir)
 

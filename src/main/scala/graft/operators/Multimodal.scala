@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Corpus
 
 /** Multimodal-column plumbing (SURVEY.md §2 #26): media as opaque `binary`
   * columns with typed metadata extracted executor-side.
@@ -33,7 +34,7 @@ object Multimodal {
 
   def multimodalMeta(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("blob"))
       .as[DocBlob]
       .mapPartitions(_.map(decodeStub))
@@ -999,7 +1000,7 @@ object Multimodal {
     // query loudly instead of silently producing divergent frame hashes.
     // (DuckDB v1.0.0 has no BLOB substring/md5, so the oracle cannot be
     // switched to byte slicing instead.)
-    spark.read.parquet(s"$dir/documents.parquet")
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
         when(octet_length(col("text")) === length(col("text")),
           encode(col("text"), "UTF-8"))

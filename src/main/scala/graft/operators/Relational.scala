@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Int128Sum
+import graft.sources.Corpus
 
 /** Supplementary engine queries (SURVEY.md §2 #27-31): classic OLAP shapes +
   * event-time analytics, written so Catalyst gets full pushdown/broadcast
@@ -12,9 +13,6 @@ import org.apache.spark.sql.graft.Int128Sum
   * DuckDB oracle produce bit-identical doubles (SURVEY.md §6).
   */
 object Relational {
-
-  private def t(spark: SparkSession, dir: String, name: String) =
-    spark.read.parquet(s"$dir/$name.parquet")
 
   /** Epoch-seconds view of `events.ts`, robust to both schemas the driver
     * has shipped: TIMESTAMP/TIMESTAMP_NTZ(µs) (NTZ→LTZ under the session
@@ -40,7 +38,7 @@ object Relational {
 
   // ---- #27 TPC-H Q1-style aggregate ------------------------------------
   def q1Agg(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
+    Corpus.table(spark, dir, "lineitem")
       .select(col("l_returnflag"), col("l_linestatus"), revPartE8,
         e4(col("l_quantity")).as("qty4"),
         e4(col("l_extendedprice")).as("price4"))
@@ -77,11 +75,11 @@ object Relational {
 
   // ---- #28 dimension-broadcast join chain ------------------------------
   def joinEnrich(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "orders")
+    Corpus.table(spark, dir, "orders")
       .where(col("o_totalprice") > 1000.0)
-      .join(broadcast(t(spark, dir, "customer")), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(spark, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(spark, dir, "region")), col("n_regionkey") === col("r_regionkey"))
+      .join(broadcast(Corpus.table(spark, dir, "customer")), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Corpus.table(spark, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(Corpus.table(spark, dir, "region")), col("n_regionkey") === col("r_regionkey"))
       .select(col("o_orderkey"), col("o_totalprice"), col("c_name"),
         col("n_name"), col("r_name"))
   val joinEnrichSql: String =
@@ -94,13 +92,13 @@ object Relational {
 
   // ---- #29 windowed top-N per group ------------------------------------
   def topCustomersWindow(spark: SparkSession, dir: String): DataFrame = {
-    val rev = t(spark, dir, "orders")
+    val rev = Corpus.table(spark, dir, "orders")
       .groupBy("o_custkey")
       .agg(sumE4(col("o_totalprice")).as("rev"))
     val w = Window.partitionBy("n_name").orderBy(col("rev").desc, col("c_custkey"))
     rev
-      .join(broadcast(t(spark, dir, "customer")), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(spark, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(Corpus.table(spark, dir, "customer")), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Corpus.table(spark, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
       .withColumn("rk", rank().over(w))
       .where(col("rk") <= 5)
       .select(col("n_name"), col("c_custkey"), col("c_name"),
@@ -123,7 +121,7 @@ object Relational {
 
   // ---- #30 tumbling event-time window (batch twin of the stream) -------
   def eventsWindowAgg(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
+    val ev = Corpus.table(spark, dir, "events")
     ev.select(evSec(ev).as("sec"), col("event_type"), col("value"))
       .groupBy(
         expr("sec DIV 3600 * 3600").as("hour_epoch"),
@@ -147,7 +145,7 @@ object Relational {
   val SlideWidthSec = 3600
   private val SlideN = SlideWidthSec / SlideSec // windows per event
   def eventsSlidingAgg(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
+    val ev = Corpus.table(spark, dir, "events")
     ev.select(evSec(ev).as("sec"), col("event_type"), col("value"))
       .select(col("event_type"), col("value"),
         explode(expr(
@@ -170,7 +168,7 @@ object Relational {
   // and DuckDB's GROUP BY ROLLUP produce identical NULL-marked subtotal
   // rows. One aggregation, map-side partial per grouping set.
   def mixRollup(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    Corpus.table(spark, dir, "documents")
       .rollup("lang", "source")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
   val mixRollupSql: String =
@@ -185,7 +183,7 @@ object Relational {
   // last_value(ignoreNulls). One shuffle on user_id. The oracle uses
   // DuckDB's native ASOF JOIN — two independent implementations agreeing.
   def asofJoin(spark: SparkSession, dir: String): DataFrame = {
-    val raw = t(spark, dir, "events")
+    val raw = Corpus.table(spark, dir, "events")
     val ev = raw
       .select(col("user_id"), col("event_id"), col("event_type"),
         evSec(raw).as("sec"))
@@ -215,7 +213,7 @@ object Relational {
     * independent implementations of one semantic now agree: this plan, the
     * union+window composition above, and DuckDB's ASOF JOIN oracle. */
   def asofJoinNative(spark: SparkSession, dir: String): DataFrame = {
-    val raw = t(spark, dir, "events")
+    val raw = Corpus.table(spark, dir, "events")
     val ev = raw
       .select(col("user_id"), col("event_id"), col("event_type"),
         evSec(raw).as("sec"))
@@ -263,7 +261,7 @@ object Relational {
   // independent implementations agreeing, as with asof_join.
   val RangeWindowSec = 60L
   def rangeJoinCounts(spark: SparkSession, dir: String): DataFrame = {
-    val raw = t(spark, dir, "events")
+    val raw = Corpus.table(spark, dir, "events")
     val ev = raw
       .select(col("event_id"), col("event_type"),
         evSec(raw).as("sec"))
@@ -306,7 +304,7 @@ object Relational {
   // sketch estimates are engine-specific by construction, so the driver
   // records the weaker rows-only check (like partition_stats).
   def approxStats(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
+    Corpus.table(spark, dir, "events")
       .groupBy("event_type")
       .agg(
         approx_count_distinct(col("user_id")).as("approx_users"),
@@ -324,7 +322,7 @@ object Relational {
   // sums make the two-phase merge order-insensitive.
   def saltedEventCounts(spark: SparkSession, dir: String): DataFrame =
     Scale.saltedAgg(
-      t(spark, dir, "events")
+      Corpus.table(spark, dir, "events")
         .select(col("event_type"), col("value").cast("decimal(18,6)").as("v")),
       "event_type", "v", 16)
       .select(col("event_type"), col("n"),
@@ -343,7 +341,7 @@ object Relational {
   // invisible. Decimal sums keep the merge order-insensitive.
   val JoinSaltBuckets = 8
   def saltedJoinEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
+    val ev = Corpus.table(spark, dir, "events")
     val userTotals = ev.groupBy("user_id")
       .agg(count(lit(1)).as("user_events"),
         sum(col("value").cast("decimal(18,6)")).as("user_value"))
@@ -373,10 +371,10 @@ object Relational {
   // onto the fact scan (no fact shuffle before the final rollup agg; at
   // extreme part-table scale this becomes a shuffle join AQE handles).
   def brandRevenue(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
-      .join(broadcast(t(spark, dir, "part")), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(t(spark, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t(spark, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
+    Corpus.table(spark, dir, "lineitem")
+      .join(broadcast(Corpus.table(spark, dir, "part")), col("l_partkey") === col("p_partkey"))
+      .join(broadcast(Corpus.table(spark, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
+      .join(broadcast(Corpus.table(spark, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
       .withColumn("rev_part", revPartE8)
       .groupBy(col("n_name").as("nation"), col("p_brand").as("brand"))
       .agg(
@@ -413,8 +411,8 @@ object Relational {
     * ~10²-key month agg with map-side partials. No fact shuffle at all. */
   def promoRevenue(spark: SparkSession, dir: String): DataFrame = {
     val rev = e4(col("l_extendedprice")) * (lit(10000L) - e4(col("l_discount")))
-    t(spark, dir, "lineitem")
-      .join(broadcast(t(spark, dir, "part").select("p_partkey", "p_type")),
+    Corpus.table(spark, dir, "lineitem")
+      .join(broadcast(Corpus.table(spark, dir, "part").select("p_partkey", "p_type")),
         col("l_partkey") === col("p_partkey"))
       .groupBy(date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"))
       .agg(
@@ -463,7 +461,7 @@ object Relational {
     * a one-row rollup — no self-join of events against events, which is
     * the naive funnel formulation and corpus² at scale. */
   def funnelConversion(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
+    Corpus.table(spark, dir, "events")
       .groupBy("user_id")
       .agg(
         min(when(col("event_type") === "view", col("ts"))).as("first_view"),
@@ -514,7 +512,7 @@ object Relational {
   val WeekSec = 7L * 24 * 3600
 
   def retentionCohorts(spark: SparkSession, dir: String): DataFrame = {
-    val raw = t(spark, dir, "events")
+    val raw = Corpus.table(spark, dir, "events")
     val ev = raw
       .select(col("user_id"), evSec(raw).as("sec"))
       .select(col("user_id"), expr(s"sec DIV $WeekSec").as("week"))
@@ -542,7 +540,7 @@ object Relational {
 
   // ---- exact per-group quantiles ---------------------------------------
   def valueQuantiles(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
+    Corpus.table(spark, dir, "events")
       .groupBy("event_type")
       .agg(
         // §6: pinned decimals — never emit engine-formatted doubles
@@ -561,7 +559,7 @@ object Relational {
   // ---- pivot: event counts per user across types -----------------------
   val PivotTypes = Seq("click", "view", "purchase", "signup", "error")
   def eventPivot(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
+    Corpus.table(spark, dir, "events")
       .groupBy("user_id")
       .pivot("event_type", PivotTypes)
       .agg(count(lit(1)))
@@ -581,7 +579,7 @@ object Relational {
   def sessionize(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val raw = t(spark, dir, "events")
+    val raw = Corpus.table(spark, dir, "events")
     raw
       .select(col("user_id"), col("event_id"), col("ts"),
         evSec(raw).as("sec"))
@@ -625,7 +623,7 @@ object Relational {
     * distinct over raw events. DECIMAL value sums keep the merge
     * order-insensitive (§6). */
   def eventDailyActive(spark: SparkSession, dir: String): DataFrame = {
-    val raw = t(spark, dir, "events")
+    val raw = Corpus.table(spark, dir, "events")
     raw.select(to_date(evTs(raw)).as("day"), col("event_type"),
         col("user_id"), col("value"))
       .groupBy("day", "event_type")
@@ -651,9 +649,9 @@ object Relational {
     * shuffled-hash vs sort-merge. Oracle = DuckDB's independent EXISTS
     * decorrelation — two planners agreeing on the semi-join semantics. */
   def orderPrioritySemi(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "orders")
+    Corpus.table(spark, dir, "orders")
       .join(
-        t(spark, dir, "lineitem")
+        Corpus.table(spark, dir, "lineitem")
           .where(col("l_discount") > 0.05).select(col("l_orderkey")),
         col("o_orderkey") === col("l_orderkey"), "left_semi")
       .groupBy(col("o_orderpriority"))
@@ -675,9 +673,9 @@ object Relational {
     * LEFT JOINs the count table and null→0. Two bounded-key shuffles plus
     * the ≤|distinct counts| final rollup. */
   def customerDistribution(spark: SparkSession, dir: String): DataFrame = {
-    val perCust = t(spark, dir, "orders")
+    val perCust = Corpus.table(spark, dir, "orders")
       .groupBy(col("o_custkey")).agg(count(lit(1)).as("c_count"))
-    t(spark, dir, "customer").select(col("c_custkey"))
+    Corpus.table(spark, dir, "customer").select(col("c_custkey"))
       .join(perCust, col("c_custkey") === col("o_custkey"), "left")
       .select(coalesce(col("c_count"), lit(0L)).as("c_count"))
       .groupBy(col("c_count"))
@@ -703,7 +701,7 @@ object Relational {
     * inference audits; the DuckDB oracle extracts via its JSON extension —
     * two independent JSON parsers agreeing. */
   def eventPropsAgg(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
+    Corpus.table(spark, dir, "events")
       .select(
         from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("k",
@@ -734,7 +732,7 @@ object Relational {
     * follows the §6 decimal policy: exact DECIMAL sum, narrowed, then one
     * double cast on both engines. */
   def revenueCube(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "orders")
+    Corpus.table(spark, dir, "orders")
       .cube(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n_orders"),
         sumE4(col("o_totalprice"))
@@ -767,7 +765,7 @@ object Relational {
   val ProfileNumCols: Seq[String] = Seq("l_quantity", "l_extendedprice", "l_discount")
   val ProfileStrCols: Seq[String] = Seq("l_returnflag", "l_linestatus")
   def dataProfile(spark: SparkSession, dir: String): DataFrame = {
-    val li = t(spark, dir, "lineitem")
+    val li = Corpus.table(spark, dir, "lineitem")
     val numLegs = ProfileNumCols.map { c =>
       li.select(col(c)).agg(
         lit(c).as("col_name"),
@@ -806,7 +804,7 @@ object Relational {
     * exact integral division over contributing days. The DuckDB oracle IS
     * the window formulation — two formulations, one answer. */
   def revenueMovingAvg(spark: SparkSession, dir: String): DataFrame = {
-    val daily = t(spark, dir, "orders")
+    val daily = Corpus.table(spark, dir, "orders")
       .select(
         datediff(to_date(col("o_orderdate")), lit("1970-01-01").cast("date"))
           .cast("long").as("day_num"),
@@ -849,7 +847,7 @@ object Relational {
     * one ≤|types|-row stats agg BROADCAST back onto the daily frame,
     * row-local flagging. σ=0 series flag nothing. */
   def eventAnomalies(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
+    val ev = Corpus.table(spark, dir, "events")
     val daily = ev
       .select(col("event_type"),
         org.apache.spark.sql.graft.ExactMath.intDiv(evSec(ev), lit(86400L))
@@ -898,7 +896,7 @@ object Relational {
     * partials; day numbers in exact integers; revenue via the §6 decimal
     * narrow-then-double policy. */
   def customerLifetime(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "orders")
+    Corpus.table(spark, dir, "orders")
       .select(col("o_custkey"),
         datediff(to_date(col("o_orderdate")), lit("1970-01-01").cast("date"))
           .cast("long").as("day_num"),
@@ -935,7 +933,7 @@ object Relational {
   val RfmLoPct = 0.33
   val RfmHiPct = 0.67
   def rfmSegments(spark: SparkSession, dir: String): DataFrame = {
-    val base = t(spark, dir, "orders")
+    val base = Corpus.table(spark, dir, "orders")
       .select(col("o_custkey"),
         datediff(to_date(col("o_orderdate")), lit("1970-01-01").cast("date"))
           .cast("long").as("day_num"),
@@ -1018,13 +1016,13 @@ object Relational {
   val ShipCutoff = "1996-01-01"
   def shippingPriority(spark: SparkSession, dir: String): DataFrame = {
     val cut = lit(ShipCutoff).cast("date")
-    val c = t(spark, dir, "customer")
+    val c = Corpus.table(spark, dir, "customer")
       .where(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-    val o = t(spark, dir, "orders")
+    val o = Corpus.table(spark, dir, "orders")
       .where(to_date(col("o_orderdate")) < cut)
       .join(broadcast(c), col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-    t(spark, dir, "lineitem")
+    Corpus.table(spark, dir, "lineitem")
       .where(to_date(col("l_shipdate")) > cut)
       .select(col("l_orderkey"), revPartE8)
       .join(o, col("l_orderkey") === col("o_orderkey"))
@@ -1134,7 +1132,7 @@ object Relational {
     * (ts, event_id), the sessionize convention. */
   def eventTransitions(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val trans = t(spark, dir, "events")
+    val trans = Corpus.table(spark, dir, "events")
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
       .withColumn("to_type", lead(col("event_type"), 1).over(w))
       .where(col("to_type").isNotNull)
@@ -1170,7 +1168,7 @@ object Relational {
     * map-side partials plus a broadcast per-type total; integer epoch
     * math (positive seconds, so % is engine-neutral). */
   def hourlySeasonality(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
+    val ev = Corpus.table(spark, dir, "events")
     val hourly = ev
       .select(col("event_type"),
         (org.apache.spark.sql.graft.ExactMath.intDiv(evSec(ev), lit(3600L)) % 24L)
@@ -1240,7 +1238,7 @@ object Relational {
     * then LEFT joins the daily rollup; at 100 TB the spine is still just
     * the calendar. Exact integer day numbers and cents. */
   def dailyRevenueFilled(spark: SparkSession, dir: String): DataFrame = {
-    val daily = t(spark, dir, "orders")
+    val daily = Corpus.table(spark, dir, "orders")
       .select(
         datediff(to_date(col("o_orderdate")), lit("1970-01-01").cast("date"))
           .cast("long").as("day_num"),
@@ -1282,9 +1280,9 @@ object Relational {
     * lines-only, collapsed to a one-row census. Two key-bounded shuffles,
     * then a 3-value rollup. */
   def orderReconcile(spark: SparkSession, dir: String): DataFrame = {
-    val perOrder = t(spark, dir, "lineitem")
+    val perOrder = Corpus.table(spark, dir, "lineitem")
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("n_lines"))
-    t(spark, dir, "orders").select(col("o_orderkey"))
+    Corpus.table(spark, dir, "orders").select(col("o_orderkey"))
       .join(perOrder, col("o_orderkey") === col("l_orderkey"), "full_outer")
       .agg(
         sum(when(col("o_orderkey").isNotNull && col("l_orderkey").isNotNull,
@@ -1381,22 +1379,22 @@ object Relational {
   val Q5YearEnd = "1997-01-01"
   def localSupplierVolume(spark: SparkSession, dir: String): DataFrame = {
     val nations = broadcast(
-      t(spark, dir, "nation")
-        .join(broadcast(t(spark, dir, "region")),
+      Corpus.table(spark, dir, "nation")
+        .join(broadcast(Corpus.table(spark, dir, "region")),
           col("n_regionkey") === col("r_regionkey"))
         .where(col("r_name") === Q5Region)
         .select(col("n_nationkey"), col("n_name")))
-    val supp = broadcast(t(spark, dir, "supplier")
+    val supp = broadcast(Corpus.table(spark, dir, "supplier")
       .select(col("s_suppkey"), col("s_nationkey")))
-    val ordCust = t(spark, dir, "orders")
+    val ordCust = Corpus.table(spark, dir, "orders")
       .where(to_date(col("o_orderdate")) >= lit(Q5YearStart).cast("date") &&
         to_date(col("o_orderdate")) < lit(Q5YearEnd).cast("date"))
       .select(col("o_orderkey"), col("o_custkey"))
-      .join(t(spark, dir, "customer")
+      .join(Corpus.table(spark, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey")),
         col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), col("c_nationkey"))
-    t(spark, dir, "lineitem")
+    Corpus.table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"), revPartE8)
       .join(supp, col("l_suppkey") === col("s_suppkey"))
       .join(ordCust, col("l_orderkey") === col("o_orderkey"))
@@ -1430,19 +1428,19 @@ object Relational {
     * only fact⇄fact exchanges are lineitem⋈orders (orderkey) and
     * orders⋈customer (custkey); both nation maps ride broadcasts. */
   def nationTradeFlows(spark: SparkSession, dir: String): DataFrame = {
-    val supN = broadcast(t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")),
+    val supN = broadcast(Corpus.table(spark, dir, "supplier")
+      .join(broadcast(Corpus.table(spark, dir, "nation")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation")))
-    val custN = t(spark, dir, "customer")
-      .join(broadcast(t(spark, dir, "nation")),
+    val custN = Corpus.table(spark, dir, "customer")
+      .join(broadcast(Corpus.table(spark, dir, "nation")),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name").as("cust_nation"))
-    val ord = t(spark, dir, "orders")
+    val ord = Corpus.table(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
       .join(custN, col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), col("cust_nation"))
-    t(spark, dir, "lineitem")
+    Corpus.table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"),
         year(to_date(col("l_shipdate"))).cast("long").as("ship_year"),
         revPartE8)
@@ -1481,11 +1479,11 @@ object Relational {
   val Q10QuarterStart = "1996-01-01"
   val Q10QuarterEnd = "1996-04-01"
   def returnedItemRanking(spark: SparkSession, dir: String): DataFrame = {
-    val o = t(spark, dir, "orders")
+    val o = Corpus.table(spark, dir, "orders")
       .where(to_date(col("o_orderdate")) >= lit(Q10QuarterStart).cast("date") &&
         to_date(col("o_orderdate")) < lit(Q10QuarterEnd).cast("date"))
       .select(col("o_orderkey"), col("o_custkey"))
-    val top = t(spark, dir, "lineitem")
+    val top = Corpus.table(spark, dir, "lineitem")
       .where(col("l_returnflag") === "R")
       .select(col("l_orderkey"), revPartE8)
       .join(o, col("l_orderkey") === col("o_orderkey"))
@@ -1501,9 +1499,9 @@ object Relational {
         col("s.revenue").as("revenue"),
         (col("pos") + 1).cast("long").as("rk"))
     top
-      .join(broadcast(t(spark, dir, "customer")),
+      .join(broadcast(Corpus.table(spark, dir, "customer")),
         col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(spark, dir, "nation")),
+      .join(broadcast(Corpus.table(spark, dir, "nation")),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("c_name"), col("n_name"),
         col("revenue"), col("rk"))
@@ -1540,7 +1538,7 @@ object Relational {
   val Q15QuarterStart = "1996-01-01"
   val Q15QuarterEnd = "1996-04-01"
   def topSupplier(spark: SparkSession, dir: String): DataFrame = {
-    val rev = t(spark, dir, "lineitem")
+    val rev = Corpus.table(spark, dir, "lineitem")
       .where(to_date(col("l_shipdate")) >= lit(Q15QuarterStart).cast("date") &&
         to_date(col("l_shipdate")) < lit(Q15QuarterEnd).cast("date"))
       .select(col("l_suppkey"), revPartE8)
@@ -1548,7 +1546,7 @@ object Relational {
       .agg(sumRevPart.cast("decimal(18,4)").as("rev_dec"))
     val mx = rev.agg(max(col("rev_dec")).as("max_rev"))
     rev.join(broadcast(mx), col("rev_dec") === col("max_rev"))
-      .join(broadcast(t(spark, dir, "supplier")),
+      .join(broadcast(Corpus.table(spark, dir, "supplier")),
         col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"),
         col("rev_dec").cast("double").as("revenue"))
@@ -1581,8 +1579,8 @@ object Relational {
     // the decimal comparison. qty4·5·n_part_lines stays in Long to ~1.8e13
     // lines per part — a single part cannot reach that below 2^63 total
     // rows (and sum_qty's per-part Long bound is the same argument).
-    val pl = t(spark, dir, "lineitem")
-      .join(broadcast(t(spark, dir, "part")
+    val pl = Corpus.table(spark, dir, "lineitem")
+      .join(broadcast(Corpus.table(spark, dir, "part")
         .select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
       .select(col("l_partkey"), col("p_brand"),
@@ -1628,14 +1626,14 @@ object Relational {
     * orders on the same key, customer names ride a broadcast. */
   val LargeOrderMinQty = 300
   def largeVolumeCustomers(spark: SparkSession, dir: String): DataFrame = {
-    val big = t(spark, dir, "lineitem")
+    val big = Corpus.table(spark, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(sumE4(col("l_quantity"))
         .cast("decimal(18,4)").as("qty_dec"))
       .where(col("qty_dec") > lit(LargeOrderMinQty))
     big
-      .join(t(spark, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(t(spark, dir, "customer")),
+      .join(Corpus.table(spark, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(Corpus.table(spark, dir, "customer")),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_date"),
@@ -1682,7 +1680,7 @@ object Relational {
 
   /** Per-key count frame for one leg, materialized once. */
   private def skewCounts(spark: SparkSession, dir: String, key: String) =
-    t(spark, dir, "events")
+    Corpus.table(spark, dir, "events")
       .groupBy(col(key).cast("string").as("key_value"))
       .agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
@@ -1803,8 +1801,8 @@ object Relational {
       col("p_brand") === b &&
         col("l_quantity") >= lo.toDouble && col("l_quantity") <= hi.toDouble
     }.reduce(_ || _)
-    t(spark, dir, "lineitem")
-      .join(broadcast(t(spark, dir, "part")
+    Corpus.table(spark, dir, "lineitem")
+      .join(broadcast(Corpus.table(spark, dir, "part")
         .where(col("p_brand").isin(Q19Bands.map(_._1): _*))
         .select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
@@ -1837,14 +1835,14 @@ object Relational {
     * with map-side partials. */
   val Q16ExcludeNameLike = "%7%"
   def partSupplierDiversity(spark: SparkSession, dir: String): DataFrame = {
-    val excluded = t(spark, dir, "supplier")
+    val excluded = Corpus.table(spark, dir, "supplier")
       .where(col("s_name").like(Q16ExcludeNameLike))
       .select(col("s_suppkey"))
-    t(spark, dir, "lineitem")
+    Corpus.table(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"))
       .join(broadcast(excluded), col("l_suppkey") === col("s_suppkey"),
         "left_anti")
-      .join(broadcast(t(spark, dir, "part")
+      .join(broadcast(Corpus.table(spark, dir, "part")
         .select(col("p_partkey"), col("p_type"))),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_type"))
@@ -1874,7 +1872,7 @@ object Relational {
   def stateIntervals(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val raw = t(spark, dir, "events")
+    val raw = Corpus.table(spark, dir, "events")
     raw
       .select(col("user_id"), col("event_id"), col("ts"),
         col("event_type"), evSec(raw).as("sec"))
@@ -1925,12 +1923,12 @@ object Relational {
     * BNLJ); nation names ride a broadcast. */
   val DormantCutoff = "2000-01-01"
   def dormantCustomers(spark: SparkSession, dir: String): DataFrame = {
-    val cust = t(spark, dir, "customer")
+    val cust = Corpus.table(spark, dir, "customer")
     val totals = cust.agg(
       sum(col("c_acctbal").cast("decimal(18,4)")).cast("decimal(28,4)")
         .as("sum_bal"),
       count(lit(1)).as("n_cust"))
-    val active = t(spark, dir, "orders")
+    val active = Corpus.table(spark, dir, "orders")
       .where(to_date(col("o_orderdate")) >= lit(DormantCutoff).cast("date"))
       .select(col("o_custkey")).distinct()
     cust
@@ -1938,7 +1936,7 @@ object Relational {
       .crossJoin(broadcast(totals))
       .where(col("c_acctbal").cast("decimal(18,4)") * col("n_cust")
         > col("sum_bal"))
-      .join(broadcast(t(spark, dir, "nation")),
+      .join(broadcast(Corpus.table(spark, dir, "nation")),
         col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(count(lit(1)).as("n_dormant"),
@@ -1978,7 +1976,7 @@ object Relational {
   val Q6DiscHi = 0.07
   val Q6MaxQty = 24
   def forecastRevenue(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
+    Corpus.table(spark, dir, "lineitem")
       .where(to_date(col("l_shipdate")) >= lit(Q6YearStart).cast("date") &&
         to_date(col("l_shipdate")) < lit(Q6YearEnd).cast("date") &&
         col("l_discount") >= Q6DiscLo && col("l_discount") <= Q6DiscHi &&
@@ -2021,18 +2019,18 @@ object Relational {
   val Q2Region = "EUROPE"
   def minCostSupplier(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graft.ExactMath.intDiv
-    val parts = broadcast(t(spark, dir, "part")
+    val parts = broadcast(Corpus.table(spark, dir, "part")
       .where(col("p_size") <= Q2MaxSize && col("p_type") === Q2Type)
       .select(col("p_partkey"), col("p_name")))
-    val supp = broadcast(t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")),
+    val supp = broadcast(Corpus.table(spark, dir, "supplier")
+      .join(broadcast(Corpus.table(spark, dir, "nation")),
         col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(spark, dir, "region")),
+      .join(broadcast(Corpus.table(spark, dir, "region")),
         col("n_regionkey") === col("r_regionkey"))
       .where(col("r_name") === Q2Region)
       .select(col("s_suppkey"), col("s_name"), col("s_acctbal"),
         col("n_name")))
-    val perPS = t(spark, dir, "lineitem")
+    val perPS = Corpus.table(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"),
         intDiv(round(col("l_extendedprice") * 100.0).cast("long") * 100L,
           col("l_quantity").cast("long")).as("unit_e4"))
@@ -2095,26 +2093,26 @@ object Relational {
   val Q8Nation = "NATION_7"
   def marketShare(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graft.ExactMath.intDivWide
-    val parts = broadcast(t(spark, dir, "part")
+    val parts = broadcast(Corpus.table(spark, dir, "part")
       .where(col("p_type") === Q8Type).select(col("p_partkey")))
-    val suppN = broadcast(t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")),
+    val suppN = broadcast(Corpus.table(spark, dir, "supplier")
+      .join(broadcast(Corpus.table(spark, dir, "nation")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation")))
-    val custRegion = t(spark, dir, "customer")
-      .join(broadcast(t(spark, dir, "nation")
-        .join(broadcast(t(spark, dir, "region")),
+    val custRegion = Corpus.table(spark, dir, "customer")
+      .join(broadcast(Corpus.table(spark, dir, "nation")
+        .join(broadcast(Corpus.table(spark, dir, "region")),
           col("n_regionkey") === col("r_regionkey"))
         .where(col("r_name") === Q8Region)
         .select(col("n_nationkey"))),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"))
-    val ord = t(spark, dir, "orders")
+    val ord = Corpus.table(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
         year(to_date(col("o_orderdate"))).cast("long").as("o_year"))
       .join(custRegion, col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), col("o_year"))
-    val agg = t(spark, dir, "lineitem")
+    val agg = Corpus.table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"), revPartE8)
       .join(parts, col("l_partkey") === col("p_partkey"))
       .join(suppN, col("l_suppkey") === col("s_suppkey"))
@@ -2179,14 +2177,14 @@ object Relational {
   val Q9NamePattern = "%bolt%"
   val Q9CostBp = 5000
   def productProfit(spark: SparkSession, dir: String): DataFrame = {
-    val parts = broadcast(t(spark, dir, "part")
+    val parts = broadcast(Corpus.table(spark, dir, "part")
       .where(col("p_name").like(Q9NamePattern))
       .select(col("p_partkey"), col("p_retailprice")))
-    val suppN = broadcast(t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")),
+    val suppN = broadcast(Corpus.table(spark, dir, "supplier")
+      .join(broadcast(Corpus.table(spark, dir, "nation")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name")))
-    val ordYear = t(spark, dir, "orders")
+    val ordYear = Corpus.table(spark, dir, "orders")
       .select(col("o_orderkey"),
         year(to_date(col("o_orderdate"))).cast("long").as("o_year"))
     // scale-8 long twin of the decimal spelling: revenue has exactly 4
@@ -2200,7 +2198,7 @@ object Relational {
           (Int128Sum.unscaled(col("p_retailprice"), 2) * lit(5L)) *
           lit(100000L))
         .as("amount")
-    t(spark, dir, "lineitem")
+    Corpus.table(spark, dir, "lineitem")
       .join(parts, col("l_partkey") === col("p_partkey"))
       .join(suppN, col("l_suppkey") === col("s_suppkey"))
       .join(ordYear, col("l_orderkey") === col("o_orderkey"))
@@ -2246,11 +2244,11 @@ object Relational {
     * 100 TB) and plain BIGINT in the oracle (oracle-SF values fit). */
   val Q11MeanMult = 3L
   def importantStock(spark: SparkSession, dir: String): DataFrame = {
-    val suppN = broadcast(t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")),
+    val suppN = broadcast(Corpus.table(spark, dir, "supplier")
+      .join(broadcast(Corpus.table(spark, dir, "nation")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name")))
-    val positions = t(spark, dir, "lineitem")
+    val positions = Corpus.table(spark, dir, "lineitem")
       .join(suppN, col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("n_name"), col("l_partkey"))
       .agg(sumE4(col("l_extendedprice"))
@@ -2312,10 +2310,10 @@ object Relational {
   val Q20NamePrefix = "red%"
   val Q20MeanMult = 3L
   def promotionSuppliers(spark: SparkSession, dir: String): DataFrame = {
-    val parts = broadcast(t(spark, dir, "part")
+    val parts = broadcast(Corpus.table(spark, dir, "part")
       .where(col("p_name").like(Q20NamePrefix))
       .select(col("p_partkey")))
-    val perPS = t(spark, dir, "lineitem")
+    val perPS = Corpus.table(spark, dir, "lineitem")
       .join(parts, col("l_partkey") === col("p_partkey"))
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(sum(col("l_quantity").cast("long")).as("qty_s"))
@@ -2327,8 +2325,8 @@ object Relational {
       col("l_partkey") === col("pp_partkey"))
       .where(col("qty_s").cast("decimal(38,0)") * col("n_supp")
         > lit(Q20MeanMult) * col("qty_total").cast("decimal(38,0)"))
-      .join(broadcast(t(spark, dir, "supplier")
-        .join(broadcast(t(spark, dir, "nation")),
+      .join(broadcast(Corpus.table(spark, dir, "supplier")
+        .join(broadcast(Corpus.table(spark, dir, "nation")),
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("s_name"), col("n_name"))),
         col("l_suppkey") === col("s_suppkey"))
@@ -2377,7 +2375,7 @@ object Relational {
     * the one exchange. Order status 'F' filters push to the orders
     * scan. */
   def soleBlameSuppliers(spark: SparkSession, dir: String): DataFrame = {
-    val perOrder = t(spark, dir, "lineitem")
+    val perOrder = Corpus.table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"), col("l_returnflag"))
       .repartition(col("l_orderkey"))
       .groupBy(col("l_orderkey"), col("l_suppkey"))
@@ -2388,11 +2386,11 @@ object Relational {
         sum(col("has_r")).as("n_ret_supp"),
         max(when(col("has_r") === 1L, col("l_suppkey"))).as("ret_supp"))
       .where(col("n_supp") > 1L && col("n_ret_supp") === 1L)
-    val finished = t(spark, dir, "orders")
+    val finished = Corpus.table(spark, dir, "orders")
       .where(col("o_orderstatus") === "F").select(col("o_orderkey"))
     perOrder
       .join(finished, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(t(spark, dir, "supplier")
+      .join(broadcast(Corpus.table(spark, dir, "supplier")
         .select(col("s_suppkey"), col("s_name"))),
         col("ret_supp") === col("s_suppkey"))
       .groupBy(col("s_suppkey"), col("s_name"))
@@ -2465,7 +2463,7 @@ object Relational {
   private def copurchasePairs(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(copurchasePairCache, spark, dir) {
       val w = Window.partitionBy("l_orderkey")
-      t(spark, dir, "lineitem")
+      Corpus.table(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))
         .repartition(col("l_orderkey"))
         .dropDuplicates("l_orderkey", "l_partkey")
@@ -2682,7 +2680,7 @@ object Relational {
     // codegen'd fixed_point_long (same value as round(x·100) for 2-decimal
     // money — Int128Sum.scala) instead of the per-row BigDecimal Round.
     def legDf(table: String, column: String) =
-      t(spark, dir, table)
+      Corpus.table(spark, dir, table)
         .where(col(column) > 0)
         .select(lit(column).as("measure"),
           substring(Int128Sum.unscaled(col(column), 2).cast("string"), 1, 1)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns._
+import graft.sources.Corpus
 
 /** Training-data SELECTION operators (SURVEY.md §2 #35): the published
   * data-curation recipes that decide WHICH documents feed a training run —
@@ -19,9 +20,6 @@ import graft.functions.TextFns._
   * outputs use orderBy+limit → TakeOrderedAndProject partial top-k).
   */
 object Selection {
-
-  private def docs(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   // ---- CCNet head/middle/tail perplexity buckets ------------------------
   /** Tertile boundaries (fractions of the per-language score distribution).
@@ -47,7 +45,7 @@ object Selection {
   private def scoredFrame(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(scoredCache, spark, dir) {
       TextAnalysis.lmPerplexity(spark, dir)
-        .join(docs(spark, dir).select(col("doc_id"), col("lang")), "doc_id")
+        .join(Corpus.table(spark, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
         .select(col("doc_id"), col("lang"),
           // nll in exact integer e4 units: sum_lp is an exact 4-decimal
           // value (×10⁴ recovers the integer bit-exactly in both engines),
@@ -404,7 +402,7 @@ object Selection {
     * KN nll. Same exact-integer nll_e4 and broadcast-threshold shape. */
   def knBuckets(spark: SparkSession, dir: String): DataFrame = {
     val scored = knPerplexity(spark, dir)
-      .join(docs(spark, dir).select(col("doc_id"), col("lang")), "doc_id")
+      .join(Corpus.table(spark, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
       .select(col("doc_id"), col("lang"),
         expr("CAST(round(-sum_lp * 10000, 0) AS BIGINT) div n_bigrams")
           .as("nll_e4"))
@@ -695,7 +693,7 @@ object Selection {
     * nll_e4 + broadcast-threshold shape of [[knBuckets]]. */
   def kn3Buckets(spark: SparkSession, dir: String): DataFrame = {
     val scored = kn3Perplexity(spark, dir)
-      .join(docs(spark, dir).select(col("doc_id"), col("lang")), "doc_id")
+      .join(Corpus.table(spark, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
       .select(col("doc_id"), col("lang"),
         expr("CAST(round(-sum_lp * 10000, 0) AS BIGINT) div n_trigrams")
           .as("nll_e4"))
@@ -967,7 +965,7 @@ object Selection {
   /** CCNet bucketing under the 4-gram model — the [[knBuckets]] shape. */
   def kn4Buckets(spark: SparkSession, dir: String): DataFrame = {
     val scored = kn4Perplexity(spark, dir)
-      .join(docs(spark, dir).select(col("doc_id"), col("lang")), "doc_id")
+      .join(Corpus.table(spark, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
       .select(col("doc_id"), col("lang"),
         expr("CAST(round(-sum_lp * 10000, 0) AS BIGINT) div n_fourgrams")
           .as("nll_e4"))
@@ -1274,7 +1272,7 @@ object Selection {
   /** CCNet bucketing under the 5-gram model — the [[knBuckets]] shape. */
   def kn5Buckets(spark: SparkSession, dir: String): DataFrame = {
     val scored = kn5Perplexity(spark, dir)
-      .join(docs(spark, dir).select(col("doc_id"), col("lang")), "doc_id")
+      .join(Corpus.table(spark, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
       .select(col("doc_id"), col("lang"),
         expr("CAST(round(-sum_lp * 10000, 0) AS BIGINT) div n_fivegrams")
           .as("nll_e4"))
@@ -1339,7 +1337,7 @@ object Selection {
       .select(col("doc_id"), lit(true).as("dsir_top"))
     val k = Similarity.semdedup(spark, dir)
       .select(col("vec_id").as("doc_id"), col("keep").as("sem_keep"))
-    docs(spark, dir).select(col("doc_id"), col("lang"))
+    Corpus.table(spark, dir, "documents").select(col("doc_id"), col("lang"))
       .join(b, Seq("doc_id"), "left")
       .join(w, Seq("doc_id"), "left")
       .join(top, Seq("doc_id"), "left")
@@ -1429,7 +1427,7 @@ object Selection {
 
   def mixTemperature(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graft.ExactMath.intDiv
-    val d = docs(spark, dir)
+    val d = Corpus.table(spark, dir, "documents")
     val keeps = temperatureKeeps(d)
     val kept = d
       .select(col("lang"), pmod(md5Long(concat_ws("\u0001",
@@ -1503,7 +1501,7 @@ object Selection {
 
   def epochPlan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graft.ExactMath.intDiv
-    val per = docs(spark, dir)
+    val per = Corpus.table(spark, dir, "documents")
       .select(col("source"),
         regexp_count(col("text"), lit("\\S+")).cast("long").as("nt"))
       .groupBy(col("source"))
@@ -1618,11 +1616,11 @@ object Selection {
     // (VERDICT r12 #4 micro-task): same whitespace tokenization as the
     // old interpreted split/transform/filter chain, one struct-field read
     // instead of three array passes per doc
-    val toksPerDoc = docs(spark, dir).select(col("source"),
+    val toksPerDoc = Corpus.table(spark, dir, "documents").select(col("source"),
       TextAnalysis.profileCol.getField("n_toks").cast("long").as("n_toks"))
       .groupBy("source").agg(sum(col("n_toks")).as("n_tokens"))
     val excess = excessLoss(spark, dir)
-      .join(docs(spark, dir).select(col("doc_id"), col("source")), "doc_id")
+      .join(Corpus.table(spark, dir, "documents").select(col("doc_id"), col("source")), "doc_id")
       .groupBy("source").agg(count(lit(1)).as("n_scored"),
         sum(col("excess_e4")).as("sum_excess_e4"))
     // cross-source totals as BROADCAST 1-row aggregates, not unpartitioned

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup.{dotExpr, sqlDotExpr}
+import graft.sources.Corpus
 
 /** Similarity search over the embedding column (SURVEY.md §2 #20-21).
   *
@@ -35,9 +36,6 @@ object Similarity {
   }
   private val planeLits: IndexedSeq[org.apache.spark.sql.Column] =
     Planes.map(p => lit(p.map(_.toFloat).toArray))
-
-  private def emb(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/embeddings.parquet").select(col("vec_id"), col("embedding"))
 
   /** Dot with plane j via the codegen'd FloatDotProduct (same left-fold IEEE
     * order as the SQL chain). An inline 64-term element_at chain — times 8
@@ -88,9 +86,11 @@ object Similarity {
 
   // ---- #20 brute-force cosine top-k ------------------------------------
   def annTopk(spark: SparkSession, dir: String): DataFrame = {
-    val q = emb(spark, dir).orderBy("vec_id").limit(1)
+    val q = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
+      .orderBy("vec_id").limit(1)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    topkRanked(emb(spark, dir).crossJoin(broadcast(q))
+    topkRanked(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
+      .crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
       .select(col("vec_id"), cosExpr("embedding", "qv").as("cos")))
   }
@@ -110,7 +110,8 @@ object Similarity {
 
   // ---- #21 LSH-bucketed ANN (scale path) -------------------------------
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).withColumn("bucket", bucketCol("embedding"))
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
+      .withColumn("bucket", bucketCol("embedding"))
     val q = e.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
         col("bucket").as("qbucket"))
@@ -148,7 +149,8 @@ object Similarity {
   val QueryN = 10
   val JoinK = 3
   def annJoin(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).withColumn("bucket", bucketCol("embedding"))
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
+      .withColumn("bucket", bucketCol("embedding"))
     val probeMasks = 0L +: (0 until NumPlanes).map(j => 1L << j)
     val q = e.orderBy("vec_id").limit(QueryN)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
@@ -199,7 +201,7 @@ object Similarity {
     * [[annJoin]] unchanged. One bounded join (QueryN×k rows each side)
     * compares them. */
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
     val q = e.orderBy("vec_id").limit(QueryN)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
@@ -268,7 +270,8 @@ object Similarity {
     * the RAW IEEE cosine (§6 — identical op sequence both engines) and
     * only the emitted value is decimal-pinned. */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).withColumn("bucket", bucketCol("embedding"))
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
+      .withColumn("bucket", bucketCol("embedding"))
     val probeMasks = 0L +: (0 until NumPlanes).map(j => 1L << j)
     val q = e.orderBy("vec_id").limit(QueryN)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
@@ -322,7 +325,7 @@ object Similarity {
     * argmax is a single min_by over (−votes, label) — deterministic, no
     * window. */
   def knnClassify(spark: SparkSession, dir: String): DataFrame = {
-    val labels = spark.read.parquet(s"$dir/embeddings.parquet")
+    val labels = Corpus.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("label").cast("long").as("label"))
     val pred = annJoin(spark, dir)
       .join(labels, "vec_id")
@@ -444,7 +447,7 @@ object Similarity {
     // consumer broadcasts 16 rows without re-entering the training
     // lineage.
     Materialized.cached(centCache, spark, dir) {
-      val e0 = emb(spark, dir)
+      val e0 = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
       val n = e0.count()
       val (schema, rows) = Scale.loopSession(spark, n) { cs =>
         val e = Scale.rebind(cs, e0).localCheckpoint(false)
@@ -498,7 +501,7 @@ object Similarity {
     * on the index scan. */
   private[graft] def ivfProbeFromDisk(spark: SparkSession, dir: String,
       out: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
     val cents = ivfCentroids(spark, dir)
     // index build: one map-side assignment pass, written partitioned by cell
     Scale.writePartitioned(
@@ -517,7 +520,7 @@ object Similarity {
   }
 
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
     val cents = ivfCentroids(spark, dir)
     val q = e.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -537,7 +540,7 @@ object Similarity {
     * sizes + mean cosine of members to their centroid (training-data
     * diversity diagnostics). */
   def embeddingClusters(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
     val cents = ivfCentroids(spark, dir)
     argminCid(e, cents, Seq("embedding", "c"))
       .groupBy(col("cid"))
@@ -566,7 +569,7 @@ object Similarity {
     * embeddingClusters (broadcast centroids), plus two label-keyed
     * aggregations (≤ |cells|·|labels| intermediate rows). */
   def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val e = Corpus.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
     val cents = ivfCentroids(spark, dir)
     argminCid(e, cents, Seq("label"))
@@ -615,9 +618,10 @@ object Similarity {
   val ClusterTopicsTopN = 5
   def clusterTopics(spark: SparkSession, dir: String): DataFrame = {
     val cents = ivfCentroids(spark, dir)
-    val assigned = argminCid(emb(spark, dir), cents, Seq.empty)
+    val assigned = argminCid(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding"),
+      cents, Seq.empty)
       .withColumnRenamed("vec_id", "doc_id")
-    val terms = spark.read.parquet(s"$dir/documents.parquet")
+    val terms = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .join(assigned, "doc_id")
       .select(col("cid"), explode(TextAnalysis.toks(col("text"))).as("term"))
@@ -697,11 +701,12 @@ object Similarity {
     * ≤ |cells|·|sources| rows, where the two share windows are bounded
     * frames, not corpus windows. */
   def clusterSourceMix(spark: SparkSession, dir: String): DataFrame = {
-    val assigned = argminCid(emb(spark, dir), ivfCentroids(spark, dir), Seq.empty)
+    val assigned = argminCid(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding"),
+      ivfCentroids(spark, dir), Seq.empty)
       .withColumnRenamed("vec_id", "doc_id")
     val wc = Window.partitionBy("cid")
     val ws = Window.partitionBy("source")
-    spark.read.parquet(s"$dir/documents.parquet")
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), col("source"))
       .join(assigned, "doc_id")
       .groupBy(col("cid"), col("source")).agg(count(lit(1)).as("n_docs"))
@@ -765,8 +770,8 @@ object Similarity {
     * sides of the pair join, the final projection, and the sweep. */
   private def semAssigned(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(semCache, spark, dir) {
-      argminCid(emb(spark, dir), ivfCentroids(spark, dir),
-          Seq("embedding", "c"))
+      argminCid(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding"),
+          ivfCentroids(spark, dir), Seq("embedding", "c"))
         .withColumn("ccos", round(cosExpr("embedding", "c"), 6)
           .cast("decimal(14,6)").cast("double"))
         .select("vec_id", "cid", "embedding", "ccos")
@@ -982,7 +987,8 @@ object Similarity {
   val RangeTau = 0.05
 
   def annRangeSearch(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).withColumn("bucket", bucketCol("embedding"))
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
+      .withColumn("bucket", bucketCol("embedding"))
     val q = e.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
         col("bucket").as("qbucket"))
@@ -1093,7 +1099,7 @@ object Similarity {
     // (vec, subspace) frame, and the PqM×PqK-row codebook table returns
     // to the parent session as a LocalRelation.
     Materialized.cached(pqCache, spark, dir) {
-      val e0 = emb(spark, dir)
+      val e0 = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
       val n = e0.count()
       val (schema, rows) = Scale.loopSession(spark, n * PqM) { cs =>
         val e = Scale.rebind(cs, e0).localCheckpoint(false)
@@ -1139,8 +1145,9 @@ object Similarity {
 
   def pqCodes(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(pqCodesCache, spark, dir) {
-      val n = emb(spark, dir).count()
-      pqAssign(subVecs(emb(spark, dir)), pqCodebooks(spark, dir))
+      val n = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding").count()
+      pqAssign(subVecs(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")),
+          pqCodebooks(spark, dir))
         .coalesce(sizedParts(spark, n * PqM))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
@@ -1217,7 +1224,7 @@ object Similarity {
     * ~16× smaller than the float vectors — the reason serving tiers use
     * PQ); per vector it shuffles one row into the argmin-style fold. */
   def annPq(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
     val q = e.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val qSub = subVecs(q.select(col("qid").as("vec_id"), col("qv").as("embedding")))
@@ -1308,16 +1315,17 @@ object Similarity {
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   def ivfPqLayout(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(ivfPqCache, spark, dir) {
-      val n = emb(spark, dir).count()
+      val n = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding").count()
       pqCodes(spark, dir).select(col("vec_id"), col("m"), col("cid"))
-        .join(argminCid(emb(spark, dir), ivfCentroids(spark, dir), Seq.empty)
+        .join(argminCid(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding"),
+            ivfCentroids(spark, dir), Seq.empty)
           .withColumnRenamed("cid", "cell"), "vec_id")
         .coalesce(sizedParts(spark, n * PqM))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
     val cents = ivfCentroids(spark, dir)
     val q = e.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -1425,7 +1433,7 @@ object Similarity {
     * Outputs are pure BIGINT (set intersection + [[graft.functions.TextFns.bp]]):
     * nothing float-compared, so the oracle row is exact by construction. */
   def ivfpqRecall(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
     val q = e.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val exact = e.crossJoin(broadcast(q))
@@ -1474,7 +1482,7 @@ object Similarity {
   def embeddingNormStats(spark: SparkSession, dir: String): DataFrame = {
     val n2 = round(Dedup.dotExpr("embedding", "embedding"), 4)
       .cast("decimal(18,4)")
-    emb(spark, dir)
+    Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
       .select(n2.as("n2"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(when(col("n2") === lit(0).cast("decimal(18,4)"), 1L).otherwise(0L))
@@ -1505,7 +1513,7 @@ object Similarity {
     * here). Map-only at any scale. */
   def embeddingQuantize(spark: SparkSession, dir: String): DataFrame = {
     val qs = org.apache.spark.sql.graft.Int8QuantStats(col("embedding"))
-    emb(spark, dir)
+    Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
       .select(col("vec_id"), qs.as("qs"))
       .where(col("qs").isNotNull)
       .select(col("vec_id"),
@@ -1551,9 +1559,9 @@ object Similarity {
     * order (the shared codegen'd dot product), so every double is
     * bit-identical across engines. */
   def sourceCoherence(spark: SparkSession, dir: String): DataFrame = {
-    val docsSrc = spark.read.parquet(s"$dir/documents.parquet")
+    val docsSrc = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), col("source"))
-    val e = emb(spark, dir)
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
       .join(docsSrc, col("vec_id") === col("doc_id"))
       .withColumn("nrm", sqrt(dotExpr("embedding", "embedding")))
       .where(col("nrm") > 0.0)
@@ -1643,7 +1651,7 @@ object Similarity {
       .select(col("s.id").as("id"), (col("pos") + 1).cast("long").as(rankName))
 
   def hybridSearchRrf(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
     val q = e.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val vecPool = pooledRanks(
@@ -1659,10 +1667,10 @@ object Similarity {
     // single doc), broadcasts into a map-side left join against the corpus
     // term explode, and a single doc-keyed aggregation yields both the
     // term count and the intersection size.
-    val qt = spark.read.parquet(s"$dir/documents.parquet")
+    val qt = Corpus.table(spark, dir, "documents")
       .join(broadcast(q.select(col("qid"))), col("doc_id") === col("qid"))
       .select(explode(TextAnalysis.toks(col("text"))).as("qterm")).distinct()
-    val tk = spark.read.parquet(s"$dir/documents.parquet")
+    val tk = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
         explode(TextAnalysis.toks(col("text"))).as("term")).distinct()
     val stats = tk.join(broadcast(qt), col("term") === col("qterm"), "left")
@@ -1784,7 +1792,7 @@ object Similarity {
     * matters. At 100 TB the bucket is the partition key on both sides and
     * every stage keys on va/vb/bucket — no global anything. */
   def bitextMine(spark: SparkSession, dir: String): DataFrame = {
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val e = Corpus.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"),
         bucketCol("embedding").as("bucket"))
     val a = e.where(col("label") === BtLabelA)
@@ -1879,7 +1887,8 @@ object Similarity {
   val SemDecontProbeMod = 10L
 
   def semanticDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).select(col("vec_id") +: col("embedding") +:
+    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
+      .select(col("vec_id") +: col("embedding") +:
       (0 until NumTables).map(t =>
         bucketColT("embedding", t).as(s"bucket$t")): _*)
     val probeMasks = 0L +: (0 until NumPlanes).map(j => 1L << j)
@@ -1966,9 +1975,11 @@ object Similarity {
   val MmrPoolN = 50
   val MmrLambda = 0.7
   def mmrSelect(spark: SparkSession, dir: String): DataFrame = {
-    val q = emb(spark, dir).orderBy("vec_id").limit(1)
+    val q = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
+      .orderBy("vec_id").limit(1)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val pool = emb(spark, dir).crossJoin(broadcast(q))
+    val pool = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
+      .crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
       .select(col("vec_id"), col("embedding"),
         cosExpr("embedding", "qv").as("rel"))
@@ -2041,7 +2052,7 @@ object Similarity {
 
   private def pcaModelFit(spark: SparkSession, dir: String)
       : (Array[Double], Array[Array[Double]], Array[Double], Long) = {
-    val e0 = emb(spark, dir)
+    val e0 = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
     val dim = Dedup.Dim
     // the 13 matvec passes each embed a fresh literal block (the rotated
     // V), so every round recompiles its codegen fragments and replans
@@ -2180,7 +2191,7 @@ object Similarity {
     val (mean, block, _, _) = pcaModel(spark, dir)
     val cs = block.map(v => v.indices.map(i => v(i) * mean(i)).sum)
     val vLits = block.map(v => lit(v.map(_.toFloat)))
-    emb(spark, dir).select(
+    Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding").select(
       Seq(col("vec_id")) ++ block.indices.map(j =>
         round(org.apache.spark.sql.graft.FloatDotProduct(
           col("embedding"), vLits(j)) - lit(cs(j)), 4)

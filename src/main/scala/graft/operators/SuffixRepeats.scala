@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{RangeRank, StringCodepoints}
 import org.apache.spark.storage.StorageLevel
+import graft.sources.Corpus
 
 /** EXACTSUBSTR repeat structure at UNBOUNDED threshold — the suffix-array
   * machinery `dup_span_exact` deliberately fixes to one window size,
@@ -80,9 +81,6 @@ import org.apache.spark.storage.StorageLevel
   * fixtures. */
 object SuffixRepeats {
 
-  private def docs(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   val MaxBlock = 4096L // doubling cap: levels 1,2,…,4096
 
   /** One doubling level: its block length, the ACTIVE-SET frame
@@ -146,11 +144,11 @@ object SuffixRepeats {
     * with [[packKey]] — the pack projections collapse into the explode
     * stage, so the array never leaves whole-stage codegen. */
   private def charFrame(spark: SparkSession, dir: String): DataFrame = {
-    val lens = docs(spark, dir)
+    val lens = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), length(col("text")).cast("long").as("doc_len"))
       .where(col("doc_len") > 0)
     val offsets = Scale.exclusivePrefixSums(lens, "doc_id", "doc_len", "doc_off")
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .join(offsets, "doc_id")
       .withColumn("cps", StringCodepoints(col("text")))
       .select(col("doc_id"), col("doc_len"), col("doc_off"), col("cps"),
@@ -207,7 +205,7 @@ object SuffixRepeats {
     // codepoint): a bench-scale corpus otherwise fans every level's sort
     // into hundreds of near-empty tasks (measured 1.5k tasks over a 1.5M
     // char corpus), while a 100 TB corpus keeps the session's sizing.
-    val chars = docs(spark, dir)
+    val chars = Corpus.table(spark, dir, "documents")
       .agg(coalesce(sum(length(col("text")).cast("long")), lit(0L)))
       .collect()(0).getLong(0)
     val parentP = spark.sessionState.conf.numShufflePartitions
@@ -569,7 +567,7 @@ object SuffixRepeats {
     val witPos = wit.getLong(1)
     val sample =
       if (witPos + lo >= Int.MaxValue.toLong) ""
-      else docs(spark, dir)
+      else Corpus.table(spark, dir, "documents")
         .where(col("doc_id") === wit.getLong(0))
         .select(substring(col("text"), witPos.toInt + 1, lo.toInt)
           .as("s")).collect()(0).getString(0)
@@ -594,7 +592,7 @@ object SuffixRepeats {
   def repeatCoverage(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val B = CoverageBlock
-    val allDocs = docs(spark, dir)
+    val allDocs = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
     val covered = levels(spark, dir).find(_.block == B).map(_.frame) match {
       // the dup chain died before level B ⇒ no B-char repeat exists

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns._
+import graft.sources.Corpus
 
 /** LLM-pipeline text analysis (SURVEY.md §2 #22-25): language ID, quality
   * scoring, token counting, winnowing fingerprints. All single-pass
@@ -12,9 +13,6 @@ import graft.functions.TextFns._
   * vocabulary-bounded shuffle.
   */
 object TextAnalysis {
-
-  private def docs(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   /** Tiny per-language stopword profiles for the n-gram/stopword heuristic. */
   val LangProfiles: Seq[(String, Seq[String])] = Seq(
@@ -115,7 +113,7 @@ object TextAnalysis {
     * corpus consults before any language decision). Map-only, fused into
     * the scan. */
   private def docScriptCounts(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Corpus.table(spark, dir, "documents").select(
       col("doc_id") +: col("source") +:
         ScriptClasses.map { case (name, jre, _) =>
           regexp_count(col("text"), lit(jre)).cast("long").as(name) }: _*)
@@ -204,7 +202,7 @@ object TextAnalysis {
   }
 
   def langId(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), col("lang").as("labeled_lang"), profileCol.as("__p"))
       .select(col("doc_id") +: col("labeled_lang") +: langHitColsFrom(col("__p")): _*)
       .withColumn("pred_lang", predLangFromHits)
@@ -255,7 +253,7 @@ object TextAnalysis {
   }
 
   def qualityScore(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Corpus.table(spark, dir, "documents").select(
       col("doc_id"),
       length(col("text")).cast("long").as("len_chars"),
       profileCol.as("__p"),
@@ -351,7 +349,7 @@ object TextAnalysis {
     * nothing past the scan at any scale. */
   def scorerAgreement(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graft.ExactMath.intDiv
-    val sig = docs(spark, dir).select(
+    val sig = Corpus.table(spark, dir, "documents").select(
         profileCol.as("__p"),
         aggregate(
           transform(toks(col("text")), t =>
@@ -427,7 +425,7 @@ object TextAnalysis {
 
   // ---- #24 token counting ----------------------------------------------
   def tokenCount(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Corpus.table(spark, dir, "documents").select(
       col("doc_id"),
       regexp_count(col("text"), lit("\\S+")).cast("long").as("ws_tokens"),
       regexp_count(col("text"), lit(BpeTokenRe)).cast("long").as("bpe_tokens"),
@@ -449,7 +447,7 @@ object TextAnalysis {
     * lang column — one map-only scan with map-side partials, nothing
     * corpus-sized past the scan. */
   def tokenizerFertility(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(col("lang"),
+    Corpus.table(spark, dir, "documents").select(col("lang"),
         regexp_count(col("text"), lit("\\S+")).cast("long").as("ws"),
         regexp_count(col("text"), lit(BpeTokenRe)).cast("long").as("bpe"))
       .groupBy(col("lang"))
@@ -481,7 +479,7 @@ object TextAnalysis {
     val toksDf = lowerToks(spark, dir)
       .select(col("doc_id"), size(col("toks")).cast("long").as("doc_len"),
         explode(col("toks")).as("term"))
-    val nDocs = docs(spark, dir).select(countDistinct(col("doc_id")).as("nd"))
+    val nDocs = Corpus.table(spark, dir, "documents").select(countDistinct(col("doc_id")).as("nd"))
     val tf = toksDf.groupBy("doc_id", "doc_len", "term")
       .agg(count(lit(1)).as("tf"))
     // tf already has exactly one row per (doc, term), so document frequency
@@ -527,7 +525,7 @@ object TextAnalysis {
   // ---- deterministic hash sampling (reproducible data mixing) -----------
   val SamplePct = 10
   def sampleDeterministic(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .where(pmod(md5Long(col("text")), lit(100)) < SamplePct)
       .select(col("doc_id"), col("source"), col("n_chars"))
   val sampleDeterministicSql: String =
@@ -627,7 +625,7 @@ object TextAnalysis {
   val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   val LongDigitsRe = "[0-9]{7,}"
   def redactPii(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Corpus.table(spark, dir, "documents").select(
       col("doc_id"),
       (regexp_count(col("text"), lit(EmailRe))
         + regexp_count(col("text"), lit(LongDigitsRe))).cast("long").as("n_redactions"),
@@ -661,7 +659,7 @@ object TextAnalysis {
 
   def piiStats(spark: SparkSession, dir: String): DataFrame = {
     val scrubbed = regexp_replace(col("text"), EmailRe, " ")
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("source"),
         regexp_count(col("text"), lit(EmailRe)).cast("long").as("email"),
         regexp_count(col("text"), lit(Ipv4Re)).cast("long").as("ipv4"),
@@ -728,7 +726,7 @@ object TextAnalysis {
     val hits = LicenseMarkers.map { case (fam, phrase) =>
       fam -> (instr(lt, phrase) > 0)
     }
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
         hits.reverse.foldLeft(lit("")) { case (acc, (fam, hit)) =>
           when(hit, fam).otherwise(acc)
@@ -767,7 +765,7 @@ object TextAnalysis {
     * PPJoin prefix tables. */
   private[operators] def lowerToks(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(lowerToksCache, spark, dir)(
-      docs(spark, dir)
+      Corpus.table(spark, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"),
           filter(transform(split(col("text"), WsTokenRe), t => lower(t)),
             t => t =!= "").as("toks"))
@@ -1202,7 +1200,7 @@ object TextAnalysis {
   // The per-(language, source) composition a data-mixing stage feeds on:
   // one map-side-partial aggregation over a pruned 3-column scan.
   def corpusMix(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).groupBy("lang", "source")
+    Corpus.table(spark, dir, "documents").groupBy("lang", "source")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"),
         // §6: exact ×100 fixed point (mean chars to 2dp, floored)
@@ -1227,10 +1225,10 @@ object TextAnalysis {
   def mixDivergence(spark: SparkSession, dir: String): DataFrame = {
     val langs = LangProfiles.map(_._1)
     def cnt(l: String) = sum(when(col("lang") === l, 1L).otherwise(0L))
-    val perSource = docs(spark, dir).groupBy(col("source"))
+    val perSource = Corpus.table(spark, dir, "documents").groupBy(col("source"))
       .agg(count(lit(1)).as("n_s"),
         langs.map(l => cnt(l).as(s"c_$l")): _*)
-    val corpus = docs(spark, dir)
+    val corpus = Corpus.table(spark, dir, "documents")
       .agg(count(lit(1)).as("n"), langs.map(l => cnt(l).as(s"t_$l")): _*)
     val chi2 = langs.map { l =>
       val pd = col(s"c_$l").cast("double") / col("n_s").cast("double")
@@ -1529,7 +1527,7 @@ object TextAnalysis {
 
   private[graft] def oovStatsK(spark: SparkSession, dir: String,
       k: Int): DataFrame = {
-    val tok = docs(spark, dir)
+    val tok = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), explode(toks(col("text"))).as("term"))
     // vocabulary from the shared materialized term-count frame (zipfStats,
     // vocabGrowth) — no second corpus tokenize for the vocab branch
@@ -1626,7 +1624,7 @@ object TextAnalysis {
     * `floor(log2(...))` so no float sits near a bucket boundary. One
     * map-side-partial agg on ≤64 keys. */
   def lengthHistogram(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .groupBy(length(bin(col("n_chars"))).cast("long").as("len_bucket"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"),
@@ -1648,7 +1646,7 @@ object TextAnalysis {
     * One corpus scan: the codegen'd profile pass scores each row, then a
     * ≤64-key map-side-partial agg. */
   def lengthQualityCurve(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(length(bin(col("n_chars"))).cast("long").as("len_bucket"),
         qualityBpFrom(profileCol).as("q"))
       .groupBy(col("len_bucket"))
@@ -1677,7 +1675,7 @@ object TextAnalysis {
   val FpK = 5
   val FpW = 4
   def fingerprint(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       // same population as the explode form: at least one full window
       .where(length(col("text")) >= FpK + FpW - 1)
       .select(col("doc_id"),
@@ -1719,7 +1717,7 @@ object TextAnalysis {
   val WinnowBucketCap = 64
   val WinnowMinShared = 2L
   def winnowPairs(spark: SparkSession, dir: String): DataFrame = {
-    val fp = docs(spark, dir)
+    val fp = Corpus.table(spark, dir, "documents")
       .where(length(col("text")) >= FpK + FpW - 1)
       .select(col("doc_id"),
         org.apache.spark.sql.graft.WinnowMins(
@@ -1795,7 +1793,7 @@ object TextAnalysis {
   val HhCapacity = 1024
   val HhTopN = 5
   def heavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    val tokens = docs(spark, dir)
+    val tokens = Corpus.table(spark, dir, "documents")
       .select(col("source"), explode(toks(col("text"))).as("term"))
     val cand = tokens.groupBy(col("source"))
       .agg(org.apache.spark.sql.graft.FreqSketch.column(
@@ -1833,7 +1831,7 @@ object TextAnalysis {
     * these counts is the classifier's accuracy; off-diagonal cells name the
     * confusable pairs that drive profile tuning. */
   def langConfusion(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("lang").as("labeled_lang"), profileCol.as("__p"))
       .select(col("labeled_lang") +: langHitColsFrom(col("__p")): _*)
       .select(col("labeled_lang"), predLangFromHits.as("pred_lang"))
@@ -1861,7 +1859,7 @@ object TextAnalysis {
     * to doc_id ~2³¹ at 10⁴-bp quality; past that, center x per source or
     * widen the sums to DECIMAL (documented, same q1_agg-style cap). */
   def qualityTrend(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("source"), col("doc_id").cast("long").as("x"),
         qualityBpFrom(profileCol).as("y"))
       .groupBy(col("source"))
@@ -1905,7 +1903,7 @@ object TextAnalysis {
     * billion-doc postings at 100 TB. */
   val IdxPostings = 8
   def invertedIndex(spark: SparkSession, dir: String): DataFrame = {
-    val perDoc = docs(spark, dir)
+    val perDoc = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), explode(toks(col("text"))).as("term"))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
@@ -2066,7 +2064,7 @@ object TextAnalysis {
       .select(split(col("bigram"), " ").as("ws"))
       .select(element_at(col("ws"), 1).as("w1"),
         element_at(col("ws"), 2).as("w2"))
-    val pos = docs(spark, dir)
+    val pos = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), posexplode(toks(col("text"))).as(Seq("pos", "term")))
     def postings(w: String): DataFrame =
       pos.join(broadcast(ph), col("term") === col(w))
@@ -2122,7 +2120,7 @@ object TextAnalysis {
     * projection; nothing leaves the row. */
   def readability(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graft.ExactMath.intDiv
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
         regexp_count(col("text"), lit("\\S+")).cast("long").as("n_words"),
         ((length(col("text")) - length(replace(col("text"), lit(".")))) +

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns._
+import graft.sources.Corpus
 
 /** Unigram-LM (SentencePiece-style) tokenizer training + serving — the
   * OTHER production tokenizer family next to BPE (Kudo 2018: seed a large
@@ -59,9 +60,6 @@ object Unigram {
   val UnigramEmRounds = 3
   val UnigramVocabK = 48
   val UnigramSeedTopN = 20
-
-  private def docs(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   /** The [a-z]+ word-frequency table off the shared term frame. */
   private def wordFreq(spark: SparkSession, dir: String): DataFrame =
@@ -232,7 +230,7 @@ object Unigram {
         .toDF("term", "n_syms")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), explode(TextAnalysis.toks(col("text"))).as("term"))
       .join(encodedVocab, Seq("term"))
       .groupBy(col("doc_id"))
@@ -252,7 +250,7 @@ object Unigram {
         col("n_uni_syms"))
     val bpe = TextAnalysis.bpeEncode(spark, dir)
       .select(col("doc_id"), col("n_bpe_syms"))
-    val src = docs(spark, dir).select(col("doc_id"), col("source"))
+    val src = Corpus.table(spark, dir, "documents").select(col("doc_id"), col("source"))
     uni.join(bpe, Seq("doc_id")).join(src, Seq("doc_id"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),

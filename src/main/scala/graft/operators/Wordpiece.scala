@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Corpus
 
 /** WordPiece tokenizer training + serving — the THIRD production tokenizer
   * family next to BPE and unigram-LM (Schuster & Nakajima 2012; the
@@ -46,9 +47,6 @@ object Wordpiece {
 
   val WpMergeRounds = 12
   val WpPairTopN = 20
-
-  private def docs(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   /** The [a-z]+ word-frequency table off the shared term frame. */
   private def wordFreq(spark: SparkSession, dir: String): DataFrame =
@@ -265,7 +263,7 @@ object Wordpiece {
         }.toDF("term", "n_syms", "unk")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    docs(spark, dir)
+    Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
         explode(TextAnalysis.toks(col("text"))).as("term"))
       .join(encodedVocab, Seq("term"))
@@ -300,7 +298,7 @@ object Wordpiece {
     val bbpe = Bbpe.bbpeEncode(spark, dir)
       .select(col("doc_id"), col("n_words").as("n_raw_words"),
         col("n_bbpe_syms"))
-    val src = docs(spark, dir).select(col("doc_id"), col("source"))
+    val src = Corpus.table(spark, dir, "documents").select(col("doc_id"), col("source"))
     uni.join(bpe, Seq("doc_id")).join(wp, Seq("doc_id"))
       .join(bbpe, Seq("doc_id"))
       .join(src, Seq("doc_id"))

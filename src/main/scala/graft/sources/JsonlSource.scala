@@ -161,7 +161,7 @@ object JsonlSource {
       .mkString.take(12)
     val path = s"${sys.props("java.io.tmpdir")}/graft-jsonl-export-$tag-" +
       spark.sparkContext.applicationId
-    exportJsonl(spark.read.parquet(s"$dir/documents.parquet"), path)
+    exportJsonl(Corpus.table(spark, dir, "documents"), path)
   }
 
   val jsonlWriteSql: String =

@@ -56,8 +56,11 @@ object DocsStream {
   def decontaminationGate(docs: DataFrame, probeGrams: Seq[String]): DataFrame = {
     val k = graft.operators.Curation.ContamK
     // WordGrams emits an empty array below k tokens, matching the batch
-    // gram construction exactly (identical strings, so batch ≡ stream)
-    val grams = org.apache.spark.sql.graft.WordGrams(col("toks"), k)
+    // gram construction exactly (identical strings, so batch ≡ stream).
+    // A null text has null toks, so null grams: as no grams the doc passes,
+    // just as batch `decontaminate`, which never flags it, keeps it
+    val grams = coalesce(org.apache.spark.sql.graft.WordGrams(col("toks"), k),
+      array().cast("array<string>"))
     docs
       .withColumn("toks", filter(
         transform(split(col("text"), WsTokenRe), t => lower(t)), t => t =!= ""))

@@ -19,10 +19,10 @@ import org.apache.spark.sql.types.{AbstractDataType, BooleanType, DataType, Deci
   * two interpreted-class costs per ROW: the double→decimal cast routes
   * through `BigDecimal(java.lang.Double.toString(d))` (an allocation + a
   * shortest-repr float format + a parse), and the sum buffer is a
-  * precision-28 Decimal whose adds leave the compact-long fast path. The
-  * committed `graft.Probe` A/B puts the all-long formulation at 0.57 s vs
-  * 0.98 s decimal for Q1 at sf0.1 — but a plain long sum overflows past
-  * ≈SF 1.4e4, under the 100 TB ≈ SF 1e5 target, so r13 rejected it.
+  * precision-28 Decimal whose adds leave the compact-long fast path. An
+  * r13 A/B put the all-long formulation at 0.57 s vs 0.98 s decimal for
+  * Q1 at sf0.1 — but a plain long sum overflows past ≈SF 1.4e4, under the
+  * 100 TB ≈ SF 1e5 target, so r13 rejected it.
   *
   * This file is the checked-overflow variant VERDICT r13 asked for, with
   * the overflow REMOVED instead of checked at runtime:

@@ -1,12 +1,19 @@
 package graft
 
+import java.nio.file.Files
+import scala.util.Try
 import graft.operators.{Dedup, Materialized, Multimodal}
+import graft.sources.Corpus
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Lifecycle of the per-(session, corpus) materialized intermediates
   * (ADVICE r3): session-instance cache scoping, and full storage release —
   * including the per-round localCheckpoint blocks behind dedupComponents —
-  * on clearAll(). */
+  * on clearAll(); and the same scoping and release for the schemas
+  * `Corpus.table` pins. */
 class MaterializedSpec extends SparkTestBase {
+  import spark.implicits._
 
   // two identical long docs + one distinct: a non-empty near-dup pair graph
   private lazy val dupDir = writeDocsFixture(Seq(
@@ -52,5 +59,74 @@ class MaterializedSpec extends SparkTestBase {
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(err).exists(_.contains("non-ASCII")), err.toString)
+  }
+
+  /** An events table whose `ts` is INT64 TIMESTAMP(NANOS), the type whose
+    * reading `spark.sql.legacy.parquet.nanosAsLong` decides. Spark cannot
+    * write it, so the parquet writer is driven directly. */
+  private lazy val nanosDir = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("graft-nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val w = ExampleParquetWriter
+      .builder(new Path(s"$dir/events.parquet/part-00000.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1700000000123456789L))
+    finally w.close()
+    dir
+  }
+
+  test("Corpus.table pins per session instance: a twin resolves under its own conf") {
+    // the ts type, or the error condition when the session cannot read it
+    def outcome(ts: => DataType): String = Try(ts).fold({
+      case a: AnalysisException => a.getCondition
+      case e => e.toString
+    }, _.toString)
+    def viaCorpus(s: SparkSession) =
+      outcome(Corpus.table(s, nanosDir, "events").schema("ts").dataType)
+    def direct(s: SparkSession) =
+      outcome(s.read.parquet(s"$nanosDir/events.parquet").schema("ts").dataType)
+    assert(viaCorpus(spark) == LongType.toString)
+    val twin = spark.newSession()
+    twin.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    // the twin is not served the first session's pinned LongType: it gets
+    // exactly what its own read resolves to (Spark rejects the nanos column
+    // without the legacy flag)
+    assert(viaCorpus(twin) == direct(twin))
+    assert(viaCorpus(twin) != LongType.toString)
+    assert(viaCorpus(spark) == LongType.toString)
+  }
+
+  test("clearAll() forgets pinned schemas: a rewritten table shows its new column") {
+    val dir = writeDocsFixture(Seq(1L -> "alpha beta", 2L -> "gamma"))
+    assert(!Corpus.table(spark, dir, "documents").columns.contains("extra"))
+    Seq((1L, "alpha beta", "en", "src0", 10L, 7L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars", "extra")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // a corpus dir is immutable within a session: still the pinned schema
+    assert(!Corpus.table(spark, dir, "documents").columns.contains("extra"))
+    Materialized.clearAll()
+    val df = Corpus.table(spark, dir, "documents")
+    assert(df.columns.toSeq == Seq("doc_id", "text", "lang", "source", "n_chars", "extra"))
+    assert(df.select("extra").as[Long].collect().toSeq == Seq(7L))
+  }
+
+  test("a missing corpus table fails at build as a plain read does, and pins nothing") {
+    val dir = Files.createTempDirectory("graft-missing").toString
+    val path = s"$dir/documents.parquet"
+    val plain = intercept[AnalysisException](spark.read.parquet(path))
+    val err = intercept[AnalysisException](Corpus.table(spark, dir, "documents"))
+    assert(err.getCondition == plain.getCondition, err.getMessage)
+    assert(err.getMessage == plain.getMessage)
+    // once the table exists it resolves to its own schema, not a pinned one
+    Seq((1L, "text")).toDF("doc_id", "text").write.parquet(path)
+    assert(Corpus.table(spark, dir, "documents").schema ==
+      spark.read.parquet(path).schema)
   }
 }

@@ -101,6 +101,17 @@ class OperatorsSpec extends SparkTestBase {
     assert(!rows.keys.exists(_.contains("single")))
   }
 
+  test("word_grams rejects k < 2, whose grams could be null") {
+    import org.apache.spark.sql.graft.WordGrams
+    for (k <- Seq(1, 0)) {
+      val err = intercept[IllegalArgumentException](WordGrams(col("toks"), k))
+      assert(err.getMessage.contains("k must be >= 2"), err.getMessage)
+    }
+    val grams = Seq(Seq("a", "b", "c")).toDF("toks")
+      .select(WordGrams(col("toks"), 2)).as[Seq[String]].collect().head
+    assert(grams == Seq("a b", "b c"))
+  }
+
   test("sessionize splits on >30min gaps per user") {
     val d = java.nio.file.Files.createTempDirectory("graft-ev").toString
     val ns = 1000000000L

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -12,10 +16,18 @@ import org.apache.spark.sql.execution.window.WindowExec
   * those are the scalar broadcasts (a 1-row global count/min, a ≤16-row
   * centroid table) that are the *correct* way to attach a tiny aggregate
   * to every row. A BNLJ with a join condition is an all-pairs filter scan
-  * and is flagged. */
+  * and is flagged.
+  *
+  * The same sweep gates the corpus-table resolver: every query is built
+  * once (the plan lints read those frames), then rebuilt in the same
+  * session, and the rebuild must start no parquet schema-inference job. */
 class PlanLintSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** Every registered query, built once; the lints read these frames. */
+  private lazy val built: Seq[(String, DataFrame)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) => name -> fn(spark, sf) }
 
   /** Queries whose conditioned BNLJ is a filter against a PROVABLY tiny
     * broadcast (audited by hand): the ann probes broadcast the one query
@@ -41,9 +53,9 @@ class PlanLintSpec extends SparkTestBase {
       "mmr_select")
 
   test("no query plans a cartesian, a conditioned nested loop, or a global window") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, sf).queryExecution.sparkPlan
+    val offenders = built.flatMap {
+      case (name, df) =>
+        val plan = df.queryExecution.sparkPlan
         val carts = plan.collect {
           case _: CartesianProductExec => s"$name: CartesianProduct"
         }
@@ -83,9 +95,9 @@ class PlanLintSpec extends SparkTestBase {
       case _: Round => true
       case other => other.children.exists(nakedRound)
     }
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val analyzed = fn(spark, sf).queryExecution.analyzed
+    val offenders = built.flatMap {
+      case (name, df) =>
+        val analyzed = df.queryExecution.analyzed
         val outIds = analyzed.output.map(_.exprId).toSet
         val decimalOut = analyzed.output.collect {
           case a if a.dataType.isInstanceOf[DecimalType] =>
@@ -103,5 +115,40 @@ class PlanLintSpec extends SparkTestBase {
     }
     assert(offenders.isEmpty,
       s"§6 float-policy violations:\n${offenders.distinct.mkString("\n")}")
+  }
+
+  test("rebuilding a query in the same session starts no parquet schema-inference job") {
+    built // every query built once already
+    val sc = spark.sparkContext
+    val Tag = "graft.lint.rebuild"
+    val Sentinel = "-sentinel-"
+    val jobs = new ConcurrentLinkedQueue[(String, String)]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(Tag))).foreach { key =>
+          if (key == Sentinel) drained.countDown()
+          else jobs.add(key -> e.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.name))
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+        sc.setLocalProperty(Tag, name)
+        try fn(spark, sf) finally sc.setLocalProperty(Tag, null)
+      }
+      // the listener bus delivers in order: once a later job's start has
+      // arrived, every rebuild job's has too
+      sc.setLocalProperty(Tag, Sentinel)
+      try spark.range(1).count() finally sc.setLocalProperty(Tag, null)
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+    // a job's stage is named for its call site: "parquet at <file>:<line>"
+    // is the footer read that infers a parquet schema
+    val offenders = jobs.asScala.toSeq.collect {
+      case (name, site) if site.startsWith("parquet at") => s"$name: $site"
+    }
+    assert(offenders.isEmpty,
+      s"schema-inference jobs on a rebuild:\n${offenders.mkString("\n")}")
   }
 }

@@ -567,6 +567,36 @@ class SourcesAndStreamingSpec extends SparkTestBase {
     assert(ids.toSeq == Seq(2L))
   }
 
+  test("decontamination gate keeps null-text docs exactly as batch decontaminate") {
+    import graft.operators.Curation
+    // docs 0-2 are the probe set (doc_id < ContamProbeDocs)
+    val probeRows = Seq(0L -> "winter rivers carry bright morning stones",
+      1L -> "a quiet village sleeps", 2L -> "under northern skies tonight")
+    val streamed: Seq[(Long, String)] = Seq(
+      10L -> "travellers saw bright morning stones near the ford", // contaminated
+      11L -> "a clean line about harbour cranes",
+      12L -> null,                                                 // null text
+      13L -> "two")                                                // below k tokens
+    val fix = writeDocsFixture(probeRows ++ streamed)
+    val flagged = Curation.decontaminate(spark, fix)
+      .collect().map(_.getLong(0)).toSet
+    val batchKept = streamed.map(_._1).toSet -- flagged
+    val probeGrams = Curation.gramsOf(probeRows.toDF("doc_id", "text"),
+      Curation.ContamK).select("gram").distinct().as[String].collect().toSeq
+    val input = MemoryStream[(Long, String)](spark)
+    val q = graft.streaming.DocsStream
+      .decontaminationGate(input.toDF().toDF("doc_id", "text"), probeGrams)
+      .writeStream.format("memory").queryName("decon_gate_null")
+      .outputMode("append").start()
+    input.addData(streamed: _*)
+    q.processAllAvailable()
+    val streamKept = spark.table("decon_gate_null").collect()
+      .map(_.getLong(0)).toSet
+    q.stop()
+    assert(batchKept == Set(11L, 12L, 13L))
+    assert(streamKept == batchKept)
+  }
+
   test("streaming mix gate keeps exactly the batch sampler's documents") {
     import spark.implicits._
     // 12 en vs 3 de docs; rates learned from the corpus as a static table
@@ -994,7 +1024,7 @@ class SourcesAndStreamingSpec extends SparkTestBase {
   }
 
   test("registered views + injected functions make the library SQL-usable") {
-    val registered = graft.sources.Tables.register(spark, "/root/testdata/sf0.001")
+    val registered = graft.sources.Corpus.register(spark, "/root/testdata/sf0.001")
     assert(registered.contains("documents") && registered.contains("lineitem"))
     // a pure-SQL anagram reduce through the registered sort_chars
     val viaSql = spark.sql(
