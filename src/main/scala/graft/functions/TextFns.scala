@@ -14,6 +14,13 @@ import org.apache.spark.sql.functions._
   *  - letters-only predicate: mapphase/map.go:154-163
   *  - anagram signature: mapphase/map.go:68-71 (sort the letters)
   *  - Gutenberg header/footer strip: mapphase/split.go:90-116
+  *
+  * The word rules (whitespace split, lowercase, trim, letters-only,
+  * stopwords) are EXECUTED by the CleanWords row kernel
+  * (org.apache.spark.sql.graft), which SigGroups shares per token.
+  * `trimNonAlpha`/`isCleanWord` stay here as the Spark-side reference the
+  * kernel is tested against, and `sqlTrim`/`sqlIsCleanWord` are their
+  * DuckDB twins in the oracle SQL.
   */
 object TextFns {
 

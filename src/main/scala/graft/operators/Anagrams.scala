@@ -2,14 +2,15 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CleanWords
 import org.apache.spark.storage.StorageLevel
 import graft.functions.TextFns._
 import graft.sources.Corpus
 
 /** The reference's product pipeline (anagram groups over a corpus), §2 #1-14,
-  * re-expressed as declarative Spark plans. One wide transform end-to-end:
-  * per-doc dedup and the combiner (mapphase/combine.go) are realized by
-  * Spark's map-side partial aggregation; the fnv-hash shuffle
+  * re-expressed as declarative Spark plans. Per-doc dedup runs inside the
+  * CleanWords row kernel; the combiner (mapphase/combine.go) is Spark's
+  * map-side partial aggregation; the fnv-hash shuffle
   * (reducephase/shuffle.go:84-93) is the exchange on groupBy(sig).
   *
   * Scale: shuffle bytes are bounded by |distinct words| per map partition
@@ -18,18 +19,14 @@ import graft.sources.Corpus
   */
 object Anagrams {
 
-  /** Clean words WITHOUT any distinct: the downstream `collect_set` dedups
-    * (map-side partially, then globally), so the anagram plan needs exactly
-    * ONE shuffle. The reference's per-doc dedup (split.go:119-133) and
-    * combiner (combine.go) exist to shrink shuffle volume — in Spark that
-    * role is played by the partial ObjectHashAggregate, not by extra
-    * exchanges. */
+  /** Each document's distinct clean words (one row per (doc, word)), from
+    * one CleanWords pass per document: tokenize, lowercase, trim, filter
+    * and the reference's per-doc dedup (split.go:119-133) happen inside the
+    * row. That dedup is row-local and needs no exchange; the corpus-wide
+    * dedup is the consumer's (`distinct` in cleanWordsOf, or
+    * `collect_set`), which dedups map-side before its shuffle. */
   def cleanWordsRawOf(docsDf: DataFrame): DataFrame =
-    docsDf
-      .select(explode(split(col("text"), WsTokenRe)).as("tok"))
-      .where(col("tok") =!= "")
-      .select(trimNonAlpha(lower(col("tok"))).as("word"))
-      .where(isCleanWord(col("word")))
+    docsDf.select(explode(CleanWords(col("text"), Stopwords)).as("word"))
 
   /** Distinct corpus-wide clean words (mapphase/map.go:60-77 preprocessing). */
   def cleanWordsOf(docsDf: DataFrame): DataFrame =

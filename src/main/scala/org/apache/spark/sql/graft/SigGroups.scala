@@ -23,12 +23,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * it in memory per split. With this expression the per-doc combine is a
   * map-only projection at any scale.
   *
-  * Semantics mirror the shared regexes exactly: trim strips code points
-  * outside \p{L} (Character.isLetter) from both ends; the letters-only
-  * check requires every code point to be a letter; word order inside a
-  * group is UTF8String binary order (== sort_array == DuckDB list_sort);
-  * group order in the output array is binary order of signatures
-  * (deterministic; consumers explode, so any order hash-matches).
+  * Each token is cleaned by CleanWords.cleanToken, the one Scala-side
+  * definition of the word rules (equal to the shared regex chain); word
+  * order inside a group is UTF8String binary order (== sort_array ==
+  * DuckDB list_sort); group order in the output array is binary order of
+  * signatures (deterministic; consumers explode, so any order
+  * hash-matches).
   */
 case class SigGroups(child: Expression, stopwords: Seq[String])
     extends UnaryExpression with ExpectsInputTypes {
@@ -40,19 +40,16 @@ case class SigGroups(child: Expression, stopwords: Seq[String])
     containsNull = false)
   override def prettyName: String = "sig_groups"
 
-  private lazy val stopSet: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](stopwords.length * 2)
-    stopwords.foreach(w => s.add(UTF8String.fromString(w)))
-    s
-  }
+  private lazy val stopSet = CleanWords.stopSet(stopwords)
+  private lazy val useICU = CleanWords.icuCaseMappings()
 
   override protected def nullSafeEval(input: Any): Any =
-    SigGroups.compute(input.asInstanceOf[ArrayData], stopSet)
+    SigGroups.compute(input.asInstanceOf[ArrayData], stopSet, useICU)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val setRef = ctx.addReferenceObj("stopSet", stopSet, "java.util.HashSet")
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = org.apache.spark.sql.graft.SigGroups.compute($c, $setRef);")
+      s"${ev.value} = org.apache.spark.sql.graft.SigGroups.compute($c, $setRef, $useICU);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -61,16 +58,17 @@ case class SigGroups(child: Expression, stopwords: Seq[String])
 
 object SigGroups {
 
-  /** Lowercase, trim non-letters, keep all-letter non-stopwords, group by
-    * sorted-letter signature. TreeMap/TreeSet of UTF8String = binary
+  /** Clean each token (CleanWords.cleanToken), keep non-stopwords, group
+    * by sorted-letter signature. TreeMap/TreeSet of UTF8String = binary
     * ordering, matching sort_array and DuckDB's list_sort. */
-  def compute(arr: ArrayData, stop: java.util.HashSet[UTF8String]): ArrayData = {
+  def compute(arr: ArrayData, stop: java.util.HashSet[UTF8String],
+              useICU: Boolean): ArrayData = {
     val groups = new java.util.TreeMap[UTF8String, java.util.TreeSet[UTF8String]]()
     val n = arr.numElements()
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val w = clean(arr.getUTF8String(i).toLowerCase)
+        val w = CleanWords.cleanToken(arr.getUTF8String(i), useICU)
         if (w != null && !stop.contains(w)) {
           val sig = SortChars.sortUtf8(w)
           var set = groups.get(sig)
@@ -93,35 +91,6 @@ object SigGroups {
     }
     new GenericArrayData(out)
   }
-
-  /** Trim leading/trailing non-letter code points; null unless the residue
-    * is non-empty and all letters (≡ regexp_replace(^[^\p{L}]+|[^\p{L}]+$)
-    * followed by rlike(^[\p{L}]+$)). */
-  private def clean(t: UTF8String): UTF8String = {
-    val s = t.toString
-    var a = 0
-    val len = s.length
-    while (a < len && !isLetterAt(s, a)) a += advance(s, a)
-    if (a >= len) return null
-    var b = len
-    while (b > a && !isLetterBefore(s, b)) b -= retreat(s, b)
-    // residue s[a, b): all code points must be letters
-    var i = a
-    while (i < b) {
-      if (!isLetterAt(s, i)) return null
-      i += advance(s, i)
-    }
-    UTF8String.fromString(s.substring(a, b))
-  }
-
-  private def isLetterAt(s: String, i: Int): Boolean =
-    Character.isLetter(s.codePointAt(i))
-  private def advance(s: String, i: Int): Int =
-    Character.charCount(s.codePointAt(i))
-  private def isLetterBefore(s: String, end: Int): Boolean =
-    Character.isLetter(s.codePointBefore(end))
-  private def retreat(s: String, end: Int): Int =
-    Character.charCount(s.codePointBefore(end))
 
   def apply(tokens: Column, stopwords: Seq[String]): Column =
     ExpressionUtils.column(SigGroups(ExpressionUtils.expression(tokens), stopwords))

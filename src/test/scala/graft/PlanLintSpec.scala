@@ -117,6 +117,33 @@ class PlanLintSpec extends SparkTestBase {
       s"§6 float-policy violations:\n${offenders.distinct.mkString("\n")}")
   }
 
+  test("anagram word plans run the CleanWords kernel, not a per-token regex chain") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import org.apache.spark.sql.graft.CleanWords
+    import graft.operators.Anagrams
+    import graft.sources.{Corpus, GutenbergSource}
+    val books = Files.createTempDirectory("graft-lint-books")
+    Files.writeString(books.resolve("b.txt"), "care race part trap")
+    val plans = Seq(
+      "GutenbergSource.anagramsFromBooks" -> GutenbergSource.anagramsFromBooks(spark, books.toString),
+      // a fresh fixture: the sf corpus's vocabulary is cached by the sweep
+      // above, and a cache hit would hide the plan
+      "Anagrams.cleanWordsOf" -> Anagrams.cleanWordsOf(
+        Corpus.table(spark, writeDocsFixture(Seq(1L -> "care race")), "documents")))
+    val offenders = plans.flatMap { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      val kernel = plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[CleanWords])))
+      val splitGenerates = plan.collect {
+        case g: Generate if g.generator.exists(_.isInstanceOf[StringSplit]) =>
+          s"$name: Generate over split: ${g.generator.sql}"
+      }
+      (if (kernel) Nil else Seq(s"$name: no clean_words in the plan")) ++ splitGenerates
+    }
+    assert(offenders.isEmpty, s"per-token word plans:\n${offenders.mkString("\n")}")
+  }
+
   test("rebuilding a query in the same session starts no parquet schema-inference job") {
     built // every query built once already
     val sc = spark.sparkContext

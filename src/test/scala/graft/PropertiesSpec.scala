@@ -165,6 +165,67 @@ class PropertiesSpec extends SparkTestBase {
     assert(viaExpr == viaRel)
   }
 
+  /** Text drawn to break a tokenizer: both ASCII cases, Latin-1 letters,
+    * case-mapping edge letters (İ ı ß Σ ς ǅ µ ª º), a non-BMP letter,
+    * a combining accent, NBSP, U+2028, all six `\s` bytes, digits,
+    * punctuation, and whole stopwords in either case. U+A7CB is newer
+    * than the JDK's Unicode tables: only the ICU case mapping lowers it,
+    * to the letter ɤ, so the two `lower` settings give different words. */
+  private val adversarialDoc: Gen[String] = {
+    val chars = "aAbBeEsSzZ" + "éÉüÜñÑÿçÇ" + "İıßΣσςǅµªº" + "\uA7CB" +
+      "\u0301\u00A0\u2028" + " \t\n\u000B\f\r" + "09.,'-!"
+    val piece = Gen.frequency(
+      12 -> Gen.oneOf(chars.map(_.toString) :+ "\uD835\uDC00"), // 𝐀, U+1D400
+      1 -> Gen.oneOf(Stopwords).flatMap(w => Gen.oneOf(w, w.toUpperCase)),
+      1 -> Gen.const(" "))
+    Gen.chooseNum(0, 60).flatMap(n => Gen.listOfN(n, piece)).map(_.mkString)
+  }
+
+  private def withIcuCaseMappings[A](on: Boolean)(body: => A): A = {
+    val key = "spark.sql.icu.caseMappings.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, on.toString)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("property: CleanWords equals the regex chain with per-doc distinct") {
+    import org.apache.spark.sql.graft.CleanWords
+    val docs = draw(adversarialDoc, 2000).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    // read back from parquet so the kernel runs inside generated code
+    val df = spark.read.parquet(s"${writeDocsFixture(docs)}/documents.parquet")
+    val chainBySetting = for (icu <- Seq(false, true)) yield withIcuCaseMappings(icu) {
+      val viaKernel = df
+        .select(col("doc_id"), explode(CleanWords(col("text"), Stopwords)).as("word"))
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      val viaChain = df
+        .select(col("doc_id"), explode(split(col("text"), WsTokenRe)).as("tok"))
+        .where(col("tok") =!= "")
+        .select(col("doc_id"), trimNonAlpha(lower(col("tok"))).as("word"))
+        .where(isCleanWord(col("word")))
+        .distinct()
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      val (unique, same) = (viaKernel.distinct.length == viaKernel.length, viaKernel.toSet == viaChain)
+      assert(unique, s"icu=$icu: a word repeats in a doc")
+      assert(same, s"icu=$icu: " +
+        s"kernel-only ${(viaKernel.toSet -- viaChain).take(5)}, " +
+        s"chain-only ${(viaChain -- viaKernel).take(5)}")
+      assert(viaChain.exists(_._2.exists(_ > 0x7f)), "non-ASCII words were exercised")
+      viaChain
+    }
+    assert(chainBySetting.distinct.length == 2, "the case-mapping setting was exercised")
+  }
+
+  test("CleanWords: null text is null; empty and whitespace-only text have no words") {
+    import org.apache.spark.sql.graft.CleanWords
+    val got = Seq[(Long, Option[String])](
+        (0L, None), (1L, Some("")), (2L, Some(" \t\n\u000B\f\r ")), (3L, Some("Listen, silent!")))
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), CleanWords(col("text"), Stopwords).as("w"))
+      .collect().map(r => r.getLong(0) -> Option(r.getSeq[String](1))).toMap
+    assert(got == Map(0L -> None, 1L -> Some(Seq()), 2L -> Some(Seq()),
+      3L -> Some(Seq("listen", "silent"))))
+  }
+
   test("property: embedding-dedup blocking finds all pairs within hamming<=1 buckets") {
     // brute-force check on random float vectors: every pair above the
     // cosine threshold whose hyperplane buckets differ by <=1 bit must be
