@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Times the reference's headline workload (raw book files → anagram part
   * files) for BASELINE.md: the reference README reports "under 20 seconds"
@@ -8,11 +7,7 @@ object BenchBooks {
   def main(args: Array[String]): Unit = {
     val Array(booksDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id * 2)").collect() // JVM warmup
     // best of 2 in one JVM (same methodology as graft.Bench): the first run

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local-iteration bench: times ONLY the queries named on the command line
   * (same session config and noop-sink methodology as [[Bench]]), printing
@@ -11,14 +10,7 @@ object BenchSome {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // same warmup as Bench
     spark.range(1000000).selectExpr("sum(id * 2)").collect()

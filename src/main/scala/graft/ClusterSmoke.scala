@@ -109,8 +109,9 @@ object ClusterSmoke {
                           // the bucketed-feature join across JVMs
     "domain_pagerank",    // directed rank loop w/ explicit node universe +
                           // per-round checkpoints across executor JVMs
-    "kn3_perplexity",     // materialized TRIGRAM KN model: five type-keyed
-                          // joins + corpus-wide scoring join across JVMs
+    "kn3_perplexity",     // materialized TRIGRAM KN model: e6-grid levels,
+                          // each joined once at its own type grain, +
+                          // corpus-wide scoring join across JVMs
     "bbpe_encode",        // byte-level merge-table broadcast + hex-symbol
                           // vocabulary map on executor classloaders
     "corpus_diff",        // two pruned scans full-outer joined on doc_id
@@ -133,10 +134,10 @@ object ClusterSmoke {
     "compression_ratio",  // DeflateLen codegen'd expression on executors
     "compression_stats",  // deflate rollup: one scan + source exchange
     "script_stats",       // 8 script-class regexp_counts + source rollup
-    "kn4_perplexity",     // 4-gram KN: e6-grid integer model, eight
+    "kn4_perplexity",     // 4-gram KN: the same recursion one level up —
                           // type-keyed joins + scoring join across JVMs
-    "kn5_perplexity",     // 5-gram KN (the KenLM order): eleven type-keyed
-                          // joins + scoring join across JVMs
+    "kn5_perplexity",     // 5-gram KN (the KenLM order): four levels of
+                          // type-keyed joins + scoring join across JVMs
     "doc_scripts",        // per-doc script router argmax on executors
     "image_resize",       // exact 2x2 box downsample on executor JVMs
     "local_supplier_volume", // Q5 cycle: fact shuffles + 3 dim broadcasts
@@ -194,12 +195,8 @@ object ClusterSmoke {
       Option(r.getDecimal(1)).map(_.toBigInteger.toString).getOrElse("0"))
   }
 
-  private def sessionBase(): SparkSession.Builder = SparkSession.builder()
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
+  private def sessionBase(): SparkSession.Builder =
+    Session.builder().config("spark.sql.shuffle.partitions", "8")
 
   def main(args: Array[String]): Unit = {
     val Array(appJar, sfDir) = args.take(2)

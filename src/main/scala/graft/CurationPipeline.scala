@@ -31,14 +31,7 @@ object CurationPipeline {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val counts = run(spark, sfDir, outDir)
     println(counts.toSeq.sortBy(_._1)

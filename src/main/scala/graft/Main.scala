@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Thin job-submission surface — the Spark-native equivalent of the
   * reference's HTTP start trigger (mapphase/start.go:24-90: an HTTP
@@ -44,13 +43,9 @@ object Main {
         sys.exit(2)
       }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = Session.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     // SPARK_GRAFT_LOG=INFO surfaces per-job timings for plan profiling
     spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))

@@ -714,7 +714,7 @@ object Curation {
     * the first ContamProbeDocs documents stand in as the "benchmark" so the
     * check is deterministic at every SF). The probe-gram side is bounded by
     * benchmark size and broadcasts; the corpus side reads the shared
-    * materialized gram frame (TextAnalysis.docGrams) at k=ContamK. */
+    * materialized gram frame (TextAnalysis.gramFrame) at k=ContamK. */
   val ContamK = 3
   val ContamProbeDocs = 3
 
@@ -726,7 +726,7 @@ object Curation {
     * standalone query shares the same frame. */
   def decontaminate(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(contamCache, spark, dir) {
-      val grams = TextAnalysis.docGrams(spark, dir, ContamK)
+      val grams = TextAnalysis.gramFrame(spark, dir, ContamK)
       val probes = grams.where(col("doc_id") < ContamProbeDocs)
         .select("gram").distinct()
       grams.where(col("doc_id") >= ContamProbeDocs)
@@ -759,7 +759,7 @@ object Curation {
     * and total roll up on doc_id, and the only new shuffle keys on
     * (doc_id, probe_id) — bounded by actual hits, never corpus × probes. */
   def contaminationReport(spark: SparkSession, dir: String): DataFrame = {
-    val grams = TextAnalysis.docGrams(spark, dir, ContamK)
+    val grams = TextAnalysis.gramFrame(spark, dir, ContamK)
     val probeGrams = grams.where(col("doc_id") < ContamProbeDocs)
       .select(col("doc_id").as("probe_id"), col("gram")).distinct()
     val corpus = grams.where(col("doc_id") >= ContamProbeDocs)
@@ -1167,7 +1167,7 @@ object Curation {
 
   // ---- decontamination against an EXTERNAL benchmark --------------------
   /** K-grams of any (doc_id, text) frame — the generic form of
-    * `TextAnalysis.docGrams`, for corpora that are not the canonical
+    * `TextAnalysis.gramFrame`, for corpora that are not the canonical
     * `documents` table (e.g. a benchmark file read via `JsonlSource`). */
   def gramsOf(df: DataFrame, k: Int): DataFrame =
     df.select(col("doc_id"), filter(
@@ -1874,7 +1874,7 @@ object Curation {
   def dupNgramStats(spark: SparkSession, dir: String): DataFrame = {
     // count-over-window (see dupSpanStats): one exchange of the 8-byte
     // gram hashes instead of a count shuffle plus a join-back shuffle
-    TextAnalysis.docGrams(spark, dir)
+    TextAnalysis.gramFrame(spark, dir)
       .select(col("doc_id"), md5Long(col("gram")).as("gh"))
       .withColumn("n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("gh")))

@@ -8,9 +8,9 @@ import graft.sources.Corpus
 /** Training-data SELECTION operators (SURVEY.md §2 #35): the published
   * data-curation recipes that decide WHICH documents feed a training run —
   * CCNet's per-language perplexity bucketing (Wenzek et al. 2020), DSIR
-  * hashed-n-gram importance resampling (Xie et al. 2023), and a
-  * Kneser–Ney-smoothed bigram table (Kneser & Ney 1995; the model behind
-  * perplexity-based filters).
+  * hashed-n-gram importance resampling (Xie et al. 2023), and
+  * Kneser–Ney-smoothed n-gram models of orders 2–5 (Kneser & Ney 1995; the
+  * models behind perplexity-based filters).
   *
   * Scale notes: every operator is one or two corpus scans plus a
   * BOUNDED side table (5-row per-language thresholds, 512-row hashed
@@ -28,15 +28,6 @@ object Selection {
   val HeadPct = 0.33
   val TailPct = 0.67
 
-  /** CCNet-style bucketing: per-document average bigram negative
-    * log-likelihood under the corpus LM (`lm_perplexity`'s model), cut into
-    * head/middle/tail at per-LANGUAGE tertiles — the signal CCNet uses to
-    * keep "head" web text and drop the noisy tail. Thresholds are a 5-row
-    * broadcast (exact `percentile` per language; a 100 TB run would swap in
-    * `approx_percentile` or a sampled fit exactly as CCNet does — the
-    * operator shape is unchanged, only the threshold pass degrades to a
-    * sketch). Scores ride on the materialized bigram model, so the corpus
-    * explode behind this is shared with `word_bigrams`/`lm_perplexity`. */
   /** Per-doc (lang, nll_e4) score frame, materialized per corpus: both the
     * threshold pass and the bucketing pass read it, and it is the natural
     * artifact a 100 TB run writes once and thresholds many times. */
@@ -44,21 +35,42 @@ object Selection {
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   private def scoredFrame(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(scoredCache, spark, dir) {
-      TextAnalysis.lmPerplexity(spark, dir)
-        .join(Corpus.table(spark, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
-        .select(col("doc_id"), col("lang"),
-          // nll in exact integer e4 units: sum_lp is an exact 4-decimal
-          // value (×10⁴ recovers the integer bit-exactly in both engines),
-          // and the per-bigram average is integer division — no double
-          // rounding anywhere, so thresholds and comparisons are
-          // bit-stable (§6)
-          expr("CAST(round(-sum_lp * 10000, 0) AS BIGINT) div n_bigrams")
-            .as("nll_e4"))
+      langNll(spark, dir, TextAnalysis.lmPerplexity(spark, dir), "n_bigrams")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  def perplexityBuckets(spark: SparkSession, dir: String): DataFrame = {
-    val scored = scoredFrame(spark, dir)
+  /** CCNet-style bucketing: per-document average bigram negative
+    * log-likelihood under the corpus LM (`lm_perplexity`'s model), cut into
+    * head/middle/tail at per-LANGUAGE tertiles ([[tertiles]]) — the signal
+    * CCNet uses to keep "head" web text and drop the noisy tail. Scores
+    * ride on the materialized bigram model, so the corpus explode behind
+    * this is shared with `word_bigrams`/`lm_perplexity`. */
+  def perplexityBuckets(spark: SparkSession, dir: String): DataFrame =
+    tertiles(scoredFrame(spark, dir))
+
+  /** Per-doc nll in exact integer e4 units from a (sum_lp, `nCol`) score
+    * row: sum_lp is an exact 4-decimal value (×10⁴ recovers the integer
+    * bit-exactly in both engines), and the per-gram average is integer
+    * division — no double rounding anywhere, so thresholds and comparisons
+    * are bit-stable (§6). */
+  private def nllE4(nCol: String): org.apache.spark.sql.Column =
+    expr(s"CAST(round(-sum_lp * 10000, 0) AS BIGINT) div $nCol")
+
+  /** (doc_id, lang, nll_e4) of a per-doc (doc_id, `nCol`, sum_lp) score
+    * frame. */
+  private def langNll(spark: SparkSession, dir: String, perDoc: DataFrame,
+      nCol: String): DataFrame =
+    perDoc
+      .join(Corpus.table(spark, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
+      .select(col("doc_id"), col("lang"), nllE4(nCol).as("nll_e4"))
+
+  /** The CCNet cut of a (doc_id, lang, nll_e4) frame into head/middle/tail
+    * at per-language tertiles. Thresholds are a ≤|langs|-row broadcast
+    * (exact `percentile` per language; a 100 TB run would swap in
+    * `approx_percentile` or a sampled fit exactly as CCNet does — the
+    * operator shape is unchanged, only the threshold pass degrades to a
+    * sketch). */
+  private def tertiles(scored: DataFrame): DataFrame = {
     val thr = scored.groupBy("lang").agg(
       expr(s"percentile(nll_e4, $HeadPct)")
         .cast("decimal(14,4)").cast("double").as("t_head"),
@@ -70,6 +82,28 @@ object Selection {
           .when(col("nll_e4") <= col("t_tail"), "middle")
           .otherwise("tail").as("bucket"))
   }
+  /** DuckDB twin of [[langNll]] + [[tertiles]] over the per-doc
+    * (doc_id, `nCol`, sum_lp) CTE `src`: the `scored`, `thr` and
+    * `bucketed` CTEs. */
+  private def bucketCtes(src: String, nCol: String): String =
+    s"""scored AS MATERIALIZED (
+       |  SELECT d.doc_id, d.lang,
+       |    CAST(round(-sum_lp * 10000, 0) AS BIGINT) // $nCol AS nll_e4
+       |  FROM $src JOIN documents d ON $src.doc_id = d.doc_id
+       |), thr AS (
+       |  SELECT lang,
+       |    CAST(CAST(quantile_cont(nll_e4, $HeadPct) AS DECIMAL(14,4))
+       |      AS DOUBLE) AS t_head,
+       |    CAST(CAST(quantile_cont(nll_e4, $TailPct) AS DECIMAL(14,4))
+       |      AS DOUBLE) AS t_tail
+       |  FROM scored GROUP BY 1
+       |), bucketed AS (
+       |  SELECT doc_id, s.lang, nll_e4,
+       |    CASE WHEN nll_e4 <= t_head THEN 'head'
+       |         WHEN nll_e4 <= t_tail THEN 'middle'
+       |         ELSE 'tail' END AS bucket
+       |  FROM scored s JOIN thr ON s.lang = thr.lang
+       |)""".stripMargin
   /** Shared CTE chain of the bigram LM (identical to `lm_perplexity`'s). */
   private val lmCtes =
     """toks AS (
@@ -98,24 +132,7 @@ object Selection {
        |  SELECT doc_id, count(*) AS n_bigrams,
        |    CAST(CAST(sum(lp) AS DECIMAL(18,4)) AS DOUBLE) AS sum_lp
        |  FROM bg JOIN p USING (bigram) GROUP BY 1
-       |), scored AS MATERIALIZED (
-       |  SELECT d.doc_id, d.lang,
-       |    CAST(round(-sum_lp * 10000, 0) AS BIGINT) // n_bigrams AS nll_e4
-       |  FROM pp JOIN documents d ON pp.doc_id = d.doc_id
-       |), thr AS (
-       |  SELECT lang,
-       |    CAST(CAST(quantile_cont(nll_e4, $HeadPct) AS DECIMAL(14,4))
-       |      AS DOUBLE) AS t_head,
-       |    CAST(CAST(quantile_cont(nll_e4, $TailPct) AS DECIMAL(14,4))
-       |      AS DOUBLE) AS t_tail
-       |  FROM scored GROUP BY 1
-       |), bucketed AS (
-       |  SELECT doc_id, s.lang, nll_e4,
-       |    CASE WHEN nll_e4 <= t_head THEN 'head'
-       |         WHEN nll_e4 <= t_tail THEN 'middle'
-       |         ELSE 'tail' END AS bucket
-       |  FROM scored s JOIN thr ON s.lang = thr.lang
-       |)""".stripMargin
+       |), ${bucketCtes("pp", "n_bigrams")}""".stripMargin
   val perplexityBucketsSql: String =
     s"WITH $bucketedCtes SELECT doc_id, lang, nll_e4, bucket FROM bucketed"
 
@@ -248,72 +265,138 @@ object Selection {
        |  CAST(row_number() OVER (ORDER BY llr DESC, doc_id) AS BIGINT) AS rk
        |FROM w ORDER BY llr DESC, doc_id LIMIT $DsirTopK""".stripMargin
 
-  // ---- Kneser–Ney smoothed bigram model ---------------------------------
+  // ---- Kneser–Ney family, orders 2–5 ------------------------------------
   /** Absolute discount D (the standard 0.75). */
   val KnDiscount = 0.75
-  /** Rows emitted (top by smoothed probability). */
+  /** Rows emitted by the top queries (top by smoothed probability). */
   val KnTopN = 50
+  /** Probability floor for scoring: the bigram model's p_kn and every
+    * e6-grid level have 1e-6 as their smallest NONZERO value, but a rare
+    * transition out of a very frequent context rounds to exactly 0, and
+    * ln(0) is NULL on Spark (silently dropping the doc's rarest gram from
+    * the sum) while DuckDB raises. Clamping up to the grid's own floor
+    * keeps both engines defined and identical, and a floor probability for
+    * ultra-rare transitions is standard LM scoring practice. */
+  val KnPFloor = 0.000001
 
-  /** Kneser–Ney-smoothed bigram probabilities, top-[[KnTopN]]:
-    * P_KN(w2|w1) = max(c(w1w2)−D,0)/c(w1·) + D·N₁₊(w1·)/c(w1·) ·
-    * N₁₊(·w2)/N₁₊(··). Everything derives from the MATERIALIZED
-    * vocabulary-bounded bigram count table (shared with `word_bigrams` and
-    * `lm_perplexity` — the corpus explode behind it runs zero extra times);
-    * the continuation and follower tables are grouped aggregations of that
-    * table, and the type total is a broadcast 1-row frame. Probabilities
-    * round to 6 decimals and narrow through DECIMAL(14,6) so ordering and
-    * the top-N cutoff are bit-identical across engines (doc discipline:
-    * SURVEY §6). */
-  /** FULL Kneser–Ney probability table (bigram, n, p_kn), materialized per
-    * (session, corpus): [[knBigramTop]] reads its top rows and
-    * [[knPerplexity]] scores every document against it — the smoothed
-    * model IS the reusable artifact a production CCNet-style filter trains
-    * once and scores with everywhere (at 100 TB: a parquet table the size
-    * of the vocabulary's bigram support, written once). */
-  private val knModelCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  private[operators] def knModel(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(knModelCache, spark, dir) {
-      val c2 = TextAnalysis.bigramCounts(spark, dir)
-        .select(col("bigram"), col("n"),
-          substring_index(col("bigram"), " ", 1).as("w1"),
-          substring_index(col("bigram"), " ", -1).as("w2"))
-      val c1 = c2.groupBy("w1")
-        .agg(sum(col("n")).as("n1"), count(lit(1)).as("nfollow"))
-      val cont = c2.groupBy("w2").agg(count(lit(1)).as("ncont"))
-      val types = c2.agg(count(lit(1)).as("t_types"))
-      c2.join(c1.hint("shuffle_hash"), "w1")
-        .join(cont.hint("shuffle_hash"), "w2")
-        .crossJoin(broadcast(types))
-        .select(col("bigram"), col("n"),
-          round(
-            greatest(col("n").cast("double") - KnDiscount, lit(0d))
-                / col("n1").cast("double")
-              + (lit(KnDiscount) * col("nfollow").cast("double")
-                / col("n1").cast("double"))
-                * (col("ncont").cast("double") / col("t_types").cast("double")),
-            6).cast("decimal(14,6)").cast("double").as("p_kn"))
+  /** Output names of the order-n family: the gram column
+    * (bigram|trigram|fourgram|fivegram), the probability (p_kn|p_kn3|
+    * p_kn4|p_kn5) and the per-doc gram count (n_bigrams|…|n_fivegrams). */
+  private def gram(n: Int): String = TextAnalysis.gramCol(n)
+  private def pCol(n: Int): String = if (n == 2) "p_kn" else s"p_kn$n"
+  private def nCol(n: Int): String = s"n_${gram(n)}s"
+
+  /** FULL order-n Kneser–Ney table (gram, n, p), materialized per
+    * (session, corpus, n): [[knTop]] reads its top rows, [[knPerplexity]]
+    * and [[minkProb]] score documents against it — the smoothed model IS
+    * the reusable artifact a production CCNet-style filter trains once and
+    * scores with everywhere (at 100 TB: a parquet table the size of the
+    * n-gram type support, written once).
+    *
+    * n = 2 is the interpolated bigram model
+    *   P_KN(w2|w1) = max(c(w1w2)−D,0)/c(w1·) + D·N₁₊(w1·)/c(w1·) ·
+    *                 N₁₊(·w2)/N₁₊(··)
+    * rounded to 6 decimals through DECIMAL(14,6) (SURVEY §6); `kn_perplexity`,
+    * `mink_prob`, `excess_loss` and `domain_reweight` read it.
+    *
+    * n ∈ 3..5 is one recursion (Heafield et al. 2013): the top level on raw
+    * n-gram counts, every lower level k on CONTINUATION counts —
+    *   P_k(w_n|ctx) = max(N₁₊(·ctx w_n)−D,0)/N₁₊(·ctx·)
+    *                  + D·N₁₊(ctx·)/N₁₊(·ctx·) · P_{k−1}(w_n|ctx⁻)
+    * with N₁₊(·ctx w_n) from the (k+1)-gram types, N₁₊(ctx·) from the
+    * k-gram types, and at the bottom P_c(w_n) = N₁₊(·w_n)/N₁₊(··) from the
+    * bigram types. Each level is an EXACT INTEGER on the e6 grid: with
+    * D = 3/4 it is the rational
+    *   p_e6 = ⌊(max(4·num−3, 0)·10⁶ + 3·weight·p_lower_e6) / (4·den)⌋
+    * — BIGINT end-to-end, floor division on non-negative operands
+    * (engine-identical), and p = p_e6/10⁶ is one exactly-rounded DOUBLE
+    * division. A 6-dp DOUBLE pin per level leaves a measure-zero boundary
+    * where the engines' round() disagree at the 6th decimal; the grid has
+    * none.
+    *
+    * Scale: every aggregate is a grouped rollup of a materialized
+    * [[TextAnalysis.gramCounts]] type table (each corpus explode runs ONCE
+    * per session); each level is resolved at its own grain and the level
+    * above joins it once, so the n-gram table sees two exchanges; every
+    * join is a type-keyed shuffle_hash join between type-bounded frames and
+    * the 1-row bigram-type total broadcasts. */
+  private val knModelCaches = (2 to 5).map(n => n -> Materialized.register(
+    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])).toMap
+  private[operators] def knModel(spark: SparkSession, dir: String, n: Int): DataFrame =
+    Materialized.cached(knModelCaches(n), spark, dir) {
+      (if (n == 2) knBigramModel(spark, dir) else knE6Model(spark, dir, n))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  def knBigramTop(spark: SparkSession, dir: String): DataFrame = {
-    val pkn = knModel(spark, dir)
-    pkn.orderBy(col("p_kn").desc, col("bigram")).limit(KnTopN)
-      .select(struct(negate(col("p_kn")).as("np"), col("bigram").as("bigram"),
-        col("n").as("n"), col("p_kn").as("p_kn")).as("s"))
-      .agg(array_sort(collect_list(col("s"))).as("arr"))
-      .select(posexplode(col("arr")).as(Seq("pos", "s")))
-      .select(col("s.bigram").as("bigram"), col("s.n").as("n"),
-        col("s.p_kn").as("p_kn"), (col("pos") + 1).cast("long").as("rk"))
+  private def knBigramModel(spark: SparkSession, dir: String): DataFrame = {
+    val c2 = TextAnalysis.gramCounts(spark, dir, 2)
+      .select(col("bigram"), col("n"),
+        substring_index(col("bigram"), " ", 1).as("w1"),
+        substring_index(col("bigram"), " ", -1).as("w2"))
+    val c1 = c2.groupBy("w1")
+      .agg(sum(col("n")).as("n1"), count(lit(1)).as("nfollow"))
+    val cont = c2.groupBy("w2").agg(count(lit(1)).as("ncont"))
+    val types = c2.agg(count(lit(1)).as("t_types"))
+    c2.join(c1.hint("shuffle_hash"), "w1")
+      .join(cont.hint("shuffle_hash"), "w2")
+      .crossJoin(broadcast(types))
+      .select(col("bigram"), col("n"),
+        round(
+          greatest(col("n").cast("double") - KnDiscount, lit(0d))
+              / col("n1").cast("double")
+            + (lit(KnDiscount) * col("nfollow").cast("double")
+              / col("n1").cast("double"))
+              * (col("ncont").cast("double") / col("t_types").cast("double")),
+          6).cast("decimal(14,6)").cast("double").as("p_kn"))
   }
-  /** Shared CTE chain of the KN model (identical math to [[knModel]]);
-    * `bg` carries doc_id so the scoring queries can join back to it. */
-  private val knCtes: String =
+
+  private def knE6Model(spark: SparkSession, dir: String, n: Int): DataFrame = {
+    import org.apache.spark.sql.graft.ExactMath.intDiv
+    val w = (1 to n).map(i => s"w$i")
+    def cols(ws: Seq[String]) = ws.map(col)
+    // k-gram counts with their words aligned right (the last word is w_n)
+    def grams(k: Int) = {
+      val parts = split(col(gram(k)), " ")
+      TextAnalysis.gramCounts(spark, dir, k).select(col(gram(k)) +: col("n") +:
+        (1 to k).map(i => element_at(parts, i).as(w(n - k + i - 1))): _*)
+    }
+    val bg = grams(2)
+    val pCont = bg.groupBy(w.last).agg(count(lit(1)).as("ncont"))
+      .crossJoin(broadcast(bg.agg(count(lit(1)).as("t_types"))))
+      .select(col(w.last),
+        intDiv(lit(1000000L) * col("ncont"), col("t_types")).as("p_e6"))
+    (2 to n).foldLeft(pCont) { (lower, k) =>
+      val keys = w.takeRight(k)
+      val ctx = keys.init
+      // (num, den, weight) of level k at its own grain `keys`
+      val (tab, stats) =
+        if (k == n) {
+          val c = grams(n)
+          (c, Seq(c.groupBy(cols(ctx): _*)
+            .agg(sum(col("n")).as("den"), count(lit(1)).as("wt"))))
+        } else {
+          val num = grams(k + 1).groupBy(cols(keys): _*).agg(count(lit(1)).as("n"))
+          (num, Seq(num.groupBy(cols(ctx): _*).agg(sum(col("n")).as("den")),
+            grams(k).groupBy(cols(ctx): _*).agg(count(lit(1)).as("wt"))))
+        }
+      stats.foldLeft(tab)((t, s) => t.join(s.hint("shuffle_hash"), ctx))
+        .join(lower.hint("shuffle_hash"), keys.tail)
+        .select((if (k == n) Seq(col(gram(n)), col("n")) else cols(keys)) :+
+          intDiv(greatest(lit(4L) * col("n") - lit(3L), lit(0L)) * lit(1000000L)
+            + lit(3L) * col("wt") * col("p_e6"), lit(4L) * col("den"))
+            .as("p_e6"): _*)
+    }.select(col(gram(n)), col("n"),
+      (col("p_e6").cast("double") / lit(1000000d)).as(pCol(n)))
+  }
+
+  /** DuckDB twin of the bigram [[knModel]]; `dg` carries doc_id so the
+    * scoring queries can join back to it. */
+  private val knBigramCtes: String =
     s"""toks AS (
        |  SELECT doc_id, list_filter(list_transform(
        |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
        |  FROM documents
-       |), bg AS MATERIALIZED (
+       |), dg AS MATERIALIZED (
        |  SELECT doc_id, g.b AS bigram
        |  FROM toks, unnest(list_transform(range(1, len(t)),
        |    i -> t[i] || ' ' || t[i + 1])) AS g(b)
@@ -321,7 +404,7 @@ object Selection {
        |), c2 AS MATERIALIZED (
        |  SELECT bigram, count(*) AS n, split_part(bigram, ' ', 1) AS w1,
        |    split_part(bigram, ' ', 2) AS w2
-       |  FROM bg GROUP BY 1
+       |  FROM dg GROUP BY 1
        |), c1 AS (
        |  SELECT w1, sum(n) AS n1, count(*) AS nfollow FROM c2 GROUP BY 1
        |), cont AS (
@@ -337,108 +420,150 @@ object Selection {
        |      6) AS DECIMAL(14,6)) AS DOUBLE) AS p_kn
        |  FROM c2 JOIN c1 USING (w1) JOIN cont USING (w2) CROSS JOIN types
        |)""".stripMargin
-  val knBigramTopSql: String =
-    s"""WITH $knCtes
-       |SELECT bigram, n, p_kn,
-       |  CAST(row_number() OVER (ORDER BY p_kn DESC, bigram) AS BIGINT) AS rk
-       |FROM pkn ORDER BY p_kn DESC, bigram LIMIT $KnTopN""".stripMargin
 
-  // ---- Kneser–Ney document scoring (the production CCNet filter) --------
-  /** Score each document under the SMOOTHED Kneser–Ney bigram model — what
-    * the production CCNet filter actually scores with ([[lmPerplexity]]
-    * scores the raw MLE model; smoothing is what makes the score
-    * transferable to text the model hasn't memorized). Same output shape
-    * and §6 discipline as `lm_perplexity`: per-bigram lp = ln(p_kn)
-    * rounded to exact 4-dp decimals, so the per-doc sum is deterministic
-    * under any fold order; `ppl = exp(-sum_lp/n_bigrams)` is derivable by
-    * any consumer. Docs with <2 tokens have no bigrams and no row.
+  /** DuckDB twin of the e6-grid [[knModel]] for n ∈ 3..5, level for level:
+    * `c<k>` are the k-gram type tables (`c<n>` the counts), `l<k>` the
+    * levels at their own grain, `pkn` the model and `dg` the per-doc
+    * n-grams the scoring queries join back to. */
+  private def knCtes(n: Int): String = {
+    val w = (1 to n).map(i => s"w$i")
+    def cols(ws: Seq[String]) = ws.mkString(", ")
+    // FROM clause of the per-doc k-gram explode, one row per gram `g.x`
+    def gramsFrom(k: Int) = {
+      val cat = (0 until k).map(j => if (j == 0) "t[i]" else s"t[i + $j]")
+      s"""toks, unnest(list_transform(range(1, len(t) - ${k - 2}),
+         |    i -> ${cat.mkString(" || ' ' || ")})) AS g(x)
+         |  WHERE len(t) >= $k""".stripMargin
+    }
+    def words(k: Int) = (1 to k)
+      .map(i => s"split_part(${gram(k)}, ' ', $i) AS ${w(n - k + i - 1)}")
+      .mkString(",\n    ")
+    val lvl = "(greatest(4 * CAST(n AS BIGINT) - 3, 0) * 1000000" +
+      " + 3 * wt * p_e6) // (4 * den)"
+    val types = (2 until n).map(k =>
+      s"""c$k AS MATERIALIZED (
+         |  SELECT ${words(k)}
+         |  FROM (SELECT DISTINCT g.x AS ${gram(k)} FROM ${gramsFrom(k)}) u
+         |)""".stripMargin)
+    val levels = (2 until n).map { k =>
+      val keys = w.takeRight(k)
+      val ctx = cols(keys.init)
+      s"""num$k AS MATERIALIZED (
+         |  SELECT ${cols(keys)}, count(*) AS n FROM c${k + 1}
+         |  GROUP BY ${cols(keys)}
+         |), l$k AS MATERIALIZED (
+         |  SELECT ${cols(keys)}, $lvl AS p_e6
+         |  FROM num$k
+         |    JOIN (SELECT $ctx, sum(n) AS den FROM num$k GROUP BY $ctx)
+         |      USING ($ctx)
+         |    JOIN (SELECT $ctx, count(*) AS wt FROM c$k GROUP BY $ctx)
+         |      USING ($ctx)
+         |    JOIN l${k - 1} USING (${cols(keys.tail)})
+         |)""".stripMargin
+    }
+    val ctx = cols(w.init)
+    (Seq(
+      s"""toks AS MATERIALIZED (
+         |  SELECT doc_id, list_filter(list_transform(
+         |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
+         |  FROM documents
+         |), dg AS MATERIALIZED (
+         |  SELECT doc_id, g.x AS ${gram(n)} FROM ${gramsFrom(n)}
+         |), c$n AS MATERIALIZED (
+         |  SELECT ${gram(n)}, count(*) AS n,
+         |    ${words(n)}
+         |  FROM dg GROUP BY 1
+         |)""".stripMargin) ++ types ++
+      Seq(s"""l1 AS (
+             |  SELECT ${w.last}, (1000000 * ncont) // t_types AS p_e6
+             |  FROM (SELECT ${w.last}, count(*) AS ncont FROM c2 GROUP BY 1)
+             |    CROSS JOIN (SELECT count(*) AS t_types FROM c2)
+             |)""".stripMargin) ++ levels ++
+      Seq(s"""pkn AS MATERIALIZED (
+             |  SELECT ${gram(n)}, n, CAST($lvl AS DOUBLE) / 1000000.0 AS ${pCol(n)}
+             |  FROM c$n
+             |    JOIN (SELECT $ctx, sum(n) AS den, count(*) AS wt FROM c$n
+             |      GROUP BY $ctx) USING ($ctx)
+             |    JOIN l${n - 1} USING (${cols(w.tail)})
+             |)""".stripMargin)).mkString(", ")
+  }
+  private def modelCtes(n: Int): String =
+    if (n == 2) knBigramCtes else knCtes(n)
+
+  /** `SparkEntry` query: the top-[[KnTopN]] smoothed order-n
+    * probabilities. orderBy+limit plans as TakeOrderedAndProject
+    * (per-partition partial top-k, a k-row merge — never a global sort or
+    * unpartitioned window); ranks are recovered by re-sorting the ≤k
+    * survivors inside one array. */
+  def knTop(n: Int)(spark: SparkSession, dir: String): DataFrame = {
+    val (g, p) = (gram(n), pCol(n))
+    knModel(spark, dir, n)
+      .orderBy(col(p).desc, col(g)).limit(KnTopN)
+      .select(struct(negate(col(p)).as("np"), col(g).as(g), col("n").as("n"),
+        col(p).as(p)).as("s"))
+      .agg(array_sort(collect_list(col("s"))).as("arr"))
+      .select(posexplode(col("arr")).as(Seq("pos", "s")))
+      .select(col(s"s.$g").as(g), col("s.n").as("n"), col(s"s.$p").as(p),
+        (col("pos") + 1).cast("long").as("rk"))
+  }
+  def knTopSql(n: Int): String =
+    s"""WITH ${modelCtes(n)}
+       |SELECT ${gram(n)}, n, ${pCol(n)},
+       |  CAST(row_number() OVER (ORDER BY ${pCol(n)} DESC, ${gram(n)})
+       |    AS BIGINT) AS rk
+       |FROM pkn ORDER BY ${pCol(n)} DESC, ${gram(n)} LIMIT $KnTopN""".stripMargin
+
+  /** Per-gram lp = ln(p) floored at [[KnPFloor]] and rounded to an exact
+    * 4-dp decimal, so per-doc sums are deterministic in any fold order. */
+  private def knLogProb(spark: SparkSession, dir: String, n: Int): DataFrame =
+    knModel(spark, dir, n).select(col(gram(n)),
+      round(log(greatest(col(pCol(n)), lit(KnPFloor))), 4)
+        .cast("decimal(18,4)").as("lp"))
+  private def knScoreCtes(n: Int): String =
+    s"""${modelCtes(n)}, p AS (
+       |  SELECT ${gram(n)},
+       |    CAST(round(ln(greatest(${pCol(n)}, $KnPFloor)), 4) AS DECIMAL(18,4))
+       |      AS lp
+       |  FROM pkn
+       |), kpp AS (
+       |  SELECT doc_id, count(*) AS ${nCol(n)},
+       |    CAST(CAST(sum(lp) AS DECIMAL(18,4)) AS DOUBLE) AS sum_lp
+       |  FROM dg JOIN p USING (${gram(n)}) GROUP BY 1
+       |)""".stripMargin
+
+  /** Score each document under the SMOOTHED order-n model — what the
+    * production CCNet filter scores with ([[TextAnalysis.lmPerplexity]]
+    * scores the raw MLE model; smoothing makes the score transferable to
+    * text the model hasn't memorized): per-doc gram count and the sum of
+    * the exact 4-dp lp, so `ppl = exp(-sum_lp/n_grams)` is derivable by
+    * any consumer. Docs with fewer than n tokens have no row.
     *
-    * Scale: scoring is the map-side join of the corpus bigram explode
-    * against the materialized [[knModel]] — the model is
-    * vocabulary-bounded but too big to broadcast at 100 TB, hence the
-    * pinned shuffle_hash; one doc-keyed rollup finishes. The model itself
-    * amortizes across every scoring run (and is shared with
-    * `kn_bigram_top`). */
-  /** Probability floor for scoring: p_kn is rounded to 6 decimals, so its
-    * smallest NONZERO value is 1e-6 — but a rare transition out of a very
-    * frequent word (n1 beyond ~5·10⁵) rounds to exactly 0.000000, and
-    * ln(0) is NULL on Spark (silently dropping the doc's rarest bigram
-    * from the sum) while DuckDB raises. Clamping up to the rounding
-    * grid's own floor keeps both engines defined and identical, and a
-    * floor probability for ultra-rare transitions is standard LM scoring
-    * practice. */
-  val KnPFloor = 0.000001
-
-  private val knPplCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  def knPerplexity(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(knPplCache, spark, dir) {
-      val p = knModel(spark, dir).select(col("bigram"),
-        round(log(greatest(col("p_kn"), lit(KnPFloor))), 4)
-          .cast("decimal(18,4)").as("lp"))
-      TextAnalysis.docBigrams(spark, dir)
-        .join(p.hint("shuffle_hash"), "bigram")
+    * Scale: the map-side join of the corpus n-gram explode against the
+    * materialized [[knModel]] — vocabulary-bounded but too big to
+    * broadcast at 100 TB, hence the pinned shuffle_hash — and one
+    * doc-keyed rollup; the score frame is materialized per (session,
+    * corpus, n) for the buckets and the composed signals. */
+  private val knPplCaches = (2 to 5).map(n => n -> Materialized.register(
+    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])).toMap
+  def knPerplexity(n: Int)(spark: SparkSession, dir: String): DataFrame =
+    Materialized.cached(knPplCaches(n), spark, dir) {
+      TextAnalysis.docGrams(spark, dir, n)
+        .join(knLogProb(spark, dir, n).hint("shuffle_hash"), gram(n))
         .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bigrams"),
+        .agg(count(lit(1)).as(nCol(n)),
           sum(col("lp")).cast("decimal(18,4)").cast("double").as("sum_lp"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  /** knCtes + the per-bigram log-prob projection, shared with
-    * [[knBucketsSql]]. */
-  private val knScoreCtes: String =
-    s"""$knCtes, p AS (
-       |  SELECT bigram,
-       |    CAST(round(ln(greatest(p_kn, $KnPFloor)), 4) AS DECIMAL(18,4)) AS lp
-       |  FROM pkn
-       |)""".stripMargin
-  val knPerplexitySql: String =
-    s"""WITH $knScoreCtes
-       |SELECT doc_id, count(*) AS n_bigrams,
-       |  CAST(CAST(sum(lp) AS DECIMAL(18,4)) AS DOUBLE) AS sum_lp
-       |FROM bg JOIN p USING (bigram) GROUP BY 1""".stripMargin
+  def knPerplexitySql(n: Int): String =
+    s"WITH ${knScoreCtes(n)} SELECT doc_id, ${nCol(n)}, sum_lp FROM kpp"
 
-  /** CCNet bucketing under the KN model — [[perplexityBuckets]] with the
-    * smoothed score: per-language head/middle/tail tertiles over the
-    * KN nll. Same exact-integer nll_e4 and broadcast-threshold shape. */
-  def knBuckets(spark: SparkSession, dir: String): DataFrame = {
-    val scored = knPerplexity(spark, dir)
-      .join(Corpus.table(spark, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
-      .select(col("doc_id"), col("lang"),
-        expr("CAST(round(-sum_lp * 10000, 0) AS BIGINT) div n_bigrams")
-          .as("nll_e4"))
-    val thr = scored.groupBy("lang").agg(
-      expr(s"percentile(nll_e4, $HeadPct)")
-        .cast("decimal(14,4)").cast("double").as("t_head"),
-      expr(s"percentile(nll_e4, $TailPct)")
-        .cast("decimal(14,4)").cast("double").as("t_tail"))
-    scored.join(broadcast(thr), "lang")
-      .select(col("doc_id"), col("lang"), col("nll_e4"),
-        when(col("nll_e4") <= col("t_head"), "head")
-          .when(col("nll_e4") <= col("t_tail"), "middle")
-          .otherwise("tail").as("bucket"))
-  }
-  val knBucketsSql: String =
-    s"""WITH $knScoreCtes, kpp AS (
-       |  SELECT doc_id, count(*) AS n_bigrams,
-       |    CAST(CAST(sum(lp) AS DECIMAL(18,4)) AS DOUBLE) AS sum_lp
-       |  FROM bg JOIN p USING (bigram) GROUP BY 1
-       |), scored AS MATERIALIZED (
-       |  SELECT d.doc_id, d.lang,
-       |    CAST(round(-sum_lp * 10000, 0) AS BIGINT) // n_bigrams AS nll_e4
-       |  FROM kpp JOIN documents d ON kpp.doc_id = d.doc_id
-       |), thr AS (
-       |  SELECT lang,
-       |    CAST(CAST(quantile_cont(nll_e4, $HeadPct) AS DECIMAL(14,4))
-       |      AS DOUBLE) AS t_head,
-       |    CAST(CAST(quantile_cont(nll_e4, $TailPct) AS DECIMAL(14,4))
-       |      AS DOUBLE) AS t_tail
-       |  FROM scored GROUP BY 1
-       |)
-       |SELECT doc_id, s.lang, nll_e4,
-       |  CASE WHEN nll_e4 <= t_head THEN 'head'
-       |       WHEN nll_e4 <= t_tail THEN 'middle'
-       |       ELSE 'tail' END AS bucket
-       |FROM scored s JOIN thr ON s.lang = thr.lang""".stripMargin
+  /** CCNet bucketing under the order-n KN model — [[perplexityBuckets]]
+    * with the smoothed score. */
+  def knBuckets(n: Int)(spark: SparkSession, dir: String): DataFrame =
+    tertiles(langNll(spark, dir, knPerplexity(n)(spark, dir), nCol(n)))
+  def knBucketsSql(n: Int): String =
+    s"""WITH ${knScoreCtes(n)}, ${bucketCtes("kpp", nCol(n))}
+       |SELECT doc_id, lang, nll_e4, bucket FROM bucketed""".stripMargin
 
   /** Min-K% fraction (percent of a doc's bigrams in its "most surprising"
     * tail — Shi et al. 2023 use K=20). */
@@ -460,10 +585,9 @@ object Selection {
     * collect_list is doc-bounded (a document's own bigram count), never
     * corpus-bounded. */
   def minkProb(spark: SparkSession, dir: String): DataFrame = {
-    val p = knModel(spark, dir).select(col("bigram"),
-      (round(log(greatest(col("p_kn"), lit(KnPFloor))), 4)
-        .cast("decimal(18,4)") * lit(-10000)).cast("long").as("nll_e4"))
-    TextAnalysis.docBigrams(spark, dir)
+    val p = knLogProb(spark, dir, 2).select(col("bigram"),
+      (col("lp") * lit(-10000)).cast("long").as("nll_e4"))
+    TextAnalysis.docGrams(spark, dir, 2)
       .join(p.hint("shuffle_hash"), "bigram")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
@@ -479,9 +603,9 @@ object Selection {
           col("mink_sum_nll_e4"), col("k")).as("mink_mean_nll_e4"))
   }
   val minkProbSql: String =
-    s"""WITH $knScoreCtes, nb AS (
+    s"""WITH ${knScoreCtes(2)}, nb AS (
        |  SELECT doc_id, CAST(-lp * 10000 AS BIGINT) AS nll_e4
-       |  FROM bg JOIN p USING (bigram)
+       |  FROM dg JOIN p USING (bigram)
        |), agg AS (
        |  SELECT doc_id, count(*) AS n_bigrams,
        |    list_sort(list(nll_e4)) AS nlls
@@ -497,818 +621,6 @@ object Selection {
        |  CAST(list_aggr(nlls[n_bigrams - k + 1 : n_bigrams], 'sum')
        |    AS BIGINT) // CAST(k AS BIGINT) AS mink_mean_nll_e4
        |FROM cut""".stripMargin
-
-  // ---- Kneser–Ney trigram model (#35l–n: the CCNet production order) ----
-  /** Interpolated Kneser–Ney with TRIGRAM context — the model order a
-    * production CCNet-style filter actually ships (KenLM trains 5-gram;
-    * trigram is the first order where the backoff RECURSION appears, and
-    * each further order is the same closed-form step). Full chain, all
-    * from two materialized type/count tables:
-    *
-    *   P₃(w₃|w₁w₂) = max(c₃−D,0)/c(w₁w₂·)
-    *                 + D·N₁₊(w₁w₂·)/c(w₁w₂·) · P₂(w₃|w₂)
-    *   P₂(w₃|w₂)   = max(N₁₊(·w₂w₃)−D,0)/N₁₊(·w₂·)
-    *                 + D·N₁₊(w₂·)/N₁₊(·w₂·) · P_c(w₃)
-    *   P_c(w₃)     = N₁₊(·w₃)/N₁₊(··)
-    *
-    * with the lower orders on CONTINUATION counts (trigram types for the
-    * middle layer, bigram types for the unigram layer) — the defining KN
-    * property. Each probability level is rounded to 6 decimals and pinned
-    * through DECIMAL(14,6) before feeding the next (§6: the interpolation
-    * is then arithmetic on engine-identical doubles, so the full chain is
-    * bit-stable across engines).
-    *
-    * Scale: every aggregate is a grouped rollup of the materialized
-    * trigram-count table (trigram-type-bounded — the vocabulary-frame
-    * discipline; the corpus explode behind it runs ONCE) or of the shared
-    * bigram table; the five model joins are type-keyed shuffle_hash joins
-    * between type-bounded frames, and the 1-row type total broadcasts.
-    * Nothing after the count tables sees a corpus-sized key. */
-  private val kn3ModelCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  private[operators] def kn3Model(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(kn3ModelCache, spark, dir) {
-      def pin(c: org.apache.spark.sql.Column) =
-        round(c, 6).cast("decimal(14,6)").cast("double")
-      val c3 = TextAnalysis.trigramCounts(spark, dir)
-        .select(col("trigram"), col("n"),
-          substring_index(col("trigram"), " ", 2).as("ctx"),
-          substring_index(substring_index(col("trigram"), " ", 2), " ", -1)
-            .as("w2"),
-          substring_index(col("trigram"), " ", -1).as("w3"))
-      val cctx = c3.groupBy("ctx")
-        .agg(sum(col("n")).as("n_ctx"), count(lit(1)).as("nfollow3"))
-      val contBg = c3.groupBy("w2", "w3").agg(count(lit(1)).as("n1p_w2w3"))
-      val midTot = contBg.groupBy("w2").agg(sum(col("n1p_w2w3")).as("n1p_mid"))
-      val c2 = TextAnalysis.bigramCounts(spark, dir)
-        .select(substring_index(col("bigram"), " ", 1).as("b1"),
-          substring_index(col("bigram"), " ", -1).as("b2"))
-      val follow2 = c2.groupBy(col("b1").as("w2"))
-        .agg(count(lit(1)).as("nfollow2"))
-      val cont1 = c2.groupBy(col("b2").as("w3")).agg(count(lit(1)).as("ncont1"))
-      val types = c2.agg(count(lit(1)).as("t_types"))
-      val pCont = pin(col("ncont1").cast("double") / col("t_types").cast("double"))
-      val pMid = pin(
-        greatest(col("n1p_w2w3").cast("double") - KnDiscount, lit(0d))
-            / col("n1p_mid").cast("double")
-          + (lit(KnDiscount) * col("nfollow2").cast("double")
-            / col("n1p_mid").cast("double")) * col("p_cont"))
-      val p3 = pin(
-        greatest(col("n").cast("double") - KnDiscount, lit(0d))
-            / col("n_ctx").cast("double")
-          + (lit(KnDiscount) * col("nfollow3").cast("double")
-            / col("n_ctx").cast("double")) * col("p_mid"))
-      // the lower-order probability is resolved at ITS OWN grain (w2, w3)
-      // — |distinct bigram| rows — and the trigram table joins it once,
-      // instead of dragging every trigram row through five key-cascaded
-      // exchanges; the per-row expression trees are unchanged, so the
-      // pinned doubles are bit-identical
-      val pMidTab = contBg
-        .join(midTot.hint("shuffle_hash"), "w2")
-        .join(follow2.hint("shuffle_hash"), "w2")
-        .join(cont1.hint("shuffle_hash"), "w3")
-        .crossJoin(broadcast(types))
-        .withColumn("p_cont", pCont)
-        .select(col("w2"), col("w3"), pMid.as("p_mid"))
-      c3.join(cctx.hint("shuffle_hash"), "ctx")
-        .join(pMidTab.hint("shuffle_hash"), Seq("w2", "w3"))
-        .select(col("trigram"), col("n"), p3.as("p_kn3"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  /** Driver-contract query: top-[[KnTopN]] smoothed trigram probabilities
-    * — the `kn_bigram_top` shape one order up (TakeOrderedAndProject +
-    * in-array rank recovery; no unpartitioned window). */
-  def kn3TrigramTop(spark: SparkSession, dir: String): DataFrame =
-    kn3Model(spark, dir)
-      .orderBy(col("p_kn3").desc, col("trigram")).limit(KnTopN)
-      .select(struct(negate(col("p_kn3")).as("np"),
-        col("trigram").as("trigram"), col("n").as("n"),
-        col("p_kn3").as("p_kn3")).as("s"))
-      .agg(array_sort(collect_list(col("s"))).as("arr"))
-      .select(posexplode(col("arr")).as(Seq("pos", "s")))
-      .select(col("s.trigram").as("trigram"), col("s.n").as("n"),
-        col("s.p_kn3").as("p_kn3"), (col("pos") + 1).cast("long").as("rk"))
-
-  /** Shared CTE chain of the trigram KN model — identical math to
-    * [[kn3Model]]; `tg` carries doc_id for the scoring queries. */
-  private val kn3Ctes: String =
-    // toks MATERIALIZED: BOTH consumers (tg, bg2) are corpus-sized scans —
-    // inlining would run the full-corpus regex tokenization twice
-    s"""toks AS MATERIALIZED (
-       |  SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
-       |  FROM documents
-       |), tg AS MATERIALIZED (
-       |  SELECT doc_id, g.tri AS trigram
-       |  FROM toks, unnest(list_transform(range(1, len(t) - 1),
-       |    i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS g(tri)
-       |  WHERE len(t) >= 3
-       |), c3 AS MATERIALIZED (
-       |  SELECT trigram, count(*) AS n,
-       |    split_part(trigram, ' ', 1) || ' ' || split_part(trigram, ' ', 2)
-       |      AS ctx,
-       |    split_part(trigram, ' ', 2) AS w2,
-       |    split_part(trigram, ' ', 3) AS w3
-       |  FROM tg GROUP BY 1
-       |), cctx AS (
-       |  SELECT ctx, sum(n) AS n_ctx, count(*) AS nfollow3 FROM c3 GROUP BY 1
-       |), contbg AS MATERIALIZED (
-       |  SELECT w2, w3, count(*) AS n1p_w2w3 FROM c3 GROUP BY 1, 2
-       |), midtot AS (
-       |  SELECT w2, sum(n1p_w2w3) AS n1p_mid FROM contbg GROUP BY 1
-       |), bg2 AS MATERIALIZED (
-       |  SELECT DISTINCT g.b AS bigram
-       |  FROM toks, unnest(list_transform(range(1, len(t)),
-       |    i -> t[i] || ' ' || t[i + 1])) AS g(b)
-       |  WHERE len(t) >= 2
-       |), follow2 AS (
-       |  SELECT split_part(bigram, ' ', 1) AS w2, count(*) AS nfollow2
-       |  FROM bg2 GROUP BY 1
-       |), cont1 AS (
-       |  SELECT split_part(bigram, ' ', 2) AS w3, count(*) AS ncont1
-       |  FROM bg2 GROUP BY 1
-       |), types2 AS (SELECT count(*) AS t_types FROM bg2),
-       |pkn3 AS MATERIALIZED (
-       |  SELECT trigram, n, CAST(CAST(round(
-       |      greatest(CAST(n AS DOUBLE) - $KnDiscount, 0.0)
-       |          / CAST(n_ctx AS DOUBLE)
-       |        + ($KnDiscount * CAST(nfollow3 AS DOUBLE)
-       |          / CAST(n_ctx AS DOUBLE))
-       |          * CAST(CAST(round(
-       |              greatest(CAST(n1p_w2w3 AS DOUBLE) - $KnDiscount, 0.0)
-       |                  / CAST(n1p_mid AS DOUBLE)
-       |                + ($KnDiscount * CAST(nfollow2 AS DOUBLE)
-       |                  / CAST(n1p_mid AS DOUBLE))
-       |                  * CAST(CAST(round(
-       |                      CAST(ncont1 AS DOUBLE) / CAST(t_types AS DOUBLE),
-       |                    6) AS DECIMAL(14,6)) AS DOUBLE),
-       |            6) AS DECIMAL(14,6)) AS DOUBLE),
-       |    6) AS DECIMAL(14,6)) AS DOUBLE) AS p_kn3
-       |  FROM c3 JOIN cctx USING (ctx) JOIN contbg USING (w2, w3)
-       |    JOIN midtot USING (w2) JOIN follow2 USING (w2)
-       |    JOIN cont1 USING (w3) CROSS JOIN types2
-       |)""".stripMargin
-  val kn3TrigramTopSql: String =
-    s"""WITH $kn3Ctes
-       |SELECT trigram, n, p_kn3,
-       |  CAST(row_number() OVER (ORDER BY p_kn3 DESC, trigram) AS BIGINT)
-       |    AS rk
-       |FROM pkn3 ORDER BY p_kn3 DESC, trigram LIMIT $KnTopN""".stripMargin
-
-  /** Trigram-KN document scoring — `kn_perplexity` one order up: per-doc
-    * trigram count and the sum of 4-dp-pinned ln(p) (floored at
-    * [[KnPFloor]], the shared rounding-grid floor). Docs with <3 tokens
-    * have no trigrams and no row. Same shuffle_hash model join + one
-    * doc-keyed rollup; the model amortizes across every scoring run. */
-  private val kn3PplCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  def kn3Perplexity(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(kn3PplCache, spark, dir) {
-      val p = kn3Model(spark, dir).select(col("trigram"),
-        round(log(greatest(col("p_kn3"), lit(KnPFloor))), 4)
-          .cast("decimal(18,4)").as("lp"))
-      TextAnalysis.docTrigrams(spark, dir)
-        .join(p.hint("shuffle_hash"), "trigram")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_trigrams"),
-          sum(col("lp")).cast("decimal(18,4)").cast("double").as("sum_lp"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-  private val kn3ScoreCtes: String =
-    s"""$kn3Ctes, p3s AS (
-       |  SELECT trigram,
-       |    CAST(round(ln(greatest(p_kn3, $KnPFloor)), 4) AS DECIMAL(18,4))
-       |      AS lp
-       |  FROM pkn3
-       |)""".stripMargin
-  val kn3PerplexitySql: String =
-    s"""WITH $kn3ScoreCtes
-       |SELECT doc_id, count(*) AS n_trigrams,
-       |  CAST(CAST(sum(lp) AS DECIMAL(18,4)) AS DOUBLE) AS sum_lp
-       |FROM tg JOIN p3s USING (trigram) GROUP BY 1""".stripMargin
-
-  /** CCNet bucketing under the trigram model — per-language
-    * head/middle/tail tertiles over the KN-3 nll; the exact-integer
-    * nll_e4 + broadcast-threshold shape of [[knBuckets]]. */
-  def kn3Buckets(spark: SparkSession, dir: String): DataFrame = {
-    val scored = kn3Perplexity(spark, dir)
-      .join(Corpus.table(spark, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
-      .select(col("doc_id"), col("lang"),
-        expr("CAST(round(-sum_lp * 10000, 0) AS BIGINT) div n_trigrams")
-          .as("nll_e4"))
-    val thr = scored.groupBy("lang").agg(
-      expr(s"percentile(nll_e4, $HeadPct)")
-        .cast("decimal(14,4)").cast("double").as("t_head"),
-      expr(s"percentile(nll_e4, $TailPct)")
-        .cast("decimal(14,4)").cast("double").as("t_tail"))
-    scored.join(broadcast(thr), "lang")
-      .select(col("doc_id"), col("lang"), col("nll_e4"),
-        when(col("nll_e4") <= col("t_head"), "head")
-          .when(col("nll_e4") <= col("t_tail"), "middle")
-          .otherwise("tail").as("bucket"))
-  }
-  val kn3BucketsSql: String =
-    s"""WITH $kn3ScoreCtes, kpp AS (
-       |  SELECT doc_id, count(*) AS n_trigrams,
-       |    CAST(CAST(sum(lp) AS DECIMAL(18,4)) AS DOUBLE) AS sum_lp
-       |  FROM tg JOIN p3s USING (trigram) GROUP BY 1
-       |), scored AS MATERIALIZED (
-       |  SELECT d.doc_id, d.lang,
-       |    CAST(round(-sum_lp * 10000, 0) AS BIGINT) // n_trigrams AS nll_e4
-       |  FROM kpp JOIN documents d ON kpp.doc_id = d.doc_id
-       |), thr AS (
-       |  SELECT lang,
-       |    CAST(CAST(quantile_cont(nll_e4, $HeadPct) AS DECIMAL(14,4))
-       |      AS DOUBLE) AS t_head,
-       |    CAST(CAST(quantile_cont(nll_e4, $TailPct) AS DECIMAL(14,4))
-       |      AS DOUBLE) AS t_tail
-       |  FROM scored GROUP BY 1
-       |)
-       |SELECT doc_id, s.lang, nll_e4,
-       |  CASE WHEN nll_e4 <= t_head THEN 'head'
-       |       WHEN nll_e4 <= t_tail THEN 'middle'
-       |       ELSE 'tail' END AS bucket
-       |FROM scored s JOIN thr ON s.lang = thr.lang""".stripMargin
-
-  // ---- Kneser–Ney 4-gram model (#35p–r: one order below KenLM's 5) ------
-  /** Interpolated Kneser–Ney with 4-GRAM context — the kn3 recursion
-    * (VERDICT r12 #3) applied one more time, proving each further order
-    * is the same closed-form continuation-count rollup over one more
-    * materialized n-gram frame:
-    *
-    *   P₄(w₄|w₁w₂w₃) = max(c₄−D,0)/c(w₁w₂w₃·)
-    *                   + D·N₁₊(w₁w₂w₃·)/c(w₁w₂w₃·) · P₃'(w₄|w₂w₃)
-    *   P₃'(w₄|w₂w₃)  = max(N₁₊(·w₂w₃w₄)−D,0)/N₁₊(·w₂w₃·)
-    *                   + D·N₁₊(w₂w₃·)/N₁₊(·w₂w₃·) · P₂'(w₄|w₃)
-    *   P₂'(w₄|w₃)    = max(N₁₊(·w₃w₄)−D,0)/N₁₊(·w₃·)
-    *                   + D·N₁₊(w₃·)/N₁₊(·w₃·) · P_c(w₄)
-    *   P_c(w₄)       = N₁₊(·w₄)/N₁₊(··)
-    *
-    * — top layer on raw 4-gram counts, every lower layer on CONTINUATION
-    * counts (4-gram types for P₃', trigram types for P₂''s numerator and
-    * its N₁₊(w₃·) weight from bigram types, bigram types for P_c).
-    *
-    * §6 HARDENING over kn3Model: each level is computed as an EXACT
-    * INTEGER on the e6 grid instead of a 6-dp HALF_UP double pin. With
-    * D = 3/4 every layer is the rational
-    *   p_e6 = ⌊(max(4·num−3, 0)·10⁶ + 3·weight·p_lower_e6) / (4·den)⌋
-    * — BIGINT end-to-end, floor division on non-negative operands
-    * (identical in both engines), final p = p_e6/10⁶ exactly-representable
-    * DOUBLE. kn3's DECIMAL(14,6) pin left a measure-zero boundary where
-    * the engines' round() disagree at the 6th decimal; sf0.01 actually
-    * HIT that boundary for two 4-gram types (p = 0.1794515), which is why
-    * this model pins harder.
-    *
-    * Scale: identical shape to [[kn3Model]] one order up — every
-    * aggregate is a grouped rollup of a materialized type table
-    * ([[TextAnalysis.fourgramCounts]] / trigramCounts / bigramCounts; the
-    * corpus explodes behind them each run ONCE per session), the eight
-    * model joins are type-keyed shuffle_hash joins between type-bounded
-    * frames, and the 1-row bigram-type total broadcasts. */
-  private val kn4ModelCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  private[operators] def kn4Model(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(kn4ModelCache, spark, dir) {
-      import org.apache.spark.sql.graft.ExactMath.intDiv
-      // ⌊(max(4·num−3,0)·10⁶ + 3·weight·lower_e6) / (4·den)⌋ — one KN
-      // interpolation level on the exact e6 integer grid (D = 3/4)
-      def lvl(num: org.apache.spark.sql.Column,
-          weight: org.apache.spark.sql.Column,
-          lowerE6: org.apache.spark.sql.Column,
-          den: org.apache.spark.sql.Column) =
-        intDiv(greatest(lit(4L) * num - lit(3L), lit(0L)) * lit(1000000L)
-          + lit(3L) * weight * lowerE6, lit(4L) * den)
-      val c4 = TextAnalysis.fourgramCounts(spark, dir)
-        .select(col("fourgram"), col("n"),
-          substring_index(col("fourgram"), " ", 3).as("ctx3"),
-          element_at(split(col("fourgram"), " "), 2).as("w2"),
-          element_at(split(col("fourgram"), " "), 3).as("w3"),
-          element_at(split(col("fourgram"), " "), 4).as("w4"))
-      val cctx4 = c4.groupBy("ctx3")
-        .agg(sum(col("n")).as("n_ctx4"), count(lit(1)).as("nfollow4"))
-      val cont3 = c4.groupBy("w2", "w3", "w4")
-        .agg(count(lit(1)).as("n1p_234"))
-      val midTot3 = cont3.groupBy("w2", "w3")
-        .agg(sum(col("n1p_234")).as("n1p_mid3"))
-      // trigram TYPES (one row per type in the counts table)
-      val c3t = TextAnalysis.trigramCounts(spark, dir)
-        .select(element_at(split(col("trigram"), " "), 1).as("a1"),
-          element_at(split(col("trigram"), " "), 2).as("a2"),
-          element_at(split(col("trigram"), " "), 3).as("a3"))
-      val fol3 = c3t.groupBy(col("a1").as("w2"), col("a2").as("w3"))
-        .agg(count(lit(1)).as("nfollow3"))
-      val contBg = c3t.groupBy(col("a2").as("w3"), col("a3").as("w4"))
-        .agg(count(lit(1)).as("n1p_34"))
-      val midTot2 = contBg.groupBy("w3").agg(sum(col("n1p_34")).as("n1p_mid2"))
-      val c2 = TextAnalysis.bigramCounts(spark, dir)
-        .select(substring_index(col("bigram"), " ", 1).as("b1"),
-          substring_index(col("bigram"), " ", -1).as("b2"))
-      val follow2 = c2.groupBy(col("b1").as("w3"))
-        .agg(count(lit(1)).as("nfollow2"))
-      val cont1 = c2.groupBy(col("b2").as("w4")).agg(count(lit(1)).as("ncont1"))
-      val types = c2.agg(count(lit(1)).as("t_types"))
-      val pContE6 = intDiv(lit(1000000L) * col("ncont1"), col("t_types"))
-      val pMid2E6 =
-        lvl(col("n1p_34"), col("nfollow2"), col("p_cont_e6"), col("n1p_mid2"))
-      val pMid3E6 =
-        lvl(col("n1p_234"), col("nfollow3"), col("p_mid2_e6"), col("n1p_mid3"))
-      val p4E6 = lvl(col("n"), col("nfollow4"), col("p_mid3_e6"), col("n_ctx4"))
-      // each interpolation level is resolved at ITS OWN grain and the next
-      // level joins the one below it once (kn3Model discipline): the
-      // 4-gram table sees two exchanges instead of eight, and the integer
-      // e6 math is position-for-position the same
-      val p2Tab = contBg
-        .join(midTot2.hint("shuffle_hash"), "w3")
-        .join(follow2.hint("shuffle_hash"), "w3")
-        .join(cont1.hint("shuffle_hash"), "w4")
-        .crossJoin(broadcast(types))
-        .withColumn("p_cont_e6", pContE6)
-        .select(col("w3"), col("w4"), pMid2E6.as("p_mid2_e6"))
-      val p3Tab = cont3
-        .join(midTot3.hint("shuffle_hash"), Seq("w2", "w3"))
-        .join(fol3.hint("shuffle_hash"), Seq("w2", "w3"))
-        .join(p2Tab.hint("shuffle_hash"), Seq("w3", "w4"))
-        .select(col("w2"), col("w3"), col("w4"), pMid3E6.as("p_mid3_e6"))
-      c4.join(cctx4.hint("shuffle_hash"), "ctx3")
-        .join(p3Tab.hint("shuffle_hash"), Seq("w2", "w3", "w4"))
-        .select(col("fourgram"), col("n"),
-          (p4E6.cast("double") / lit(1000000d)).as("p_kn4"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  /** Driver-contract query: top-[[KnTopN]] smoothed 4-gram probabilities
-    * (the kn3_trigram_top shape — TakeOrderedAndProject + in-array rank
-    * recovery, no unpartitioned window). */
-  def kn4FourgramTop(spark: SparkSession, dir: String): DataFrame =
-    kn4Model(spark, dir)
-      .orderBy(col("p_kn4").desc, col("fourgram")).limit(KnTopN)
-      .select(struct(negate(col("p_kn4")).as("np"),
-        col("fourgram").as("fourgram"), col("n").as("n"),
-        col("p_kn4").as("p_kn4")).as("s"))
-      .agg(array_sort(collect_list(col("s"))).as("arr"))
-      .select(posexplode(col("arr")).as(Seq("pos", "s")))
-      .select(col("s.fourgram").as("fourgram"), col("s.n").as("n"),
-        col("s.p_kn4").as("p_kn4"), (col("pos") + 1).cast("long").as("rk"))
-
-  /** Shared CTE chain of the 4-gram KN model — identical math to
-    * [[kn4Model]]; `fg` carries doc_id for the scoring queries. */
-  private val kn4Ctes: String =
-    s"""toks AS MATERIALIZED (
-       |  SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
-       |  FROM documents
-       |), fg AS MATERIALIZED (
-       |  SELECT doc_id, g.f AS fourgram
-       |  FROM toks, unnest(list_transform(range(1, len(t) - 2),
-       |    i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2] || ' ' || t[i + 3]))
-       |    AS g(f)
-       |  WHERE len(t) >= 4
-       |), c4 AS MATERIALIZED (
-       |  SELECT fourgram, count(*) AS n,
-       |    concat(split_part(fourgram, ' ', 1), ' ',
-       |      split_part(fourgram, ' ', 2), ' ',
-       |      split_part(fourgram, ' ', 3)) AS ctx3,
-       |    split_part(fourgram, ' ', 2) AS w2,
-       |    split_part(fourgram, ' ', 3) AS w3,
-       |    split_part(fourgram, ' ', 4) AS w4
-       |  FROM fg GROUP BY 1
-       |), cctx4 AS (
-       |  SELECT ctx3, sum(n) AS n_ctx4, count(*) AS nfollow4 FROM c4 GROUP BY 1
-       |), cont3 AS MATERIALIZED (
-       |  SELECT w2, w3, w4, count(*) AS n1p_234 FROM c4 GROUP BY 1, 2, 3
-       |), midtot3 AS (
-       |  SELECT w2, w3, sum(n1p_234) AS n1p_mid3 FROM cont3 GROUP BY 1, 2
-       |), tg3 AS MATERIALIZED (
-       |  SELECT DISTINCT g.tri AS trigram
-       |  FROM toks, unnest(list_transform(range(1, len(t) - 1),
-       |    i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS g(tri)
-       |  WHERE len(t) >= 3
-       |), c3t AS MATERIALIZED (
-       |  SELECT split_part(trigram, ' ', 1) AS a1,
-       |    split_part(trigram, ' ', 2) AS a2,
-       |    split_part(trigram, ' ', 3) AS a3
-       |  FROM tg3
-       |), fol3 AS (
-       |  SELECT a1 AS w2, a2 AS w3, count(*) AS nfollow3 FROM c3t GROUP BY 1, 2
-       |), contbg AS MATERIALIZED (
-       |  SELECT a2 AS w3, a3 AS w4, count(*) AS n1p_34 FROM c3t GROUP BY 1, 2
-       |), midtot2 AS (
-       |  SELECT w3, sum(n1p_34) AS n1p_mid2 FROM contbg GROUP BY 1
-       |), bg2 AS MATERIALIZED (
-       |  SELECT DISTINCT g.b AS bigram
-       |  FROM toks, unnest(list_transform(range(1, len(t)),
-       |    i -> t[i] || ' ' || t[i + 1])) AS g(b)
-       |  WHERE len(t) >= 2
-       |), follow2 AS (
-       |  SELECT split_part(bigram, ' ', 1) AS w3, count(*) AS nfollow2
-       |  FROM bg2 GROUP BY 1
-       |), cont1 AS (
-       |  SELECT split_part(bigram, ' ', 2) AS w4, count(*) AS ncont1
-       |  FROM bg2 GROUP BY 1
-       |), types2 AS (SELECT count(*) AS t_types FROM bg2),
-       |pkn4 AS MATERIALIZED (
-       |  SELECT fourgram, n, CAST(
-       |      (greatest(4 * CAST(n AS BIGINT) - 3, 0) * 1000000
-       |        + 3 * nfollow4 *
-       |          ((greatest(4 * CAST(n1p_234 AS BIGINT) - 3, 0) * 1000000
-       |            + 3 * nfollow3 *
-       |              ((greatest(4 * CAST(n1p_34 AS BIGINT) - 3, 0) * 1000000
-       |                + 3 * nfollow2 *
-       |                  ((1000000 * CAST(ncont1 AS BIGINT)) // t_types))
-       |               // (4 * n1p_mid2)))
-       |           // (4 * n1p_mid3)))
-       |      // (4 * CAST(n_ctx4 AS BIGINT))
-       |    AS DOUBLE) / 1000000.0 AS p_kn4
-       |  FROM c4 JOIN cctx4 USING (ctx3) JOIN cont3 USING (w2, w3, w4)
-       |    JOIN midtot3 USING (w2, w3) JOIN fol3 USING (w2, w3)
-       |    JOIN contbg USING (w3, w4) JOIN midtot2 USING (w3)
-       |    JOIN follow2 USING (w3) JOIN cont1 USING (w4) CROSS JOIN types2
-       |)""".stripMargin
-  val kn4FourgramTopSql: String =
-    s"""WITH $kn4Ctes
-       |SELECT fourgram, n, p_kn4,
-       |  CAST(row_number() OVER (ORDER BY p_kn4 DESC, fourgram) AS BIGINT)
-       |    AS rk
-       |FROM pkn4 ORDER BY p_kn4 DESC, fourgram LIMIT $KnTopN""".stripMargin
-
-  /** 4-gram-KN document scoring — `kn3_perplexity` one order up (docs with
-    * <4 tokens have no row); same shuffle_hash model join + one doc-keyed
-    * rollup, model amortized per session. */
-  private val kn4PplCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  def kn4Perplexity(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(kn4PplCache, spark, dir) {
-      val p = kn4Model(spark, dir).select(col("fourgram"),
-        round(log(greatest(col("p_kn4"), lit(KnPFloor))), 4)
-          .cast("decimal(18,4)").as("lp"))
-      TextAnalysis.docFourgrams(spark, dir)
-        .join(p.hint("shuffle_hash"), "fourgram")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_fourgrams"),
-          sum(col("lp")).cast("decimal(18,4)").cast("double").as("sum_lp"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-  private val kn4ScoreCtes: String =
-    s"""$kn4Ctes, p4s AS (
-       |  SELECT fourgram,
-       |    CAST(round(ln(greatest(p_kn4, $KnPFloor)), 4) AS DECIMAL(18,4))
-       |      AS lp
-       |  FROM pkn4
-       |)""".stripMargin
-  val kn4PerplexitySql: String =
-    s"""WITH $kn4ScoreCtes
-       |SELECT doc_id, count(*) AS n_fourgrams,
-       |  CAST(CAST(sum(lp) AS DECIMAL(18,4)) AS DOUBLE) AS sum_lp
-       |FROM fg JOIN p4s USING (fourgram) GROUP BY 1""".stripMargin
-
-  /** CCNet bucketing under the 4-gram model — the [[knBuckets]] shape. */
-  def kn4Buckets(spark: SparkSession, dir: String): DataFrame = {
-    val scored = kn4Perplexity(spark, dir)
-      .join(Corpus.table(spark, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
-      .select(col("doc_id"), col("lang"),
-        expr("CAST(round(-sum_lp * 10000, 0) AS BIGINT) div n_fourgrams")
-          .as("nll_e4"))
-    val thr = scored.groupBy("lang").agg(
-      expr(s"percentile(nll_e4, $HeadPct)")
-        .cast("decimal(14,4)").cast("double").as("t_head"),
-      expr(s"percentile(nll_e4, $TailPct)")
-        .cast("decimal(14,4)").cast("double").as("t_tail"))
-    scored.join(broadcast(thr), "lang")
-      .select(col("doc_id"), col("lang"), col("nll_e4"),
-        when(col("nll_e4") <= col("t_head"), "head")
-          .when(col("nll_e4") <= col("t_tail"), "middle")
-          .otherwise("tail").as("bucket"))
-  }
-  val kn4BucketsSql: String =
-    s"""WITH $kn4ScoreCtes, kpp AS (
-       |  SELECT doc_id, count(*) AS n_fourgrams,
-       |    CAST(CAST(sum(lp) AS DECIMAL(18,4)) AS DOUBLE) AS sum_lp
-       |  FROM fg JOIN p4s USING (fourgram) GROUP BY 1
-       |), scored AS MATERIALIZED (
-       |  SELECT d.doc_id, d.lang,
-       |    CAST(round(-sum_lp * 10000, 0) AS BIGINT) // n_fourgrams AS nll_e4
-       |  FROM kpp JOIN documents d ON kpp.doc_id = d.doc_id
-       |), thr AS (
-       |  SELECT lang,
-       |    CAST(CAST(quantile_cont(nll_e4, $HeadPct) AS DECIMAL(14,4))
-       |      AS DOUBLE) AS t_head,
-       |    CAST(CAST(quantile_cont(nll_e4, $TailPct) AS DECIMAL(14,4))
-       |      AS DOUBLE) AS t_tail
-       |  FROM scored GROUP BY 1
-       |)
-       |SELECT doc_id, s.lang, nll_e4,
-       |  CASE WHEN nll_e4 <= t_head THEN 'head'
-       |       WHEN nll_e4 <= t_tail THEN 'middle'
-       |       ELSE 'tail' END AS bucket
-       |FROM scored s JOIN thr ON s.lang = thr.lang""".stripMargin
-
-  // ---- Kneser–Ney 5-gram model (#35s-u: the KenLM production order) -----
-  /** Interpolated Kneser–Ney with 5-GRAM context — the order production
-    * KenLM-filtered pipelines (CCNet, RedPajama, FineWeb ancestry) train
-    * and score with. The [[kn4Model]] recursion applied once more, every
-    * level the exact e6-grid BIGINT
-    *   p_e6 = ⌊(max(4·num−3, 0)·10⁶ + 3·weight·p_lower_e6) / (4·den)⌋
-    * (D = 3/4; floor division on non-negative operands — engine-identical
-    * by construction, no DECIMAL pin boundary):
-    *
-    *   P₅  : raw 5-gram counts over c(w₁w₂w₃w₄·)
-    *   P₄' : N₁₊(·w₂w₃w₄w₅)/N₁₊(·w₂w₃w₄·), weight N₁₊(w₂w₃w₄·) from
-    *         4-gram types
-    *   P₃' : N₁₊(·w₃w₄w₅)/N₁₊(·w₃w₄·) from 4-gram types, weight
-    *         N₁₊(w₃w₄·) from trigram types
-    *   P₂' : N₁₊(·w₄w₅)/N₁₊(·w₄·) from trigram types, weight N₁₊(w₄·)
-    *         from bigram types
-    *   P_c : N₁₊(·w₅)/N₁₊(··) from bigram types
-    *
-    * Scale: identical shape one order up — every aggregate is a grouped
-    * rollup of a materialized type table (fivegram/fourgram/trigram/
-    * bigram counts, each corpus explode run ONCE per session), eleven
-    * type-keyed shuffle_hash joins between type-bounded frames, the 1-row
-    * bigram-type total broadcast. At 100 TB the 5-gram type frame is the
-    * big one (~corpus tokens), which is exactly what KenLM's disk-based
-    * trainer holds too — materialized columnar, never re-exploded. */
-  private val kn5ModelCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  private[operators] def kn5Model(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(kn5ModelCache, spark, dir) {
-      import org.apache.spark.sql.graft.ExactMath.intDiv
-      def lvl(num: org.apache.spark.sql.Column,
-          weight: org.apache.spark.sql.Column,
-          lowerE6: org.apache.spark.sql.Column,
-          den: org.apache.spark.sql.Column) =
-        intDiv(greatest(lit(4L) * num - lit(3L), lit(0L)) * lit(1000000L)
-          + lit(3L) * weight * lowerE6, lit(4L) * den)
-      val c5 = TextAnalysis.fivegramCounts(spark, dir)
-        .select(col("fivegram"), col("n"),
-          substring_index(col("fivegram"), " ", 4).as("ctx4"),
-          element_at(split(col("fivegram"), " "), 2).as("w2"),
-          element_at(split(col("fivegram"), " "), 3).as("w3"),
-          element_at(split(col("fivegram"), " "), 4).as("w4"),
-          element_at(split(col("fivegram"), " "), 5).as("w5"))
-      val cctx5 = c5.groupBy("ctx4")
-        .agg(sum(col("n")).as("n_ctx5"), count(lit(1)).as("nfollow5"))
-      val cont4 = c5.groupBy("w2", "w3", "w4", "w5")
-        .agg(count(lit(1)).as("n1p_2345"))
-      val midTot4 = cont4.groupBy("w2", "w3", "w4")
-        .agg(sum(col("n1p_2345")).as("n1p_mid4"))
-      // 4-gram TYPES (one row per type in the counts table)
-      val c4t = TextAnalysis.fourgramCounts(spark, dir)
-        .select(element_at(split(col("fourgram"), " "), 1).as("a1"),
-          element_at(split(col("fourgram"), " "), 2).as("a2"),
-          element_at(split(col("fourgram"), " "), 3).as("a3"),
-          element_at(split(col("fourgram"), " "), 4).as("a4"))
-      val fol4 = c4t.groupBy(col("a1").as("w2"), col("a2").as("w3"),
-          col("a3").as("w4"))
-        .agg(count(lit(1)).as("nfollow4c"))
-      val cont3p = c4t.groupBy(col("a2").as("w3"), col("a3").as("w4"),
-          col("a4").as("w5"))
-        .agg(count(lit(1)).as("n1p_345"))
-      val midTot3p = cont3p.groupBy("w3", "w4")
-        .agg(sum(col("n1p_345")).as("n1p_mid3p"))
-      // trigram TYPES
-      val c3t = TextAnalysis.trigramCounts(spark, dir)
-        .select(element_at(split(col("trigram"), " "), 1).as("a1"),
-          element_at(split(col("trigram"), " "), 2).as("a2"),
-          element_at(split(col("trigram"), " "), 3).as("a3"))
-      val fol3 = c3t.groupBy(col("a1").as("w3"), col("a2").as("w4"))
-        .agg(count(lit(1)).as("nfollow3c"))
-      val contBg = c3t.groupBy(col("a2").as("w4"), col("a3").as("w5"))
-        .agg(count(lit(1)).as("n1p_45"))
-      val midTot2 = contBg.groupBy("w4").agg(sum(col("n1p_45")).as("n1p_mid2"))
-      val c2 = TextAnalysis.bigramCounts(spark, dir)
-        .select(substring_index(col("bigram"), " ", 1).as("b1"),
-          substring_index(col("bigram"), " ", -1).as("b2"))
-      val follow2 = c2.groupBy(col("b1").as("w4"))
-        .agg(count(lit(1)).as("nfollow2"))
-      val cont1 = c2.groupBy(col("b2").as("w5")).agg(count(lit(1)).as("ncont1"))
-      val types = c2.agg(count(lit(1)).as("t_types"))
-      val pContE6 = intDiv(lit(1000000L) * col("ncont1"), col("t_types"))
-      val p2E6 =
-        lvl(col("n1p_45"), col("nfollow2"), col("p_cont_e6"), col("n1p_mid2"))
-      val p3E6 =
-        lvl(col("n1p_345"), col("nfollow3c"), col("p2_e6"), col("n1p_mid3p"))
-      val p4E6 =
-        lvl(col("n1p_2345"), col("nfollow4c"), col("p3_e6"), col("n1p_mid4"))
-      val p5E6 = lvl(col("n"), col("nfollow5"), col("p4_e6"), col("n_ctx5"))
-      // each interpolation level resolved at ITS OWN grain, joined upward
-      // once (kn3Model discipline): the 5-gram table sees two exchanges
-      // instead of eleven; identical integer e6 math per row
-      val p2Tab = contBg
-        .join(midTot2.hint("shuffle_hash"), "w4")
-        .join(follow2.hint("shuffle_hash"), "w4")
-        .join(cont1.hint("shuffle_hash"), "w5")
-        .crossJoin(broadcast(types))
-        .withColumn("p_cont_e6", pContE6)
-        .select(col("w4"), col("w5"), p2E6.as("p2_e6"))
-      val p3Tab = cont3p
-        .join(midTot3p.hint("shuffle_hash"), Seq("w3", "w4"))
-        .join(fol3.hint("shuffle_hash"), Seq("w3", "w4"))
-        .join(p2Tab.hint("shuffle_hash"), Seq("w4", "w5"))
-        .select(col("w3"), col("w4"), col("w5"), p3E6.as("p3_e6"))
-      val p4Tab = cont4
-        .join(midTot4.hint("shuffle_hash"), Seq("w2", "w3", "w4"))
-        .join(fol4.hint("shuffle_hash"), Seq("w2", "w3", "w4"))
-        .join(p3Tab.hint("shuffle_hash"), Seq("w3", "w4", "w5"))
-        .select(col("w2"), col("w3"), col("w4"), col("w5"), p4E6.as("p4_e6"))
-      c5.join(cctx5.hint("shuffle_hash"), "ctx4")
-        .join(p4Tab.hint("shuffle_hash"), Seq("w2", "w3", "w4", "w5"))
-        .select(col("fivegram"), col("n"),
-          (p5E6.cast("double") / lit(1000000d)).as("p_kn5"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  /** Driver-contract query: top-[[KnTopN]] smoothed 5-gram probabilities
-    * (TakeOrderedAndProject + in-array rank recovery). */
-  def kn5FivegramTop(spark: SparkSession, dir: String): DataFrame =
-    kn5Model(spark, dir)
-      .orderBy(col("p_kn5").desc, col("fivegram")).limit(KnTopN)
-      .select(struct(negate(col("p_kn5")).as("np"),
-        col("fivegram").as("fivegram"), col("n").as("n"),
-        col("p_kn5").as("p_kn5")).as("s"))
-      .agg(array_sort(collect_list(col("s"))).as("arr"))
-      .select(posexplode(col("arr")).as(Seq("pos", "s")))
-      .select(col("s.fivegram").as("fivegram"), col("s.n").as("n"),
-        col("s.p_kn5").as("p_kn5"), (col("pos") + 1).cast("long").as("rk"))
-
-  /** Shared CTE chain of the 5-gram KN model — identical math to
-    * [[kn5Model]]; `vg` carries doc_id for the scoring queries. */
-  private val kn5Ctes: String =
-    s"""toks AS MATERIALIZED (
-       |  SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
-       |  FROM documents
-       |), vg AS MATERIALIZED (
-       |  SELECT doc_id, g.f AS fivegram
-       |  FROM toks, unnest(list_transform(range(1, len(t) - 3),
-       |    i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2] || ' ' ||
-       |      t[i + 3] || ' ' || t[i + 4]))
-       |    AS g(f)
-       |  WHERE len(t) >= 5
-       |), c5 AS MATERIALIZED (
-       |  SELECT fivegram, count(*) AS n,
-       |    concat(split_part(fivegram, ' ', 1), ' ',
-       |      split_part(fivegram, ' ', 2), ' ',
-       |      split_part(fivegram, ' ', 3), ' ',
-       |      split_part(fivegram, ' ', 4)) AS ctx4,
-       |    split_part(fivegram, ' ', 2) AS w2,
-       |    split_part(fivegram, ' ', 3) AS w3,
-       |    split_part(fivegram, ' ', 4) AS w4,
-       |    split_part(fivegram, ' ', 5) AS w5
-       |  FROM vg GROUP BY 1
-       |), cctx5 AS (
-       |  SELECT ctx4, sum(n) AS n_ctx5, count(*) AS nfollow5 FROM c5 GROUP BY 1
-       |), cont4 AS MATERIALIZED (
-       |  SELECT w2, w3, w4, w5, count(*) AS n1p_2345 FROM c5 GROUP BY 1, 2, 3, 4
-       |), midtot4 AS (
-       |  SELECT w2, w3, w4, sum(n1p_2345) AS n1p_mid4 FROM cont4 GROUP BY 1, 2, 3
-       |), fg4 AS MATERIALIZED (
-       |  SELECT DISTINCT g.f AS fourgram
-       |  FROM toks, unnest(list_transform(range(1, len(t) - 2),
-       |    i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2] || ' ' || t[i + 3]))
-       |    AS g(f)
-       |  WHERE len(t) >= 4
-       |), c4t AS MATERIALIZED (
-       |  SELECT split_part(fourgram, ' ', 1) AS a1,
-       |    split_part(fourgram, ' ', 2) AS a2,
-       |    split_part(fourgram, ' ', 3) AS a3,
-       |    split_part(fourgram, ' ', 4) AS a4
-       |  FROM fg4
-       |), fol4 AS (
-       |  SELECT a1 AS w2, a2 AS w3, a3 AS w4, count(*) AS nfollow4c
-       |  FROM c4t GROUP BY 1, 2, 3
-       |), cont3p AS MATERIALIZED (
-       |  SELECT a2 AS w3, a3 AS w4, a4 AS w5, count(*) AS n1p_345
-       |  FROM c4t GROUP BY 1, 2, 3
-       |), midtot3p AS (
-       |  SELECT w3, w4, sum(n1p_345) AS n1p_mid3p FROM cont3p GROUP BY 1, 2
-       |), tg3 AS MATERIALIZED (
-       |  SELECT DISTINCT g.tri AS trigram
-       |  FROM toks, unnest(list_transform(range(1, len(t) - 1),
-       |    i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS g(tri)
-       |  WHERE len(t) >= 3
-       |), c3t AS MATERIALIZED (
-       |  SELECT split_part(trigram, ' ', 1) AS a1,
-       |    split_part(trigram, ' ', 2) AS a2,
-       |    split_part(trigram, ' ', 3) AS a3
-       |  FROM tg3
-       |), fol3 AS (
-       |  SELECT a1 AS w3, a2 AS w4, count(*) AS nfollow3c FROM c3t GROUP BY 1, 2
-       |), contbg AS MATERIALIZED (
-       |  SELECT a2 AS w4, a3 AS w5, count(*) AS n1p_45 FROM c3t GROUP BY 1, 2
-       |), midtot2 AS (
-       |  SELECT w4, sum(n1p_45) AS n1p_mid2 FROM contbg GROUP BY 1
-       |), bg2 AS MATERIALIZED (
-       |  SELECT DISTINCT g.b AS bigram
-       |  FROM toks, unnest(list_transform(range(1, len(t)),
-       |    i -> t[i] || ' ' || t[i + 1])) AS g(b)
-       |  WHERE len(t) >= 2
-       |), follow2 AS (
-       |  SELECT split_part(bigram, ' ', 1) AS w4, count(*) AS nfollow2
-       |  FROM bg2 GROUP BY 1
-       |), cont1 AS (
-       |  SELECT split_part(bigram, ' ', 2) AS w5, count(*) AS ncont1
-       |  FROM bg2 GROUP BY 1
-       |), types2 AS (SELECT count(*) AS t_types FROM bg2),
-       |pkn5 AS MATERIALIZED (
-       |  SELECT fivegram, n, CAST(
-       |      (greatest(4 * CAST(n AS BIGINT) - 3, 0) * 1000000
-       |        + 3 * nfollow5 *
-       |          ((greatest(4 * CAST(n1p_2345 AS BIGINT) - 3, 0) * 1000000
-       |            + 3 * nfollow4c *
-       |              ((greatest(4 * CAST(n1p_345 AS BIGINT) - 3, 0) * 1000000
-       |                + 3 * nfollow3c *
-       |                  ((greatest(4 * CAST(n1p_45 AS BIGINT) - 3, 0) * 1000000
-       |                    + 3 * nfollow2 *
-       |                      ((1000000 * CAST(ncont1 AS BIGINT)) // t_types))
-       |                   // (4 * n1p_mid2)))
-       |               // (4 * n1p_mid3p)))
-       |           // (4 * n1p_mid4)))
-       |      // (4 * CAST(n_ctx5 AS BIGINT))
-       |    AS DOUBLE) / 1000000.0 AS p_kn5
-       |  FROM c5 JOIN cctx5 USING (ctx4) JOIN cont4 USING (w2, w3, w4, w5)
-       |    JOIN midtot4 USING (w2, w3, w4) JOIN fol4 USING (w2, w3, w4)
-       |    JOIN cont3p USING (w3, w4, w5) JOIN midtot3p USING (w3, w4)
-       |    JOIN fol3 USING (w3, w4) JOIN contbg USING (w4, w5)
-       |    JOIN midtot2 USING (w4) JOIN follow2 USING (w4)
-       |    JOIN cont1 USING (w5) CROSS JOIN types2
-       |)""".stripMargin
-  val kn5FivegramTopSql: String =
-    s"""WITH $kn5Ctes
-       |SELECT fivegram, n, p_kn5,
-       |  CAST(row_number() OVER (ORDER BY p_kn5 DESC, fivegram) AS BIGINT)
-       |    AS rk
-       |FROM pkn5 ORDER BY p_kn5 DESC, fivegram LIMIT $KnTopN""".stripMargin
-
-  /** 5-gram-KN document scoring — the production CCNet/KenLM score (docs
-    * with <5 tokens have no row). */
-  private val kn5PplCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  def kn5Perplexity(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(kn5PplCache, spark, dir) {
-      val p = kn5Model(spark, dir).select(col("fivegram"),
-        round(log(greatest(col("p_kn5"), lit(KnPFloor))), 4)
-          .cast("decimal(18,4)").as("lp"))
-      TextAnalysis.docFivegrams(spark, dir)
-        .join(p.hint("shuffle_hash"), "fivegram")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_fivegrams"),
-          sum(col("lp")).cast("decimal(18,4)").cast("double").as("sum_lp"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-  private val kn5ScoreCtes: String =
-    s"""$kn5Ctes, p5s AS (
-       |  SELECT fivegram,
-       |    CAST(round(ln(greatest(p_kn5, $KnPFloor)), 4) AS DECIMAL(18,4))
-       |      AS lp
-       |  FROM pkn5
-       |)""".stripMargin
-  val kn5PerplexitySql: String =
-    s"""WITH $kn5ScoreCtes
-       |SELECT doc_id, count(*) AS n_fivegrams,
-       |  CAST(CAST(sum(lp) AS DECIMAL(18,4)) AS DOUBLE) AS sum_lp
-       |FROM vg JOIN p5s USING (fivegram) GROUP BY 1""".stripMargin
-
-  /** CCNet bucketing under the 5-gram model — the [[knBuckets]] shape. */
-  def kn5Buckets(spark: SparkSession, dir: String): DataFrame = {
-    val scored = kn5Perplexity(spark, dir)
-      .join(Corpus.table(spark, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
-      .select(col("doc_id"), col("lang"),
-        expr("CAST(round(-sum_lp * 10000, 0) AS BIGINT) div n_fivegrams")
-          .as("nll_e4"))
-    val thr = scored.groupBy("lang").agg(
-      expr(s"percentile(nll_e4, $HeadPct)")
-        .cast("decimal(14,4)").cast("double").as("t_head"),
-      expr(s"percentile(nll_e4, $TailPct)")
-        .cast("decimal(14,4)").cast("double").as("t_tail"))
-    scored.join(broadcast(thr), "lang")
-      .select(col("doc_id"), col("lang"), col("nll_e4"),
-        when(col("nll_e4") <= col("t_head"), "head")
-          .when(col("nll_e4") <= col("t_tail"), "middle")
-          .otherwise("tail").as("bucket"))
-  }
-  val kn5BucketsSql: String =
-    s"""WITH $kn5ScoreCtes, kpp AS (
-       |  SELECT doc_id, count(*) AS n_fivegrams,
-       |    CAST(CAST(sum(lp) AS DECIMAL(18,4)) AS DOUBLE) AS sum_lp
-       |  FROM vg JOIN p5s USING (fivegram) GROUP BY 1
-       |), scored AS MATERIALIZED (
-       |  SELECT d.doc_id, d.lang,
-       |    CAST(round(-sum_lp * 10000, 0) AS BIGINT) // n_fivegrams AS nll_e4
-       |  FROM kpp JOIN documents d ON kpp.doc_id = d.doc_id
-       |), thr AS (
-       |  SELECT lang,
-       |    CAST(CAST(quantile_cont(nll_e4, $HeadPct) AS DECIMAL(14,4))
-       |      AS DOUBLE) AS t_head,
-       |    CAST(CAST(quantile_cont(nll_e4, $TailPct) AS DECIMAL(14,4))
-       |      AS DOUBLE) AS t_tail
-       |  FROM scored GROUP BY 1
-       |)
-       |SELECT doc_id, s.lang, nll_e4,
-       |  CASE WHEN nll_e4 <= t_head THEN 'head'
-       |       WHEN nll_e4 <= t_tail THEN 'middle'
-       |       ELSE 'tail' END AS bucket
-       |FROM scored s JOIN thr ON s.lang = thr.lang""".stripMargin
 
   // ---- composed end product: the corpus a training run actually reads ----
   /** CCNet buckets the selection keeps (the tail is dropped). */
@@ -1564,11 +876,9 @@ object Selection {
     * uniform doc_id key — no new corpus pass at all. */
   def excessLoss(spark: SparkSession, dir: String): DataFrame = {
     val mle = TextAnalysis.lmPerplexity(spark, dir).select(col("doc_id"),
-      expr("CAST(round(-sum_lp * 10000, 0) AS BIGINT) div n_bigrams")
-        .as("nll_mle_e4"))
-    val kn = knPerplexity(spark, dir).select(col("doc_id"),
-      expr("CAST(round(-sum_lp * 10000, 0) AS BIGINT) div n_bigrams")
-        .as("nll_kn_e4"))
+      nllE4("n_bigrams").as("nll_mle_e4"))
+    val kn = knPerplexity(2)(spark, dir).select(col("doc_id"),
+      nllE4("n_bigrams").as("nll_kn_e4"))
     mle.join(kn, Seq("doc_id"))
       .withColumn("excess_e4", col("nll_kn_e4") - col("nll_mle_e4"))
   }
@@ -1576,7 +886,7 @@ object Selection {
     s"""WITH mle AS (
        |  ${TextAnalysis.lmPerplexitySql.linesIterator.mkString("\n  ")}
        |), knq AS (
-       |  ${knPerplexitySql.linesIterator.mkString("\n  ")}
+       |  ${knPerplexitySql(2).linesIterator.mkString("\n  ")}
        |)
        |SELECT m.doc_id,
        |  CAST(round(-m.sum_lp * 10000, 0) AS BIGINT) // m.n_bigrams

@@ -558,7 +558,7 @@ object TextAnalysis {
     // it materializes like the model: the doc-keyed join+rollup runs once
     // per corpus, steady reads are cache hits
     Materialized.cached(lmCache, spark, dir) {
-      lmPerplexityOn(docBigrams(spark, dir), bigramCounts(spark, dir))
+      lmPerplexityOn(docGrams(spark, dir, 2), gramCounts(spark, dir, 2))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
@@ -771,93 +771,35 @@ object TextAnalysis {
             t => t =!= "").as("toks"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** Per-doc consecutive word pairs — the corpus-sized explode behind
-    * `word_bigrams` and `lm_perplexity`. */
-  private[graft] def docBigrams(spark: SparkSession, dir: String): DataFrame =
+  /** Column name of a k-gram (k ∈ 2..5) in [[docGrams]]/[[gramCounts]]. */
+  private[operators] def gramCol(k: Int): String =
+    Seq("bigram", "trigram", "fourgram", "fivegram")(k - 2)
+
+  /** Per-doc consecutive word k-grams (k ∈ 2..5), space-joined so
+    * `split_part`/`split` recover the words on both engines — the
+    * corpus-sized explode behind `word_bigrams`, `lm_perplexity` and the
+    * order-k Kneser–Ney models ([[Selection.knModel]]). */
+  private[graft] def docGrams(spark: SparkSession, dir: String, k: Int): DataFrame =
     lowerToks(spark, dir)
-      .where(size(col("toks")) >= 2) // WordGrams is empty below k anyway
+      .where(size(col("toks")) >= k) // WordGrams is empty below k anyway
       .select(col("doc_id"), explode(
-        org.apache.spark.sql.graft.WordGrams(col("toks"), 2)).as("bigram"))
+        org.apache.spark.sql.graft.WordGrams(col("toks"), k)).as(gramCol(k)))
 
-  private val bigramCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
+  private val gramCaches = (2 to 5).map(k => k -> Materialized.register(
+    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])).toMap
 
-  /** Corpus bigram counts, materialized once per (session, corpus) and
-    * shared by `word_bigrams` and `lm_perplexity` — vocabulary-bounded
-    * (a columnar intermediate at cluster scale), so the corpus explode
-    * behind it runs once, not once per consumer. */
-  private[operators] def bigramCounts(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(bigramCache, spark, dir)(
-      docBigrams(spark, dir)
-        .groupBy("bigram").agg(count(lit(1)).as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Per-doc consecutive word TRIPLES — the corpus-sized explode behind
-    * the trigram KN model ([[Selection.kn3Model]]). Same tokenization as
-    * [[docBigrams]]; space-joined keys so `split_part`/`substring_index`
-    * recover the context on both engines. */
-  private[graft] def docTrigrams(spark: SparkSession, dir: String): DataFrame =
-    lowerToks(spark, dir)
-      .where(size(col("toks")) >= 3)
-      .select(col("doc_id"), explode(
-        org.apache.spark.sql.graft.WordGrams(col("toks"), 3)).as("trigram"))
-
-  private val trigramCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-
-  /** Corpus trigram counts, materialized once per (session, corpus) —
-    * trigram-type-bounded (the vocabulary-frame discipline: every KN-3
-    * aggregate derives from THIS table, so the corpus explode behind it
-    * runs once, not once per consumer). */
-  private[operators] def trigramCounts(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(trigramCache, spark, dir)(
-      docTrigrams(spark, dir)
-        .groupBy("trigram").agg(count(lit(1)).as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Per-doc consecutive word QUADRUPLES — the corpus-sized explode behind
-    * the 4-gram KN model ([[Selection.kn4Model]]). Same tokenization and
-    * space-joined keys as [[docBigrams]]/[[docTrigrams]]. */
-  private[graft] def docFourgrams(spark: SparkSession, dir: String): DataFrame =
-    lowerToks(spark, dir)
-      .where(size(col("toks")) >= 4)
-      .select(col("doc_id"), explode(
-        org.apache.spark.sql.graft.WordGrams(col("toks"), 4)).as("fourgram"))
-
-  private val fourgramCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-
-  /** Corpus 4-gram counts, materialized once per (session, corpus) —
-    * 4-gram-type-bounded; every KN-4 aggregate derives from THIS table so
-    * the corpus explode behind it runs once. */
-  private[operators] def fourgramCounts(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(fourgramCache, spark, dir)(
-      docFourgrams(spark, dir)
-        .groupBy("fourgram").agg(count(lit(1)).as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Per-doc consecutive word QUINTUPLES — the corpus-sized explode behind
-    * the 5-gram KN model ([[Selection.kn5Model]], the order production
-    * KenLM filters actually score). Same tokenization and space-joined
-    * keys as the lower orders. */
-  private[graft] def docFivegrams(spark: SparkSession, dir: String): DataFrame =
-    lowerToks(spark, dir)
-      .where(size(col("toks")) >= 5)
-      .select(col("doc_id"), explode(
-        org.apache.spark.sql.graft.WordGrams(col("toks"), 5)).as("fivegram"))
-
-  private val fivegramCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-
-  /** Corpus 5-gram counts, materialized once per (session, corpus). */
-  private[operators] def fivegramCounts(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(fivegramCache, spark, dir)(
-      docFivegrams(spark, dir)
-        .groupBy("fivegram").agg(count(lit(1)).as("n"))
+  /** Corpus k-gram counts (gram, n), materialized once per (session,
+    * corpus) — k-gram-type-bounded, so every consumer (bigram top/PMI/
+    * phrase search, each KN level) derives from one table and the corpus
+    * explode behind it runs once, not once per consumer. */
+  private[operators] def gramCounts(spark: SparkSession, dir: String, k: Int): DataFrame =
+    Materialized.cached(gramCaches(k), spark, dir)(
+      docGrams(spark, dir, k)
+        .groupBy(gramCol(k)).agg(count(lit(1)).as("n"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   def wordBigrams(spark: SparkSession, dir: String): DataFrame =
-    bigramCounts(spark, dir)
+    gramCounts(spark, dir, 2)
       // top-N via orderBy+limit → TakeOrderedAndProject (per-partition
       // partial top-N, N-row merge), NOT an unpartitioned window that would
       // single-partition the billion-row distinct-bigram table at 100 TB;
@@ -903,7 +845,7 @@ object TextAnalysis {
   def pmiTopPairs(spark: SparkSession, dir: String): DataFrame = {
     val terms = termCounts(spark, dir)
     val totals = terms.agg(sum(col("n")).cast("long").as("n_tokens"))
-    val bg = bigramCounts(spark, dir)
+    val bg = gramCounts(spark, dir, 2)
       .where(col("n") >= MinPairN)
       .select(col("bigram"), col("n").as("n_xy"),
         split(col("bigram"), " ").getItem(0).as("w1"),
@@ -1121,7 +1063,7 @@ object TextAnalysis {
     * the top-N aggregation and the per-doc membership join both consume it,
     * so the tokenize + gram explode runs once per gram size (the
     * decontamination query reuses the same frame at its own k). */
-  private[operators] def docGrams(spark: SparkSession, dir: String,
+  private[operators] def gramFrame(spark: SparkSession, dir: String,
       k: Int = BoilerK): DataFrame =
     Materialized.cached(gramCache, spark, s"$dir#k=$k")(
       lowerToks(spark, dir)
@@ -1144,7 +1086,7 @@ object TextAnalysis {
        |)""".stripMargin
 
   def boilerplateNgrams(spark: SparkSession, dir: String): DataFrame = {
-    val grams = docGrams(spark, dir)
+    val grams = gramFrame(spark, dir)
     val top = grams.groupBy("gram").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("gram")).limit(BoilerTopN)
     grams.join(broadcast(top.select("gram")), "gram")
@@ -1172,7 +1114,7 @@ object TextAnalysis {
     * the corpus-sized gram frame never joins against itself. Exact basis
     * points (§6). */
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val dg = docGrams(spark, dir)
+    val dg = gramFrame(spark, dir)
       .repartition(col("gram"))
       .dropDuplicates("gram", "doc_id")
     val denom = dg.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
@@ -2059,7 +2001,7 @@ object TextAnalysis {
     * probed terms' postings. Per-doc result: match count + first match
     * position (0-based). */
   def phraseSearch(spark: SparkSession, dir: String): DataFrame = {
-    val ph = bigramCounts(spark, dir)
+    val ph = gramCounts(spark, dir, 2)
       .orderBy(col("n").desc, col("bigram")).limit(1)
       .select(split(col("bigram"), " ").as("ws"))
       .select(element_at(col("ws"), 1).as("w1"),

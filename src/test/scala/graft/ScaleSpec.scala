@@ -316,13 +316,17 @@ class ScaleSpec extends SparkTestBase {
     assert(!uf.queryExecution.executedPlan.toString.contains("Exchange"),
       "url_filter gained a shuffle")
 
-    // kn_perplexity: the KN model is vocabulary-bounded but too big to
-    // ship at 100 TB — the scoring join must stay a shuffle_hash join
-    val kp = SparkEntry.queries("kn_perplexity")(spark, sf)
-      .queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert(kp.contains("ShuffledHashJoin"), s"kn model join degraded:\n$kp")
-    assert(!kp.contains("BroadcastHashJoin"),
-      s"kn scoring broadcasts a corpus-scaled side:\n$kp")
+    // kn_perplexity and its orders 3-5: the KN model is vocabulary-bounded
+    // but too big to ship at 100 TB — the scoring join must stay a
+    // shuffle_hash join
+    Seq("kn_perplexity", "kn3_perplexity", "kn4_perplexity",
+        "kn5_perplexity").foreach { q =>
+      val kp = SparkEntry.queries(q)(spark, sf)
+        .queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+      assert(kp.contains("ShuffledHashJoin"), s"$q model join degraded:\n$kp")
+      assert(!kp.contains("BroadcastHashJoin"),
+        s"$q scoring broadcasts a corpus-scaled side:\n$kp")
+    }
 
     // trim_repeated_lines: the first-occurrence window is (doc, hash)-keyed
     // — no unpartitioned window can appear (typed check)
@@ -518,14 +522,14 @@ class ScaleSpec extends SparkTestBase {
       // the skew rule can split the hot key — see lmPerplexityOn's doc
       val ta = graft.operators.TextAnalysis
       val modelDir = java.nio.file.Files.createTempDirectory("graft-lm").toString
-      ta.docBigrams(spark, hot).groupBy("bigram")
+      ta.docGrams(spark, hot, 2).groupBy("bigram")
         .agg(count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(modelDir)
       // .repartition(8): AQE splits a skewed reduce partition at MAP-task
       // boundaries — the one-file fixture scans as a single map task,
       // leaving nothing to split. Real corpora arrive as many input
       // splits; 8 map tasks model that.
-      val df = ta.lmPerplexityOn(ta.docBigrams(spark, hot).repartition(8),
+      val df = ta.lmPerplexityOn(ta.docGrams(spark, hot, 2).repartition(8),
         spark.read.parquet(modelDir))
       val rows = df.collect()
       // completion + exactness: every hot doc has 1999 bigrams, all with

@@ -145,7 +145,7 @@ class SelectionSpec extends SparkTestBase {
       .take(Selection.KnTopN).zipWithIndex
       .map { case ((b, n, p), i) => Seq[Any](b, n, p, (i + 1).toLong) }
       .toSet
-    assert(collectSet(Selection.knBigramTop(spark, dir)) == expected)
+    assert(collectSet(Selection.knTop(2)(spark, dir)) == expected)
     // smoothing sanity: P_KN(w2|w1) over all observed w2 for one w1 is < 1
     val w1 = c2.keysIterator.next().split(" ", 2)(0)
     val mass = pkn.collect { case (b, _, p) if b.startsWith(w1 + " ") => p }.sum
@@ -178,7 +178,7 @@ class SelectionSpec extends SparkTestBase {
     val expected = byDoc.map { case (id, bs) =>
       Seq[Any](id, bs.size.toLong, sumLp(id).toDouble)
     }.toSet
-    assert(collectSet(Selection.knPerplexity(spark, dir)) == expected)
+    assert(collectSet(Selection.knPerplexity(2)(spark, dir)) == expected)
 
     // tertile buckets over the KN nll, per language
     val langOf = corpus.map(c => c._1 -> c._2).toMap
@@ -195,7 +195,7 @@ class SelectionSpec extends SparkTestBase {
       Seq[Any](id, langOf(id), v,
         if (v <= h) "head" else if (v <= t) "middle" else "tail")
     }.toSet
-    assert(collectSet(Selection.knBuckets(spark, dir)) == expB)
+    assert(collectSet(Selection.knBuckets(2)(spark, dir)) == expB)
     // the smoothed score must actually differ from the MLE one somewhere —
     // otherwise this operator family would be redundant with lm_perplexity
     assert(nll.exists { case (id, v) => bruteNllE4.get(id).exists(_ != v) })
@@ -367,12 +367,12 @@ class SelectionSpec extends SparkTestBase {
   // ---- trigram Kneser–Ney -------------------------------------------------
 
   /** From-scratch interpolated trigram KN: every table re-derived from the
-    * raw tokens with plain collections, each probability level pinned at
-    * 6 dp like the operator documents. */
+    * raw tokens with plain collections, each level the exact e6-grid
+    * integer ⌊(max(4·num−3,0)·10⁶ + 3·w·lower_e6)/(4·den)⌋ the operator
+    * documents (D = 3/4). */
   private lazy val bruteKn3: Map[String, (Long, Double)] = {
-    val d = Selection.KnDiscount
-    def pin6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def lvl(num: Long, w: Long, lowerE6: Long, den: Long): Long =
+      (math.max(4L * num - 3L, 0L) * 1000000L + 3L * w * lowerE6) / (4L * den)
     val tri = corpus.flatMap(_._3.sliding(3).filter(_.length == 3)
       .map(_.mkString(" ")))
     val c3 = tri.groupBy(identity).map { case (t, xs) => t -> xs.size.toLong }
@@ -389,15 +389,13 @@ class SelectionSpec extends SparkTestBase {
       .map { case (w, xs) => w -> xs.size.toLong }
     val cont1 = bigrams.map(_.split(" ", 2)).groupBy(_(1))
       .map { case (w, xs) => w -> xs.size.toLong }
-    val tTypes = bigrams.size.toDouble
+    val tTypes = bigrams.size.toLong
     c3.map { case (t, n) =>
       val a = t.split(" ", 3)
       val (nctx, nf3) = cctx(a(0) + " " + a(1))
-      val pc = pin6(cont1(a(2)) / tTypes)
-      val pm = pin6(
-        math.max(contBg((a(1), a(2))) - d, 0d) / midTot(a(1)) +
-          (d * follow2(a(1)) / midTot(a(1))) * pc)
-      t -> ((n, pin6(math.max(n - d, 0d) / nctx + (d * nf3 / nctx) * pm)))
+      val pcE6 = 1000000L * cont1(a(2)) / tTypes
+      val pmE6 = lvl(contBg((a(1), a(2))), follow2(a(1)), pcE6, midTot(a(1)))
+      t -> ((n, lvl(n, nf3, pmE6, nctx).toDouble / 1000000d))
     }
   }
 
@@ -407,7 +405,7 @@ class SelectionSpec extends SparkTestBase {
       .zipWithIndex
       .map { case ((t, (n, p)), i) => Seq[Any](t, n, p, (i + 1).toLong) }
       .toSet
-    assert(collectSet(Selection.kn3TrigramTop(spark, dir)) == expected)
+    assert(collectSet(Selection.knTop(3)(spark, dir)) == expected)
     // smoothing sanity one order up: the probability mass P₃(·|ctx) over
     // the observed continuations of one context stays below 1
     val ctx = bruteKn3.keysIterator.next().split(" ", 3).take(2).mkString(" ")
@@ -427,7 +425,7 @@ class SelectionSpec extends SparkTestBase {
     val expected = byDoc.map { case (id, ts) =>
       Seq[Any](id, ts.size.toLong, sumLp(id).toDouble)
     }.toSet
-    assert(collectSet(Selection.kn3Perplexity(spark, dir)) == expected)
+    assert(collectSet(Selection.knPerplexity(3)(spark, dir)) == expected)
 
     val langOf = corpus.map(c => c._1 -> c._2).toMap
     val nll = byDoc.map { case (id, ts) =>
@@ -443,7 +441,7 @@ class SelectionSpec extends SparkTestBase {
       Seq[Any](id, langOf(id), v,
         if (v <= h) "head" else if (v <= t) "middle" else "tail")
     }.toSet
-    assert(collectSet(Selection.kn3Buckets(spark, dir)) == expB)
+    assert(collectSet(Selection.knBuckets(3)(spark, dir)) == expB)
   }
 
   test("domain_reweight matches a from-scratch DoReMi closed form and " +
@@ -578,7 +576,7 @@ class SelectionSpec extends SparkTestBase {
       .zipWithIndex
       .map { case ((f, (n, p)), i) => Seq[Any](f, n, p, (i + 1).toLong) }
       .toSet
-    assert(collectSet(Selection.kn4FourgramTop(spark, dir)) == expected)
+    assert(collectSet(Selection.knTop(4)(spark, dir)) == expected)
     // conditional mass over the observed continuations of one context <1
     val ctx = bruteKn4.keysIterator.next().split(" ", 4).take(3).mkString(" ")
     val mass = bruteKn4.collect {
@@ -597,7 +595,7 @@ class SelectionSpec extends SparkTestBase {
     val expected = byDoc.map { case (id, fs) =>
       Seq[Any](id, fs.size.toLong, sumLp(id).toDouble)
     }.toSet
-    assert(collectSet(Selection.kn4Perplexity(spark, dir)) == expected)
+    assert(collectSet(Selection.knPerplexity(4)(spark, dir)) == expected)
 
     val langOf = corpus.map(c => c._1 -> c._2).toMap
     val nll = byDoc.map { case (id, fs) =>
@@ -613,7 +611,7 @@ class SelectionSpec extends SparkTestBase {
       Seq[Any](id, langOf(id), v,
         if (v <= h) "head" else if (v <= t) "middle" else "tail")
     }.toSet
-    assert(collectSet(Selection.kn4Buckets(spark, dir)) == expB)
+    assert(collectSet(Selection.knBuckets(4)(spark, dir)) == expB)
   }
 
   test("kn4 discriminates where the trigram model cannot: deterministic " +
@@ -630,8 +628,8 @@ class SelectionSpec extends SparkTestBase {
       .selectExpr("doc_id", "text", "'en' AS lang", "'s' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")
       .coalesce(1).write.parquet(s"$d/documents.parquet")
-    val r4 = Selection.kn4Perplexity(spark, d).where("doc_id = 99").collect()(0)
-    val r3 = Selection.kn3Perplexity(spark, d).where("doc_id = 99").collect()(0)
+    val r4 = Selection.knPerplexity(4)(spark, d).where("doc_id = 99").collect()(0)
+    val r3 = Selection.knPerplexity(3)(spark, d).where("doc_id = 99").collect()(0)
     val nll4 = -r4.getAs[Double]("sum_lp") / r4.getAs[Long]("n_fourgrams")
     val nll3 = -r3.getAs[Double]("sum_lp") / r3.getAs[Long]("n_trigrams")
     assert(nll4 < nll3,
@@ -697,7 +695,7 @@ class SelectionSpec extends SparkTestBase {
       .zipWithIndex
       .map { case ((f, (n, p)), i) => Seq[Any](f, n, p, (i + 1).toLong) }
       .toSet
-    assert(collectSet(Selection.kn5FivegramTop(spark, dir)) == expected)
+    assert(collectSet(Selection.knTop(5)(spark, dir)) == expected)
     val ctx = bruteKn5.keysIterator.next().split(" ", 5).take(4).mkString(" ")
     val mass = bruteKn5.collect {
       case (f, (_, p)) if f.startsWith(ctx + " ") => p }.sum
@@ -715,7 +713,7 @@ class SelectionSpec extends SparkTestBase {
     val expected = byDoc.map { case (id, fs) =>
       Seq[Any](id, fs.size.toLong, sumLp(id).toDouble)
     }.toSet
-    assert(collectSet(Selection.kn5Perplexity(spark, dir)) == expected)
+    assert(collectSet(Selection.knPerplexity(5)(spark, dir)) == expected)
 
     val langOf = corpus.map(c => c._1 -> c._2).toMap
     val nll = byDoc.map { case (id, fs) =>
@@ -731,7 +729,7 @@ class SelectionSpec extends SparkTestBase {
       Seq[Any](id, langOf(id), v,
         if (v <= h) "head" else if (v <= t) "middle" else "tail")
     }.toSet
-    assert(collectSet(Selection.kn5Buckets(spark, dir)) == expB)
+    assert(collectSet(Selection.knBuckets(5)(spark, dir)) == expB)
   }
 
   test("kn5 discriminates where the 4-gram model cannot: deterministic " +
@@ -747,8 +745,8 @@ class SelectionSpec extends SparkTestBase {
       .selectExpr("doc_id", "text", "'en' AS lang", "'s' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")
       .coalesce(1).write.parquet(s"$d/documents.parquet")
-    val r5 = Selection.kn5Perplexity(spark, d).where("doc_id = 99").collect()(0)
-    val r4 = Selection.kn4Perplexity(spark, d).where("doc_id = 99").collect()(0)
+    val r5 = Selection.knPerplexity(5)(spark, d).where("doc_id = 99").collect()(0)
+    val r4 = Selection.knPerplexity(4)(spark, d).where("doc_id = 99").collect()(0)
     val nll5 = -r5.getAs[Double]("sum_lp") / r5.getAs[Long]("n_fivegrams")
     val nll4 = -r4.getAs[Double]("sum_lp") / r4.getAs[Long]("n_fourgrams")
     assert(nll5 < nll4,
@@ -769,11 +767,41 @@ class SelectionSpec extends SparkTestBase {
       .selectExpr("doc_id", "text", "'en' AS lang", "'s' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")
       .coalesce(1).write.parquet(s"$d/documents.parquet")
-    val r3 = Selection.kn3Perplexity(spark, d).where("doc_id = 99").collect()(0)
-    val r2 = Selection.knPerplexity(spark, d).where("doc_id = 99").collect()(0)
+    val r3 = Selection.knPerplexity(3)(spark, d).where("doc_id = 99").collect()(0)
+    val r2 = Selection.knPerplexity(2)(spark, d).where("doc_id = 99").collect()(0)
     val nll3 = -r3.getAs[Double]("sum_lp") / r3.getAs[Long]("n_trigrams")
     val nll2 = -r2.getAs[Double]("sum_lp") / r2.getAs[Long]("n_bigrams")
     assert(nll3 < nll2,
       s"trigram mean nll $nll3 should beat bigram $nll2 on this corpus")
+  }
+
+  test("the KN keys and mink_prob keep their output column names and types") {
+    def top(g: String, p: String) =
+      Seq(g -> "string", "n" -> "bigint", p -> "double", "rk" -> "bigint")
+    def ppl(n: String) =
+      Seq("doc_id" -> "bigint", n -> "bigint", "sum_lp" -> "double")
+    val buckets = Seq("doc_id" -> "bigint", "lang" -> "string",
+      "nll_e4" -> "bigint", "bucket" -> "string")
+    val expected = Map(
+      "kn_bigram_top" -> top("bigram", "p_kn"),
+      "kn_perplexity" -> ppl("n_bigrams"),
+      "kn_buckets" -> buckets,
+      "kn3_trigram_top" -> top("trigram", "p_kn3"),
+      "kn3_perplexity" -> ppl("n_trigrams"),
+      "kn3_buckets" -> buckets,
+      "kn4_fourgram_top" -> top("fourgram", "p_kn4"),
+      "kn4_perplexity" -> ppl("n_fourgrams"),
+      "kn4_buckets" -> buckets,
+      "kn5_fivegram_top" -> top("fivegram", "p_kn5"),
+      "kn5_perplexity" -> ppl("n_fivegrams"),
+      "kn5_buckets" -> buckets,
+      "mink_prob" -> Seq("doc_id" -> "bigint", "n_bigrams" -> "bigint",
+        "k" -> "bigint", "mink_sum_nll_e4" -> "bigint",
+        "mink_mean_nll_e4" -> "bigint"))
+    expected.foreach { case (key, cols) =>
+      val got = SparkEntry.queries(key)(spark, dir).schema.fields
+        .map(f => f.name -> f.dataType.simpleString).toSeq
+      assert(got == cols, s"$key output schema changed")
+    }
   }
 }

@@ -6,15 +6,8 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    graft.Session.local("4").appName("graft-test").getOrCreate()
 }
 
 abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
