@@ -44,15 +44,19 @@ object Anagrams {
     Materialized.cached(vocabCache, spark, dir)(
       cleanWordsOf(Corpus.table(spark, dir, "documents")).persist(StorageLevel.MEMORY_AND_DISK))
 
-  /** Signature → sorted distinct word set. Two-stage: dedup words first
-    * (shuffle on word, map-side partial — shuffle bytes ≈ distinct words
-    * per partition, same order as shuffling sigs directly), THEN compute
-    * the signature sort once per distinct word instead of once per token
-    * occurrence. Measured on the 100-book workload: sig-per-token 11.7 s
-    * vs 6.3 s two-stage — the letter sort is the hot op, the extra
-    * vocabulary-sized exchange is noise. */
+  /** Signature → sorted distinct word set, grouped straight from each
+    * document's distinct words. The plan is one `collect_set` aggregate
+    * pair on the signature: the map-side partial's hash table dedups the
+    * words of its partition before the shuffle, so shuffle bytes stay
+    * vocabulary-sized, and `sort_chars` runs once per (doc, word) row. A
+    * corpus-wide `distinct()` in front would not run: Spark's
+    * `RemoveRedundantAggregates` drops it under the duplicate-agnostic
+    * `collect_set`. A forced word-dedup stage first (an explicit exchange
+    * on the word, then `collect_list` per signature) was not faster on the
+    * 100-book perfbench workload (`local[4]`, 4-vCPU VM): 0.83–1.01 s
+    * against 0.72–0.80 s per warm pass. */
   def anagramGroupsOf(docsDf: DataFrame): DataFrame =
-    groupsFromWords(cleanWordsOf(docsDf))
+    groupsFromWords(cleanWordsRawOf(docsDf))
 
   /** The reduce over any clean-word frame; collect_set dedups, so raw and
     * distinct word frames give identical groups. */

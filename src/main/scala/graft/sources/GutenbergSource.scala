@@ -34,13 +34,15 @@ object GutenbergSource {
   def anagramsFromBooks(spark: SparkSession, path: String): DataFrame =
     Anagrams.anagramLinesOf(readBooks(spark, path))
 
-  /** Write the anagram lines as `numParts` text part files — the shape of
-    * the reference's per-reducer output (`anagrams-part-N.txt`,
+  /** The anagram lines in `numParts` partitions — the shape of the
+    * reference's per-reducer output (`anagrams-part-N.txt`,
     * reducephase/reduce.go:36-52). Hash-repartition by line ≡ the fnv
     * partitioner; everything stays executor-side. */
+  def anagramParts(spark: SparkSession, booksPath: String, numParts: Int): DataFrame =
+    anagramsFromBooks(spark, booksPath).repartition(numParts, col("line"))
+
+  /** Write [[anagramParts]] as `numParts` text part files. */
   def writeAnagramParts(spark: SparkSession, booksPath: String,
                         outPath: String, numParts: Int): Unit =
-    anagramsFromBooks(spark, booksPath)
-      .repartition(numParts, org.apache.spark.sql.functions.col("line"))
-      .write.mode("overwrite").text(outPath)
+    anagramParts(spark, booksPath, numParts).write.mode("overwrite").text(outPath)
 }

@@ -144,6 +144,40 @@ class PlanLintSpec extends SparkTestBase {
     assert(offenders.isEmpty, s"per-token word plans:\n${offenders.mkString("\n")}")
   }
 
+  test("the books plan is one collect_set pair on the signature, then the line exchange") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectSet, Final, Partial}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.graft.SortChars
+    import graft.sources.GutenbergSource
+    val books = Files.createTempDirectory("graft-lint-books")
+    Files.writeString(books.resolve("b.txt"), "care race part trap")
+    val plan = GutenbergSource.anagramParts(spark, books.toString, 4).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    // top-down: the final merge, then the map-side partial
+    val aggs = plan.collect { case a: BaseAggregateExec => a }
+    assert(aggs.map(_.aggregateExpressions.map(_.mode)) == Seq(Seq(Final), Seq(Partial)), plan)
+    assert(aggs.forall(_.aggregateExpressions.forall(_.aggregateFunction.isInstanceOf[CollectSet])), plan)
+    // the partial's one grouping key is the signature, projected below it
+    val key = aggs.last.groupingExpressions.map(_.exprId)
+    assert(plan.exists(_.expressions.exists(_.exists {
+      case a: Alias => key == Seq(a.exprId) && a.child.isInstanceOf[SortChars]
+      case _ => false
+    })), plan)
+    val exchanges = plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    val lineFirst = exchanges.headOption.exists {
+      case HashPartitioning(Seq(a: Attribute), 4) => a.name == "line"
+      case _ => false
+    }
+    assert(exchanges.length == 2 && lineFirst, plan)
+  }
+
   test("rebuilding a query in the same session starts no parquet schema-inference job") {
     built // every query built once already
     val sc = spark.sparkContext

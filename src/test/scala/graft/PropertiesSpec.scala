@@ -215,6 +215,92 @@ class PropertiesSpec extends SparkTestBase {
     assert(chainBySetting.distinct.length == 2, "the case-mapping setting was exercised")
   }
 
+  /** Every token of one or two code points from U+0000–U+00FF (the six
+    * `\s` characters left out), and each of those code points before,
+    * inside and after a mixed-case ASCII word. */
+  private lazy val latin1Tokens: Seq[String] = {
+    val cps = (0 to 0xff).map(_.toChar.toString).filterNot(c => " \t\n\u000B\f\r".contains(c))
+    cps ++ (for (a <- cps; b <- cps) yield a + b) ++
+      cps.flatMap(c => Seq(c + "Word", "Wo" + c + "rd", "Word" + c))
+  }
+
+  test("exhaustive Latin-1: the byte lowercase equals ICU's root lowercase") {
+    import com.ibm.icu.lang.UCharacter
+    import com.ibm.icu.util.ULocale
+    import org.apache.spark.sql.graft.CleanWords
+    import org.apache.spark.unsafe.types.UTF8String
+    val diffs = latin1Tokens.flatMap { t =>
+      val u = UTF8String.fromString(t)
+      val got = CleanWords.lowerLatin1(u.getBaseObject, u.getBaseOffset, u.numBytes)
+      val want = UCharacter.toLowerCase(ULocale.ROOT, t)
+      if (got != null && got.toString == want) None else Some(s"'$t': ${Option(got)} != '$want'")
+    }
+    assert(diffs.isEmpty, diffs.take(5).mkString("\n"))
+    // code points above U+00FF are not the byte path's
+    Seq("\u0100", "a\u0130", "\u03A3", "\uD835\uDC00").foreach { t =>
+      val u = UTF8String.fromString(t)
+      assert(CleanWords.lowerLatin1(u.getBaseObject, u.getBaseOffset, u.numBytes) == null, t)
+    }
+  }
+
+  test("exhaustive Latin-1: CleanWords and SigGroups equal the regex chain") {
+    import org.apache.spark.sql.graft.{CleanWords, SigGroups}
+    val docs = latin1Tokens.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    // read back from parquet so the kernels run inside generated code
+    val df = spark.read.parquet(s"${writeDocsFixture(docs)}/documents.parquet")
+    for (icu <- Seq(false, true)) withIcuCaseMappings(icu) {
+      val viaKernel = df
+        .select(col("doc_id"), explode(CleanWords(col("text"), Stopwords)).as("word"))
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      val viaChain = df
+        .select(col("doc_id"), explode(split(col("text"), WsTokenRe)).as("tok"))
+        .where(col("tok") =!= "")
+        .select(col("doc_id"), trimNonAlpha(lower(col("tok"))).as("word"))
+        .where(isCleanWord(col("word")))
+        .distinct()
+      val chain = viaChain.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(viaKernel == chain, s"icu=$icu: " +
+        s"kernel-only ${(viaKernel -- chain).take(5)}, chain-only ${(chain -- viaKernel).take(5)}")
+      val viaSigGroups = df
+        .select(col("doc_id"), explode(SigGroups(split(col("text"), WsTokenRe), Stopwords)).as("g"))
+        .select(col("doc_id"), col("g.sig"), col("g.words"))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+      val chainGroups = viaChain
+        .groupBy(col("doc_id"), signature(col("word")).as("sig"))
+        .agg(array_join(sort_array(collect_set(col("word"))), " ").as("words"))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+      assert(viaSigGroups == chainGroups, s"icu=$icu: sig_groups-only " +
+        s"${(viaSigGroups -- chainGroups).take(5)}, chain-only ${(chainGroups -- viaSigGroups).take(5)}")
+      // each Latin-1 capital, as a token of its own, became its small letter
+      val capitals = (0xc0 to 0xde).filter(_ != 0xd7).map(_.toChar.toString)
+      val notLowered = capitals.filterNot(c =>
+        chain((latin1Tokens.indexOf(c).toLong, c.toLowerCase(java.util.Locale.ROOT))))
+      assert(notLowered.isEmpty, s"icu=$icu: $notLowered")
+    }
+  }
+
+  test("CleanWords under ICU keeps Spark's lower path where the default locale is tr, az or lt") {
+    import java.util.Locale
+    import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
+    import org.apache.spark.sql.graft.CleanWords
+    import org.apache.spark.unsafe.types.UTF8String
+    val toks = Seq("IÇI", "Ìsola", "Ídolo", "ÏÎ", "Àmbit")
+    def chain(t: String): String = {
+      val w = CollationSupport.Lower.exec(UTF8String.fromString(t),
+        CollationFactory.UTF8_BINARY_COLLATION_ID, true).toString.replaceAll(TrimRe, "")
+      if (w.matches(LettersRe)) w else null
+    }
+    val prev = Locale.getDefault
+    val byLocale = try Seq("tr", "az", "lt", "en").map { lang =>
+      Locale.setDefault(Locale.forLanguageTag(lang))
+      val got = toks.map(t => Option(CleanWords.cleanToken(UTF8String.fromString(t), true)).map(_.toString).orNull)
+      assert(got == toks.map(chain), s"default locale $lang")
+      got
+    } finally Locale.setDefault(prev)
+    // the special casings moved the words, so the guard was exercised
+    assert(byLocale.distinct.length == 3, byLocale)
+  }
+
   test("CleanWords: null text is null; empty and whitespace-only text have no words") {
     import org.apache.spark.sql.graft.CleanWords
     val got = Seq[(Long, Option[String])](
