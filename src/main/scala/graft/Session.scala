@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * session time zone (the NTZ → epoch-seconds path of `Relational.evSec`
   * depends on it), the [[GraftExtensions]] SQL functions, and
   * TIMESTAMP(NANOS) parquet columns read as epoch-nano longs, and a
-  * codegen cache that holds the whole inventory. Each caller picks its own
-  * master and shuffle partitions. */
+  * codegen cache that holds the whole inventory under class names free of
+  * stage ids. Each caller picks its own master and shuffle partitions. */
 object Session {
 
   /** Entries of Spark's JVM-wide cache of generated classes, a static conf
@@ -26,6 +26,11 @@ object Session {
     .config("spark.sql.extensions", "graft.GraftExtensions")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    // a whole-stage class named for its codegen stage id is new source
+    // whenever a plan's independent subtrees are numbered in another
+    // order, which varies from run to run; without the id, a rerun of an
+    // unchanged plan finds its classes in the cache above
+    .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** [[builder]] on `local[cpus]` with one shuffle partition per core. */
   def local(cpus: String): SparkSession.Builder =

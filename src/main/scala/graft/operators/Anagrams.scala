@@ -45,16 +45,12 @@ object Anagrams {
       cleanWordsOf(Corpus.table(spark, dir, "documents")).persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Signature → sorted distinct word set, grouped straight from each
-    * document's distinct words. The plan is one `collect_set` aggregate
-    * pair on the signature: the map-side partial's hash table dedups the
-    * words of its partition before the shuffle, so shuffle bytes stay
-    * vocabulary-sized, and `sort_chars` runs once per (doc, word) row. A
-    * corpus-wide `distinct()` in front would not run: Spark's
-    * `RemoveRedundantAggregates` drops it under the duplicate-agnostic
-    * `collect_set`. A forced word-dedup stage first (an explicit exchange
-    * on the word, then `collect_list` per signature) was not faster on the
-    * 100-book perfbench workload (`local[4]`, 4-vCPU VM): 0.83–1.01 s
-    * against 0.72–0.80 s per warm pass. */
+    * document's distinct words: one `collect_set` aggregate pair on the
+    * signature, whose map-side partial dedups the words of its partition
+    * before the shuffle, and `sort_chars` runs once per (doc, word) row. A
+    * `distinct()` in front would not run: Spark's `RemoveRedundantAggregates`
+    * drops it under the duplicate-agnostic `collect_set`. The raw-book path
+    * dedups words first instead ([[anagramParts]]). */
   def anagramGroupsOf(docsDf: DataFrame): DataFrame =
     groupsFromWords(cleanWordsRawOf(docsDf))
 
@@ -67,13 +63,22 @@ object Anagrams {
       .select(col("sig"), array_join(col("set"), " ").as("anagrams"),
         size(col("set")).cast("long").as("n_words"))
 
-  /** The full reduce on any (doc_id, text) frame: group by signature,
-    * set-dedup, sort, keep >1, format (reducephase/reduce.go:57-115 +
-    * 36-52). Used by both the parquet queries and the raw-file source. */
-  def anagramLinesOf(docsDf: DataFrame): DataFrame =
-    anagramGroupsOf(docsDf)
-      .where(col("n_words") > 1)
-      .select(concat(col("sig"), lit(": "), col("anagrams")).as("line"))
+  /** The reference's reduce as `numParts` part files' rows ("sig: w1 w2"
+    * lines): corpus-wide word dedup (a partial aggregate on the word, so
+    * its shuffle stays vocabulary-sized), then `sort_chars` once per
+    * distinct word, then the reference's shuffle (reducephase/shuffle.go:
+    * 84-93 sends each signature to reducer `fnv(sig) % N`; here partition
+    * `pmod(hash(sig), numParts)`), then per signature the sorted word list,
+    * kept when it has more than one word (reduce.go:57-115, 36-52). The
+    * group aggregate needs no exchange of its own: its input is already
+    * partitioned by the signature. */
+  def anagramParts(words: DataFrame, numParts: Int): DataFrame =
+    words.distinct()
+      .select(signature(col("word")).as("sig"), col("word"))
+      .repartition(numParts, col("sig"))
+      .groupBy(col("sig")).agg(sort_array(collect_list(col("word"))).as("set"))
+      .where(size(col("set")) > 1)
+      .select(concat(col("sig"), lit(": "), array_join(col("set"), " ")).as("line"))
 
   private val cleanWordsCte =
     s"""WITH toks AS (

@@ -8,16 +8,18 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * queries compiles nothing.
   *
   * The keys are the benchmark's analyst mix (perfbench `MIX_KEYS`) but
-  * `market_share` and `dedup_minhash`: their plans have independent
-  * whole-stage subtrees whose codegen stage ids come out in a different
-  * order from run to run, and the generated source names the stage, so a
-  * run that meets an order for the first time compiles though its plan
-  * is unchanged. No cache cap keeps such a key from recompiling. */
+  * `market_share`. Adaptive execution turns its `l_orderkey = o_orderkey`
+  * join into a broadcast join with the lineitem side as the build side on
+  * the first run and the orders side on later runs, and each side is
+  * other generated source. No cache cap keeps such a key from
+  * recompiling. Stage ids, which come out in a different order from run
+  * to run, are kept out of class names by the session
+  * (`spark.sql.codegen.useIdInClassName`). */
 class CodegenCacheSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
-  private val Keys = Seq("anagram_groups", "ann_ivf", "quality_score", "dsir_weights",
-    "q1_agg", "benford_audit", "pack_sequences")
+  private val Keys = Seq("anagram_groups", "dedup_minhash", "ann_ivf", "quality_score",
+    "dsir_weights", "q1_agg", "benford_audit", "pack_sequences")
 
   /** Entries in Spark's JVM-wide cache of generated classes. */
   private def cachedClasses: Long = {

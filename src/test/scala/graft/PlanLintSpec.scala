@@ -121,61 +121,94 @@ class PlanLintSpec extends SparkTestBase {
     import java.nio.file.Files
     import org.apache.spark.sql.catalyst.expressions.StringSplit
     import org.apache.spark.sql.catalyst.plans.logical.Generate
-    import org.apache.spark.sql.graft.CleanWords
+    import org.apache.spark.sql.graft.{BookWords, CleanWords}
     import graft.operators.Anagrams
     import graft.sources.{Corpus, GutenbergSource}
     val books = Files.createTempDirectory("graft-lint-books")
     Files.writeString(books.resolve("b.txt"), "care race part trap")
+    // raw books run CleanWords inside the BookWords kernel
     val plans = Seq(
-      "GutenbergSource.anagramsFromBooks" -> GutenbergSource.anagramsFromBooks(spark, books.toString),
+      ("GutenbergSource.anagramsFromBooks", GutenbergSource.anagramsFromBooks(spark, books.toString),
+        classOf[BookWords]),
       // a fresh fixture: the sf corpus's vocabulary is cached by the sweep
       // above, and a cache hit would hide the plan
-      "Anagrams.cleanWordsOf" -> Anagrams.cleanWordsOf(
-        Corpus.table(spark, writeDocsFixture(Seq(1L -> "care race")), "documents")))
-    val offenders = plans.flatMap { case (name, df) =>
+      ("Anagrams.cleanWordsOf", Anagrams.cleanWordsOf(
+        Corpus.table(spark, writeDocsFixture(Seq(1L -> "care race")), "documents")), classOf[CleanWords]))
+    val offenders = plans.flatMap { case (name, df, kernelClass) =>
       val plan = df.queryExecution.optimizedPlan
-      val kernel = plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[CleanWords])))
+      val kernel = plan.exists(_.expressions.exists(_.exists(kernelClass.isInstance)))
       val splitGenerates = plan.collect {
         case g: Generate if g.generator.exists(_.isInstanceOf[StringSplit]) =>
           s"$name: Generate over split: ${g.generator.sql}"
       }
-      (if (kernel) Nil else Seq(s"$name: no clean_words in the plan")) ++ splitGenerates
+      (if (kernel) Nil else Seq(s"$name: no ${kernelClass.getSimpleName} in the plan")) ++ splitGenerates
     }
     assert(offenders.isEmpty, s"per-token word plans:\n${offenders.mkString("\n")}")
   }
 
-  test("the books plan is one collect_set pair on the signature, then the line exchange") {
+  test("the books plan dedups words, then a collect_list pair on the signature exchange") {
     import java.nio.file.Files
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectSet, Final, Partial}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, RegExpReplace, StringDecode, StringSplit}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, Final, Partial}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
     import org.apache.spark.sql.graft.SortChars
     import graft.sources.GutenbergSource
     val books = Files.createTempDirectory("graft-lint-books")
     Files.writeString(books.resolve("b.txt"), "care race part trap")
-    val plan = GutenbergSource.anagramParts(spark, books.toString, 4).queryExecution.executedPlan match {
+    val plan = GutenbergSource.anagramParts(spark, books.toString, 3).queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p
     }
-    // top-down: the final merge, then the map-side partial
-    val aggs = plan.collect { case a: BaseAggregateExec => a }
-    assert(aggs.map(_.aggregateExpressions.map(_.mode)) == Seq(Seq(Final), Seq(Partial)), plan)
-    assert(aggs.forall(_.aggregateExpressions.forall(_.aggregateFunction.isInstanceOf[CollectSet])), plan)
-    // the partial's one grouping key is the signature, projected below it
-    val key = aggs.last.groupingExpressions.map(_.exprId)
-    assert(plan.exists(_.expressions.exists(_.exists {
-      case a: Alias => key == Seq(a.exprId) && a.child.isInstanceOf[SortChars]
-      case _ => false
-    })), plan)
-    val exchanges = plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
-    val lineFirst = exchanges.headOption.exists {
-      case HashPartitioning(Seq(a: Attribute), 4) => a.name == "line"
-      case _ => false
+    def onAttr(p: HashPartitioning): Attribute = p.expressions match {
+      case Seq(a: Attribute) => a
+      case other => fail(s"partitioned on $other: $plan")
     }
-    assert(exchanges.length == 2 && lineFirst, plan)
+    // the plan is one chain: its aggregates and exchanges, top-down
+    plan.collect { case a: BaseAggregateExec => a; case e: ShuffleExchangeExec => e } match {
+      case Seq(listFinal: BaseAggregateExec, listPartial: BaseAggregateExec, bySig: ShuffleExchangeExec,
+          wordFinal: HashAggregateExec, byWord: ShuffleExchangeExec, wordPartial: HashAggregateExec) =>
+        // the corpus-wide word dedup: a partial and a final HashAggregate on
+        // the word around the word exchange
+        for (a <- Seq(wordFinal, wordPartial))
+          assert(a.aggregateExpressions.isEmpty && a.groupingExpressions.map(_.name) == Seq("word"), plan)
+        assert(wordFinal.requiredChildDistributionExpressions.isDefined &&
+          wordPartial.requiredChildDistributionExpressions.isEmpty, plan)
+        assert(byWord.outputPartitioning match {
+          case p: HashPartitioning => onAttr(p).name == "word"
+          case _ => false
+        }, plan)
+        // the reference's shuffle: the user's repartition into 3 parts on
+        // the sort_chars signature
+        val sig = bySig.outputPartitioning match {
+          case p: HashPartitioning if p.numPartitions == 3 && bySig.shuffleOrigin == REPARTITION_BY_NUM =>
+            onAttr(p)
+          case other => fail(s"signature exchange $other: $plan")
+        }
+        assert(plan.exists(_.expressions.exists(_.exists {
+          case a: Alias => a.exprId == sig.exprId && a.child.isInstanceOf[SortChars]
+          case _ => false
+        })), plan)
+        // above it the collect_list pair, with no exchange between them
+        assert(Seq(listFinal, listPartial).map(_.aggregateExpressions.map(e =>
+          (e.mode, e.aggregateFunction.getClass))) ==
+          Seq(Seq((Final, classOf[CollectList])), Seq((Partial, classOf[CollectList]))), plan)
+        assert(Seq(listFinal, listPartial).forall(_.groupingExpressions.map(_.exprId) == Seq(sig.exprId)), plan)
+      case other => fail(s"aggregates and exchanges ${other.map(_.nodeName)}: $plan")
+    }
+    // the body is found and tokenized by the BookWords kernel; the text
+    // path (readBooks) shows what the lint looks for
+    def textChain(p: org.apache.spark.sql.execution.SparkPlan) = p.flatMap(_.expressions.flatMap(_.collect {
+      // decode runs as StringDecode's static method
+      case i: StaticInvoke if i.staticObject == classOf[StringDecode] => "decode"
+      case e @ (_: RegExpReplace | _: StringSplit) => e.prettyName
+    }))
+    assert(textChain(plan).isEmpty, plan)
+    assert(textChain(GutenbergSource.readBooks(spark, books.toString).queryExecution.executedPlan)
+      .toSet == Set("decode", "regexp_replace"))
   }
 
   test("rebuilding a query in the same session starts no parquet schema-inference job") {

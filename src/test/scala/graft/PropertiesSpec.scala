@@ -312,6 +312,88 @@ class PropertiesSpec extends SparkTestBase {
       3L -> Some(Seq("listen", "silent"))))
   }
 
+  /** Book files drawn to break the strip's byte search: stars, line ends,
+    * the marker texts whole and in pieces (so near-misses are common),
+    * the footer-1 class's own characters, ASCII words and Latin-1 bytes. */
+  private val bookBytes: Gen[Array[Byte]] = {
+    val markers = Seq("START OF THE PROJECT GUTENBERG EBOOK", "START OF THIS PROJECT GUTENBERG EBOOK",
+      "END OF THE PROJECT GUTENBERG EBOOK", "END OF THIS PROJECT GUTENBERG EBOOK")
+    val pieces = Seq("START OF TH", "IS ", "E PROJECT GUTENBERG EBOOK", "PROJECT GUTENBERG EBOOK",
+      "END OF TH", "End of", " the", "(e|is)", " Project Gutenberg", "|", "(")
+    val fragment: Gen[Array[Byte]] = Gen.frequency(
+      3 -> Gen.oneOf(markers),
+      2 -> Gen.oneOf(markers).map(m => s"*** $m ***"),
+      1 -> (for { // footer-1 texts and near misses
+        n <- Gen.chooseNum(0, 6)
+        run <- Gen.listOfN(n, Gen.oneOf(" ", "t", "h", "e", "i", "s", "(", "|", ")", "x"))
+        end <- Gen.oneOf(" Project Gutenberg", "Project Gutenberg")
+      } yield "End of" + run.mkString + end),
+      8 -> Gen.oneOf(pieces),
+      5 -> Gen.oneOf("*", "***", "****"),
+      3 -> Gen.oneOf("\n", "\r", "\r\n", " ", "  "),
+      3 -> Gen.oneOf("Care", "race", "acre", "the", "Word", "s"),
+      2 -> Gen.choose(0x80, 0xff).map(b => new String(Array(b.toChar))))
+      .map(_.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    Gen.chooseNum(0, 40).flatMap(n => Gen.listOfN(n, fragment)).map(_.toArray.flatten)
+  }
+
+  /** The named cases, each with its stripped body. */
+  private val namedBooks: Seq[(String, String)] = Seq(
+    "x **** START OF THE PROJECT GUTENBERG EBOOK A **** body" -> "body", // `****` runs
+    // a marker with no closing `***` on its line: no header
+    "*** START OF THE PROJECT GUTENBERG EBOOK A\n*** body ***" -> "*** START OF THE PROJECT GUTENBERG EBOOK A\n*** body ***",
+    // `***` as the last byte: the regex's `.` has nothing to consume
+    "*** START OF THIS PROJECT GUTENBERG EBOOK A ***" -> "*** START OF THIS PROJECT GUTENBERG EBOOK A ***",
+    "*** START OF THIS PROJECT GUTENBERG EBOOK A ***\n" -> "",
+    // both footers: footer 1 wins though it comes later
+    "h *** START OF THE PROJECT GUTENBERG EBOOK T ***\nbody\n*** END OF THE PROJECT GUTENBERG EBOOK T ***\n" +
+      "End of the Project Gutenberg EBook" -> "body\n*** END OF THE PROJECT GUTENBERG EBOOK T ***\n",
+    "h *** START OF THE PROJECT GUTENBERG EBOOK T ***\r\nbody\r\n*** END OF THIS PROJECT GUTENBERG EBOOK T ***" ->
+      "\nbody\r\n",
+    "lic *** START OF THE PROJECT GUTENBERG EBOOK T *** body text" -> "body text", // a header only
+    "plain text" -> "plain text", // no markers
+    "" -> "") // an empty file
+
+  test("property: BookWords' body bounds equal the strip regexes; the kernel equals the CleanWords chain") {
+    import org.apache.spark.sql.graft.{BookWords, CleanWords}
+    val latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
+    val books = (namedBooks.map(_._1.getBytes(latin1)) ++ draw(bookBytes, 5000)).zipWithIndex
+      .map { case (b, i) => (i.toLong, b) }
+    val dir = java.nio.file.Files.createTempDirectory("graft-bookbytes").toString
+    books.toDF("id", "content").coalesce(1).write.mode("overwrite").parquet(dir)
+    // read back from parquet so the kernel runs inside generated code
+    val df = spark.read.parquet(dir)
+    val text = stripGutenberg(decode(col("content"), "ISO-8859-1"))
+    val viaRegex = df.select(col("id"), text).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val bounds = books.map { case (id, b) =>
+      val from = BookWords.bodyFrom(b)
+      id -> (from, BookWords.bodyTo(b, from))
+    }.toMap
+    val diffs = books.flatMap { case (id, b) =>
+      val (from, to) = bounds(id)
+      if (new String(b, from, to - from, latin1) == viaRegex(id)) None
+      else Some(s"${new String(b, latin1).replace("\n", "\\n")} -> ($from, $to)")
+    }
+    val nDiffs = diffs.length
+    assert(nDiffs == 0, s"bodies differ:\n${diffs.take(5).mkString("\n")}")
+    namedBooks.zipWithIndex.foreach { case ((book, body), i) => assert(viaRegex(i.toLong) == body, book) }
+    // every way the strip can cut was drawn many times
+    val headers = bounds.values.count(_._1 > 0)
+    val footers = books.count { case (id, b) => bounds(id)._2 < b.length }
+    val footer1 = books.count { case (id, b) =>
+      new String(b, latin1).substring(bounds(id)._1).matches(s"(?s).*$Footer1DetectRe.*") }
+    assert(headers > 300 && footer1 > 300 && footers - footer1 > 300, (headers, footer1, footers))
+    for (icu <- Seq(false, true)) withIcuCaseMappings(icu) {
+      val both = df.select(col("id"), BookWords(col("content"), Stopwords).as("k"),
+          CleanWords(text, Stopwords).as("c"))
+        .collect().map(r => (r.getLong(0), r.getSeq[String](1), r.getSeq[String](2)))
+      val differ = both.filter(r => r._2 != r._3)
+      val nDiffer = differ.length
+      assert(nDiffer == 0, s"icu=$icu: ${differ.take(5).mkString("\n")}")
+      assert(both.exists(_._2.exists(_.exists(_ > 0x7f))), "non-ASCII words were exercised")
+    }
+  }
+
   test("property: embedding-dedup blocking finds all pairs within hamming<=1 buckets") {
     // brute-force check on random float vectors: every pair above the
     // cosine threshold whose hyperplane buckets differ by <=1 bit must be

@@ -39,14 +39,42 @@ class SourcesAndStreamingSpec extends SparkTestBase {
   }
 
   test("writeAnagramParts produces per-reducer part files") {
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
     val books = Files.createTempDirectory("graft-books3")
     Files.writeString(Paths.get(books.toString, "b.txt"), "care race part trap dog god")
     val out = Files.createTempDirectory("graft-out").toString + "/parts"
     GutenbergSource.writeAnagramParts(spark, books.toString, out, 3)
     val parts = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
     assert(parts.length == 3)
-    val lines = parts.flatMap(f => scala.io.Source.fromFile(f).getLines()).toSet
-    assert(lines == Set("acer: care race", "aprt: part trap", "dgo: dog god"))
+    val partOf = parts.flatMap { f =>
+      val src = scala.io.Source.fromFile(f)
+      try src.getLines().map(_ -> f.getName.stripPrefix("part-").take(5).toInt).toList finally src.close()
+    }.toMap
+    assert(partOf.keySet == Set("acer: care race", "aprt: part trap", "dgo: dog god"))
+    // the reference's partitioner (reducephase/shuffle.go:84-93) sends a
+    // signature to reducer fnv(sig) % N; here part pmod(hash(sig), N)
+    val sigs = partOf.keys.map(_.takeWhile(_ != ':')).toSeq
+    val want = sigs.toDF("sig").select(col("sig"), pmod(hash(col("sig")), lit(3)))
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert(partOf.map { case (line, part) => line.takeWhile(_ != ':') -> part } == want)
+  }
+
+  test("anagram parts from raw Latin-1 bytes: body words only, Latin-1 letters kept") {
+    val dir = Files.createTempDirectory("graft-books4")
+    val latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
+    Files.write(Paths.get(dir.toString, "b.txt"),
+      ("acre licence *** START OF THE PROJECT GUTENBERG EBOOK F *** \r\n" +
+        "Fa\u00e7ade \u00e7adefa care race part\r\n" +
+        "*** END OF THE PROJECT GUTENBERG EBOOK F ***\r\ntrap").getBytes(latin1))
+    val out = Files.createTempDirectory("graft-out4").toString + "/parts"
+    GutenbergSource.writeAnagramParts(spark, dir.toString, out, 2)
+    val lines = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().toList finally src.close()
+      }.toSet
+    // header (acre) and footer (trap) words stay out
+    assert(lines == Set("acer: care race", "aadef\u00e7: fa\u00e7ade \u00e7adefa"))
   }
 
   test("gutenberg source decodes ISO-8859-1 bytes like the Go rune cast") {
