@@ -1,4 +1,9 @@
 package graft
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, explode}
+import graft.functions.TextFns
+
 object Bench {
 
   /** JVM-wide GC time (ms) summed over all collectors. */
@@ -17,6 +22,21 @@ object Bench {
   private def loadAvg: Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
+
+  /** JVM/codegen warmup so the first measured query doesn't absorb
+    * session startup: exercise the machinery every query shares (parquet
+    * reader, shuffle, regex/split/explode codegen, md5) on a 64-row
+    * sample. First-run numbers then measure each query's OWN work —
+    * notably the one-time materialization of shared intermediates —
+    * instead of whichever query happened to run first paying global JIT. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id * 2)").collect()
+    graft.sources.Corpus.table(spark, sfDir, "documents").limit(64)
+      .select(col("doc_id"), explode(TextFns.wsTokens(col("text"))).as("tok"))
+      .where("tok RLIKE '^[a-z]+$'")
+      .groupBy("tok").count()
+      .selectExpr("md5(tok) AS h", "count").orderBy("h").limit(5).collect()
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -55,18 +75,7 @@ object Bench {
     val gc0 = gcMs
     val cpu0 = cpuNanos
     val wall0 = System.nanoTime()
-    // JVM/codegen warmup so the first measured query doesn't absorb
-    // session startup: exercise the machinery every query shares (parquet
-    // reader, shuffle, regex/split/explode codegen, md5) on a 64-row
-    // sample. First-run numbers then measure each query's OWN work —
-    // notably the one-time materialization of shared intermediates —
-    // instead of whichever query happened to run first paying global JIT.
-    spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    graft.sources.Corpus.table(spark, sfDir, "documents").limit(64)
-      .selectExpr("doc_id", "explode(split(text, '\\\\s+')) AS tok")
-      .where("tok != '' AND tok RLIKE '^[a-z]+$'")
-      .groupBy("tok").count()
-      .selectExpr("md5(tok) AS h", "count").orderBy("h").limit(5).collect()
+    warmUp(spark, sfDir)
     // Two runs per query; BOTH are reported (ADVICE r3). The min measures
     // the steady-state plan; the first run additionally pays one-time costs
     // — JIT, codegen, and crucially the materialization of any shared

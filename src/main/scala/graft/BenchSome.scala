@@ -1,10 +1,13 @@
 package graft
 
 /** Local-iteration bench: times ONLY the queries named on the command line
-  * (same session config and noop-sink methodology as [[Bench]]), printing
-  * per-pass seconds. Not part of the driver contract — the driver runs
-  * [[Bench]]; this exists so a single query can be profiled without paying
-  * the full 251-query sweep. */
+  * (all of them, in name order, when none are named; same session config
+  * and noop-sink methodology as [[Bench]]), printing per-pass seconds.
+  * [[Bench]] is the full-sweep record; this exists so a single query can
+  * be profiled without paying the full sweep.
+  * `GRAFT_BENCH_EXPLAIN` set prints each query's formatted plan under a
+  * `========== name ==========` line; with `SPARK_GRAFT_PASSES=0` that
+  * plan dump is all it does (the plans are audited per SURVEY.md §7). */
 object BenchSome {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -12,13 +15,7 @@ object BenchSome {
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
     val spark = Session.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // same warmup as Bench
-    spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    graft.sources.Corpus.table(spark, sfDir, "documents").limit(64)
-      .selectExpr("doc_id", "explode(split(text, '\\\\s+')) AS tok")
-      .where("tok != '' AND tok RLIKE '^[a-z]+$'")
-      .groupBy("tok").count()
-      .selectExpr("md5(tok) AS h", "count").orderBy("h").limit(5).collect()
+    Bench.warmUp(spark, sfDir)
     // per-query job/stage/task counters (scheduling-overhead attribution)
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong
@@ -33,7 +30,8 @@ object BenchSome {
       override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         if (t.taskMetrics != null) taskMs.addAndGet(t.taskMetrics.executorRunTime)
     })
-    args.foreach { name =>
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val runs = (1 to passes).map { _ =>
         val (j0, s0, k0, m0) = (jobs.get, stages.get, tasks.get, taskMs.get)
@@ -43,11 +41,14 @@ object BenchSome {
         Thread.sleep(200) // let listener events drain
         (dt, jobs.get - j0, stages.get - s0, tasks.get - k0, taskMs.get - m0)
       }
-      if (sys.env.contains("GRAFT_BENCH_EXPLAIN"))
+      if (sys.env.contains("GRAFT_BENCH_EXPLAIN")) {
+        println(s"\n========== $name ==========")
         fn(spark, sfDir).explain("formatted")
+      }
       val ts = runs.map(_._1)
-      println(f"[benchsome] $name passes=${ts.map(t => f"$t%.3f").mkString(",")} min=${ts.min}%.3f " +
-        runs.map(r => s"jobs=${r._2},stages=${r._3},tasks=${r._4},taskSec=${r._5 / 1000.0}").mkString(" | "))
+      if (ts.nonEmpty)
+        println(f"[benchsome] $name passes=${ts.map(t => f"$t%.3f").mkString(",")} min=${ts.min}%.3f " +
+          runs.map(r => s"jobs=${r._2},stages=${r._3},tasks=${r._4},taskSec=${r._5 / 1000.0}").mkString(" | "))
     }
     spark.stop()
   }

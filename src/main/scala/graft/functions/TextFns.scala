@@ -21,6 +21,19 @@ import org.apache.spark.sql.functions._
   * `trimNonAlpha`/`isCleanWord` stay here as the Spark-side reference the
   * kernel is tested against, and `sqlTrim`/`sqlIsCleanWord` are their
   * DuckDB twins in the oracle SQL.
+  *
+  * The whitespace tokenizer (mapphase/split.go:68) is decided here and
+  * nowhere else; every operator and every oracle SQL calls these:
+  *  - [[wsTokens]]: the non-empty whitespace tokens of a text
+  *    (`split(c, WsTokenRe)` minus `split`'s leading-whitespace '');
+  *    DuckDB twin [[sqlWsTokens]]
+  *  - [[lowerTokens]]: the same tokens lowercased; twin [[sqlLowerTokens]]
+  *  - [[wsTokenCount]]: how many tokens there are, as `regexp_count(c,
+  *    '\S+')`; twin [[sqlWsTokenCount]]
+  * Java's `\s` is `[ \t\n\x0B\f\r]`, but RE2's `\s` (DuckDB) leaves out
+  * `\x0B` (vertical tab): `string_split_regex('a\x0Bb', '\s+')` is one
+  * token in DuckDB and two in Spark. The twins therefore spell the class
+  * out as [[WsClass]], which matches exactly where Java's `\s` does.
   */
 object TextFns {
 
@@ -53,6 +66,10 @@ object TextFns {
   val TrimRe      = "^[^\\p{L}]+|[^\\p{L}]+$"
   val LettersRe   = "^[\\p{L}]+$"
   val WsTokenRe   = "\\s+"
+  /** Java's `\s` spelled out for engines whose `\s` differs (RE2 drops
+    * `\x0B`); the oracle twins of the tokenizer use it. */
+  val WsClass     = "[ \\t\\n\\x0B\\f\\r]"
+  val NonWsClass  = WsClass.patch(1, "^", 0)
   /** BPE-ish token classes: letter runs, digit runs, single symbols. */
   val BpeTokenRe  = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
   val PunctRe     = "[^\\p{L}\\p{N}\\s]"
@@ -82,6 +99,16 @@ object TextFns {
   val HtmlTitleRe   = "(?is)<title\\b[^>]*>(.*?)</title>"
 
   // ---------------- Column (Spark) side ----------------
+
+  /** mapphase/split.go:68 — the whitespace tokens of `c`, empties dropped. */
+  def wsTokens(c: Column): Column = filter(split(c, WsTokenRe), t => t =!= "")
+
+  /** [[wsTokens]] lowercased: the token array every word-level query reads. */
+  def lowerTokens(c: Column): Column =
+    filter(transform(split(c, WsTokenRe), t => lower(t)), t => t =!= "")
+
+  /** Number of whitespace tokens of `c` (INT; callers cast). */
+  def wsTokenCount(c: Column): Column = regexp_count(c, lit("\\S+"))
 
   def trimNonAlpha(c: Column): Column = regexp_replace(c, TrimRe, "")
 
@@ -161,6 +188,23 @@ object TextFns {
 
   /** `(…, …, …)` literal list of the stopwords for SQL IN. */
   val stopwordsSqlIn: String = Stopwords.map(sqlLit).mkString("(", ", ", ")")
+
+  /** Lambda parameter of the tokenizer twins; no oracle SQL uses it as a
+    * table or column name. */
+  private val TokVar = "ws_tok"
+
+  /** DuckDB twin of [[wsTokens]]. */
+  def sqlWsTokens(expr: String): String =
+    s"list_filter(string_split_regex($expr, '$WsClass+'), $TokVar -> $TokVar <> '')"
+
+  /** DuckDB twin of [[lowerTokens]]. */
+  def sqlLowerTokens(expr: String): String =
+    s"list_filter(list_transform(string_split_regex($expr, '$WsClass+'), " +
+      s"$TokVar -> lower($TokVar)), $TokVar -> $TokVar <> '')"
+
+  /** DuckDB twin of [[wsTokenCount]]. */
+  def sqlWsTokenCount(expr: String): String =
+    s"len(regexp_extract_all($expr, '$NonWsClass+'))"
 
   /** DuckDB regex literals: single-quoted, backslashes pass through verbatim
     * (standard SQL strings do not process escapes). The Scala strings above

@@ -82,9 +82,8 @@ object Anagrams {
 
   private val cleanWordsCte =
     s"""WITH toks AS (
-       |  SELECT DISTINCT lower(t.w) AS word
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT DISTINCT t.w AS word
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), clean AS (
        |  SELECT DISTINCT ${sqlTrim("word")} AS word FROM toks
        |  WHERE ${sqlIsCleanWord(sqlTrim("word"))}
@@ -133,12 +132,10 @@ object Anagrams {
   // ---- #4 tokenize (mapphase/split.go:68) -------------------------------
   def tokenize(spark: SparkSession, dir: String): DataFrame =
     Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), explode(split(col("text"), WsTokenRe)).as("token"))
-      .where(col("token") =!= "")
+      .select(col("doc_id"), explode(wsTokens(col("text"))).as("token"))
   val tokenizeSql =
     s"""SELECT d.doc_id, t.w AS token
-       |FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |WHERE t.w <> ''""".stripMargin
+       |FROM documents d, unnest(${sqlWsTokens("d.text")}) AS t(w)""".stripMargin
 
   // ---- #5 per-doc lowercase+dedup (mapphase/split.go:119-133) -----------
   // Map-only: the per-doc word set is row-local (exactly the reference's
@@ -147,17 +144,14 @@ object Anagrams {
   // explode+groupBy form.
   def docUniqueWords(spark: SparkSession, dir: String): DataFrame =
     Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), filter(
-        transform(split(col("text"), WsTokenRe), t => lower(t)),
-        t => t =!= "").as("toks"))
+      .select(col("doc_id"), lowerTokens(col("text")).as("toks"))
       .where(size(col("toks")) > 0)
       .select(col("doc_id"),
         array_join(array_sort(array_distinct(col("toks"))), " ").as("words"))
   val docUniqueWordsSql =
     s"""SELECT doc_id,
-       |  list_aggr(list_sort(list(DISTINCT lower(t.w))), 'string_agg', ' ') AS words
-       |FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |WHERE t.w <> ''
+       |  list_aggr(list_sort(list(DISTINCT t.w)), 'string_agg', ' ') AS words
+       |FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |GROUP BY doc_id""".stripMargin
 
   // ---- #6 partition sizing (mapphase/split.go:137-161); rows-only -------
@@ -187,13 +181,12 @@ object Anagrams {
     Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
         explode(org.apache.spark.sql.graft.SigGroups(
-          split(col("text"), WsTokenRe), Stopwords)).as("g"))
+          wsTokens(col("text")), Stopwords)).as("g"))
       .select(col("doc_id"), col("g.sig").as("sig"), col("g.words").as("words"))
   val combinePerDocSql =
     s"""WITH toks AS (
-       |  SELECT DISTINCT d.doc_id, lower(t.w) AS word
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT DISTINCT d.doc_id, t.w AS word
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), clean AS (
        |  SELECT DISTINCT doc_id, ${sqlTrim("word")} AS word FROM toks
        |  WHERE ${sqlIsCleanWord(sqlTrim("word"))}
@@ -267,9 +260,8 @@ object Anagrams {
        |  SELECT text FROM documents
        |  UNION ALL SELECT * FROM (VALUES $sentinelValues) v(text)
        |), toks AS (
-       |  SELECT DISTINCT lower(t.w) AS word
-       |  FROM srcdocs d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT DISTINCT t.w AS word
+       |  FROM srcdocs d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), clean AS (
        |  SELECT DISTINCT ${sqlTrim("word")} AS word FROM toks
        |  WHERE ${sqlIsCleanWord(sqlTrim("word"))}

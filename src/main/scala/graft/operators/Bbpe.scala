@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.TextFns.{sqlWsTokens, wsTokens}
 import graft.sources.Corpus
 
 /** Byte-level BPE (SURVEY.md §2 #25t-m..o) — the GPT-family production
@@ -26,22 +27,19 @@ import graft.sources.Corpus
   * back to corpus grain. */
 object Bbpe {
 
-  /** Raw whitespace tokens, NO lowercasing, NO alphabet filter — the
-    * byte-level contract (case carries information a byte-level vocab
-    * keeps; `termCounts` would fold it). */
-  private def rawToks(c: org.apache.spark.sql.Column) =
-    filter(split(c, graft.functions.TextFns.WsTokenRe), t => t =!= "")
-
   private val wordFreqCache = Materialized.register(
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
 
   /** Distinct raw-word frequency table with the word's UTF-8 hex string —
     * the vocabulary-sized training frame every byte-level stage reads;
-    * materialized once per (session, corpus). */
+    * materialized once per (session, corpus). Words are [[wsTokens]], NOT
+    * lowercased and NOT alphabet-filtered — the byte-level contract (case
+    * carries information a byte-level vocab keeps; `termCounts` would fold
+    * it). */
   private[operators] def wordFreq(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(wordFreqCache, spark, dir)(
       Corpus.table(spark, dir, "documents")
-        .select(explode(rawToks(col("text"))).as("word"))
+        .select(explode(wsTokens(col("text"))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("freq"))
         .select(col("word"), col("freq"),
           hex(encode(col("word"), "UTF-8")).as("h"))
@@ -66,8 +64,7 @@ object Bbpe {
   val bbpePairCountsSql: String =
     s"""WITH w AS (
        |  SELECT t.w AS word
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  FROM documents d, unnest(${sqlWsTokens("d.text")}) AS t(w)
        |), wf AS (
        |  SELECT word, count(*) AS freq FROM w GROUP BY 1
        |), hx AS (
@@ -171,7 +168,7 @@ object Bbpe {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), explode(rawToks(col("text"))).as("word"))
+      .select(col("doc_id"), explode(wsTokens(col("text"))).as("word"))
       .join(encodedVocab, Seq("word"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.TextFns.sqlLowerTokens
 import graft.sources.Corpus
 
 /** TRAINED document classification (SURVEY.md §2 #38) — the supervised
@@ -44,7 +45,7 @@ object Classify {
   private def docTokenCounts(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(tokCache, spark, dir) {
       // token arrays ride the shared tokenized-corpus frame
-      // (TextAnalysis.lowerToks — the ONE WsTokenRe tokenize per corpus)
+      // (TextAnalysis.lowerToks — the ONE lowerTokens pass per corpus)
       TextAnalysis.lowerToks(spark, dir)
         .select(col("doc_id"), col("lang"), explode(col("toks")).as("t"))
         .groupBy("doc_id", "lang", "t")
@@ -121,11 +122,10 @@ object Classify {
   }
   /** Shared CTE chain of the NB model + per-doc scores. */
   private val nbCtes: String =
-    """tc AS MATERIALIZED (
+    s"""tc AS MATERIALIZED (
       |  SELECT doc_id, lang, g.t AS t, count(*) AS cnt
-      |  FROM (SELECT doc_id, lang, list_filter(list_transform(
-      |          string_split_regex(text, '\s+'), x -> lower(x)),
-      |          x -> x <> '') AS toks FROM documents),
+      |  FROM (SELECT doc_id, lang, ${sqlLowerTokens("text")} AS toks
+      |    FROM documents),
       |    unnest(toks) AS g(t)
       |  GROUP BY 1, 2, 3
       |), ct AS MATERIALIZED (
@@ -259,9 +259,7 @@ object Classify {
     s"""WITH tok AS (
        |  SELECT doc_id, CASE WHEN lang = '$LrTargetLang' THEN 1 ELSE 0 END
        |    AS y, $b AS bucket
-       |  FROM documents d, unnest(list_filter(list_transform(
-       |    string_split_regex(d.text, '\\s+'), x -> lower(x)),
-       |    x -> x <> '')) AS g(t)
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS g(t)
        |)
        |SELECT bucket,
        |  CAST(sum(y) AS BIGINT) AS pos_toks,

@@ -20,9 +20,6 @@ import graft.sources.Corpus
   */
 object Curation {
 
-  private def toks = filter(
-    transform(split(col("text"), WsTokenRe), t => lower(t)), t => t =!= "")
-
   // ---- #25i segment-level dedup (CCNet/MassiveText paragraph shape) -----
   /** The corpus has no newline structure, so "paragraphs" are deterministic
     * fixed-width token windows: SegLen-token chunks (trailing partial chunk
@@ -46,7 +43,7 @@ object Curation {
 
   private[operators] def segments(spark: SparkSession, dir: String): DataFrame =
     Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), toks.as("toks"))
+      .select(col("doc_id"), lowerTokens(col("text")).as("toks"))
       .where(size(col("toks")) >= 1)
       // join/count key is the shared 60-bit md5, not the segment text:
       // shuffle bytes per row are 8, not ~SegLen words
@@ -81,7 +78,7 @@ object Curation {
     * corpus count, which trimming itself caps the damage of). */
   def trimSegments(spark: SparkSession, dir: String): DataFrame = {
     val segsP = Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), toks.as("toks"))
+      .select(col("doc_id"), lowerTokens(col("text")).as("toks"))
       .where(size(col("toks")) >= 1)
       .select(col("doc_id"), posexplode(segStrArr).as(Seq("pos", "seg")))
       .withColumn("sh", md5Long(col("seg")))
@@ -98,8 +95,7 @@ object Curation {
   }
   val trimSegmentsSql: String =
     s"""WITH toksx AS (
-       |  SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
+       |  SELECT doc_id, ${sqlLowerTokens("text")} AS t
        |  FROM documents
        |), segs AS (
        |  SELECT doc_id, CAST(g.i AS BIGINT) AS pos,
@@ -319,7 +315,7 @@ object Curation {
     Seq("javascript", "cookie", "privacy policy", "terms of use")
 
   private def c4Keep(l: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val words = size(filter(split(l, WsTokenRe), w => w =!= ""))
+    val words = size(wsTokens(l))
     rtrim(l).rlike("[.!?\"]$") &&
       words >= C4MinLineWords &&
       !C4BannedPhrases.map(p => instr(lower(l), p) > 0).reduce(_ || _)
@@ -372,8 +368,7 @@ object Curation {
   private def sqlC4Keep(l: String): String = {
     val banned = C4BannedPhrases
       .map(p => s"contains(lower($l), '$p')").mkString(" OR ")
-    s"""regexp_matches(rtrim($l), '[.!?"]$$') AND len(list_filter(
-       |      string_split_regex($l, '\\s+'), w -> w <> '')) >= $C4MinLineWords
+    s"""regexp_matches(rtrim($l), '[.!?"]$$') AND len(${sqlWsTokens(l)}) >= $C4MinLineWords
        |      AND NOT ($banned)""".stripMargin
   }
   private def sqlSentCount(t: String): String =
@@ -516,7 +511,7 @@ object Curation {
     // post-scan operator is the 6-rows-per-doc explode) and the 100 TB
     // story collapses to "runs at scan speed".
     Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), toks.as("toks"))
+      .select(col("doc_id"), lowerTokens(col("text")).as("toks"))
       .where(size(col("toks")) >= 1)
       .select(col("doc_id"),
         tokCharsCol.as("tok_chars"),
@@ -559,8 +554,7 @@ object Curation {
              |  s -> s IS NOT NULL)""".stripMargin)
   val gopherRepetitionSql: String =
     s"""WITH toksx AS (
-       |  SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), x -> lower(x)), x -> x <> '') AS t
+       |  SELECT doc_id, ${sqlLowerTokens("text")} AS t
        |  FROM documents
        |), basex AS (
        |  SELECT doc_id, t, CAST(list_aggr(list_transform(t, x -> length(x)),
@@ -637,7 +631,7 @@ object Curation {
         .otherwise(g.getField("agg").getField("dup"))
       mass * lit(10000L) > thrOf(g) * tokCharsCol
     })
-    d.withColumn("toks", toks)
+    d.withColumn("toks", lowerTokens(col("text")))
       .where(!violated)
       .drop("toks")
   }
@@ -689,8 +683,7 @@ object Curation {
   }
   val dedupSegmentsSql: String =
     s"""WITH toksx AS (
-       |  SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
+       |  SELECT doc_id, ${sqlLowerTokens("text")} AS t
        |  FROM documents
        |), segs AS (
        |  SELECT doc_id,
@@ -1011,9 +1004,8 @@ object Curation {
        |    coalesce(sum(${TextAnalysis.sqlQualityBpExpr}), 0) AS sq
        |  FROM documents
        |), t AS (
-       |  SELECT doc_id, lower(g.w) AS tok
-       |  FROM documents, unnest(string_split_regex(text, '\\s+')) AS g(w)
-       |  WHERE g.w <> ''
+       |  SELECT doc_id, g.w AS tok
+       |  FROM documents, unnest(${sqlLowerTokens("text")}) AS g(w)
        |), ta AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n_tokens,
        |    count(DISTINCT tok) AS vocab_size
@@ -1170,9 +1162,7 @@ object Curation {
     * `TextAnalysis.gramFrame`, for corpora that are not the canonical
     * `documents` table (e.g. a benchmark file read via `JsonlSource`). */
   def gramsOf(df: DataFrame, k: Int): DataFrame =
-    df.select(col("doc_id"), filter(
-        transform(split(col("text"), WsTokenRe), t => lower(t)),
-        t => t =!= "").as("toks"))
+    df.select(col("doc_id"), lowerTokens(col("text")).as("toks"))
       .where(size(col("toks")) >= k)
       .select(col("doc_id"), explode(
         org.apache.spark.sql.graft.WordGrams(col("toks"), k)).as("gram"))
@@ -1207,7 +1197,7 @@ object Curation {
 
   def chunkDocuments(spark: SparkSession, dir: String): DataFrame =
     Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), toks.as("t"))
+      .select(col("doc_id"), lowerTokens(col("text")).as("t"))
       .where(size(col("t")) >= 1)
       .select(col("doc_id"), col("t"), size(col("t")).as("n"))
       .select(col("doc_id"), col("t"),
@@ -1221,8 +1211,7 @@ object Curation {
         md5(concat_ws(" ", col("ct"))).as("chunk_md5"))
   val chunkDocumentsSql: String =
     s"""WITH toksx AS (
-       |  SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
+       |  SELECT doc_id, ${sqlLowerTokens("text")} AS t
        |  FROM documents
        |), sized AS (
        |  SELECT doc_id, t, len(t) AS n FROM toksx WHERE len(t) >= 1
@@ -1277,7 +1266,7 @@ object Curation {
 
   def gopherFilters(spark: SparkSession, dir: String): DataFrame =
     Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), toks.as("t"))
+      .select(col("doc_id"), lowerTokens(col("text")).as("t"))
       .where(size(col("t")) > 0)
       .select(col("doc_id"),
         size(col("t")).cast("long").as("n_tokens"),
@@ -1297,8 +1286,7 @@ object Curation {
   val gopherFiltersSql: String = {
     val stops = GopherStops.map(sqlLit).mkString("(", ", ", ")")
     s"""WITH toksx AS (
-       |  SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
+       |  SELECT doc_id, ${sqlLowerTokens("text")} AS t
        |  FROM documents
        |), base AS (
        |  SELECT doc_id, len(t) AS n_tokens,
@@ -1331,7 +1319,7 @@ object Curation {
   def docFeatures(spark: SparkSession, dir: String): DataFrame =
     Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-        col("text"), TextAnalysis.toksCol.as("__toks"),
+        col("text"), lowerTokens(col("text")).as("__toks"),
         TextAnalysis.profileCol.as("__p"))
       // token-less (empty/whitespace-only) docs carry no signals, and the
       // oracle's entropy/simhash subqueries produce no row for them — the
@@ -1355,7 +1343,7 @@ object Curation {
   val docFeaturesSql: String =
     s"""WITH scored AS (
        |  SELECT doc_id, lang, source, n_chars,
-       |    CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS ws_tokens,
+       |    CAST(${sqlWsTokenCount("text")} AS BIGINT) AS ws_tokens,
        |    CAST(len(regexp_extract_all(text,
        |      '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS bpe_tokens,
        |    ${TextAnalysis.sqlQualityBpExpr} AS quality_bp,
@@ -1378,8 +1366,7 @@ object Curation {
        |    ${Dedup.simhashCte.linesIterator.mkString("\n    ")}
        |    SELECT doc_id, simhash FROM sim
        |  ) sim USING (doc_id)
-       |  WHERE len(list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '')) > 0
+       |  WHERE len(${sqlLowerTokens("text")}) > 0
        |)
        |SELECT doc_id, lang, source, n_chars, ws_tokens, bpe_tokens, quality_bp,
        |  char_entropy, simhash, canon_hash,
@@ -1436,8 +1423,7 @@ object Curation {
        |    ${TextAnalysis.sqlQualityBpExpr} AS q,
        |    CAST(e AS DECIMAL(8,4)) AS e
        |  FROM documents JOIN ent USING (doc_id)
-       |  WHERE len(list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '')) > 0
+       |  WHERE len(${sqlLowerTokens("text")}) > 0
        |), pairs AS MATERIALIZED (
        |  ${Dedup.dedupMinhashSql.linesIterator.mkString("\n  ")}
        |), dup AS (
@@ -1702,7 +1688,7 @@ object Curation {
   def packSequences(spark: SparkSession, dir: String): DataFrame = {
     val d = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
-        regexp_count(col("text"), lit("\\S+")).cast("long").as("n_tokens"))
+        wsTokenCount(col("text")).cast("long").as("n_tokens"))
       .where(col("n_tokens") > 0)
       .withColumn("bucket",
         pmod(md5Long(col("doc_id").cast("string")), lit(PackBuckets)))
@@ -1720,10 +1706,10 @@ object Curation {
   val packSequencesSql: String =
     s"""WITH d AS (
        |  SELECT doc_id,
-       |    CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS n_tokens,
+       |    CAST(${sqlWsTokenCount("text")} AS BIGINT) AS n_tokens,
        |    ${sqlMd5Long("CAST(doc_id AS VARCHAR)")} % $PackBuckets AS bucket
        |  FROM documents
-       |  WHERE len(regexp_extract_all(text, '\\S+')) > 0
+       |  WHERE ${sqlWsTokenCount("text")} > 0
        |), c AS (
        |  SELECT doc_id, bucket, n_tokens,
        |    sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
@@ -1747,7 +1733,7 @@ object Curation {
     val iDiv = org.apache.spark.sql.graft.ExactMath.intDiv _
     Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
-        regexp_count(col("text"), lit("\\S+")).cast("long").as("n_tokens"))
+        wsTokenCount(col("text")).cast("long").as("n_tokens"))
       .where(col("n_tokens") > 0)
       .groupBy(pmod(md5Long(col("doc_id").cast("string")), lit(PackBuckets))
         .as("bucket"))
@@ -1762,10 +1748,10 @@ object Curation {
   val packStatsSql: String =
     s"""WITH d AS (
        |  SELECT doc_id,
-       |    CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS n_tokens,
+       |    CAST(${sqlWsTokenCount("text")} AS BIGINT) AS n_tokens,
        |    ${sqlMd5Long("CAST(doc_id AS VARCHAR)")} % $PackBuckets AS bucket
        |  FROM documents
-       |  WHERE len(regexp_extract_all(text, '\\S+')) > 0
+       |  WHERE ${sqlWsTokenCount("text")} > 0
        |), g AS (
        |  SELECT bucket, count(*) AS n_docs,
        |    CAST(sum(n_tokens) AS BIGINT) AS total_tokens
@@ -1849,8 +1835,7 @@ object Curation {
     s"""WITH scored AS (
        |  SELECT doc_id, ${TextAnalysis.sqlQualityBpExpr} AS quality_bp
        |  FROM documents
-       |  WHERE len(list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '')) > 0
+       |  WHERE len(${sqlLowerTokens("text")}) > 0
        |), thr AS (
        |  SELECT CAST(CAST(quantile_cont(quality_bp, $QualityPct)
        |    AS DECIMAL(14,4)) AS DOUBLE) AS q_threshold
@@ -2284,8 +2269,7 @@ object Curation {
       .where(length(col("text")) > 0)
       .select(col("doc_id"), col("text"),
         split(col("text"), "\n", -1).as("ls"),
-        filter(transform(split(col("text"), WsTokenRe), t => lower(t)),
-          t => t =!= "").as("t"))
+        lowerTokens(col("text")).as("t"))
       .select(col("doc_id"),
         size(col("ls")).cast("long").as("n_lines"),
         size(filter(col("ls"), l => rtrim(l).rlike(CodeTailRe) ||
@@ -2320,8 +2304,7 @@ object Curation {
        |    CAST(len(regexp_extract_all(text, '$SymCharRe')) AS BIGINT)
        |      AS sym_chars,
        |    CAST(length(text) AS BIGINT) AS n_chars,
-       |    CAST(len(list_filter(list_transform(
-       |      string_split_regex(text, '\\s+'), t -> lower(t)),
+       |    CAST(len(list_filter(${sqlLowerTokens("text")},
        |      t -> t IN $kws)) AS BIGINT) AS kw_hits
        |  FROM documents WHERE length(text) > 0
        |), bps AS (
@@ -2359,8 +2342,7 @@ object Curation {
   def wordBlocklistGate(spark: SparkSession, dir: String): DataFrame =
     Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
-        filter(filter(transform(split(col("text"), WsTokenRe),
-          t => lower(t)), t => t =!= ""), w => w.isin(WordBlocklist: _*))
+        filter(lowerTokens(col("text")), w => w.isin(WordBlocklist: _*))
           .as("hits"))
       .select(col("doc_id"),
         size(col("hits")).cast("long").as("n_hits"),
@@ -2369,8 +2351,7 @@ object Curation {
   val wordBlocklistGateSql: String = {
     val bl = WordBlocklist.map(sqlLit).mkString("(", ", ", ")")
     s"""WITH hits AS (
-       |  SELECT doc_id, list_filter(list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> ''),
+       |  SELECT doc_id, list_filter(${sqlLowerTokens("text")},
        |    w -> w IN $bl) AS hits
        |  FROM documents
        |)
@@ -2384,8 +2365,8 @@ object Curation {
     * drop blocklisted docs, keep every column. Stateless projection +
     * filter, so batch≡stream by construction (DocsStream twin). */
   private[graft] def blocklistGateOf(d: DataFrame): DataFrame =
-    d.where(size(filter(filter(transform(split(col("text"), WsTokenRe),
-      t => lower(t)), t => t =!= ""), w => w.isin(WordBlocklist: _*))) === 0)
+    d.where(size(filter(lowerTokens(col("text")),
+      w => w.isin(WordBlocklist: _*))) === 0)
 
   // ---- #23f quality-gate ensemble -----------------------------------------
   /** Majority vote of the three independent row-local keep families — the
@@ -2403,7 +2384,7 @@ object Curation {
     * projection, zero exchange, scan speed at 100 TB (ScaleSpec-locked). */
   private def ensembleVotes: (org.apache.spark.sql.Column,
       org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {
-    val tk = toks
+    val tk = lowerTokens(col("text"))
     val kept = filter(split(col("text"), "\n", -1), c4Keep _)
     val ktext = array_join(kept, "\n")
     val c4k = !(instr(lower(col("text")), "lorem ipsum") > 0 ||
@@ -2433,8 +2414,7 @@ object Curation {
     val ktext = s"coalesce(array_to_string(list_filter(string_split(text, " +
       s"chr(10)), l -> ${sqlC4Keep("l")}), chr(10)), '')"
     s"""WITH t AS (
-       |  SELECT doc_id, text, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), x -> lower(x)), x -> x <> '')
+       |  SELECT doc_id, text, ${sqlLowerTokens("text")}
        |    AS tk
        |  FROM documents
        |), v AS (

@@ -1272,8 +1272,7 @@ object Dedup {
   // vals — eager init here would deadlock the two objects' <clinit>
   lazy val dedupBloomSql: String =
     s"""WITH toksx AS (
-       |  SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
+       |  SELECT doc_id, ${sqlLowerTokens("text")} AS t
        |  FROM documents
        |), segs AS (
        |  SELECT doc_id,
@@ -1324,8 +1323,7 @@ object Dedup {
     * over any token order. */
   def simhashes(spark: SparkSession, dir: String): DataFrame =
     Materialized.cached(simhashCache, spark, dir) {
-      val toks = array_distinct(filter(
-        transform(split(col("text"), WsTokenRe), t => lower(t)), t => t =!= ""))
+      val toks = array_distinct(lowerTokens(col("text")))
       Corpus.table(spark, dir, "documents")
         .select(col("doc_id"),
           org.apache.spark.sql.graft.Simhash60(toks).as("simhash"))
@@ -1340,9 +1338,8 @@ object Dedup {
       .map(i => s"CASE WHEN c$i > 0 THEN ${1L << i} ELSE 0 END")
       .mkString(" + ")
     s"""WITH toks AS (
-       |  SELECT DISTINCT d.doc_id, ${sqlMd5Long("lower(t.w)")} AS th
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT DISTINCT d.doc_id, ${sqlMd5Long("t.w")} AS th
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), bitsums AS (
        |  SELECT doc_id,
        |    $sums

@@ -106,9 +106,8 @@ object Selection {
        |)""".stripMargin
   /** Shared CTE chain of the bigram LM (identical to `lm_perplexity`'s). */
   private val lmCtes =
-    """toks AS (
-      |  SELECT doc_id, list_filter(list_transform(
-      |    string_split_regex(text, '\s+'), t -> lower(t)), t -> t <> '') AS t
+    s"""toks AS (
+      |  SELECT doc_id, ${sqlLowerTokens("text")} AS t
       |  FROM documents
       |), bg AS MATERIALIZED (
       |  SELECT doc_id, g.b AS bigram
@@ -222,8 +221,7 @@ object Selection {
   private val dsirCtes =
     s"""tok AS MATERIALIZED (
        |  SELECT doc_id, lang, ${sqlMd5Long("g.tok")} % $DsirBuckets AS b
-       |  FROM (SELECT doc_id, lang, list_filter(list_transform(
-       |      string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
+       |  FROM (SELECT doc_id, lang, ${sqlLowerTokens("text")} AS t
        |    FROM documents) toks, unnest(t) AS g(tok)
        |), bcnt AS MATERIALIZED (
        |  SELECT b, count(*) AS n_raw,
@@ -393,8 +391,7 @@ object Selection {
     * scoring queries can join back to it. */
   private val knBigramCtes: String =
     s"""toks AS (
-       |  SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
+       |  SELECT doc_id, ${sqlLowerTokens("text")} AS t
        |  FROM documents
        |), dg AS MATERIALIZED (
        |  SELECT doc_id, g.b AS bigram
@@ -464,8 +461,7 @@ object Selection {
     val ctx = cols(w.init)
     (Seq(
       s"""toks AS MATERIALIZED (
-         |  SELECT doc_id, list_filter(list_transform(
-         |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
+         |  SELECT doc_id, ${sqlLowerTokens("text")} AS t
          |  FROM documents
          |), dg AS MATERIALIZED (
          |  SELECT doc_id, g.x AS ${gram(n)} FROM ${gramsFrom(n)}
@@ -815,7 +811,7 @@ object Selection {
     import org.apache.spark.sql.graft.ExactMath.intDiv
     val per = Corpus.table(spark, dir, "documents")
       .select(col("source"),
-        regexp_count(col("text"), lit("\\S+")).cast("long").as("nt"))
+        wsTokenCount(col("text")).cast("long").as("nt"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("n_tokens"))
       .withColumn("wi",
@@ -837,7 +833,7 @@ object Selection {
   val epochPlanSql: String =
     s"""WITH per AS (
        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       |    CAST(sum(len(regexp_extract_all(text, '\\S+'))) AS BIGINT)
+       |    CAST(sum(${sqlWsTokenCount("text")}) AS BIGINT)
        |      AS n_tokens
        |  FROM documents GROUP BY source
        |), w AS (
@@ -969,9 +965,7 @@ object Selection {
     s"""WITH ex AS (
        |  ${excessLossSql.linesIterator.mkString("\n  ")}
        |), tok AS (
-       |  SELECT source, CAST(sum(len(list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)),
-       |    t -> t <> ''))) AS BIGINT) AS n_tokens
+       |  SELECT source, CAST(sum(len(${sqlLowerTokens("text")})) AS BIGINT) AS n_tokens
        |  FROM documents GROUP BY 1
        |), exs AS (
        |  SELECT d.source, count(*) AS n_scored,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.TextFns.{lowerTokens, sqlLowerTokens}
 import graft.operators.Dedup.{dotExpr, sqlDotExpr}
 import graft.sources.Corpus
 
@@ -624,7 +625,7 @@ object Similarity {
     val terms = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .join(assigned, "doc_id")
-      .select(col("cid"), explode(TextAnalysis.toks(col("text"))).as("term"))
+      .select(col("cid"), explode(lowerTokens(col("text"))).as("term"))
     val ctf = terms.groupBy("cid", "term").agg(count(lit(1)).as("tf"))
       .withColumn("clen", sum(col("tf")).over(Window.partitionBy("cid")))
     val cdf = ctf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -664,11 +665,10 @@ object Similarity {
        |    FROM embeddings e CROSS JOIN cents c
        |  ) WHERE rn = 1
        |), ct AS (
-       |  SELECT x.cid, lower(t.w) AS term
+       |  SELECT x.cid, t.w AS term
        |  FROM (SELECT a.cid, d.text FROM documents d
        |        JOIN assigned a USING (doc_id)) x,
-       |    unnest(string_split_regex(x.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |    unnest(${sqlLowerTokens("x.text")}) AS t(w)
        |), ctf AS MATERIALIZED (
        |  SELECT cid, term, count(*) AS tf FROM ct GROUP BY 1, 2
        |), clen AS (
@@ -1669,10 +1669,10 @@ object Similarity {
     // term count and the intersection size.
     val qt = Corpus.table(spark, dir, "documents")
       .join(broadcast(q.select(col("qid"))), col("doc_id") === col("qid"))
-      .select(explode(TextAnalysis.toks(col("text"))).as("qterm")).distinct()
+      .select(explode(lowerTokens(col("text"))).as("qterm")).distinct()
     val tk = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
-        explode(TextAnalysis.toks(col("text"))).as("term")).distinct()
+        explode(lowerTokens(col("text"))).as("term")).distinct()
     val stats = tk.join(broadcast(qt), col("term") === col("qterm"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms"),
@@ -1724,8 +1724,7 @@ object Similarity {
        |    FROM vscore) WHERE vec_rk <= $RrfPool
        |), tk AS (
        |  SELECT DISTINCT doc_id, g.t AS term
-       |  FROM (SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS ts
+       |  FROM (SELECT doc_id, ${sqlLowerTokens("text")} AS ts
        |    FROM documents),
        |  unnest(ts) AS g(t)
        |), qt AS (

@@ -23,9 +23,6 @@ object TextAnalysis {
     "zh" -> Seq("的", "是", "在", "了", "我", "有", "和", "就", "不", "人"),
   )
 
-  private[operators] def toks(c: Column): Column =
-    filter(transform(split(c, WsTokenRe), t => lower(t)), t => t =!= "")
-
   /** Stopword hits over an ALREADY-TOKENIZED array column — callers
     * project the token array once per row and score every profile from it
     * (tokenizing inside each profile's expression would re-split the text
@@ -34,22 +31,21 @@ object TextAnalysis {
     size(filter(toksCol, t => t.isin(words: _*))).cast("long")
 
   private def hits(c: Column, words: Seq[String]): Column =
-    hitsIn(toks(c), words)
+    hitsIn(lowerTokens(c), words)
 
   private def sqlHits(expr: String, words: Seq[String]): String = {
     val lst = words.map(sqlLit).mkString("(", ", ", ")")
-    s"len(list_filter(list_transform(string_split_regex($expr, '\\s+'), t -> lower(t)), t -> t <> '' AND t IN $lst))"
+    s"len(list_filter(${sqlLowerTokens(expr)}, t -> t IN $lst))"
   }
 
   // ---- #22 language ID --------------------------------------------------
   /** Per-language stopword-hit columns over a shared `__toks` array column
-    * (project `toksCol` once; each profile is one array pass). Retained as
-    * the reference chain the codegen'd [[profileCol]] path is spec-locked
-    * against (PropertiesSpec); hot paths read [[langHitColsFrom]]. */
+    * (project `lowerTokens(text)` once; each profile is one array pass).
+    * Retained as the reference chain the codegen'd [[profileCol]] path is
+    * spec-locked against (PropertiesSpec); hot paths read
+    * [[langHitColsFrom]]. */
   private[operators] def langHitCols: Seq[Column] =
     LangProfiles.map { case (l, ws) => hitsIn(col("__toks"), ws).as(s"hits_$l") }
-
-  private[operators] def toksCol: Column = toks(col("text"))
 
   /** The stopword list + the five language profiles, in the fixed order the
     * one-pass [[profileCol]] struct reports them (hits_0 = stopwords). */
@@ -247,7 +243,7 @@ object TextAnalysis {
       greatest(n, lit(1L)) * lit(50L))
   }
   private[operators] val sqlQualityBpExpr: String = {
-    val n = "CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT)"
+    val n = s"CAST(${sqlWsTokenCount("text")} AS BIGINT)"
     val stop = s"CAST(${sqlHits("text", Stopwords)} AS BIGINT)"
     s"(least($n, 50) * ($n - $stop) * 10000) // (greatest($n, 1) * 50)"
   }
@@ -277,7 +273,7 @@ object TextAnalysis {
     s"""WITH base AS (
        |  SELECT doc_id,
        |    CAST(length(text) AS BIGINT) AS len_chars,
-       |    CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS n_tokens,
+       |    CAST(${sqlWsTokenCount("text")} AS BIGINT) AS n_tokens,
        |    CAST(${sqlHits("text", Stopwords)} AS BIGINT) AS n_stopwords,
        |    CAST(len(regexp_extract_all(text, '[^\\p{L}\\p{N}\\s]')) AS BIGINT) AS n_punct
        |  FROM documents
@@ -321,9 +317,8 @@ object TextAnalysis {
   val classifierScoreSql: String = {
     val wgt = sqlMd5Long(s"concat('$ClfSeed', chr(1), tok)") + " % 2001"
     s"""WITH tok AS (
-       |  SELECT doc_id, lower(t.w) AS tok
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT doc_id, t.w AS tok
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), agg AS (
        |  SELECT doc_id, count(*) AS n, sum($wgt) AS s
        |  FROM tok GROUP BY 1
@@ -352,7 +347,7 @@ object TextAnalysis {
     val sig = Corpus.table(spark, dir, "documents").select(
         profileCol.as("__p"),
         aggregate(
-          transform(toks(col("text")), t =>
+          transform(lowerTokens(col("text")), t =>
             pmod(md5Long(concat(lit(ClfSeed), lit("\u0001"), t)), lit(2001L))),
           lit(0L), (a, x) => a + x).as("s"))
       .select(
@@ -386,9 +381,8 @@ object TextAnalysis {
   lazy val scorerAgreementSql: String = {
     val wgt = sqlMd5Long(s"concat('$ClfSeed', chr(1), tok)") + " % 2001"
     s"""WITH tok AS (
-       |  SELECT doc_id, lower(t.w) AS tok
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT doc_id, t.w AS tok
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), agg AS (
        |  SELECT doc_id, count(*) AS n, sum($wgt) AS s
        |  FROM tok GROUP BY 1
@@ -427,12 +421,12 @@ object TextAnalysis {
   def tokenCount(spark: SparkSession, dir: String): DataFrame =
     Corpus.table(spark, dir, "documents").select(
       col("doc_id"),
-      regexp_count(col("text"), lit("\\S+")).cast("long").as("ws_tokens"),
+      wsTokenCount(col("text")).cast("long").as("ws_tokens"),
       regexp_count(col("text"), lit(BpeTokenRe)).cast("long").as("bpe_tokens"),
     )
   val tokenCountSql: String =
     s"""SELECT doc_id,
-       |  CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS ws_tokens,
+       |  CAST(${sqlWsTokenCount("text")} AS BIGINT) AS ws_tokens,
        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS bpe_tokens
        |FROM documents""".stripMargin
 
@@ -448,7 +442,7 @@ object TextAnalysis {
     * corpus-sized past the scan. */
   def tokenizerFertility(spark: SparkSession, dir: String): DataFrame =
     Corpus.table(spark, dir, "documents").select(col("lang"),
-        regexp_count(col("text"), lit("\\S+")).cast("long").as("ws"),
+        wsTokenCount(col("text")).cast("long").as("ws"),
         regexp_count(col("text"), lit(BpeTokenRe)).cast("long").as("bpe"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("ws")).as("ws_tokens"),
@@ -458,12 +452,12 @@ object TextAnalysis {
           .as("fertility_bp"))
   val tokenizerFertilitySql: String =
     s"""SELECT lang, count(*) AS n_docs,
-       |  CAST(sum(len(regexp_extract_all(text, '\\S+'))) AS BIGINT) AS ws_tokens,
+       |  CAST(sum(${sqlWsTokenCount("text")}) AS BIGINT) AS ws_tokens,
        |  CAST(sum(len(regexp_extract_all(text,
        |    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))) AS BIGINT) AS bpe_tokens,
        |  ${sqlBp(
             "sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')))",
-            "greatest(sum(len(regexp_extract_all(text, '\\S+'))), 1)")}
+            s"greatest(sum(${sqlWsTokenCount("text")}), 1)")}
        |    AS fertility_bp
        |FROM documents GROUP BY 1""".stripMargin
 
@@ -498,9 +492,8 @@ object TextAnalysis {
   }
   val tfidfTopTermsSql: String =
     s"""WITH toks AS (
-       |  SELECT d.doc_id, lower(t.w) AS term
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT d.doc_id, t.w AS term
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), tf AS (
        |  SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2
        |), tl AS (
@@ -598,9 +591,8 @@ object TextAnalysis {
         sum(col("lp")).cast("decimal(18,4)").cast("double").as("sum_lp"))
   }
   val lmPerplexitySql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, list_filter(list_transform(
-      |    string_split_regex(text, '\s+'), t -> lower(t)), t -> t <> '') AS t
+    s"""WITH toks AS (
+      |  SELECT doc_id, ${sqlLowerTokens("text")} AS t
       |  FROM documents
       |), bg AS (
       |  SELECT doc_id, g.b AS bigram
@@ -767,8 +759,7 @@ object TextAnalysis {
     Materialized.cached(lowerToksCache, spark, dir)(
       Corpus.table(spark, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"),
-          filter(transform(split(col("text"), WsTokenRe), t => lower(t)),
-            t => t =!= "").as("toks"))
+          lowerTokens(col("text")).as("toks"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Column name of a k-gram (k ∈ 2..5) in [[docGrams]]/[[gramCounts]]. */
@@ -813,8 +804,7 @@ object TextAnalysis {
         (col("pos") + 1).cast("long").as("rk"))
   val wordBigramsSql: String =
     s"""WITH toks AS (
-       |  SELECT list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
+       |  SELECT ${sqlLowerTokens("text")} AS t
        |  FROM documents
        |), bg AS (
        |  SELECT g.b AS bigram
@@ -875,8 +865,7 @@ object TextAnalysis {
   }
   val pmiTopPairsSql: String =
     s"""WITH toks AS (
-       |  SELECT list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
+       |  SELECT ${sqlLowerTokens("text")} AS t
        |  FROM documents
        |), tk AS (
        |  SELECT g.w AS term FROM toks, unnest(t) AS g(w)
@@ -976,9 +965,8 @@ object TextAnalysis {
   }
   val zipfStatsSql: String =
     s"""WITH toks AS (
-       |  SELECT lower(t.w) AS term
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT t.w AS term
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), cnt AS (
        |  SELECT term, count(*) AS n FROM toks GROUP BY 1
        |), tot AS (
@@ -1035,9 +1023,8 @@ object TextAnalysis {
         bp(col("s.top_count"), col("s.n_tokens")).as("top_token_bp"))
   val repetitionStatsSql: String =
     s"""WITH toks AS (
-       |  SELECT d.doc_id, lower(t.w) AS tok
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT d.doc_id, t.w AS tok
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), cnt AS (
        |  SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY 1, 2
        |)
@@ -1075,8 +1062,7 @@ object TextAnalysis {
   /** The k-gram CTE shared by the boilerplate and decontamination oracles. */
   private[operators] def sqlGramsCte(k: Int): String =
     s"""WITH toks AS (
-       |  SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
+       |  SELECT doc_id, ${sqlLowerTokens("text")} AS t
        |  FROM documents
        |), grams AS (
        |  SELECT doc_id, g.gm AS gram
@@ -1238,8 +1224,7 @@ object TextAnalysis {
   val vocabOverlapSql: String =
     s"""WITH st AS (
        |  SELECT DISTINCT source, g.t AS term
-       |  FROM (SELECT source, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS ts
+       |  FROM (SELECT source, ${sqlLowerTokens("text")} AS ts
        |    FROM documents),
        |  unnest(ts) AS g(t)
        |), sizes AS (
@@ -1288,9 +1273,8 @@ object TextAnalysis {
   }
   val bpePairCountsSql: String =
     s"""WITH w AS (
-       |  SELECT lower(t.w) AS word
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT t.w AS word
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), wf AS (
        |  SELECT word, count(*) AS freq FROM w
        |  WHERE regexp_matches(word, '^[a-z]+$$') AND length(word) >= 2
@@ -1470,7 +1454,7 @@ object TextAnalysis {
   private[graft] def oovStatsK(spark: SparkSession, dir: String,
       k: Int): DataFrame = {
     val tok = Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), explode(toks(col("text"))).as("term"))
+      .select(col("doc_id"), explode(lowerTokens(col("text"))).as("term"))
     // vocabulary from the shared materialized term-count frame (zipfStats,
     // vocabGrowth) — no second corpus tokenize for the vocab branch
     val vocab = termCounts(spark, dir)
@@ -1485,9 +1469,8 @@ object TextAnalysis {
   }
   val oovStatsSql: String =
     s"""WITH tok AS (
-       |  SELECT d.doc_id, lower(t.w) AS term
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT d.doc_id, t.w AS term
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), vocab AS (
        |  SELECT term FROM (
        |    SELECT term, count(*) AS freq FROM tok GROUP BY 1
@@ -1543,9 +1526,8 @@ object TextAnalysis {
       s"  ${sqlBp(s"k$k.s", "t.total_tokens")} AS covered_${k}_bp"
     }.mkString(",\n")
     s"""WITH tok AS (
-       |  SELECT lower(t.w) AS term
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT t.w AS term
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), tf AS (
        |  SELECT term, count(*) AS freq FROM tok GROUP BY 1
        |), t AS (
@@ -1736,7 +1718,7 @@ object TextAnalysis {
   val HhTopN = 5
   def heavyHitters(spark: SparkSession, dir: String): DataFrame = {
     val tokens = Corpus.table(spark, dir, "documents")
-      .select(col("source"), explode(toks(col("text"))).as("term"))
+      .select(col("source"), explode(lowerTokens(col("text"))).as("term"))
     val cand = tokens.groupBy(col("source"))
       .agg(org.apache.spark.sql.graft.FreqSketch.column(
         col("term"), HhCapacity).as("sk"))
@@ -1752,8 +1734,7 @@ object TextAnalysis {
   val heavyHittersSql: String =
     s"""WITH tk AS (
        |  SELECT source, g.t AS term
-       |  FROM (SELECT source, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS ts
+       |  FROM (SELECT source, ${sqlLowerTokens("text")} AS ts
        |    FROM documents),
        |  unnest(ts) AS g(t)
        |), c AS (
@@ -1846,7 +1827,7 @@ object TextAnalysis {
   val IdxPostings = 8
   def invertedIndex(spark: SparkSession, dir: String): DataFrame = {
     val perDoc = Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), explode(toks(col("text"))).as("term"))
+      .select(col("doc_id"), explode(lowerTokens(col("text"))).as("term"))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
     val w = Window.partitionBy("term").orderBy("doc_id")
@@ -1863,8 +1844,7 @@ object TextAnalysis {
   val invertedIndexSql: String =
     s"""WITH tk AS (
        |  SELECT doc_id, g.t AS term
-       |  FROM (SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS ts
+       |  FROM (SELECT doc_id, ${sqlLowerTokens("text")} AS ts
        |    FROM documents),
        |  unnest(ts) AS g(t)
        |), pd AS (
@@ -1960,8 +1940,7 @@ object TextAnalysis {
     s"""WITH base AS MATERIALIZED (
        |  SELECT doc_id, len(t) AS len_d,
        |    $tfCols
-       |  FROM (SELECT doc_id, list_filter(list_transform(
-       |      string_split_regex(text, '\\s+'), x -> lower(x)), x -> x <> '') AS t
+       |  FROM (SELECT doc_id, ${sqlLowerTokens("text")} AS t
        |    FROM documents)
        |), st0 AS (
        |  SELECT count(*) AS n_docs, sum(len_d) AS sum_len,
@@ -2007,7 +1986,7 @@ object TextAnalysis {
       .select(element_at(col("ws"), 1).as("w1"),
         element_at(col("ws"), 2).as("w2"))
     val pos = Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), posexplode(toks(col("text"))).as(Seq("pos", "term")))
+      .select(col("doc_id"), posexplode(lowerTokens(col("text"))).as(Seq("pos", "term")))
     def postings(w: String): DataFrame =
       pos.join(broadcast(ph), col("term") === col(w))
         .select(col("doc_id"), col("pos"))
@@ -2021,8 +2000,7 @@ object TextAnalysis {
   }
   val phraseSearchSql: String =
     s"""WITH toks AS MATERIALIZED (
-       |  SELECT doc_id, list_filter(list_transform(
-       |    string_split_regex(text, '\\s+'), t -> lower(t)), t -> t <> '') AS t
+       |  SELECT doc_id, ${sqlLowerTokens("text")} AS t
        |  FROM documents
        |), bg AS (
        |  SELECT g.b AS bigram
@@ -2064,7 +2042,7 @@ object TextAnalysis {
     import org.apache.spark.sql.graft.ExactMath.intDiv
     Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
-        regexp_count(col("text"), lit("\\S+")).cast("long").as("n_words"),
+        wsTokenCount(col("text")).cast("long").as("n_words"),
         ((length(col("text")) - length(replace(col("text"), lit(".")))) +
           (length(col("text")) - length(replace(col("text"), lit("!")))) +
           (length(col("text")) - length(replace(col("text"), lit("?")))))
@@ -2087,7 +2065,7 @@ object TextAnalysis {
   val readabilitySql: String =
     s"""WITH base AS (
        |  SELECT doc_id,
-       |    CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS n_words,
+       |    CAST(${sqlWsTokenCount("text")} AS BIGINT) AS n_words,
        |    CAST((length(text) - length(replace(text, '.', '')))
        |      + (length(text) - length(replace(text, '!', '')))
        |      + (length(text) - length(replace(text, '?', ''))) AS BIGINT)

@@ -90,9 +90,8 @@ object Unigram {
       .limit(UnigramSeedTopN)
   val unigramSeedCountsSql: String =
     s"""WITH w AS (
-       |  SELECT lower(t.w) AS word
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT t.w AS word
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), wf AS (
        |  SELECT word, count(*) AS freq FROM w
        |  WHERE regexp_matches(word, '^[a-z]+$$')
@@ -231,7 +230,7 @@ object Unigram {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), explode(TextAnalysis.toks(col("text"))).as("term"))
+      .select(col("doc_id"), explode(lowerTokens(col("text"))).as("term"))
       .join(encodedVocab, Seq("term"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.TextFns.{lowerTokens, sqlLowerTokens}
 import graft.sources.Corpus
 
 /** WordPiece tokenizer training + serving — the THIRD production tokenizer
@@ -125,9 +126,8 @@ object Wordpiece {
       .limit(WpPairTopN)
   val wordpiecePairScoresSql: String =
     s"""WITH w AS (
-       |  SELECT lower(t.w) AS word
-       |  FROM documents d, unnest(string_split_regex(d.text, '\\s+')) AS t(w)
-       |  WHERE t.w <> ''
+       |  SELECT t.w AS word
+       |  FROM documents d, unnest(${sqlLowerTokens("d.text")}) AS t(w)
        |), wf AS (
        |  SELECT word, count(*) AS freq FROM w
        |  WHERE regexp_matches(word, '^[a-z]+$$')
@@ -265,7 +265,7 @@ object Wordpiece {
     }
     Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),
-        explode(TextAnalysis.toks(col("text"))).as("term"))
+        explode(lowerTokens(col("text"))).as("term"))
       .join(encodedVocab, Seq("term"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),

@@ -25,10 +25,9 @@ object DocsStream {
   /** Stateless quality gate: the streaming twin of
     * TextAnalysis.qualityScore's ratios, applied as an ingest filter. */
   def qualityFilter(docs: DataFrame): DataFrame = {
-    val nTokens = regexp_count(col("text"), lit("\\S+")).cast("long")
-    val nStop = size(filter(
-      transform(split(col("text"), WsTokenRe), t => lower(t)),
-      t => t =!= "" && t.isin(Stopwords: _*))).cast("long")
+    val nTokens = wsTokenCount(col("text")).cast("long")
+    val nStop = size(filter(lowerTokens(col("text")),
+      t => t.isin(Stopwords: _*))).cast("long")
     docs
       .withColumn("n_tokens", nTokens)
       .withColumn("stopword_bp", bp(nStop, greatest(nTokens, lit(1L))))
@@ -62,8 +61,7 @@ object DocsStream {
     val grams = coalesce(org.apache.spark.sql.graft.WordGrams(col("toks"), k),
       array().cast("array<string>"))
     docs
-      .withColumn("toks", filter(
-        transform(split(col("text"), WsTokenRe), t => lower(t)), t => t =!= ""))
+      .withColumn("toks", lowerTokens(col("text")))
       .where(!arrays_overlap(grams, lit(probeGrams.toArray)))
       .drop("toks")
   }
@@ -74,8 +72,7 @@ object DocsStream {
     * its signals from (`Curation.gopherKeepIn`) — one definition of the
     * heuristic gate, two execution modes; no state, no shuffle. */
   def gopherGate(docs: DataFrame): DataFrame = {
-    val t = filter(
-      transform(split(col("text"), WsTokenRe), x => lower(x)), x => x =!= "")
+    val t = lowerTokens(col("text"))
     docs.withColumn("__t", t)
       .where(size(col("__t")) > 0 && graft.operators.Curation.gopherKeepIn(col("__t")))
       .drop("__t")
@@ -145,8 +142,7 @@ object DocsStream {
       numBits: Long = graft.operators.Dedup.BloomBits): Array[Byte] = {
     import org.apache.spark.sql.graft.Bloom
     val segs = reference
-      .withColumn("toks", filter(
-        transform(split(col("text"), WsTokenRe), t => lower(t)), t => t =!= ""))
+      .withColumn("toks", lowerTokens(col("text")))
       .where(size(col("toks")) >= 1)
       .select(explode(graft.operators.Curation.segHashArr).as("sh"))
     segs.agg(Bloom.bloomAgg(col("sh"), expectedItems, numBits)
@@ -171,8 +167,7 @@ object DocsStream {
     import org.apache.spark.sql.graft.Bloom
     val blob = lit(bloomBlob)
     docs
-      .withColumn("toks", filter(
-        transform(split(col("text"), WsTokenRe), t => lower(t)), t => t =!= ""))
+      .withColumn("toks", lowerTokens(col("text")))
       .where(size(col("toks")) >= 1)
       .withColumn("__sh", graft.operators.Curation.segHashArr)
       .withColumn("n_segments", size(col("__sh")).cast("long"))
@@ -194,9 +189,7 @@ object DocsStream {
     * table above. */
   def oovVocab(reference: DataFrame, k: Int): Seq[String] =
     reference
-      .select(explode(filter(
-        transform(split(col("text"), WsTokenRe), t => lower(t)),
-        t => t =!= "")).as("term"))
+      .select(explode(lowerTokens(col("text"))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("term")).limit(k)
       .select("term").collect().map(_.getString(0)).toSeq
@@ -211,8 +204,7 @@ object DocsStream {
       maxOovBp: Long = OovGateMaxBp): DataFrame = {
     val vocabArr = typedLit(vocab)
     docs
-      .withColumn("__t", filter(
-        transform(split(col("text"), WsTokenRe), t => lower(t)), t => t =!= ""))
+      .withColumn("__t", lowerTokens(col("text")))
       .where(size(col("__t")) >= 1)
       .withColumn("n_tokens", size(col("__t")).cast("long"))
       .withColumn("n_oov", size(filter(col("__t"),
@@ -266,8 +258,7 @@ object DocsStream {
     val lrE4 = typedLit(lr.map(v =>
       (scala.math.BigDecimal(v) * 10000).toLongExact))
     docs
-      .withColumn("__t", filter(
-        transform(split(col("text"), WsTokenRe), t => lower(t)), t => t =!= ""))
+      .withColumn("__t", lowerTokens(col("text")))
       .where(size(col("__t")) >= 1)
       .withColumn("llr",
         org.apache.spark.sql.graft.DsirLlrE4(col("__t"), lrE4)
@@ -286,8 +277,7 @@ object DocsStream {
     val (len, stride) =
       (graft.operators.Curation.ChunkLen, graft.operators.Curation.ChunkStride)
     docs
-      .withColumn("__t", filter(
-        transform(split(col("text"), WsTokenRe), t => lower(t)), t => t =!= ""))
+      .withColumn("__t", lowerTokens(col("text")))
       .where(size(col("__t")) >= 1)
       .withColumn("__n", size(col("__t")))
       .withColumn("chunk_idx",
@@ -317,7 +307,7 @@ object DocsStream {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val L = graft.operators.Curation.PackLen
     val withTok = docs
-      .withColumn("n_tokens", regexp_count(col("text"), lit("\\S+")).cast("long"))
+      .withColumn("n_tokens", wsTokenCount(col("text")).cast("long"))
       .where(col("n_tokens") > 0)
       .withColumn("bucket", pmod(md5Long(col("doc_id").cast("string")),
         lit(graft.operators.Curation.PackBuckets)))
@@ -507,9 +497,7 @@ object DocsStream {
       array(bs.map(b => lit(b._1)): _*),
       array(bs.map(b =>
         lit(b._2.underlying()).cast("decimal(12,6)")): _*))
-    val toks = filter(transform(
-      split(col("text"), graft.functions.TextFns.WsTokenRe),
-      t => lower(t)), t => t =!= "")
+    val toks = lowerTokens(col("text"))
     val margin = aggregate(toks,
       lit(weights(-1L).underlying()).cast("decimal(28,6)"),
       // decimal + widens to (29,6); the accumulator lambda must return

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * lowercase, trim non-letters, keep letters-only non-stopwords, and dedup
   * per document. Returns the document's distinct clean words.
   *
-  * The built-in chain `explode(split(text, '\s+'))` → `lower` →
+  * The built-in chain `explode(TextFns.lowerTokens(text))` →
   * `regexp_replace(TrimRe)` → `rlike(LettersRe)` → `isin(stopwords)` ran
   * three regexes and a UTF-16 round trip per token row and emitted every
   * token occurrence. This kernel tokenizes in place, touches each token's

@@ -10,12 +10,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Tokenize + lowercase + count dictionary hits for SEVERAL word profiles
   * in ONE pass over the raw string: returns
-  * `struct(n_toks, hits_0, …, hits_{k-1})` where `n_toks` is the
-  * non-empty `\s+`-token count and `hits_p` counts tokens whose lowercase
-  * form is in profile p.
+  * `struct(n_toks, hits_0, …, hits_{k-1})` where `n_toks` is
+  * `size(TextFns.lowerTokens(text))` and `hits_p` counts tokens whose
+  * lowercase form is in profile p.
   *
-  * Replaces the `filter(transform(split(text,'\\s+'), lower), ...)` +
-  * per-profile `size(filter(toks, isin(...)))` chain: those higher-order
+  * Replaces the `lowerTokens(text)` + per-profile
+  * `size(filter(toks, isin(...)))` chain: those higher-order
   * functions run interpreted (per-element closure dispatch) and
   * materialize the token array once plus one filtered copy per profile —
   * on the corpus-scan hot path of the whole quality/language family. This
@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    chars + space, scanned byte-wise (all are < 0x80, so UTF-8
   *    continuation bytes can never false-match);
   *  - empty tokens (leading-whitespace artifact of `split`) are skipped,
-  *    as the chain's `!= ''` filter does;
+  *    as `lowerTokens`' `!= ''` filter does;
   *  - lowercasing IS `UTF8String.toLowerCase` — the exact kernel behind
   *    Spark's `lower()` — with an ASCII fast path (a token with no `A-Z`
   *    and no non-ASCII byte is its own lowercase);

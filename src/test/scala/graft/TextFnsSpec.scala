@@ -78,4 +78,33 @@ class TextFnsSpec extends SparkTestBase {
     val hex = md.digest("abc".getBytes("UTF-8")).map("%02x".format(_)).mkString
     assert(out.head == java.lang.Long.parseLong(hex.take(15), 16))
   }
+
+  // The tokenizer twins spell Java's `\s` out because RE2's `\s` (DuckDB)
+  // leaves out \x0B; the class must match exactly where Java's does.
+  test("WsClass matches exactly where Java's \\s does, NonWsClass where \\S does") {
+    import java.util.regex.Pattern
+    val pairs = Seq(Pattern.compile(WsClass) -> Pattern.compile("\\s"),
+      Pattern.compile(NonWsClass) -> Pattern.compile("\\S"))
+    for ((spelled, java) <- pairs) {
+      val differ = (0 to 0xFFFF).filter { cp =>
+        val s = String.valueOf(cp.toChar)
+        spelled.matcher(s).matches != java.matcher(s).matches
+      }
+      assert(differ.isEmpty,
+        s"${spelled.pattern}: " + differ.take(10).map(cp => f"U+$cp%04X").mkString(", "))
+    }
+  }
+
+  test("wsTokens, lowerTokens and wsTokenCount split on \\x0B and drop empties") {
+    val vt = 0x0B.toChar
+    val texts = Seq(s"a${vt}b c", "  Lead and\ttrail \n", "", "X\u00A0Y z")
+    val rows = texts.toDF("t")
+      .select(wsTokens(col("t")), lowerTokens(col("t")), wsTokenCount(col("t")))
+      .collect().map(r => (r.getSeq[String](0), r.getSeq[String](1), r.getInt(2)))
+    assert(rows.toSeq == Seq(
+      (Seq("a", "b", "c"), Seq("a", "b", "c"), 3),
+      (Seq("Lead", "and", "trail"), Seq("lead", "and", "trail"), 3),
+      (Seq(), Seq(), 0),
+      (Seq("X\u00A0Y", "z"), Seq("x\u00A0y", "z"), 2)))
+  }
 }
