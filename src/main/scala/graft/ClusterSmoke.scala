@@ -181,7 +181,7 @@ object ClusterSmoke {
     * (decimal(38,0): no overflow, and this is an intra-Spark compare so
     * the driver's no-DECIMAL output rule doesn't apply). One distributed
     * aggregate per query — no driver-side collect of the frame. */
-  private def fingerprint(df: org.apache.spark.sql.DataFrame): (Long, String) = {
+  private[graft] def fingerprint(df: org.apache.spark.sql.DataFrame): (Long, String) = {
     import org.apache.spark.sql.functions._
     val cols = df.columns.sorted.map(c =>
       coalesce(col(c).cast("string"), lit("NULL")))

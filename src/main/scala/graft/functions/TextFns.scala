@@ -25,7 +25,9 @@ import org.apache.spark.sql.functions._
   * The whitespace tokenizer (mapphase/split.go:68) is decided here and
   * nowhere else; every operator and every oracle SQL calls these:
   *  - [[wsTokens]]: the non-empty whitespace tokens of a text
-  *    (`split(c, WsTokenRe)` minus `split`'s leading-whitespace '');
+  *    (`split(c, WsTokenRe)` minus `split`'s leading-whitespace ''; the
+  *    `array_remove` form stays inside whole-stage codegen, a `filter`
+  *    lambda does not);
   *    DuckDB twin [[sqlWsTokens]]
   *  - [[lowerTokens]]: the same tokens lowercased; twin [[sqlLowerTokens]]
   *  - [[wsTokenCount]]: how many tokens there are, as `regexp_count(c,
@@ -33,7 +35,9 @@ import org.apache.spark.sql.functions._
   * Java's `\s` is `[ \t\n\x0B\f\r]`, but RE2's `\s` (DuckDB) leaves out
   * `\x0B` (vertical tab): `string_split_regex('a\x0Bb', '\s+')` is one
   * token in DuckDB and two in Spark. The twins therefore spell the class
-  * out as [[WsClass]], which matches exactly where Java's `\s` does.
+  * out as [[WsClass]], which matches exactly where Java's `\s` does. The
+  * BPE-ish token and punctuation classes have twins for the same reason
+  * ([[SqlBpeTokenRe]], [[SqlPunctRe]]).
   */
 object TextFns {
 
@@ -66,13 +70,18 @@ object TextFns {
   val TrimRe      = "^[^\\p{L}]+|[^\\p{L}]+$"
   val LettersRe   = "^[\\p{L}]+$"
   val WsTokenRe   = "\\s+"
-  /** Java's `\s` spelled out for engines whose `\s` differs (RE2 drops
-    * `\x0B`); the oracle twins of the tokenizer use it. */
-  val WsClass     = "[ \\t\\n\\x0B\\f\\r]"
-  val NonWsClass  = WsClass.patch(1, "^", 0)
+  /** The members of Java's `\s`, spelled out for engines whose `\s`
+    * differs (RE2 drops `\x0B`); every oracle twin below uses them. */
+  val WsMembers   = " \\t\\n\\x0B\\f\\r"
+  val WsClass     = s"[$WsMembers]"
+  val NonWsClass  = s"[^$WsMembers]"
   /** BPE-ish token classes: letter runs, digit runs, single symbols. */
   val BpeTokenRe  = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
+  /** Punctuation/symbol characters: neither letter, digit nor whitespace. */
   val PunctRe     = "[^\\p{L}\\p{N}\\s]"
+  /** DuckDB twins of [[BpeTokenRe]] and [[PunctRe]]. */
+  val SqlBpeTokenRe = s"[A-Za-z]+|[0-9]+|[^A-Za-z0-9$WsMembers]"
+  val SqlPunctRe    = s"[^\\p{L}\\p{N}$WsMembers]"
 
   /** Gutenberg strip regexes — faithful to mapphase/split.go:92-115. The Go
     * patterns use `.` (no dot-all), i.e. "any char but newline" → `[^\n]`. */
@@ -101,7 +110,7 @@ object TextFns {
   // ---------------- Column (Spark) side ----------------
 
   /** mapphase/split.go:68 — the whitespace tokens of `c`, empties dropped. */
-  def wsTokens(c: Column): Column = filter(split(c, WsTokenRe), t => t =!= "")
+  def wsTokens(c: Column): Column = array_remove(split(c, WsTokenRe), lit(""))
 
   /** [[wsTokens]] lowercased: the token array every word-level query reads. */
   def lowerTokens(c: Column): Column =
@@ -205,6 +214,16 @@ object TextFns {
   /** DuckDB twin of [[wsTokenCount]]. */
   def sqlWsTokenCount(expr: String): String =
     s"len(regexp_extract_all($expr, '$NonWsClass+'))"
+
+  /** DuckDB: BPE-ish token count of `expr` (Spark: `regexp_count` on
+    * [[BpeTokenRe]]). */
+  def sqlBpeTokenCount(expr: String): String =
+    s"len(regexp_extract_all($expr, '$SqlBpeTokenRe'))"
+
+  /** DuckDB: punctuation/symbol character count of `expr` (Spark:
+    * `regexp_count` on [[PunctRe]]). */
+  def sqlPunctCount(expr: String): String =
+    s"len(regexp_extract_all($expr, '$SqlPunctRe'))"
 
   /** DuckDB regex literals: single-quoted, backslashes pass through verbatim
     * (standard SQL strings do not process escapes). The Scala strings above

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CleanWords
-import org.apache.spark.storage.StorageLevel
 import graft.functions.TextFns._
 import graft.sources.Corpus
 
@@ -32,17 +31,14 @@ object Anagrams {
   def cleanWordsOf(docsDf: DataFrame): DataFrame =
     cleanWordsRawOf(docsDf).distinct()
 
-  private val vocabCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-
   /** The distinct clean-word vocabulary, materialized once per (session,
     * corpus) and shared by every anagram-family query — vocabulary-sized
     * (≈1e6 rows for English at ANY corpus scale), so at 100 TB this is the
     * natural columnar intermediate: the corpus tokenize+explode runs once,
     * and six downstream queries read a frame that fits in one executor. */
   def cleanWords(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(vocabCache, spark, dir)(
-      cleanWordsOf(Corpus.table(spark, dir, "documents")).persist(StorageLevel.MEMORY_AND_DISK))
+    Materialized.frame(spark, dir, "cleanWords")(
+      cleanWordsOf(Corpus.table(spark, dir, "documents")))
 
   /** Signature → sorted distinct word set, grouped straight from each
     * document's distinct words: one `collect_set` aggregate pair on the

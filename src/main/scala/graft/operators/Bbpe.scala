@@ -27,9 +27,6 @@ import graft.sources.Corpus
   * back to corpus grain. */
 object Bbpe {
 
-  private val wordFreqCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-
   /** Distinct raw-word frequency table with the word's UTF-8 hex string —
     * the vocabulary-sized training frame every byte-level stage reads;
     * materialized once per (session, corpus). Words are [[wsTokens]], NOT
@@ -37,13 +34,12 @@ object Bbpe {
     * carries information a byte-level vocab keeps; `termCounts` would fold
     * it). */
   private[operators] def wordFreq(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(wordFreqCache, spark, dir)(
+    Materialized.frame(spark, dir, "bbpeWordFreq")(
       Corpus.table(spark, dir, "documents")
         .select(explode(wsTokens(col("text"))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("freq"))
         .select(col("word"), col("freq"),
-          hex(encode(col("word"), "UTF-8")).as("h"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          hex(encode(col("word"), "UTF-8")).as("h")))
 
   // ---- #25t-m round-0 pair statistic (oracled) ---------------------------
   val BbpePairTopN = 20
@@ -85,11 +81,6 @@ object Bbpe {
   private[operators] def hexSyms(h: String): IndexedSeq[String] =
     h.grouped(2).toIndexedSeq
 
-  private val mergesCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  private val vocabCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-
   /** Driver-contract query (rows-only BY DESIGN — the same iterative
     * data-dependent argmax fixpoint as `bpe_merges`, not expressible as
     * one SQL query): the ordered byte-level merge table. Each round is one
@@ -98,7 +89,7 @@ object Bbpe {
     * alphabet makes that a deterministic byte-wise order. lineage
     * truncation every 4 rounds (the components pattern). */
   def bbpeMerges(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(mergesCache, spark, dir) {
+    Materialized.frame(spark, dir, "bbpeMerges") {
       import spark.implicits._
       val base = wordFreq(spark, dir)
         .where(length(col("h")) >= 4)
@@ -139,7 +130,6 @@ object Bbpe {
       merges.toSeq.toDF("merge_ix", "left", "right", "pair_count")
         .select(col("merge_ix"), col("left"), col("right"),
           concat(col("left"), col("right")).as("merged"), col("pair_count"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   // ---- #25t-o serving encode + fertility (rows-only; spec-brute-forced) --
@@ -152,7 +142,7 @@ object Bbpe {
     * and the corpus joins it on the raw token key. */
   def bbpeEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val encodedVocab = Materialized.cached(vocabCache, spark, dir) {
+    val encodedVocab = Materialized.frame(spark, dir, "bbpeEncodedVocab") {
       val merges = bbpeMerges(spark, dir).select("merge_ix", "left", "right")
         .collect().sortBy(_.getLong(0))
         .map(r => (r.getString(1), r.getString(2))).toIndexedSeq
@@ -165,7 +155,6 @@ object Bbpe {
           }
           (w, h.length.toLong / 2, syms.length.toLong)
         }.toDF("word", "n_bytes", "n_syms")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), explode(wsTokens(col("text"))).as("word"))

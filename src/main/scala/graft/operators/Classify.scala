@@ -40,17 +40,14 @@ object Classify {
   /** Per-(doc, token) occurrence counts under the shared tokenizer —
     * the corpus-sized frame both training and scoring read; materialized
     * once per (session, corpus). */
-  private val tokCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   private def docTokenCounts(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(tokCache, spark, dir) {
+    Materialized.frame(spark, dir, "docTokenCounts") {
       // token arrays ride the shared tokenized-corpus frame
       // (TextAnalysis.lowerToks — the ONE lowerTokens pass per corpus)
       TextAnalysis.lowerToks(spark, dir)
         .select(col("doc_id"), col("lang"), explode(col("toks")).as("t"))
         .groupBy("doc_id", "lang", "t")
         .agg(count(lit(1)).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Multinomial NB classification of every document against the model
@@ -59,16 +56,11 @@ object Classify {
     * scores the crawl — same plan, two different input dirs). Output:
     * (doc_id, lang, pred_lang, score_e4) — the true label rides along so
     * [[nbConfusion]] and accuracy audits are projections. */
-  private val predCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   def nbClassify(spark: SparkSession, dir: String): DataFrame =
     // the per-doc prediction frame is itself a per-corpus artifact (the
     // confusion census and any downstream gate read it), so it
     // materializes like the model: train+score runs once per corpus
-    Materialized.cached(predCache, spark, dir) {
-      nbClassifyUncached(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    Materialized.frame(spark, dir, "nbClassify")(nbClassifyUncached(spark, dir))
 
   private def nbClassifyUncached(spark: SparkSession, dir: String): DataFrame = {
     val tc = docTokenCounts(spark, dir)
@@ -227,10 +219,8 @@ object Classify {
 
   /** Per-(doc, y, bucket) integer feature counts — the frame training and
     * scoring read; materialized once per (session, corpus). */
-  private val lrFeatCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   private def lrFeatures(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(lrFeatCache, spark, dir) {
+    Materialized.frame(spark, dir, "lrFeatures") {
       docTokenCounts(spark, dir)
         .select(col("doc_id"),
           (col("lang") === LrTargetLang).cast("long").as("y"),
@@ -239,7 +229,6 @@ object Classify {
             lit(LrBuckets.toLong)).as("b"),
           col("cnt"))
         .groupBy("doc_id", "y", "b").agg(sum(col("cnt")).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Driver-contract query (oracled): the round-0 gradient direction per
@@ -270,13 +259,9 @@ object Classify {
 
   /** The trained weight vector (bias at index −1), cached per (session,
     * corpus). */
-  private val lrWeightsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Map[Long, BigDecimal]]
-  Materialized.registerClearable(() => lrWeightsCache.clear())
-
   private[graft] def lrTrainedWeights(spark: SparkSession,
       dir: String): Map[Long, BigDecimal] =
-    lrWeightsCache.getOrElseUpdate(Materialized.sessionKey(spark, dir), {
+    Materialized.value(spark, dir, "lrTrainedWeights") {
       val feats0 = lrFeatures(spark, dir)
       val n = feats0.select("doc_id").distinct().count()
       val nFeats = feats0.count()
@@ -287,16 +272,14 @@ object Classify {
       Scale.loopSession(spark, nFeats, roundLiterals = true) { cs =>
       val feats = Scale.rebind(cs, feats0).localCheckpoint(false)
       val ckpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-      feats.queryExecution.analyzed.collectLeaves().collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => ckpts += l.rdd }
+      ckpts ++= Scale.checkpointRdd(feats)
       var w: Map[Long, BigDecimal] =
         ((-1L) +: (0L until LrBuckets.toLong)).map(_ -> BigDecimal(0)).toMap
       // empty corpus: zero weights, zero rounds (a `return` here would be
-      // a NonLocalReturnControl throw through getOrElseUpdate — uncached)
+      // a NonLocalReturnControl throw through the store — uncached)
       for (_ <- 1 to (if (n == 0) 0 else LrRounds)) {
         val resid = lrResiduals(feats, w).localCheckpoint(false)
-        resid.queryExecution.analyzed.collectLeaves().collectFirst {
-          case l: org.apache.spark.sql.execution.LogicalRDD => ckpts += l.rdd }
+        ckpts ++= Scale.checkpointRdd(resid)
         // gradient: exact decimal sums over the rounded residuals. ONE
         // collect per round (r14; VERDICT r13 candidate #5): the bias
         // gradient rides the same aggregation as the per-bucket gradients
@@ -317,10 +300,10 @@ object Classify {
           b -> (wb - (LrRate * g / n)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
         }
       }
-      ckpts.foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+      Scale.release(ckpts)
       w
       }
-    })
+    }
 
   /** Per-doc 6-dp residual σ(margin)−y under weight map `w`: the margin is
     * an exact decimal dot product; only σ touches a double, row-locally. */

@@ -53,13 +53,8 @@ object Curation {
     * segment), tokenized once per (session, corpus) and shared by every
     * consumer that needs hashes without text — dedup_bloom alone reads it
     * from four plan branches. At 100 TB this is a parquet intermediate. */
-  private val segsCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   private[operators] def segmentsCached(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(segsCache, spark, dir) {
-      segments(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    Materialized.frame(spark, dir, "segmentsCached")(segments(spark, dir))
 
   // ---- #25z segment trimming (boilerplate removal end product) ----------
   /** The trimming `dedup_segments` measures: rebuild every document WITHOUT
@@ -474,15 +469,11 @@ object Curation {
     * single pass (6·tokens rows of 8-byte hashes + two ints — no gram
     * TEXT ships); both aggregations are doc-local-keyed, so exchanges are
     * uniform and bounded by per-doc gram counts. */
-  private val gopherRepCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   def gopherRepetition(spark: SparkSession, dir: String): DataFrame =
     // per-corpus artifact (the gate row and any threshold consumer re-read
     // it): materialize once per (session, corpus) like the gram frames
-    Materialized.cached(gopherRepCache, spark, dir) {
-      gopherRepetitionUncached(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    Materialized.frame(spark, dir, "gopherRepetition")(
+      gopherRepetitionUncached(spark, dir))
 
   /** Row-local token-character total of a `toks` array column. */
   private[graft] def tokCharsCol: org.apache.spark.sql.Column =
@@ -711,14 +702,11 @@ object Curation {
   val ContamK = 3
   val ContamProbeDocs = 3
 
-  private val contamCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-
   /** Materialized per (session, corpus): curatedCorpus reads it twice per
     * evaluation (the broadcast-cap probe count + the anti-join), and the
     * standalone query shares the same frame. */
   def decontaminate(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(contamCache, spark, dir) {
+    Materialized.frame(spark, dir, "decontaminate") {
       val grams = TextAnalysis.gramFrame(spark, dir, ContamK)
       val probes = grams.where(col("doc_id") < ContamProbeDocs)
         .select("gram").distinct()
@@ -727,7 +715,6 @@ object Curation {
         .groupBy("doc_id")
         .agg(countDistinct(col("gram")).as("n_contam_grams"),
           count(lit(1)).as("n_gram_hits"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
   val decontaminateSql: String =
     s"""${TextAnalysis.sqlGramsCte(ContamK)}, probes AS (
@@ -890,28 +877,23 @@ object Curation {
     spark.conf.getOption("spark.graft.broadcastDocCap")
       .map(_.toLong).getOrElse(BroadcastDocCap)
 
-  /** Memoized fits-the-cap probe decisions, per (session, tagged corpus,
-    * cap). The LIMIT cap+1 count is an extra Spark job that materializes
-    * the right side's whole upstream chain on every EXECUTION of a query
-    * embedding it — VERDICT r5 measured curated_corpus paying the dedup
-    * drop-list chain twice per run because of it. The probed frames are
-    * deterministic per (session, corpus), so the decision is too; clearAll
-    * resets it alongside the frames it was measured against. */
-  private val boundedProbe =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Boolean]
-  Materialized.registerClearable(() => boundedProbe.clear())
-
   /** Left-anti join that broadcasts only a provably small right side.
-    * `probeTag` (when non-empty) memoizes the probe per session so the
-    * count job runs once, not once per execution. */
+    * `probeTag` (when non-empty) memoizes the fits-the-cap decision per
+    * (session, tagged corpus, cap), so the count job runs once, not once
+    * per execution. The LIMIT cap+1 count is an extra Spark job that
+    * materializes the right side's whole upstream chain on every
+    * EXECUTION of a query embedding it — VERDICT r5 measured
+    * curated_corpus paying the dedup drop-list chain twice per run
+    * because of it. The probed frames are deterministic per (session,
+    * corpus), so the decision is too; clearAll resets it alongside the
+    * frames it was measured against. */
   private[operators] def antiJoinBounded(left: DataFrame, right: DataFrame,
       cap: Long, probeTag: String = ""): DataFrame = {
     def fits: Boolean =
       right.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).count() <= cap
     val small =
       if (probeTag.isEmpty) fits
-      else boundedProbe.getOrElseUpdate(
-        Materialized.sessionKey(right.sparkSession, s"$probeTag@$cap"), fits)
+      else Materialized.value(right.sparkSession, s"$probeTag@$cap", "boundedProbe")(fits)
     if (small) left.join(broadcast(right), Seq("doc_id"), "left_anti")
     else left.join(right.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
   }
@@ -1344,8 +1326,7 @@ object Curation {
     s"""WITH scored AS (
        |  SELECT doc_id, lang, source, n_chars,
        |    CAST(${sqlWsTokenCount("text")} AS BIGINT) AS ws_tokens,
-       |    CAST(len(regexp_extract_all(text,
-       |      '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS bpe_tokens,
+       |    CAST(${sqlBpeTokenCount("text")} AS BIGINT) AS bpe_tokens,
        |    ${TextAnalysis.sqlQualityBpExpr} AS quality_bp,
        |    CAST(CAST(round((length(text) * log2(length(text)) - ce.sumclog)
        |      / length(text), 4) AS DECIMAL(14,4)) AS DOUBLE) AS char_entropy,
@@ -1646,7 +1627,7 @@ object Curation {
         cnt("\\p{L}").as("n_letters"),
         cnt("\\p{N}").as("n_digits"),
         cnt("\\s").as("n_ws"),
-        cnt("[^\\p{L}\\p{N}\\s]").as("n_symbols"),
+        cnt(PunctRe).as("n_symbols"),
         cnt("\\p{Lu}").as("n_upper"))
       .select(col("doc_id"), col("n_chars"),
         bp(col("n_letters"), col("n_chars")).as("letters_bp"),
@@ -1660,8 +1641,8 @@ object Curation {
     s"""SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
        |  ${sqlBp(cnt("\\p{L}"), "length(text)")} AS letters_bp,
        |  ${sqlBp(cnt("\\p{N}"), "length(text)")} AS digits_bp,
-       |  ${sqlBp(cnt("\\s"), "length(text)")} AS ws_bp,
-       |  ${sqlBp(cnt("[^\\p{L}\\p{N}\\s]"), "length(text)")} AS symbols_bp,
+       |  ${sqlBp(cnt(WsClass), "length(text)")} AS ws_bp,
+       |  ${sqlBp(cnt(SqlPunctRe), "length(text)")} AS symbols_bp,
        |  ${sqlBp(cnt("\\p{Lu}"), "length(text)")} AS upper_bp
        |FROM documents WHERE length(text) > 0""".stripMargin
   }

@@ -19,20 +19,6 @@ import graft.sources.Corpus
   */
 object Dedup {
 
-  /** Per-(session, corpus) materialized intermediates. Local analog of
-    * writing the signature table to parquet once and reading it from every
-    * downstream job — the four LSH-family queries share one shingle pass. */
-  private val sigSetCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  private val candCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  private val pairsCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  private val compCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  private val prCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-
   // ---- #15 exact dedup --------------------------------------------------
   def dedupExact(spark: SparkSession, dir: String): DataFrame =
     Corpus.table(spark, dir, "documents")
@@ -121,7 +107,7 @@ object Dedup {
     * this is the signature table you write to parquet once per corpus
     * snapshot, and writing it is a map-only job. */
   def sigSets(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(sigSetCache, spark, dir)(
+    Materialized.frame(spark, dir, "sigSets")(
       Corpus.table(spark, dir, "documents")
         // same population as the explode formulation: ≥1 shingle
         .where(length(col("text")) >= ShingleK)
@@ -135,8 +121,7 @@ object Dedup {
         .select(col("doc_id"), sort_array(array_distinct(col("raw"))).as("hs"),
           org.apache.spark.sql.graft.MinhashSig(col("raw"), CoefA, CoefB, P).as("sig"))
         .select(col("doc_id") +: col("hs") +:
-          (0 until K).map(i => col("sig").getItem(i).as(s"s$i")): _*)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+          (0 until K).map(i => col("sig").getItem(i).as(s"s$i")): _*))
 
   /** One row per doc: s0..s{K-1} minhash signature (pruned read of the
     * materialized intermediate). */
@@ -198,7 +183,7 @@ object Dedup {
     * before the self-join, bounding its output to |buckets|·cap²
     * regardless of corpus size. */
   def candidatePairs(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(candCache, spark, dir) {
+    Materialized.frame(spark, dir, "candidatePairs") {
       val banded = bandedOf(signatures(spark, dir))
       val kept = banded.groupBy("band", "key")
         .agg(count(lit(1)).as("bn"))
@@ -210,7 +195,6 @@ object Dedup {
             && col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   // ---- #16f LSH tuning report (band/bucket health dashboard) -------------
@@ -298,18 +282,14 @@ object Dedup {
   /** The near-dup pair graph, materialized once per (session, corpus):
     * components and survivors iterate over it without re-running LSH. */
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(pairsCache, spark, dir)(
-      dedupMinhash(spark, dir).select("doc_a", "doc_b")
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    Materialized.frame(spark, dir, "minhashPairs")(
+      dedupMinhash(spark, dir).select("doc_a", "doc_b"))
 
   // ---- #17 exact n-gram Jaccard on LSH candidates -----------------------
   /** 0.35 in exact basis points (§6: Jaccard is |∩|/|∪|, an integer ratio —
     * the r4 verdict flagged thresholding on round(DOUBLE) as the
     * highest-risk fragility in the repo). */
   val JaccardBp = 3500L
-
-  private val overlapCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
 
   /** Per-candidate-pair overlap counts (doc_a, doc_b, inter, na, nb),
     * materialized once per (session, corpus): the expensive part of exact
@@ -319,7 +299,7 @@ object Dedup {
     * this pair-bounded frame. shuffle_hash for the same reason as
     * dedupMinhash: never broadcast the corpus-sized shingle-set table. */
   def pairOverlaps(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(overlapCache, spark, dir) {
+    Materialized.frame(spark, dir, "pairOverlaps") {
       val cand = candidatePairs(spark, dir).hint("shuffle_hash")
       val shSets = sigSets(spark, dir).select(col("doc_id"), col("hs"))
       cand
@@ -329,7 +309,6 @@ object Dedup {
           org.apache.spark.sql.graft.SortedLongIntersectCount(
             col("a.hs"), col("b.hs")).as("inter"),
           size(col("a.hs")).as("na"), size(col("b.hs")).as("nb"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   def dedupNgramJaccard(spark: SparkSession, dir: String): DataFrame = {
@@ -395,10 +374,8 @@ object Dedup {
     * order, hot buckets dropped), materialized once per (session, corpus)
     * exactly like the banded LSH signature table: the token explode, the
     * document-frequency join and the per-doc rank window all run once. */
-  private val prefixIndexCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   private def prefixIndex(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(prefixIndexCache, spark, dir) {
+    Materialized.frame(spark, dir, "prefixIndex") {
       import org.apache.spark.sql.expressions.Window
       val sets = sigSets(spark, dir).select(col("doc_id"), col("hs"))
       val tokens = sets.select(col("doc_id"), explode(col("hs")).as("h"),
@@ -414,7 +391,6 @@ object Dedup {
         .select(col("h"))
       prefix.join(kept, "h")
         .select(col("h"), col("doc_id"), col("n"), col("rk"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   def dedupPrefixExact(spark: SparkSession, dir: String): DataFrame = {
@@ -597,15 +573,6 @@ object Dedup {
     * (tiny for dup clusters). The oracle reaches the same unique fixpoint
     * through a recursive CTE. The result (a tiny doc→component frame) is
     * itself cached per (session, corpus) so survivors reads it for free. */
-  /** The persisted RDD behind a localCheckpoint'd frame (a LogicalRDD
-    * leaf) — tracked so per-round checkpoint blocks can be released once
-    * the final labels are persisted (ADVICE r3: clearAll on the final
-    * frame alone left every round's blocks pinned in the block manager). */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectLeaves().collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
   /** Durable finish for an iterative loop: write the FINAL (tiny,
     * pair-graph-bounded) frame to scratch parquet and serve the persisted
     * read-back. localCheckpoint lineage is unrecoverable on executor loss,
@@ -641,7 +608,7 @@ object Dedup {
     s"$name-${(Materialized.sessionKey(spark, dir).hashCode & 0x7fffffff).toHexString}"
 
   def dedupComponents(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(compCache, spark, dir) {
+    Materialized.frame(spark, dir, "dedupComponents") {
       // The pair graph comes pre-materialized — no LSH re-execution here.
       componentsOfPairs(spark, minhashPairs(spark, dir),
         scratchTag("components", spark, dir))
@@ -665,7 +632,7 @@ object Dedup {
       Scale.loopSession(spark, nEdges) { cs =>
       val edges = Scale.rebind(cs, edges0).localCheckpoint(false)
       val ckpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-      checkpointRdd(edges).foreach(ckpts += _)
+      ckpts ++= Scale.checkpointRdd(edges)
       // localCheckpoint each round: labels is referenced 3× per round, so
       // without lineage truncation the logical plan grows ~3^rounds and
       // planning time explodes (measured 111 s at sf0.1; ~5 s with it).
@@ -676,7 +643,7 @@ object Dedup {
       var labels = edges.select(col("src").as("doc")).distinct()
         .withColumn("lbl", col("doc"))
         .localCheckpoint(false)
-      checkpointRdd(labels).foreach(ckpts += _)
+      ckpts ++= Scale.checkpointRdd(labels)
       var changed = 1L
       var rounds = 0
       // neighbor-min + pointer jumping (lbl := lbl of my lbl) converges in
@@ -695,7 +662,7 @@ object Dedup {
           .select(col("doc"), col("old"),
             least(col("mid"), coalesce(col("j_lbl"), col("mid"))).as("lbl"))
           .localCheckpoint(false)
-        checkpointRdd(jumped).foreach(ckpts += _)
+        ckpts ++= Scale.checkpointRdd(jumped)
         val t0 = System.nanoTime()
         changed = jumped.where(col("lbl") =!= col("old")).count()
         if (sys.env.contains("GRAFT_DEBUG_CC"))
@@ -718,7 +685,7 @@ object Dedup {
       val result = durableFinish(spark, tag,
         labels.select(col("doc").as("doc_id"), col("lbl").as("component")))
       result.count()
-      ckpts.foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+      Scale.release(ckpts)
       result
       }
   }
@@ -803,8 +770,8 @@ object Dedup {
         .select(col("src"), coalesce(col("deg"), lit(0L)).as("deg"))
     }).localCheckpoint(false)
     val ckpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    checkpointRdd(e0).foreach(ckpts += _)
-    checkpointRdd(deg0).foreach(ckpts += _)
+    ckpts ++= Scale.checkpointRdd(e0)
+    ckpts ++= Scale.checkpointRdd(deg0)
     val n = deg0.count()
     if (n == 0)
       return deg0.select(col("src").as("doc_id"), col("deg").as("degree"),
@@ -818,11 +785,11 @@ object Dedup {
       val deg = Scale.rebind(cs, deg0).localCheckpoint(false)
       val edgesW = Scale.rebind(cs, e0).join(deg.where(col("deg") > 0), "src")
         .localCheckpoint(false)
-      checkpointRdd(deg).foreach(ckpts += _)
-      checkpointRdd(edgesW).foreach(ckpts += _)
+      ckpts ++= Scale.checkpointRdd(deg)
+      ckpts ++= Scale.checkpointRdd(edgesW)
       var ranks = deg.select(col("src").as("doc"), lit(1.0 / n).as("pr"))
         .localCheckpoint(false)
-      checkpointRdd(ranks).foreach(ckpts += _)
+      ckpts ++= Scale.checkpointRdd(ranks)
       for (_ <- 1 to PrRounds) {
         val contrib = edgesW
           .join(ranks, col("src") === col("doc"))
@@ -834,7 +801,7 @@ object Dedup {
             (lit((1.0 - PrDamp) / n)
               + lit(PrDamp) * coalesce(col("inflow"), lit(0.0))).as("pr"))
           .localCheckpoint(false)
-        checkpointRdd(ranks).foreach(ckpts += _)
+        ckpts ++= Scale.checkpointRdd(ranks)
       }
       // Same release discipline as dedupComponents: durable finish first
       // (scratch parquet + persisted read-back — the ranks keep a recompute
@@ -845,7 +812,7 @@ object Dedup {
           .select(col("doc").as("doc_id"), col("deg").as("degree"),
             round(col("pr"), 6).cast("decimal(14,6)").cast("double").as("pr")))
       out.count()
-      ckpts.foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+      Scale.release(ckpts)
       out
     }
   }
@@ -882,13 +849,13 @@ object Dedup {
     val e = Scale.rebind(cs, e0).localCheckpoint(false)
     val nodes = Scale.rebind(cs, nodes0).localCheckpoint(false)
     val ckpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    checkpointRdd(e).foreach(ckpts += _)
-    checkpointRdd(nodes).foreach(ckpts += _)
-    checkpointRdd(e0).foreach(ckpts += _)
-    checkpointRdd(nodes0).foreach(ckpts += _)
+    ckpts ++= Scale.checkpointRdd(e)
+    ckpts ++= Scale.checkpointRdd(nodes)
+    ckpts ++= Scale.checkpointRdd(e0)
+    ckpts ++= Scale.checkpointRdd(nodes0)
     var hub = nodes.select(col("node"), lit(1.0 / n).as("hub"))
       .localCheckpoint(false)
-    checkpointRdd(hub).foreach(ckpts += _)
+    ckpts ++= Scale.checkpointRdd(hub)
     var auth = nodes.select(col("node"), lit(1.0 / n).as("auth"))
     for (_ <- 1 to HitsRounds) {
       val rawAuth = e.join(hub, col("src") === col("node"))
@@ -900,7 +867,7 @@ object Dedup {
         .select(col("node"),
           (coalesce(col("raw"), lit(0.0)) / lit(aSum)).as("auth"))
         .localCheckpoint(false)
-      checkpointRdd(auth).foreach(ckpts += _)
+      ckpts ++= Scale.checkpointRdd(auth)
       val rawHub = e.join(auth, col("dst") === col("node"))
         .groupBy(col("src")).agg(sum(col("auth")).as("raw"))
       val hSum = rawHub.agg(sum(col("raw")).as("s"))
@@ -910,7 +877,7 @@ object Dedup {
         .select(col("node"),
           (coalesce(col("raw"), lit(0.0)) / lit(hSum)).as("hub"))
         .localCheckpoint(false)
-      checkpointRdd(hub).foreach(ckpts += _)
+      ckpts ++= Scale.checkpointRdd(hub)
     }
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("out_degree"))
     val inDeg = e.groupBy(col("dst")).agg(count(lit(1)).as("in_degree"))
@@ -930,7 +897,7 @@ object Dedup {
           round(col("auth"), 6).cast("decimal(14,6)").cast("double")
             .as("auth")))
     out.count()
-    ckpts.foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+    Scale.release(ckpts)
     out
     }
   }
@@ -939,7 +906,7 @@ object Dedup {
     // the rank table is a per-corpus artifact like the component labels:
     // materialize once per (session, corpus) — the 10-round loop re-running
     // per invocation measured ~14 s of pure per-round job overhead at sf0.1
-    Materialized.cached(prCache, spark, dir) {
+    Materialized.frame(spark, dir, "dupPagerank") {
       val pairs = minhashPairs(spark, dir)
       pagerankOn(
         pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -1307,9 +1274,6 @@ object Dedup {
     * buckets — standard blocking practice at corpus scale. */
   val ChunkCap = 64
 
-  private val simhashCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-
   /** One row per doc, materialized per (session, corpus): both sides of the
     * chunk-blocked self-join consume it without re-reading the corpus.
     *
@@ -1322,12 +1286,11 @@ object Dedup {
     * to the oracle's explode+sum formulation because the vote sums commute
     * over any token order. */
   def simhashes(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(simhashCache, spark, dir) {
+    Materialized.frame(spark, dir, "simhashes") {
       val toks = array_distinct(lowerTokens(col("text")))
       Corpus.table(spark, dir, "documents")
         .select(col("doc_id"),
           org.apache.spark.sql.graft.Simhash60(toks).as("simhash"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   private[operators] val simhashCte: String = {

@@ -1,30 +1,38 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import scala.collection.concurrent.TrieMap
 
-/** Registry of the per-(session, corpus) materialized intermediates
-  * (LSH signatures, candidate pairs, component labels, simhashes, anagram
-  * vocabulary, IVF centroids, gram frames). Each is persisted on first use
-  * and shared by every consumer of the same corpus; a long-lived session
-  * that finishes with a corpus calls `clearAll()` (or lets the caches die
-  * with the session) so the pinned storage is released. */
+/** The one keyed store of the per-(session, corpus) artifacts that queries
+  * share, and the one place that decides how they are keyed, stored,
+  * shared and released.
+  *
+  * Key: `(sessionKey(spark, dir), name)`. `name` is the artifact's one
+  * name in the code base (a parametric family spells its parameter into
+  * it, `s"gramCounts/$k"`); MaterializedSpec's source gate checks that no
+  * two call sites share one.
+  *
+  * [[frame]] holds materialized intermediates (LSH signatures, candidate
+  * pairs, component labels, gram frames, trained merge tables). It
+  * persists what its build returns at MEMORY_AND_DISK unless that frame is
+  * already cached — a durable finish's persisted read-back, or a frame
+  * persisted at another level — so a build never ends in `.persist`.
+  *
+  * [[value]] holds driver-side results: fitted models, trained tokenizer
+  * state, pinned schemas, broadcast-probe decisions. A value that pins
+  * storage of its own passes the function that releases it.
+  *
+  * Two threads may build the same key at once; putIfAbsent picks the
+  * winner and the loser's storage is released. `clearAll()` unpersists
+  * every frame, releases every value and forgets both (or they die with
+  * the session); later queries rebuild. */
 object Materialized {
 
-  private val caches =
-    scala.collection.mutable.ListBuffer.empty[TrieMap[(String, String), DataFrame]]
+  private type Key = ((String, String), String)
 
-  private val clearables = scala.collection.mutable.ListBuffer.empty[() => Unit]
-
-  /** Called once per cache at object init; returns the cache for inline use. */
-  private[graft] def register(
-      c: TrieMap[(String, String), DataFrame]): TrieMap[(String, String), DataFrame] =
-    caches.synchronized { caches += c; c }
-
-  /** Register a non-DataFrame cache's reset hook so clearAll() covers it
-    * (e.g. Curation's memoized broadcast-cap probe decisions). */
-  private[graft] def registerClearable(f: () => Unit): Unit =
-    caches.synchronized { clearables += f }
+  private val frames = TrieMap.empty[Key, DataFrame]
+  private val values = TrieMap.empty[Key, (Any, () => Unit)]
 
   /** Cache key scoped to the SparkSession INSTANCE, not just the
     * application: `SparkSession.newSession()` clones share an applicationId
@@ -36,42 +44,47 @@ object Materialized {
     (spark.sparkContext.applicationId + ":" +
       java.lang.System.identityHashCode(spark).toHexString, dir)
 
-  /** Race-safe get-or-materialize: TrieMap.getOrElseUpdate may evaluate the
-    * by-name default concurrently in two threads, and the loser's persisted
-    * frame would leak storage with no owner (ADVICE r3). putIfAbsent
-    * resolves the race and the loser is explicitly unpersisted. `build`
-    * must return an already-persisted frame. */
-  private[graft] def cached(cache: TrieMap[(String, String), DataFrame],
-      spark: SparkSession, dir: String)(build: => DataFrame): DataFrame = {
-    val key = sessionKey(spark, dir)
-    cache.get(key) match {
-      case Some(df) => df
-      case None =>
-        val built = build
-        cache.putIfAbsent(key, built) match {
-          case Some(winner) =>
-            try built.unpersist() catch { case _: Throwable => () }
-            winner
-          case None => built
-        }
-    }
-  }
+  private def quietly(f: => Unit): Unit = try f catch { case _: Throwable => () }
+
+  /** Race-safe get-or-make: a concurrent loser's artifact is dropped. */
+  private def resolve[A](store: TrieMap[Key, A], key: Key)(make: => A)(
+      drop: A => Unit): A =
+    store.getOrElse(key, {
+      val made = make
+      store.putIfAbsent(key, made) match {
+        case Some(winner) => quietly(drop(made)); winner
+        case None => made
+      }
+    })
+
+  /** The frame `name` over corpus `dir` in this session, built and
+    * persisted on first use. */
+  private[graft] def frame(spark: SparkSession, dir: String, name: String)(
+      build: => DataFrame): DataFrame =
+    resolve(frames, (sessionKey(spark, dir), name)) {
+      val built = build
+      if (built.storageLevel == StorageLevel.NONE)
+        built.persist(StorageLevel.MEMORY_AND_DISK)
+      else built
+    }(_.unpersist())
+
+  /** The driver-side value `name` over `dir` in this session, fitted on
+    * first use; `release` frees what the value pins when it is dropped. */
+  private[graft] def value[V](spark: SparkSession, dir: String, name: String)(
+      fit: => V, release: V => Unit = (_: V) => ()): V =
+    resolve(values, (sessionKey(spark, dir), name)) {
+      val v = fit
+      (v: Any, () => release(v))
+    }(_._2())._1.asInstanceOf[V]
 
   /** Number of live materialized frames (diagnostics/tests). */
-  def size: Int = caches.synchronized(caches.map(_.size).sum)
+  def size: Int = frames.size
 
-  /** Unpersist and forget every materialized intermediate, in every
-    * registered cache. (dedupComponents releases its per-round checkpoint
-    * blocks inline once the final labels are persisted, so the cached
-    * frames are the only pinned storage.) Safe to call with stopped
-    * sessions (unpersist failures are swallowed); subsequent queries
-    * re-materialize. */
-  def clearAll(): Unit =
-    caches.synchronized {
-      caches.foreach { c =>
-        c.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
-        c.clear()
-      }
-      clearables.foreach(f => try f() catch { case _: Throwable => () })
-    }
+  /** Unpersist and forget every frame, release and forget every value.
+    * Safe to call with stopped sessions (release failures are
+    * swallowed); subsequent queries re-materialize. */
+  def clearAll(): Unit = {
+    frames.keys.foreach(k => frames.remove(k).foreach(df => quietly(df.unpersist())))
+    values.keys.foreach(k => values.remove(k).foreach(v => quietly(v._2())))
+  }
 }

@@ -555,15 +555,11 @@ object Multimodal {
     * ([[Dedup.componentsOfPairs]] — checkpoint-per-round, durable finish).
     * Only docs in the pair graph appear; the representative is the
     * min-id member, i.e. `component` itself. */
-  private val imgCompCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      org.apache.spark.sql.DataFrame])
-
   def imageDupClusters(spark: SparkSession, dir: String): DataFrame =
     // Materialized per session like the text components: the loop's
     // per-round fixed job cost (checkpoint + count) re-paid per call
     // benched at 1.65 s steady on a 3-pair graph before the cache
-    Materialized.cached(imgCompCache, spark, dir)(
+    Materialized.frame(spark, dir, "imageDupClusters")(
       Dedup.componentsOfPairs(spark,
         dedupImage(spark, dir).select(col("doc_a"), col("doc_b")),
         // session-scoped tag (review r12): a constant path would let two
@@ -677,12 +673,8 @@ object Multimodal {
     * graph — the [[imageDupClusters]] end product on the video grain,
     * via the same min-label + pointer-jumping components loop
     * (session-cached, session-scoped scratch tag). */
-  private val vidCompCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      org.apache.spark.sql.DataFrame])
-
   def videoDupClusters(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(vidCompCache, spark, dir)(
+    Materialized.frame(spark, dir, "videoDupClusters")(
       Dedup.componentsOfPairs(spark,
         dedupVideo(spark, dir).select(col("doc_a"), col("doc_b")),
         Dedup.scratchTag("vidcomponents", spark, dir)))

@@ -2437,13 +2437,6 @@ object Relational {
   // without the caches both queries re-run the pair explode AND the
   // wedge-closure join (the two dominant costs; 13.6 s combined at sf0.1
   // steady before the share, ~0.4 s after)
-  private val copurchasePairCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  private val copurchaseEdgeCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  private val copurchaseTriCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-
   /** Per-order co-purchase pair INSTANCES (part_a < part_b, one row per
     * (order, pair)) — the shared base of the whole basket family
     * ([[partsCopurchase]] rolls up multiplicity, [[copurchaseEdges]]
@@ -2461,7 +2454,7 @@ object Relational {
     * O(size) subarray copy per element and was the family's measured
     * hot spot (~4 s of the 4.6 s build at sf0.1). */
   private def copurchasePairs(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(copurchasePairCache, spark, dir) {
+    Materialized.frame(spark, dir, "copurchasePairs") {
       val w = Window.partitionBy("l_orderkey")
       Corpus.table(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))
@@ -2474,16 +2467,13 @@ object Relational {
         .select(explode(org.apache.spark.sql.graft.SortedLongPairs(col("ps")))
           .as("p"))
         .select(col("p.part_a").as("part_a"), col("p.part_b").as("part_b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Capped, distinct co-purchase edges (part_a < part_b), materialized
     * once per (session, corpus) — [[copurchasePairs]] minus multiplicity. */
   private def copurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(copurchaseEdgeCache, spark, dir) {
-      copurchasePairs(spark, dir).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    Materialized.frame(spark, dir, "copurchaseEdges")(
+      copurchasePairs(spark, dir).distinct())
 
   /** Closed-triangle list (ta<tb<tc) — adjacency-list intersection, once
     * per (session, corpus). The naive wedge-closure join materializes and
@@ -2536,7 +2526,7 @@ object Relational {
 
   private def copurchaseTriFrame(spark: SparkSession, dir: String)
       : DataFrame =
-    Materialized.cached(copurchaseTriCache, spark, dir) {
+    Materialized.frame(spark, dir, "copurchaseTriFrame") {
       val e = copurchaseEdges(spark, dir)
       val bound = spark.conf.getOption("graft.copurchaseAdjChunkEntries")
         .flatMap(_.toLongOption).getOrElse(4000000L)
@@ -2547,7 +2537,6 @@ object Relational {
         .collect()(0).getLong(0)
       val nChunks = math.max(1L, (maxDeg + bound - 1) / math.max(bound, 1L))
       copurchaseTriClosure(e, nChunks)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   def copurchaseTriangles(spark: SparkSession, dir: String): DataFrame = {

@@ -208,6 +208,22 @@ object Scale {
     }
   }
 
+  /** The persisted RDD behind a localCheckpoint'd frame (its LogicalRDD
+    * leaf), tracked so a loop can release its per-round checkpoint blocks
+    * once the result no longer reads them (ADVICE r3: clearAll on the
+    * final frame alone left every round's blocks pinned). */
+  def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collectLeaves().collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+
+  /** Release checkpoint blocks without blocking. Spark logs that a locally
+    * checkpointed RDD cannot be recomputed once released; that is the
+    * point — its readers are done. Failures (a stopped context) are
+    * ignored. */
+  def release(rdds: IterableOnce[org.apache.spark.rdd.RDD[_]]): Unit =
+    rdds.iterator.foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+
   /** Re-root `df` under session `cs` (same SparkContext): the public-API
     * path is an RDD[Row] bridge, so downstream computes pay one
     * InternalRow→Row conversion per materialization — callers should

@@ -31,13 +31,9 @@ object Selection {
   /** Per-doc (lang, nll_e4) score frame, materialized per corpus: both the
     * threshold pass and the bucketing pass read it, and it is the natural
     * artifact a 100 TB run writes once and thresholds many times. */
-  private val scoredCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   private def scoredFrame(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(scoredCache, spark, dir) {
-      langNll(spark, dir, TextAnalysis.lmPerplexity(spark, dir), "n_bigrams")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    Materialized.frame(spark, dir, "scoredFrame")(
+      langNll(spark, dir, TextAnalysis.lmPerplexity(spark, dir), "n_bigrams"))
 
   /** CCNet-style bucketing: per-document average bigram negative
     * log-likelihood under the corpus LM (`lm_perplexity`'s model), cut into
@@ -153,14 +149,10 @@ object Selection {
     * bounded merge-table pattern as the BPE vocabulary — where totals and
     * ratios are computed exactly. Returned as (b, lr) rows with `lr` an
     * exact DECIMAL(18,4), so per-document sums are fold-order free. */
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Seq[(Long, Double)]]
-  Materialized.registerClearable(() => modelCache.clear())
-
   private[graft] def dsirModel(spark: SparkSession, dir: String): Seq[(Long, Double)] =
     // fitted once per (session, corpus): dsir_weights, dsir_select and the
     // streaming gate's table all read the same bounded artifact
-    modelCache.getOrElseUpdate(Materialized.sessionKey(spark, dir), {
+    Materialized.value(spark, dir, "dsirModel") {
       val bcnt = TextAnalysis.lowerToks(spark, dir)
         .select(col("lang"), explode(col("toks")).as("tok"))
         .select(col("lang"), (md5Long(col("tok")) % DsirBuckets.toLong).as("b"))
@@ -175,7 +167,7 @@ object Selection {
         (r.getLong(0),
           BigDecimal(lr).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
       }
-    })
+    }
 
   /** The fitted model as a dense [[DsirBuckets]]-slot array in exact ×10⁴
     * integer units — the literal [[dsirWeights]] and the streaming gate
@@ -205,10 +197,8 @@ object Selection {
     * per-doc-artifact discipline as [[scoredFrame]]; the token arrays ride
     * the shared [[TextAnalysis.lowerToks]] frame, so even the first touch
     * re-splits nothing. Still zero exchanges (ScaleSpec lock). */
-  private val dsirWeightsCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   def dsirWeights(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(dsirWeightsCache, spark, dir) {
+    Materialized.frame(spark, dir, "dsirWeights") {
       val lrE4 = typedLit(dsirModelE4(spark, dir))
       TextAnalysis.lowerToks(spark, dir)
         .select(col("doc_id"), col("toks").as("__t"))
@@ -216,7 +206,6 @@ object Selection {
         .select(col("doc_id"), size(col("__t")).cast("long").as("n_toks"),
           (org.apache.spark.sql.graft.DsirLlrE4(col("__t"), lrE4)
             .cast("double") / lit(10000.0)).as("llr"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
   private val dsirCtes =
     s"""tok AS MATERIALIZED (
@@ -318,13 +307,9 @@ object Selection {
     * above joins it once, so the n-gram table sees two exchanges; every
     * join is a type-keyed shuffle_hash join between type-bounded frames and
     * the 1-row bigram-type total broadcasts. */
-  private val knModelCaches = (2 to 5).map(n => n -> Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])).toMap
   private[operators] def knModel(spark: SparkSession, dir: String, n: Int): DataFrame =
-    Materialized.cached(knModelCaches(n), spark, dir) {
-      (if (n == 2) knBigramModel(spark, dir) else knE6Model(spark, dir, n))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    Materialized.frame(spark, dir, s"knModel/$n")(
+      if (n == 2) knBigramModel(spark, dir) else knE6Model(spark, dir, n))
 
   private def knBigramModel(spark: SparkSession, dir: String): DataFrame = {
     val c2 = TextAnalysis.gramCounts(spark, dir, 2)
@@ -539,16 +524,13 @@ object Selection {
     * broadcast at 100 TB, hence the pinned shuffle_hash — and one
     * doc-keyed rollup; the score frame is materialized per (session,
     * corpus, n) for the buckets and the composed signals. */
-  private val knPplCaches = (2 to 5).map(n => n -> Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])).toMap
   def knPerplexity(n: Int)(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(knPplCaches(n), spark, dir) {
+    Materialized.frame(spark, dir, s"knPerplexity/$n") {
       TextAnalysis.docGrams(spark, dir, n)
         .join(knLogProb(spark, dir, n).hint("shuffle_hash"), gram(n))
         .groupBy("doc_id")
         .agg(count(lit(1)).as(nCol(n)),
           sum(col("lp")).cast("decimal(18,4)").cast("double").as("sum_lp"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
   def knPerplexitySql(n: Int): String =
     s"WITH ${knScoreCtes(n)} SELECT doc_id, ${nCol(n)}, sum_lp FROM kpp"

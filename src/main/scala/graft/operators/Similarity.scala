@@ -426,16 +426,6 @@ object Similarity {
     * (The previous `first IvfK by vec_id` seeds would, at 100 TB, all come
     * from one shard and could be near-identical.) Two Lloyd rounds refine
     * them — measured recall@10 vs the exact ann_topk is in BASELINE.md. */
-  private val centCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-
-  /** The persisted RDD behind a localCheckpoint'd frame (the Dedup
-    * checkpointRdd discipline) — released once training collects. */
-  private def ckptRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectLeaves().collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
   def ivfCentroids(spark: SparkSession, dir: String): DataFrame =
     // trained once per (session, corpus) — ann_ivf, embedding_clusters and
     // cluster_purity all quantize against the same 16-row frame (at scale:
@@ -447,12 +437,12 @@ object Similarity {
     // collects back to the PARENT session as a LocalRelation, so every
     // consumer broadcasts 16 rows without re-entering the training
     // lineage.
-    Materialized.cached(centCache, spark, dir) {
+    Materialized.frame(spark, dir, "ivfCentroids") {
       val e0 = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
       val n = e0.count()
       val (schema, rows) = Scale.loopSession(spark, n) { cs =>
         val e = Scale.rebind(cs, e0).localCheckpoint(false)
-        val eRdd = ckptRdd(e)
+        val eRdd = Scale.checkpointRdd(e)
         val seeds = e
           .orderBy(graft.functions.TextFns.md5Long(col("vec_id").cast("string")),
             col("vec_id"))
@@ -460,11 +450,10 @@ object Similarity {
           .select(col("vec_id").as("cid"), col("embedding").as("c"))
         val trained = lloydRound(e, lloydRound(e, seeds))
         val out = (trained.schema, trained.collect().toSeq)
-        eRdd.foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+        Scale.release(eRdd)
         out
       }
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
   // The Lloyd outputs are tiny (IvfK rows) but referenced by several later
   // CTEs; MATERIALIZED stops DuckDB inlining (= re-running) the whole
@@ -743,6 +732,17 @@ object Similarity {
     * cos ~0.51 — so the dropped set is non-vacuous at every test SF). */
   val SemThr = 0.35
 
+  /** Assignment + centroid-cosine, materialized per corpus: feeds both
+    * sides of the pair join, the final projection, and the sweep. */
+  private def semAssigned(spark: SparkSession, dir: String): DataFrame =
+    Materialized.frame(spark, dir, "semAssigned") {
+      argminCid(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding"),
+          ivfCentroids(spark, dir), Seq("embedding", "c"))
+        .withColumn("ccos", round(cosExpr("embedding", "c"), 6)
+          .cast("decimal(14,6)").cast("double"))
+        .select("vec_id", "cid", "embedding", "ccos")
+    }
+
   /** SemDeDup (Abbas et al. 2023): semantic near-duplicate removal via
     * within-cluster pairwise cosine under the SHARED learned coarse
     * quantizer ([[ivfCentroids]] — the paper's k-means step, trained once
@@ -763,21 +763,6 @@ object Similarity {
     * through DECIMAL(14,6) so the drop ORDERING is engine-stable; the
     * pair threshold reads the raw IEEE cosine (dedup_embedding's §6
     * argument: identical op sequence in both engines). */
-  private val semCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-
-  /** Assignment + centroid-cosine, materialized per corpus: feeds both
-    * sides of the pair join, the final projection, and the sweep. */
-  private def semAssigned(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(semCache, spark, dir) {
-      argminCid(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding"),
-          ivfCentroids(spark, dir), Seq("embedding", "c"))
-        .withColumn("ccos", round(cosExpr("embedding", "c"), 6)
-          .cast("decimal(14,6)").cast("double"))
-        .select("vec_id", "cid", "embedding", "ccos")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
   def semdedup(spark: SparkSession, dir: String): DataFrame = {
     val assigned = semAssigned(spark, dir)
     val dropped = assigned.as("b").join(assigned.as("a"),
@@ -1091,19 +1076,17 @@ object Similarity {
         s => s.getField("mn").cast("float")).as("c"))
 
   /** Trained codebooks (m, cid, c), cached per (session, corpus). */
-  private val pqCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   def pqCodebooks(spark: SparkSession, dir: String): DataFrame =
     // r14: same loop profile + bounded-collect finish as [[ivfCentroids]]
     // — the two PQ Lloyd rounds are a bounded fixpoint over the exploded
     // (vec, subspace) frame, and the PqM×PqK-row codebook table returns
     // to the parent session as a LocalRelation.
-    Materialized.cached(pqCache, spark, dir) {
+    Materialized.frame(spark, dir, "pqCodebooks") {
       val e0 = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
       val n = e0.count()
       val (schema, rows) = Scale.loopSession(spark, n * PqM) { cs =>
         val e = Scale.rebind(cs, e0).localCheckpoint(false)
-        val eRdd = ckptRdd(e)
+        val eRdd = Scale.checkpointRdd(e)
         val seeds = e
           .orderBy(graft.functions.TextFns.md5Long(col("vec_id").cast("string")),
             col("vec_id"))
@@ -1112,24 +1095,15 @@ object Similarity {
         val seedBooks = subVecs(seeds.withColumnRenamed("cid", "vec_id"))
           .select(col("m"), col("vec_id").as("cid"), col("sv").as("c"))
         val sv = subVecs(e).localCheckpoint(false)
-        val svRdd = ckptRdd(sv)
+        val svRdd = Scale.checkpointRdd(sv)
         val trained = pqLloyd(sv, pqLloyd(sv, seedBooks))
         val out = (trained.schema, trained.collect().toSeq)
-        (eRdd ++ svRdd).foreach(r =>
-          try r.unpersist(false) catch { case _: Throwable => () })
+        Scale.release(eRdd ++ svRdd)
         out
       }
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  /** Materialized codes table (vec_id, m, cid, dist): the PQ INDEX — at
-    * 100 TB this is the parquet artifact an encode job writes once and
-    * every serving query scans instead of the float vectors; locally it is
-    * encoded once per (session, corpus) and shared by `pq_quantize`,
-    * `ann_pq` and `ann_ivfpq`. */
-  private val pqCodesCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   /** Rows-derived partition count for a persisted per-corpus artifact —
     * the loopSession sizing rule applied to cached frames: a bench-scale
     * corpus otherwise pins 32 near-empty cache partitions that every
@@ -1143,13 +1117,17 @@ object Similarity {
       rows / math.max(perPart, 1L) + 1L)).toInt
   }
 
+  /** Materialized codes table (vec_id, m, cid, dist): the PQ INDEX — at
+    * 100 TB this is the parquet artifact an encode job writes once and
+    * every serving query scans instead of the float vectors; locally it is
+    * encoded once per (session, corpus) and shared by `pq_quantize`,
+    * `ann_pq` and `ann_ivfpq`. */
   def pqCodes(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(pqCodesCache, spark, dir) {
+    Materialized.frame(spark, dir, "pqCodes") {
       val n = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding").count()
       pqAssign(subVecs(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")),
           pqCodebooks(spark, dir))
         .coalesce(sizedParts(spark, n * PqM))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   def pqQuantize(spark: SparkSession, dir: String): DataFrame =
@@ -1311,17 +1289,14 @@ object Similarity {
     * table joined to the coarse-cell assignment — the on-disk layout a
     * build job writes partitioned by cell, so a probe is partition
     * pruning. The vec_id-keyed join runs once per (session, corpus). */
-  private val ivfPqCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   def ivfPqLayout(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(ivfPqCache, spark, dir) {
+    Materialized.frame(spark, dir, "ivfPqLayout") {
       val n = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding").count()
       pqCodes(spark, dir).select(col("vec_id"), col("m"), col("cid"))
         .join(argminCid(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding"),
             ivfCentroids(spark, dir), Seq.empty)
           .withColumnRenamed("cid", "cell"), "vec_id")
         .coalesce(sizedParts(spark, n * PqM))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
@@ -2039,15 +2014,9 @@ object Similarity {
   // the fitted model is a per-corpus artifact like the IVF centroids:
   // without the cache BOTH consumers (embedding_pca, pca_project) re-run
   // the 12-round matvec loop per invocation (~3 s each at sf0.1 steady)
-  private val pcaModelCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String),
-      (Array[Double], Array[Array[Double]], Array[Double], Long)]
-  Materialized.registerClearable(() => pcaModelCache.clear())
-
   def pcaModel(spark: SparkSession, dir: String)
       : (Array[Double], Array[Array[Double]], Array[Double], Long) =
-    pcaModelCache.getOrElseUpdate(Materialized.sessionKey(spark, dir),
-      pcaModelFit(spark, dir))
+    Materialized.value(spark, dir, "pcaModel")(pcaModelFit(spark, dir))
 
   private def pcaModelFit(spark: SparkSession, dir: String)
       : (Array[Double], Array[Array[Double]], Array[Double], Long) = {

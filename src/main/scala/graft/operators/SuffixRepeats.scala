@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{RangeRank, StringCodepoints}
-import org.apache.spark.storage.StorageLevel
 import graft.sources.Corpus
 
 /** EXACTSUBSTR repeat structure at UNBOUNDED threshold — the suffix-array
@@ -88,26 +87,10 @@ object SuffixRepeats {
     * whose length-`block` window repeats somewhere in the corpus — whether
     * that set is nonempty (the loop-termination test, computed during
     * construction at no extra job), and the persisted sorted-UnsafeRow RDD
-    * the frame replays from (owned here; unpersisted by the clear hook). */
+    * the frame replays from (owned here; released with the `levels` value). */
   private[operators] final case class Level(block: Long, frame: DataFrame,
       hasDup: Boolean, storage: org.apache.spark.rdd.RDD[_])
 
-  // level tables are RDD-persisted (block-manager-backed) rather than
-  // persisted frames, so this cache registers a clear hook — which also
-  // unpersists each level's storage (ADVICE r8) — instead of joining the
-  // DataFrame registry
-  private val levelsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Seq[Level]]
-  Materialized.registerClearable { () =>
-    levelsCache.values.foreach(_.foreach(l =>
-      try l.storage.unpersist(blocking = false)
-      catch { case _: Throwable => () }))
-    levelsCache.clear()
-  }
-  private val spectrumCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-  private val longestCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
 
   /** One spectrum row, censused without a rank table. */
   private[operators] final case class Spec(block: Long, nGroups: Long,
@@ -131,9 +114,6 @@ object SuffixRepeats {
     def fullChain: Boolean =
       specs.size == ladder.size && specs.last.nGroups > 0
   }
-  private val censusCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), CensusChain]
-  Materialized.registerClearable(() => censusCache.clear())
 
   /** (gpos, doc_id, pos, doc_len, ch, ch2, ch3, ch4) — the corpus at char
     * resolution in one global address space (same inherent cost as
@@ -245,7 +225,7 @@ object SuffixRepeats {
     * level-cutoff rule; the pack width adapts to the corpus's widest
     * codepoint, see [[CensusChain]]). */
   private[operators] def censuses(spark: SparkSession, dir: String): CensusChain =
-    censusCache.getOrElseUpdate(Materialized.sessionKey(spark, dir), withoutAqe(spark, dir) { cs =>
+    Materialized.value(spark, dir, "censuses")(withoutAqe(spark, dir) { cs =>
       val base = charFrame(cs, dir)
       val (c1, maxCp) =
         packedCensus(1L, base.select(col("doc_id"), col("ch").as("k")))
@@ -401,7 +381,10 @@ object SuffixRepeats {
     * from the previous level's rows, which the parquet read-back
     * preserves exactly). */
   private[operators] def levels(spark: SparkSession, dir: String): Seq[Level] =
-    levelsCache.getOrElseUpdate(Materialized.sessionKey(spark, dir), {
+    // level tables are RDD-persisted (block-manager-backed) rather than
+    // persisted frames, so the value carries its release: clearAll
+    // unpersists each level's storage (ADVICE r8)
+    Materialized.value(spark, dir, "levels")(fit = {
       val chain = censuses(spark, dir)
       if (!chain.fullChain) Seq.empty
       else withoutAqe(spark, dir) { cs =>
@@ -416,10 +399,6 @@ object SuffixRepeats {
         // (and level 1 the packKey projection) once more than needed.
         // The checkpoint is released as soon as the level finishes: the
         // ranked frame replays from RangeRank's own sorted cache.
-        def inputRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-          df.queryExecution.analyzed.collectLeaves().collectFirst {
-            case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-          }
         if (out.isEmpty) {
           val base = charFrame(cs, dir)
           val block = chain.rankStart
@@ -431,8 +410,7 @@ object SuffixRepeats {
             .localCheckpoint(false)
           out += finishLevel(cs, ckpt, block,
             RangeRank.rankLevel(startIn, numKeys = 2, block = block))
-          inputRdd(startIn).foreach(r =>
-            try r.unpersist(false) catch { case _: Throwable => () })
+          Scale.release(Scale.checkpointRdd(startIn))
         }
         while (out.last.hasDup && out.last.block < MaxBlock) {
           val Level(block, t, _, _) = out.last
@@ -453,16 +431,15 @@ object SuffixRepeats {
             .localCheckpoint(false)
           out += finishLevel(cs, ckpt, block * 2,
             RangeRank.rankLevel(paired, numKeys = 2, block = block * 2))
-          inputRdd(paired).foreach(r =>
-            try r.unpersist(false) catch { case _: Throwable => () })
+          Scale.release(Scale.checkpointRdd(paired))
         }
         out.toSeq
       }
-    })
+    }, release = (lv: Seq[Level]) => Scale.release(lv.map(_.storage)))
 
   /** The repeat spectrum: one row per doubling level. All-BIGINT. */
   def suffixRepeats(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(spectrumCache, spark, dir) {
+    Materialized.frame(spark, dir, "suffixRepeats") {
       import spark.implicits._
       val rows = scala.collection.mutable.ListBuffer.empty[(Long, Long, Long, Long, Long)]
       censuses(spark, dir).specs.foreach(c =>
@@ -489,14 +466,13 @@ object SuffixRepeats {
       }
       rows.toSeq.toDF("block_len", "n_groups", "n_positions", "max_group",
           "n_groups_xdoc")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Exact longest repeated substring: binary-search refinement with the
     * two-overlapping-blocks equality test — s[i,i+L) = s[j,j+L) iff the
     * level-k blocks at i,j AND at i+L−2ᵏ,j+L−2ᵏ agree (2ᵏ ≤ L < 2ᵏ⁺¹). */
   def longestRepeat(spark: SparkSession, dir: String): DataFrame =
-    Materialized.cached(longestCache, spark, dir) {
+    Materialized.frame(spark, dir, "longestRepeat") {
       import spark.implicits._
       val chain = censuses(spark, dir)
       val lvls = levels(spark, dir)

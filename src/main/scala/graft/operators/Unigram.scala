@@ -151,13 +151,9 @@ object Unigram {
 
   /** The trained final state: (vocab usage map, char set), cached per
     * (session, corpus) like the BPE merge table. */
-  private val stateCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Map[String, Long], Set[String])]
-  Materialized.registerClearable(() => stateCache.clear())
-
   private[operators] def trainedState(spark: SparkSession,
       dir: String): (Map[String, Long], Set[String]) =
-    stateCache.getOrElseUpdate(Materialized.sessionKey(spark, dir), {
+    Materialized.value(spark, dir, "unigramTrainedState") {
       import spark.implicits._
       val wf0 = wordFreq(spark, dir)
       val nWords = wf0.count()
@@ -194,7 +190,7 @@ object Unigram {
       (charSet.map(c => c -> usage.getOrElse(c, 0L)).toMap ++ multiFinal,
         charSet)
       }
-    })
+    }
 
   /** Driver-contract query (rows-only, brute-forced in spec): the trained
     * unigram vocabulary — rank by (usage desc, piece), piece, length,
@@ -215,11 +211,9 @@ object Unigram {
     * Same vocabulary-then-join shape as `bpe_encode`: encode once per
     * DISTINCT word, equi-join the corpus token stream, aggregate to doc
     * grain. */
-  private val encVocabCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   def unigramEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val encodedVocab = Materialized.cached(encVocabCache, spark, dir) {
+    val encodedVocab = Materialized.frame(spark, dir, "unigramEncodedVocab") {
       val (vocab, _) = trainedState(spark, dir)
       val bc = spark.sparkContext.broadcast(scoresOf(vocab))
       TextAnalysis.termCounts(spark, dir)
@@ -227,7 +221,6 @@ object Unigram {
         .select(col("term")).as[String]
         .map(w => (w, viterbi(w, bc.value).length.toLong))
         .toDF("term", "n_syms")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), explode(lowerTokens(col("text"))).as("term"))

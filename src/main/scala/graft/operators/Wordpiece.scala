@@ -155,14 +155,9 @@ object Wordpiece {
 
   /** The trained state: (ordered merge rows, initial char inventory),
     * cached per (session, corpus) like the BPE merge table. */
-  private val stateCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (IndexedSeq[(Long, String, String, Long, Long)],
-      Set[String])]
-  Materialized.registerClearable(() => stateCache.clear())
-
   private[operators] def trainedState(spark: SparkSession, dir: String)
       : (IndexedSeq[(Long, String, String, Long, Long)], Set[String]) =
-    stateCache.getOrElseUpdate(Materialized.sessionKey(spark, dir), {
+    Materialized.value(spark, dir, "wordpieceTrainedState") {
       val wf = wordFreq(spark, dir)
       val nWords = wf.count()
       // bounded argmax fixpoint over the vocabulary frame — iterative-loop
@@ -200,7 +195,7 @@ object Wordpiece {
       }
       (merges.toIndexedSeq, charInv)
       }
-    })
+    }
 
   /** Driver-contract query (rows-only, brute-forced in spec): the ordered
     * WordPiece merge table — round, endpoints, fused symbol, the pair
@@ -242,11 +237,9 @@ object Wordpiece {
     * contribute one symbol) and the UNK word count. Encode once per
     * DISTINCT word, equi-join the corpus token stream, aggregate to doc
     * grain — the `bpe_encode` shape. */
-  private val encVocabCache = Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   def wordpieceEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val encodedVocab = Materialized.cached(encVocabCache, spark, dir) {
+    val encodedVocab = Materialized.frame(spark, dir, "wordpieceEncodedVocab") {
       val (merges, charInv) = trainedState(spark, dir)
       val vocab = charInv ++
         merges.map { case (_, l, r, _, _) => l + r.stripPrefix("##") }
@@ -261,7 +254,6 @@ object Wordpiece {
             case None => (w, 1L, 1L)
           }
         }.toDF("term", "n_syms", "unk")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     Corpus.table(spark, dir, "documents")
       .select(col("doc_id"),

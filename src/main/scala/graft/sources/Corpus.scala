@@ -2,8 +2,6 @@ package graft.sources
 
 import graft.operators.Materialized
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
-import scala.collection.concurrent.TrieMap
 
 /** The one reader of a corpus dir's parquet input tables: `documents`,
   * `embeddings`, the TPC-H-like tables and `events`. A plain
@@ -22,21 +20,12 @@ object Corpus {
   val Tables: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val schemas = TrieMap.empty[(String, String), StructType]
-  Materialized.registerClearable(() => schemas.clear())
-
   /** `$dir/$name.parquet` as a DataFrame. A missing table fails here, at
     * build, and pins nothing. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val key = Materialized.sessionKey(spark, path)
-    schemas.get(key) match {
-      case Some(pinned) => spark.read.schema(pinned).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        schemas.putIfAbsent(key, df.schema)
-        df
-    }
+    spark.read.schema(Materialized.value(spark, dir, s"schema/$name")(
+      spark.read.parquet(path).schema)).parquet(path)
   }
 
   /** Register a temp view per table present under `dir`, so the library's

@@ -247,12 +247,9 @@ object WarcSource {
     * construction, so the cache is bounded; at crawl scale the equivalent
     * artifact is the parsed-documents parquet an ingest job writes once
     * (documentsFromWarc stays uncached for arbitrary dirs). */
-  private val fixtureDocsCache = graft.operators.Materialized.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
   private[graft] def fixtureDocs(spark: SparkSession, path: String): DataFrame =
-    graft.operators.Materialized.cached(fixtureDocsCache, spark, path)(
-      documentsFromWarc(spark, path)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    graft.operators.Materialized.frame(spark, path, "fixtureDocs")(
+      documentsFromWarc(spark, path))
 
   /** Streaming twin of [[documentsFromWarc]] — the identical projection
     * over [[readWarcStream]], so stream output is replay-equal to batch by
@@ -802,22 +799,15 @@ object WarcSource {
         col("pr"))
   }
 
-  // the rank table is a per-crawl artifact exactly like dup_pagerank's:
-  // without the cache every invocation re-runs the full round loop —
-  // ~21 s of pure per-round job overhead at bench even on a tiny graph
-  private val domainPrCache = graft.operators.Materialized.register(
-    scala.collection.concurrent.TrieMap
-      .empty[(String, String), DataFrame])
-
   /** Driver-contract query (rows-only): [[domainPagerank]] over the
     * committed link fixture, materialized once per (session, fixture).
-    * Ignores `dir` like [[warcHostStats]]. */
+    * Ignores `dir` like [[warcHostStats]]. The rank table is a per-crawl
+    * artifact exactly like dup_pagerank's: without the cache every
+    * invocation re-runs the full round loop — ~21 s of pure per-round job
+    * overhead at bench even on a tiny graph. */
   def domainPagerankQ(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Materialized.cached(domainPrCache, spark,
-        FixtureLinksDir) {
-      domainPagerank(fixtureDocs(spark, FixtureLinksDir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    graft.operators.Materialized.frame(spark, FixtureLinksDir, "domainPagerank")(
+      domainPagerank(fixtureDocs(spark, FixtureLinksDir)))
 
   // ---- registered-domain HITS (crawl frontier ranking) -------------------
   /** HITS hubs/authorities over the same registered-domain graph as
@@ -837,19 +827,12 @@ object WarcSource {
       s"domain-hits-${java.util.UUID.randomUUID()}")
   }
 
-  private val domainHitsCache = graft.operators.Materialized.register(
-    scala.collection.concurrent.TrieMap
-      .empty[(String, String), DataFrame])
-
   /** Driver-contract query (rows-only): [[domainHits]] over the committed
     * link fixture, materialized once per (session, fixture). Ignores `dir`
     * like [[warcHostStats]]. */
   def domainHitsQ(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Materialized.cached(domainHitsCache, spark,
-        FixtureLinksDir) {
-      domainHits(fixtureDocs(spark, FixtureLinksDir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    graft.operators.Materialized.frame(spark, FixtureLinksDir, "domainHits")(
+      domainHits(fixtureDocs(spark, FixtureLinksDir)))
 
   /** Oracle: exact VALUES literal, hand-derived from the link fixture
     * (scripts/make_warc_fixture.py): the hub's two absolute links resolve

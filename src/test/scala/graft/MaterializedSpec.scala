@@ -1,8 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import scala.util.Try
-import graft.operators.{Dedup, Materialized, Multimodal}
+import graft.operators.{Dedup, Materialized, Multimodal, Selection}
 import graft.sources.Corpus
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -10,8 +11,10 @@ import org.apache.spark.sql.types.{DataType, LongType}
 /** Lifecycle of the per-(session, corpus) materialized intermediates
   * (ADVICE r3): session-instance cache scoping, and full storage release —
   * including the per-round localCheckpoint blocks behind dedupComponents —
-  * on clearAll(); and the same scoping and release for the schemas
-  * `Corpus.table` pins. */
+  * on clearAll(); the same scoping and release for the schemas
+  * `Corpus.table` pins and the driver-side values; results that do not
+  * depend on which query built a shared artifact first; and a source gate
+  * that keeps every artifact in the one keyed store. */
 class MaterializedSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -128,5 +131,71 @@ class MaterializedSpec extends SparkTestBase {
     Seq((1L, "text")).toDF("doc_id", "text").write.parquet(path)
     assert(Corpus.table(spark, dir, "documents").schema ==
       spark.read.parquet(path).schema)
+  }
+
+  test("query results do not depend on the order that builds the shared artifacts") {
+    val sf = "/root/testdata/sf0.001"
+    // keys that share artifacts: the vocabulary, the LSH chain, the
+    // centroids, the tokenized corpus with the DSIR model, the gram counts
+    val sample = Seq("anagram_groups", "dedup_minhash", "dedup_components", "ann_ivf",
+      "dsir_weights", "kn3_perplexity", "tfidf_top_terms", "longest_repeat")
+    def run(order: Seq[String]): Map[String, (Long, String)] =
+      order.map(q => q -> ClusterSmoke.fingerprint(SparkEntry.queries(q)(spark, sf))).toMap
+    Materialized.clearAll()
+    val forward = run(sample)
+    Materialized.clearAll()
+    val backward = run(sample.reverse)
+    Materialized.clearAll()
+    assert(forward.values.forall(_._1 > 0), forward)
+    assert(forward == backward)
+  }
+
+  test("clearAll() drops driver-side values: the DSIR model is refitted") {
+    val sf = "/root/testdata/sf0.001"
+    val fitted = Selection.dsirModel(spark, sf)
+    assert(Selection.dsirModel(spark, sf) eq fitted)
+    Materialized.clearAll()
+    val refitted = Selection.dsirModel(spark, sf)
+    assert(!(refitted eq fitted))
+    assert(refitted == fitted)
+  }
+
+  /** Every `Materialized.frame(`/`value(` call under `src/main/scala`:
+    * (file:line, the name argument as written). */
+  private def storeCalls(root: Path): Seq[(String, String)] = {
+    val Call = """Materialized\.(?:frame|value)\((.*)""".r.unanchored
+    val NameArg = """^[^()]*?,[^()]*?,\s*(s?"[^"]*")\)""".r.unanchored
+    val walk = Files.walk(root)
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      Call(args) <- Seq(line)
+    } yield s"$f:${i + 1}" -> (args match {
+      case NameArg(name) => name
+      case _ => s"<no name literal: ${line.trim}>"
+    })
+  }
+
+  test("source gate: one keyed store, one literal name per artifact, no other TrieMap") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"${root.toAbsolutePath} is not a directory")
+    val calls = storeCalls(root)
+    assert(calls.size >= 50, calls.mkString("\n"))
+    val unnamed = calls.filter(_._2.startsWith("<"))
+    assert(unnamed.isEmpty, unnamed.mkString("\n", "\n", ""))
+    val reused = calls.groupBy(_._2).filter(_._2.size > 1)
+    assert(reused.isEmpty, reused.values.flatten.mkString("\n", "\n", ""))
+    val walk = Files.walk(root)
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val stray = for {
+      f <- files if f.getFileName.toString != "Materialized.scala"
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("TrieMap") ||
+        """Materialized\.(register|registerClearable|cached)\b""".r.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(stray.isEmpty, stray.mkString("\n", "\n", ""))
   }
 }

@@ -146,6 +146,28 @@ class PlanLintSpec extends SparkTestBase {
     assert(offenders.isEmpty, s"per-token word plans:\n${offenders.mkString("\n")}")
   }
 
+  test("tokenize and combine_per_doc run their Generate inside whole-stage codegen") {
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // the operators one codegen stage fuses: its subtree down to the inputs
+    def stage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case _ => p.children.flatMap(stage)
+    })
+    for (name <- Seq("tokenize", "combine_per_doc")) {
+      val df = built.toMap.apply(name)
+      df.collect()
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val fused = plan.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+      val generates = plan.collect { case g: GenerateExec => g }
+      assert(generates.nonEmpty && generates.forall(g => fused.exists(_ eq g)),
+        s"$name: a Generate outside whole-stage codegen:\n$plan")
+    }
+  }
+
   test("the books plan dedups words, then a collect_list pair on the signature exchange") {
     import java.nio.file.Files
     import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, RegExpReplace, StringDecode, StringSplit}

@@ -97,14 +97,38 @@ class TextFnsSpec extends SparkTestBase {
 
   test("wsTokens, lowerTokens and wsTokenCount split on \\x0B and drop empties") {
     val vt = 0x0B.toChar
-    val texts = Seq(s"a${vt}b c", "  Lead and\ttrail \n", "", "X\u00A0Y z")
+    val texts = Seq(s"a${vt}b c", "  Lead and\ttrail \n", "", "X\u00A0Y z",
+      s" \t$vt\n ", "a  b\n\nc", null)
     val rows = texts.toDF("t")
       .select(wsTokens(col("t")), lowerTokens(col("t")), wsTokenCount(col("t")))
-      .collect().map(r => (r.getSeq[String](0), r.getSeq[String](1), r.getInt(2)))
+      .collect().map(r => (r.getAs[Seq[String]](0), r.getAs[Seq[String]](1), r.get(2)))
     assert(rows.toSeq == Seq(
       (Seq("a", "b", "c"), Seq("a", "b", "c"), 3),
       (Seq("Lead", "and", "trail"), Seq("lead", "and", "trail"), 3),
       (Seq(), Seq(), 0),
-      (Seq("X\u00A0Y", "z"), Seq("x\u00A0y", "z"), 2)))
+      (Seq("X\u00A0Y", "z"), Seq("x\u00A0y", "z"), 2),
+      (Seq(), Seq(), 0),
+      (Seq("a", "b", "c"), Seq("a", "b", "c"), 3),
+      (null, null, null)))
+  }
+
+  // The BPE-ish token and punctuation classes have DuckDB twins for the
+  // same reason. RE2 reads `\s` as [\t\n\f\r ]; each twin, compiled
+  // with that reading, must count what Spark counts with the Java class,
+  // so a twin that writes `\s` again fails here.
+  test("the BPE and punctuation twins count what Spark counts on a\\x0Bb c") {
+    import java.util.regex.Pattern
+    val text = s"a${0x0B.toChar}b c"
+    def re2Count(re: String): Int = {
+      val m = Pattern.compile(re.replace("\\s", "\\t\\n\\f\\r ")).matcher(text)
+      Iterator.continually(m.find()).takeWhile(identity).size
+    }
+    val counts = Seq(text).toDF("t")
+      .select(regexp_count(col("t"), lit(BpeTokenRe)), regexp_count(col("t"), lit(PunctRe)))
+      .head()
+    assert((counts.getInt(0), counts.getInt(1)) == (3, 0))
+    assert((re2Count(SqlBpeTokenRe), re2Count(SqlPunctRe)) == (3, 0))
+    // the emulation does see the drift: the Java classes under RE2 count \x0B
+    assert((re2Count(BpeTokenRe), re2Count(PunctRe)) == (4, 1))
   }
 }
