@@ -96,9 +96,10 @@ object Bbpe {
         .select(col("freq"), col("h"))
       val nWords = base.count()
       // bounded argmax fixpoint over the vocabulary frame — iterative-loop
-      // execution profile (Scale.loopSession, see Dedup.pagerankOn)
-      val merges = Scale.loopSession(spark, nWords) { cs =>
-      var syms = Scale.rebind(cs, base).as[(Long, String)]
+      // execution profile (Scale.loop, see Dedup.pagerankOn)
+      val merges = Scale.loop(spark) { lp =>
+      lp.sized(nWords)
+      var syms = lp.rebind(base).as[(Long, String)]
         .map { case (f, h) => (f, hexSyms(h)) }
       val merges = scala.collection.mutable.ArrayBuffer
         .empty[(Long, String, String, Long)]
@@ -121,7 +122,7 @@ object Bbpe {
           merges += ((round.toLong, l, r, cnt))
           syms = syms.map { case (f, s) =>
             (f, TextAnalysis.mergePairIn(s, l, r)) }
-          if (round % 4 == 0) syms = syms.localCheckpoint(true)
+          if (round % 4 == 0) syms = lp.checkpoint(syms, eager = true)
           round += 1
         }
       }

@@ -79,7 +79,7 @@ object Chat {
   /** Canonical prompt key: the user turns in order, each lowercased /
     * trimmed / whitespace-collapsed, joined on  — then the shared
     * 60-bit md5. Template-level identity, robust to spacing and case. */
-  private def promptKeyCol =
+  private[graft] def promptKeyCol =
     TextFns.md5Long(
       array_join(
         expr("""transform(filter(messages, m -> m.role = 'user'),
@@ -293,7 +293,7 @@ object Chat {
        |  FROM flags)""".stripMargin
 
   val chatDedupSql: String = {
-    val canon = "lower(trim(regexp_replace(content, '\\s+', ' ', 'g')))"
+    val canon = s"lower(trim(regexp_replace(content, '${TextFns.WsClass}+', ' ', 'g')))"
     s"""WITH $TurnsCte,
        |keys AS (
        |  SELECT c.conv_id, c.source,

@@ -267,19 +267,17 @@ object Classify {
       val nFeats = feats0.count()
       // the GD rounds are a bounded fixpoint over the bucketed feature
       // frame — run them under the iterative-loop execution profile
-      // (Scale.loopSession; see Dedup.pagerankOn) and checkpoint each
+      // (Scale.loop; see Dedup.pagerankOn) and checkpoint each
       // round's residuals so the two gradient reads share one compute
-      Scale.loopSession(spark, nFeats, roundLiterals = true) { cs =>
-      val feats = Scale.rebind(cs, feats0).localCheckpoint(false)
-      val ckpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-      ckpts ++= Scale.checkpointRdd(feats)
+      Scale.loop(spark, roundLiterals = true) { lp =>
+      lp.sized(nFeats)
+      val feats = lp.checkpoint(lp.rebind(feats0))
       var w: Map[Long, BigDecimal] =
         ((-1L) +: (0L until LrBuckets.toLong)).map(_ -> BigDecimal(0)).toMap
       // empty corpus: zero weights, zero rounds (a `return` here would be
       // a NonLocalReturnControl throw through the store — uncached)
       for (_ <- 1 to (if (n == 0) 0 else LrRounds)) {
-        val resid = lrResiduals(feats, w).localCheckpoint(false)
-        ckpts ++= Scale.checkpointRdd(resid)
+        val resid = lp.checkpoint(lrResiduals(feats, w))
         // gradient: exact decimal sums over the rounded residuals. ONE
         // collect per round (r14; VERDICT r13 candidate #5): the bias
         // gradient rides the same aggregation as the per-bucket gradients
@@ -300,7 +298,6 @@ object Classify {
           b -> (wb - (LrRate * g / n)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
         }
       }
-      Scale.release(ckpts)
       w
       }
     }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.TextFns._
 import graft.sources.Corpus
 
@@ -566,6 +565,10 @@ object Dedup {
        |   OR ${sqlBp("inter", "nb.n")} >= $ContainmentBp""".stripMargin
 
   // ---- dedup clusters: connected components over the near-dup graph -----
+  /** Scratch-path tag unique to (session instance, corpus dir). */
+  private[operators] def scratchTag(name: String, spark: SparkSession, dir: String): String =
+    s"$name-${(Materialized.sessionKey(spark, dir).hashCode & 0x7fffffff).toHexString}"
+
   /** Near-dup pairs are only half the dedup story: transitive duplicates
     * (A~B, B~C) must land in one cluster so a single representative (the
     * min doc_id) survives. Iterative min-label propagation — each round is
@@ -573,40 +576,6 @@ object Dedup {
     * (tiny for dup clusters). The oracle reaches the same unique fixpoint
     * through a recursive CTE. The result (a tiny doc→component frame) is
     * itself cached per (session, corpus) so survivors reads it for free. */
-  /** Durable finish for an iterative loop: write the FINAL (tiny,
-    * pair-graph-bounded) frame to scratch parquet and serve the persisted
-    * read-back. localCheckpoint lineage is unrecoverable on executor loss,
-    * so before this the finished labels/ranks had NO recompute path once
-    * the round checkpoints were released (the r7/r8 documented caveat);
-    * rooting the result at a file scan survives losing every cached block
-    * for one bounded write. Set `graft.scratchDir` to shared storage
-    * (HDFS/S3) on a real cluster; the default — the driver-local tmp dir —
-    * is exactly as durable as local mode itself. */
-  private[graft] def durableFinish(spark: SparkSession, tag: String,
-      df: DataFrame): DataFrame = {
-    val base = spark.conf.getOption("graft.scratchDir").getOrElse {
-      // ADVICE r9: on a real multi-node cluster the java.io.tmpdir default
-      // is NOT shared storage — executors would commit parquet parts to
-      // their own local disks and the read-back would silently return
-      // partial labels. Fail fast instead of computing wrong data.
-      // local-cluster[...] (the multi-JVM smoke) is single-host, so its
-      // tmpdir IS shared; everything else needs an explicit scratchDir.
-      val master = spark.sparkContext.master
-      require(spark.sparkContext.isLocal || master.startsWith("local-cluster"),
-        s"graft.scratchDir must point at shared storage (HDFS/S3/NFS) when " +
-          s"running on a multi-node cluster (master=$master); the " +
-          "java.io.tmpdir fallback is only correct on a single host")
-      s"${sys.props("java.io.tmpdir")}/graft-scratch-${spark.sparkContext.applicationId}"
-    }
-    val path = s"$base/$tag"
-    df.write.mode("overwrite").parquet(path)
-    spark.read.parquet(path).persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** Scratch-path tag unique to (session instance, corpus dir). */
-  private[operators] def scratchTag(name: String, spark: SparkSession, dir: String): String =
-    s"$name-${(Materialized.sessionKey(spark, dir).hashCode & 0x7fffffff).toHexString}"
-
   def dedupComponents(spark: SparkSession, dir: String): DataFrame =
     Materialized.frame(spark, dir, "dedupComponents") {
       // The pair graph comes pre-materialized — no LSH re-execution here.
@@ -629,21 +598,18 @@ object Dedup {
       // iterative-loop execution profile (see pagerankOn): each round is
       // 3 fixed-shape joins + 1 count — per-exchange AQE planning jobs and
       // 32-way tiny shuffles dominate on a pair-graph-bounded frame
-      Scale.loopSession(spark, nEdges) { cs =>
-      val edges = Scale.rebind(cs, edges0).localCheckpoint(false)
-      val ckpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-      ckpts ++= Scale.checkpointRdd(edges)
-      // localCheckpoint each round: labels is referenced 3× per round, so
+      Scale.loop(spark) { lp =>
+      lp.sized(nEdges)
+      val edges = lp.checkpoint(lp.rebind(edges0))
+      // checkpoint each round: labels is referenced 3× per round, so
       // without lineage truncation the logical plan grows ~3^rounds and
       // planning time explodes (measured 111 s at sf0.1; ~5 s with it).
       // LAZY checkpoints: the convergence count is the materializing
       // action, so each round runs ONE job instead of two (eager
       // checkpoint + count measured 7.4 s for 11 rounds on a 926-edge
       // graph — per-round fixed cost dominates on small graphs)
-      var labels = edges.select(col("src").as("doc")).distinct()
-        .withColumn("lbl", col("doc"))
-        .localCheckpoint(false)
-      ckpts ++= Scale.checkpointRdd(labels)
+      var labels = lp.checkpoint(edges.select(col("src").as("doc")).distinct()
+        .withColumn("lbl", col("doc")))
       var changed = 1L
       var rounds = 0
       // neighbor-min + pointer jumping (lbl := lbl of my lbl) converges in
@@ -656,17 +622,12 @@ object Dedup {
         val stepped = labels.join(nbrMin, Seq("doc"), "left")
           .select(col("doc"), col("lbl").as("old"),
             least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("mid"))
-        val jumped = stepped
+        val jumped = lp.checkpoint(stepped
           .join(labels.select(col("doc").as("j_doc"), col("lbl").as("j_lbl")),
             col("mid") === col("j_doc"), "left")
           .select(col("doc"), col("old"),
-            least(col("mid"), coalesce(col("j_lbl"), col("mid"))).as("lbl"))
-          .localCheckpoint(false)
-        ckpts ++= Scale.checkpointRdd(jumped)
-        val t0 = System.nanoTime()
+            least(col("mid"), coalesce(col("j_lbl"), col("mid"))).as("lbl")))
         changed = jumped.where(col("lbl") =!= col("old")).count()
-        if (sys.env.contains("GRAFT_DEBUG_CC"))
-          System.err.println(s"[cc] round=$rounds changed=$changed ms=${(System.nanoTime() - t0) / 1000000}")
         labels = jumped.select("doc", "lbl")
         rounds += 1
       }
@@ -676,17 +637,14 @@ object Dedup {
       if (changed > 0)
         throw new IllegalStateException(
           s"dedupComponents did not converge after $rounds rounds (changed=$changed)")
-      // Durably finish (scratch parquet + persisted read-back), and only
-      // then drop every round's checkpoint blocks — including the last
-      // round's, which the durable copy replaces. This both returns
-      // O(rounds × |graph|) of block-manager storage that clearAll() could
-      // never reach AND leaves the labels recomputable from the file scan
-      // even if every cached block is lost (DedupSpec locks the recompute).
-      val result = durableFinish(spark, tag,
+      // Durably finish; the loop then drops every round's checkpoint —
+      // including the last round's, which the durable copy replaces. This
+      // both returns O(rounds × |graph|) of block-manager storage that
+      // clearAll() could never reach AND leaves the labels recomputable
+      // from the file scan even if every cached block is lost (DedupSpec
+      // locks the recompute).
+      lp.finish(tag,
         labels.select(col("doc").as("doc_id"), col("lbl").as("component")))
-      result.count()
-      Scale.release(ckpts)
-      result
       }
   }
   val dedupComponentsSql: String =
@@ -740,82 +698,71 @@ object Dedup {
   val PrDamp = 0.85
 
   /** The PR loop over an explicit (src, dst) edge frame — factored out so
-    * the spec can drive it with a hand-built graph. Every node must appear
-    * as a src (symmetrize first): then out-degrees are ≥ 1 and no mass
-    * dangles. */
-  /** `nodes`: optional one-column ("src") node universe. Default (None,
-    * the dup-graph path) derives nodes from edge sources — correct there
+    * the spec can drive it with a hand-built graph. Default (undirected,
+    * the dup-graph path): nodes are the edge sources — correct there
     * because the near-dup graph is symmetrized, so every node has
-    * out-edges. A DIRECTED graph (the crawl link graph) must pass the
-    * full src∪dst universe or pure-sink nodes would get no rank row;
-    * sinks keep out-degree 0, contribute nothing, and their teleport mass
-    * simply vanishes (the standard dangling-mass-dropped simplification —
-    * ranks are comparable, not a stochastic-matrix fixpoint; pinned). */
+    * out-edges and no mass dangles. `directed` (the crawl link graph):
+    * nodes are src∪dst, or pure-sink nodes would get no rank row; sinks
+    * keep out-degree 0, contribute nothing, and their teleport mass simply
+    * vanishes (the standard dangling-mass-dropped simplification — ranks
+    * are comparable, not a stochastic-matrix fixpoint; pinned). An empty
+    * edge frame gives 0 rows. */
   private[graft] def pagerankOn(edges: DataFrame,
       tag: String = s"pagerank-adhoc-${java.util.UUID.randomUUID()}",
-      nodes: Option[DataFrame] = None): DataFrame = {
-    val spark = edges.sparkSession
+      directed: Boolean = false): DataFrame =
+    Scale.loop(edges.sparkSession) { lp =>
     // checkpoint the edge frame before anything reads it: the callers'
     // edge lineages re-parse their source per action (the WARC fixture
     // parse measured ~1 s/scan), and this function reads edges from five
     // places (degrees, two counts, the loop rebind, the final join)
-    val e0 = edges.localCheckpoint(false)
+    val e0 = lp.checkpoint(edges)
     val outDeg = e0.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // deg is also checkpointed up front: the optional `nodes` universe
-    // carries the caller's source lineage too, and deg is read four times
-    val deg0 = (nodes match {
-      case None => outDeg
-      case Some(ns) => ns.select(col("src")).distinct()
+    // deg is read four times: checkpointed up front too
+    val deg0 = lp.checkpoint(
+      if (!directed) outDeg
+      else e0.select(col("src")).union(e0.select(col("dst").as("src")))
+        .distinct()
         .join(outDeg, Seq("src"), "left")
-        .select(col("src"), coalesce(col("deg"), lit(0L)).as("deg"))
-    }).localCheckpoint(false)
-    val ckpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    ckpts ++= Scale.checkpointRdd(e0)
-    ckpts ++= Scale.checkpointRdd(deg0)
+        .select(col("src"), coalesce(col("deg"), lit(0L)).as("deg")))
     val n = deg0.count()
     if (n == 0)
-      return deg0.select(col("src").as("doc_id"), col("deg").as("degree"),
-        lit(0.0).as("pr"))
-    val nEdges = e0.count()
-    // the loop's fixed-shape rounds run under the iterative-loop execution
-    // profile (Scale.loopSession): on a bounded graph, AQE's per-exchange
-    // planning jobs are the dominant cost of every round (measured 161
-    // jobs / 21 s wall for a 10-round loop over a 5-node fixture graph)
-    Scale.loopSession(spark, math.max(n, nEdges)) { cs =>
-      val deg = Scale.rebind(cs, deg0).localCheckpoint(false)
-      val edgesW = Scale.rebind(cs, e0).join(deg.where(col("deg") > 0), "src")
-        .localCheckpoint(false)
-      ckpts ++= Scale.checkpointRdd(deg)
-      ckpts ++= Scale.checkpointRdd(edgesW)
-      var ranks = deg.select(col("src").as("doc"), lit(1.0 / n).as("pr"))
-        .localCheckpoint(false)
-      ckpts ++= Scale.checkpointRdd(ranks)
+      emptyLike(deg0.select(col("src").as("doc_id"), col("deg").as("degree"),
+        lit(0.0).as("pr")))
+    else {
+      // the loop's fixed-shape rounds run under the iterative-loop
+      // execution profile (Scale.loop): on a bounded graph, AQE's
+      // per-exchange planning jobs are the dominant cost of every round
+      // (measured 161 jobs / 21 s wall for a 10-round loop over a 5-node
+      // fixture graph)
+      lp.sized(math.max(n, e0.count()))
+      val deg = lp.checkpoint(lp.rebind(deg0))
+      val edgesW = lp.checkpoint(lp.rebind(e0).join(deg.where(col("deg") > 0), "src"))
+      var ranks = lp.checkpoint(deg.select(col("src").as("doc"), lit(1.0 / n).as("pr")))
       for (_ <- 1 to PrRounds) {
         val contrib = edgesW
           .join(ranks, col("src") === col("doc"))
           .groupBy(col("dst"))
           .agg(sum(col("pr") / col("deg")).as("inflow"))
-        ranks = deg.select(col("src").as("doc"))
+        ranks = lp.checkpoint(deg.select(col("src").as("doc"))
           .join(contrib, col("doc") === col("dst"), "left")
           .select(col("doc"),
             (lit((1.0 - PrDamp) / n)
-              + lit(PrDamp) * coalesce(col("inflow"), lit(0.0))).as("pr"))
-          .localCheckpoint(false)
-        ckpts ++= Scale.checkpointRdd(ranks)
+              + lit(PrDamp) * coalesce(col("inflow"), lit(0.0))).as("pr")))
       }
-      // Same release discipline as dedupComponents: durable finish first
-      // (scratch parquet + persisted read-back — the ranks keep a recompute
-      // path after the round checkpoints are freed), then drop the blocks.
-      // Finished via the PARENT session so readers keep its adaptive conf.
-      val out = durableFinish(spark, tag,
+      // Same finish as dedupComponents: the ranks keep a recompute path
+      // after the loop frees the round checkpoints.
+      lp.finish(tag,
         ranks.join(deg, col("doc") === col("src"))
           .select(col("doc").as("doc_id"), col("deg").as("degree"),
             round(col("pr"), 6).cast("decimal(14,6)").cast("double").as("pr")))
-      out.count()
-      Scale.release(ckpts)
-      out
     }
-  }
+    }
+
+  /** A 0-row frame with `df`'s schema that reads nothing — what a loop
+    * returns for an empty input instead of a frame over its checkpoints. */
+  private def emptyLike(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), df.schema)
 
   /** HITS (Kleinberg) hubs-and-authorities over a directed edge frame —
     * PageRank's complement: authority rewards being pointed at BY good
@@ -828,60 +775,49 @@ object Dedup {
     * rows. Scale shape: node-grain frames only — each half-round is ONE
     * join + ONE agg on the edge frame plus a 1-row L1 sum (the only
     * driver-side value, the pagerankOn bounded-fixpoint discipline);
-    * rounds localCheckpoint so lineage stays flat, blocks freed after the
-    * durable finish. */
+    * rounds checkpoint so lineage stays flat, freed after the durable
+    * finish. An empty edge frame gives 0 rows. */
   val HitsRounds = 8
-  private[graft] def hitsOn(edges: DataFrame, tag: String): DataFrame = {
-    val spark = edges.sparkSession
-    val e0 = edges.select(col("src"), col("dst")).localCheckpoint(false)
-    val nodes0 = e0.select(col("src"))
-      .union(e0.select(col("dst").as("src"))).distinct()
-      .select(col("src").as("node")).localCheckpoint(false)
-    val n = nodes0.count()
-    if (n == 0)
-      return nodes0.select(col("node").as("domain"),
-        lit(0L).as("out_degree"), lit(0L).as("in_degree"),
-        lit(0.0).as("hub"), lit(0.0).as("auth"))
-    val nEdges = e0.count()
+  private[graft] def hitsOn(edges: DataFrame, tag: String): DataFrame =
     // iterative-loop execution profile (see pagerankOn): 2 collects + 2
     // checkpoints per round make HITS even more round-trip-bound than PR
-    Scale.loopSession(spark, math.max(n, nEdges), roundLiterals = true) { cs =>
-    val e = Scale.rebind(cs, e0).localCheckpoint(false)
-    val nodes = Scale.rebind(cs, nodes0).localCheckpoint(false)
-    val ckpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    ckpts ++= Scale.checkpointRdd(e)
-    ckpts ++= Scale.checkpointRdd(nodes)
-    ckpts ++= Scale.checkpointRdd(e0)
-    ckpts ++= Scale.checkpointRdd(nodes0)
-    var hub = nodes.select(col("node"), lit(1.0 / n).as("hub"))
-      .localCheckpoint(false)
-    ckpts ++= Scale.checkpointRdd(hub)
+    Scale.loop(edges.sparkSession, roundLiterals = true) { lp =>
+    val e0 = lp.checkpoint(edges.select(col("src"), col("dst")))
+    val nodes0 = lp.checkpoint(e0.select(col("src"))
+      .union(e0.select(col("dst").as("src"))).distinct()
+      .select(col("src").as("node")))
+    val n = nodes0.count()
+    if (n == 0)
+      emptyLike(nodes0.select(col("node").as("domain"),
+        lit(0L).as("out_degree"), lit(0L).as("in_degree"),
+        lit(0.0).as("hub"), lit(0.0).as("auth")))
+    else {
+    lp.sized(math.max(n, e0.count()))
+    val e = lp.checkpoint(lp.rebind(e0))
+    val nodes = lp.checkpoint(lp.rebind(nodes0))
+    var hub = lp.checkpoint(nodes.select(col("node"), lit(1.0 / n).as("hub")))
     var auth = nodes.select(col("node"), lit(1.0 / n).as("auth"))
     for (_ <- 1 to HitsRounds) {
       val rawAuth = e.join(hub, col("src") === col("node"))
         .groupBy(col("dst")).agg(sum(col("hub")).as("raw"))
       val aSum = rawAuth.agg(sum(col("raw")).as("s"))
         .collect().headOption.map(_.getDouble(0)).getOrElse(1.0)
-      auth = nodes
+      auth = lp.checkpoint(nodes
         .join(rawAuth, col("node") === col("dst"), "left")
         .select(col("node"),
-          (coalesce(col("raw"), lit(0.0)) / lit(aSum)).as("auth"))
-        .localCheckpoint(false)
-      ckpts ++= Scale.checkpointRdd(auth)
+          (coalesce(col("raw"), lit(0.0)) / lit(aSum)).as("auth")))
       val rawHub = e.join(auth, col("dst") === col("node"))
         .groupBy(col("src")).agg(sum(col("auth")).as("raw"))
       val hSum = rawHub.agg(sum(col("raw")).as("s"))
         .collect().headOption.map(_.getDouble(0)).getOrElse(1.0)
-      hub = nodes
+      hub = lp.checkpoint(nodes
         .join(rawHub, col("node") === col("src"), "left")
         .select(col("node"),
-          (coalesce(col("raw"), lit(0.0)) / lit(hSum)).as("hub"))
-        .localCheckpoint(false)
-      ckpts ++= Scale.checkpointRdd(hub)
+          (coalesce(col("raw"), lit(0.0)) / lit(hSum)).as("hub")))
     }
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("out_degree"))
     val inDeg = e.groupBy(col("dst")).agg(count(lit(1)).as("in_degree"))
-    val out = durableFinish(spark, tag,
+    lp.finish(tag,
       nodes
         .join(outDeg, col("node") === col("src"), "left").drop("src")
         .join(inDeg, col("node") === col("dst"), "left").drop("dst")
@@ -896,11 +832,8 @@ object Dedup {
             .as("hub"),
           round(col("auth"), 6).cast("decimal(14,6)").cast("double")
             .as("auth")))
-    out.count()
-    Scale.release(ckpts)
-    out
     }
-  }
+    }
 
   def dupPagerank(spark: SparkSession, dir: String): DataFrame =
     // the rank table is a per-corpus artifact like the component labels:

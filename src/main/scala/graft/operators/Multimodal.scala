@@ -563,7 +563,7 @@ object Multimodal {
       Dedup.componentsOfPairs(spark,
         dedupImage(spark, dir).select(col("doc_a"), col("doc_b")),
         // session-scoped tag (review r12): a constant path would let two
-        // sessions' durableFinish overwrites race each other's
+        // sessions' durable-finish overwrites race each other's
         // recompute-from-scratch reads
         Dedup.scratchTag("imgcomponents", spark, dir)))
       .orderBy(col("doc_id"))

@@ -431,7 +431,7 @@ object Similarity {
     // cluster_purity all quantize against the same 16-row frame (at scale:
     // train once, broadcast everywhere).
     // r14: the 2-round Lloyd is a bounded fixpoint — it runs under the
-    // iterative-loop execution profile (Scale.loopSession, the pagerankOn
+    // iterative-loop execution profile (Scale.loop, the pagerankOn
     // discipline: AQE planning jobs and 32-way tiny exchanges dominated
     // the training at bench scale), and the ≤IvfK-row result bounded-
     // collects back to the PARENT session as a LocalRelation, so every
@@ -440,18 +440,16 @@ object Similarity {
     Materialized.frame(spark, dir, "ivfCentroids") {
       val e0 = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
       val n = e0.count()
-      val (schema, rows) = Scale.loopSession(spark, n) { cs =>
-        val e = Scale.rebind(cs, e0).localCheckpoint(false)
-        val eRdd = Scale.checkpointRdd(e)
+      val (schema, rows) = Scale.loop(spark) { lp =>
+        lp.sized(n)
+        val e = lp.checkpoint(lp.rebind(e0))
         val seeds = e
           .orderBy(graft.functions.TextFns.md5Long(col("vec_id").cast("string")),
             col("vec_id"))
           .limit(IvfK)
           .select(col("vec_id").as("cid"), col("embedding").as("c"))
         val trained = lloydRound(e, lloydRound(e, seeds))
-        val out = (trained.schema, trained.collect().toSeq)
-        Scale.release(eRdd)
-        out
+        (trained.schema, trained.collect().toSeq)
       }
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
     }
@@ -1084,9 +1082,9 @@ object Similarity {
     Materialized.frame(spark, dir, "pqCodebooks") {
       val e0 = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
       val n = e0.count()
-      val (schema, rows) = Scale.loopSession(spark, n * PqM) { cs =>
-        val e = Scale.rebind(cs, e0).localCheckpoint(false)
-        val eRdd = Scale.checkpointRdd(e)
+      val (schema, rows) = Scale.loop(spark) { lp =>
+        lp.sized(n * PqM)
+        val e = lp.checkpoint(lp.rebind(e0))
         val seeds = e
           .orderBy(graft.functions.TextFns.md5Long(col("vec_id").cast("string")),
             col("vec_id"))
@@ -1094,28 +1092,12 @@ object Similarity {
           .select(col("vec_id").as("cid"), col("embedding"))
         val seedBooks = subVecs(seeds.withColumnRenamed("cid", "vec_id"))
           .select(col("m"), col("vec_id").as("cid"), col("sv").as("c"))
-        val sv = subVecs(e).localCheckpoint(false)
-        val svRdd = Scale.checkpointRdd(sv)
+        val sv = lp.checkpoint(subVecs(e))
         val trained = pqLloyd(sv, pqLloyd(sv, seedBooks))
-        val out = (trained.schema, trained.collect().toSeq)
-        Scale.release(eRdd ++ svRdd)
-        out
+        (trained.schema, trained.collect().toSeq)
       }
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
     }
-
-  /** Rows-derived partition count for a persisted per-corpus artifact —
-    * the loopSession sizing rule applied to cached frames: a bench-scale
-    * corpus otherwise pins 32 near-empty cache partitions that every
-    * consumer re-fans per pass (pq_quantize read 0.28 s at 32 cores vs
-    * 0.09 s at 8 before this); large inputs keep the session sizing. */
-  private def sizedParts(spark: SparkSession, rows: Long): Int = {
-    val perPart = spark.conf.getOption("graft.loopRowsPerPartition")
-      .flatMap(_.toLongOption).getOrElse(Scale.LoopRowsPerPartition)
-    val parentP = spark.sessionState.conf.numShufflePartitions
-    math.max(1L, math.min(parentP.toLong,
-      rows / math.max(perPart, 1L) + 1L)).toInt
-  }
 
   /** Materialized codes table (vec_id, m, cid, dist): the PQ INDEX — at
     * 100 TB this is the parquet artifact an encode job writes once and
@@ -1127,7 +1109,7 @@ object Similarity {
       val n = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding").count()
       pqAssign(subVecs(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")),
           pqCodebooks(spark, dir))
-        .coalesce(sizedParts(spark, n * PqM))
+        .coalesce(Scale.loopParts(spark, n * PqM))
     }
 
   def pqQuantize(spark: SparkSession, dir: String): DataFrame =
@@ -1296,7 +1278,7 @@ object Similarity {
         .join(argminCid(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding"),
             ivfCentroids(spark, dir), Seq.empty)
           .withColumnRenamed("cid", "cell"), "vec_id")
-        .coalesce(sizedParts(spark, n * PqM))
+        .coalesce(Scale.loopParts(spark, n * PqM))
     }
 
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
@@ -2024,11 +2006,12 @@ object Similarity {
     val dim = Dedup.Dim
     // the 13 matvec passes each embed a fresh literal block (the rotated
     // V), so every round recompiles its codegen fragments and replans
-    // under AQE — the iterative-loop profile (Scale.loopSession, see
-    // Dedup.pagerankOn) runs them interpreted on a size-derived layout
+    // under AQE — the iterative-loop profile (Scale.loop, see
+    // Dedup.pagerankOn) runs them on a size-derived layout
     val nVecs = e0.count()
-    Scale.loopSession(spark, nVecs * (dim + 1L)) { cs =>
-    val e = Scale.rebind(cs, e0).localCheckpoint(false)
+    Scale.loop(spark) { lp =>
+    lp.sized(nVecs * (dim + 1L))
+    val e = lp.checkpoint(lp.rebind(e0))
     // mean + count: one dim-keyed exchange
     val meanRows = e.select(posexplode(col("embedding")).as(Seq("pos", "v")))
       .groupBy("pos").agg(sum(col("v").cast("double")).as("s"),

@@ -148,56 +148,20 @@ object SuffixRepeats {
       get(col("cps"), col("pos") + lit(from + i)).cast("long") * lit(1L << shift)
     }.reduce(_ + _)
 
-  /** Run `body` with adaptive execution off, in a CLONED session handed to
-    * the body. Construction queries are fixed-shape (np-partition range
-    * shuffle + gpos equi-join on uniform keys): there is no skew or size
-    * surprise for AQE to adapt to, but its stage-by-stage materialization
-    * costs a driver planning round-trip per exchange — ~L·stages
-    * round-trips across the doubling loop, pure overhead on an indexing
-    * job whose plans are known upfront.
-    *
-    * Why a clone (ADVICE r9): toggling AQE on the SHARED session conf
-    * leaked to concurrent queries on other threads for the whole (long)
-    * construction, and two concurrent constructions could race the
-    * save/restore. The clone shares the SparkContext, block manager and
-    * cache but owns an isolated SQLConf; the parent's runtime conf is
-    * copied over so construction sees the same shuffle sizing. After
-    * construction the clone's AQE is restored to the parent's EFFECTIVE
-    * setting (sessionState.conf — not a hardcoded default, ADVICE r10) so
-    * READER queries over the escaped level frames (which belong to the
-    * clone via `df.sparkSession`) keep the session's adaptive behavior.
-    *
-    * Conf-snapshot caveat: the clone copies the parent's runtime conf
-    * ONCE, here. Runtime conf the parent changes later (e.g. shuffle
-    * partitions) never reaches reader queries over the escaped level
-    * frames — they keep the values in force when the build started. */
-  private def withoutAqe[A](spark: SparkSession, dir: String)(
-      body: SparkSession => A): A = {
-    val key = "spark.sql.adaptive.enabled"
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try s.conf.set(k, v)
-      catch { case _: Exception => () } // static/immutable entries
-    }
-    s.conf.set(key, "false")
-    // With AQE off nothing coalesces the fixed shuffle-partition count, so
-    // derive it from the corpus's char mass (the char frame is one row per
-    // codepoint): a bench-scale corpus otherwise fans every level's sort
-    // into hundreds of near-empty tasks (measured 1.5k tasks over a 1.5M
-    // char corpus), while a 100 TB corpus keeps the session's sizing.
-    val chars = Corpus.table(spark, dir, "documents")
+  /** The corpus's char count — the row count of the char frame, which
+    * sizes the construction loops ([[Scale.loop]]). Construction queries
+    * are fixed-shape (np-partition range shuffle + gpos equi-join on
+    * uniform keys): below [[Scale.LoopAqeOffMaxRows]] chars there is no
+    * skew or size surprise for AQE to adapt to, but its stage-by-stage
+    * materialization would cost a driver planning round-trip per exchange
+    * — ~L·stages round-trips across the doubling loop — and the loop's
+    * char-derived partition count keeps a bench-scale corpus from fanning
+    * every level's sort into hundreds of near-empty tasks (measured 1.5k
+    * tasks over a 1.5M char corpus). */
+  private def corpusChars(spark: SparkSession, dir: String): Long =
+    Corpus.table(spark, dir, "documents")
       .agg(coalesce(sum(length(col("text")).cast("long")), lit(0L)))
       .collect()(0).getLong(0)
-    val parentP = spark.sessionState.conf.numShufflePartitions
-    val perPart = spark.conf.getOption("graft.loopRowsPerPartition")
-      .flatMap(_.toLongOption).getOrElse(Scale.LoopRowsPerPartition)
-    val p = math.max(1L, math.min(parentP.toLong,
-      chars / math.max(perPart, 1L) + 1L)).toInt
-    s.conf.set("spark.sql.shuffle.partitions", p.toString)
-    try body(s)
-    finally s.conf.set(key,
-      spark.sessionState.conf.adaptiveExecutionEnabled.toString)
-  }
 
   /** Census one packed-key frame (doc_id, k): the spectrum numbers for a
     * block length whose windows fit a single long — a two-level hash
@@ -225,8 +189,8 @@ object SuffixRepeats {
     * level-cutoff rule; the pack width adapts to the corpus's widest
     * codepoint, see [[CensusChain]]). */
   private[operators] def censuses(spark: SparkSession, dir: String): CensusChain =
-    Materialized.value(spark, dir, "censuses")(withoutAqe(spark, dir) { cs =>
-      val base = charFrame(cs, dir)
+    Materialized.value(spark, dir, "censuses")(Scale.loop(spark) { lp =>
+      val base = charFrame(lp.sized(corpusChars(spark, dir)), dir)
       val (c1, maxCp) =
         packedCensus(1L, base.select(col("doc_id"), col("ch").as("k")))
       val bits = 64 - java.lang.Long.numberOfLeadingZeros(math.max(maxCp, 1L))
@@ -267,8 +231,7 @@ object SuffixRepeats {
         spark.conf.getOption("graft.scratchDir").isDefined
     if (!enabled) None
     else {
-      val base = spark.conf.getOption("graft.scratchDir").getOrElse(
-        s"${sys.props("java.io.tmpdir")}/graft-scratch-${spark.sparkContext.applicationId}")
+      val base = Scale.scratchBase(spark)
       // tag = md5 of the FULL corpus path PLUS a content fingerprint of
       // the corpus files (ADVICE r10): the path alone let an in-place
       // rewrite of documents.parquet silently resume from stale levels
@@ -332,7 +295,7 @@ object SuffixRepeats {
 
   /** Finish one constructed level: with checkpointing on, the active set
     * is written to scratch and the level REROOTS at the file scan (the
-    * durableFinish discipline) — the sort cache is released immediately,
+    * durable-finish discipline) — the sort cache is released immediately,
     * so an executor loss recomputes from a bounded parquet read, never
     * from the corpus; without, the level stays the cache-backed frame. */
   private def finishLevel(spark: SparkSession, ckpt: Option[String],
@@ -387,12 +350,13 @@ object SuffixRepeats {
     Materialized.value(spark, dir, "levels")(fit = {
       val chain = censuses(spark, dir)
       if (!chain.fullChain) Seq.empty
-      else withoutAqe(spark, dir) { cs =>
+      else Scale.loop(spark) { lp =>
+        val cs = lp.sized(corpusChars(spark, dir))
         val ckpt = levelCkptBase(spark, dir)
         val out = scala.collection.mutable.ListBuffer.empty[Level]
         ckpt.foreach(base =>
           out ++= loadCompletedLevels(cs, base, chain.rankStart))
-        // r14: each level's input is lazily localCheckpointed before
+        // r14: each level's input is lazily checkpointed before
         // RangeRank — repartitionByRange EVALUATES its child twice (the
         // range-boundary sampling pass, then the shuffle write), so
         // without the checkpoint every level re-ran its k-shift join
@@ -403,14 +367,13 @@ object SuffixRepeats {
           val base = charFrame(cs, dir)
           val block = chain.rankStart
           val half = (block / 2).toInt
-          val startIn = base.where(col("pos") + block <= col("doc_len"))
+          val startIn = lp.checkpoint(base.where(col("pos") + block <= col("doc_len"))
             .select(col("gpos"), col("doc_id"), col("pos"), col("doc_len"),
               packKey(chain.bits, 0, half).as("k1"),
-              packKey(chain.bits, half, half).as("k2"))
-            .localCheckpoint(false)
+              packKey(chain.bits, half, half).as("k2")))
           out += finishLevel(cs, ckpt, block,
             RangeRank.rankLevel(startIn, numKeys = 2, block = block))
-          Scale.release(Scale.checkpointRdd(startIn))
+          lp.release(startIn)
         }
         while (out.last.hasDup && out.last.block < MaxBlock) {
           val Level(block, t, _, _) = out.last
@@ -422,20 +385,19 @@ object SuffixRepeats {
           // at 2*block and the filter below drops it anyway); rows invalid at
           // the doubled length can never be reported or serve a valid
           // successor, so they exit before the sort
-          val paired = t.join(shifted, Seq("gpos"), "left")
+          val paired = lp.checkpoint(t.join(shifted, Seq("gpos"), "left")
             .where(col("pos") + lit(2 * block) <= col("doc_len"))
             .select(col("gpos"), col("doc_id"), col("pos"), col("doc_len"),
               col("rank"),
               coalesce(col("rank2"), -(col("gpos") + lit(block)) - lit(2))
-                .as("rank2"))
-            .localCheckpoint(false)
+                .as("rank2")))
           out += finishLevel(cs, ckpt, block * 2,
             RangeRank.rankLevel(paired, numKeys = 2, block = block * 2))
-          Scale.release(Scale.checkpointRdd(paired))
+          lp.release(paired)
         }
         out.toSeq
       }
-    }, release = (lv: Seq[Level]) => Scale.release(lv.map(_.storage)))
+    }, release = (lv: Seq[Level]) => lv.foreach(_.storage.unpersist(blocking = false)))
 
   /** The repeat spectrum: one row per doubling level. All-BIGINT. */
   def suffixRepeats(spark: SparkSession, dir: String): DataFrame =

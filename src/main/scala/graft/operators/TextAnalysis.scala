@@ -1319,9 +1319,10 @@ object TextAnalysis {
       .select(col("n").as("freq"), split(col("term"), "").as("syms"))
     val nWords = base.count()
     // bounded argmax fixpoint over the vocabulary frame — iterative-loop
-    // execution profile (Scale.loopSession, see Dedup.pagerankOn)
-    val merges = Scale.loopSession(spark, nWords) { cs =>
-    var syms = Scale.rebind(cs, base).as[(Long, IndexedSeq[String])]
+    // execution profile (Scale.loop, see Dedup.pagerankOn)
+    val merges = Scale.loop(spark) { lp =>
+    lp.sized(nWords)
+    var syms = lp.rebind(base).as[(Long, IndexedSeq[String])]
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var round = 1
     var exhausted = false
@@ -1344,7 +1345,7 @@ object TextAnalysis {
         merges += ((round.toLong, l, r, cnt))
         syms = syms.map { case (f, s) => (f, mergePairIn(s, l, r)) }
         // truncate the growing per-round map lineage (components pattern)
-        if (round % 4 == 0) syms = syms.localCheckpoint(true)
+        if (round % 4 == 0) syms = lp.checkpoint(syms, eager = true)
         round += 1
       }
     }

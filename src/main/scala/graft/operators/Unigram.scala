@@ -158,10 +158,10 @@ object Unigram {
       val wf0 = wordFreq(spark, dir)
       val nWords = wf0.count()
       // bounded EM fixpoint over the vocabulary frame — iterative-loop
-      // execution profile (Scale.loopSession, see Dedup.pagerankOn)
-      Scale.loopSession(spark, nWords) { cs =>
-      val wf = Scale.rebind(cs, wf0).as[(String, Long)]
-        .localCheckpoint(false)
+      // execution profile (Scale.loop, see Dedup.pagerankOn)
+      Scale.loop(spark) { lp =>
+      lp.sized(nWords)
+      val wf = lp.checkpoint(lp.rebind(wf0).as[(String, Long)])
       // seed inventory (bounded collect: ≤ UnigramSeedK + |charset| rows)
       val seed = seedCounts(spark, dir)
       val chars = seed.where(length(col("piece")) === 1)

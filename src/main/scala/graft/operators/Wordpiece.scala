@@ -161,12 +161,13 @@ object Wordpiece {
       val wf = wordFreq(spark, dir)
       val nWords = wf.count()
       // bounded argmax fixpoint over the vocabulary frame — iterative-loop
-      // execution profile (Scale.loopSession, see Dedup.pagerankOn): each
+      // execution profile (Scale.loop, see Dedup.pagerankOn): each
       // round is one fixed-shape score+argmax job whose AQE planning
       // round-trips dominate on a vocabulary-sized frame
-      Scale.loopSession(spark, nWords) { cs =>
+      Scale.loop(spark) { lp =>
+      val cs = lp.sized(nWords)
       import cs.implicits._
-      var syms = Scale.rebind(cs, wf).as[(String, Long)]
+      var syms = lp.rebind(wf).as[(String, Long)]
         .map { case (w, f) => (f, wpSyms(w)) }
       // initial inventory (bounded collect: ≤ 2·|charset| rows)
       val charInv = syms.toDF("freq", "syms")
@@ -189,7 +190,7 @@ object Wordpiece {
           merges += ((round.toLong, l, r, cnt, sc))
           syms = syms.map { case (f, s) => (f, mergeWpIn(s, l, r)) }
           // truncate per-round map lineage (the BPE/components pattern)
-          if (round % 4 == 0) syms = syms.localCheckpoint(true)
+          if (round % 4 == 0) syms = lp.checkpoint(syms, eager = true)
           round += 1
         }
       }

@@ -784,17 +784,13 @@ object WarcSource {
     * WarcSourceSpec. */
   def domainPagerank(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
-    // checkpoint the distinct edge set before fanning out: `nodes` reads
-    // it twice and pagerankOn several more times — without this every
-    // action re-runs the WARC parse + link extraction
+    // pagerankOn checkpoints the edge set before fanning out: without that
+    // every action re-runs the WARC parse + link extraction
     val edges = linkGraph(docs)
       .where(col("src_domain") =!= col("dst_domain"))
       .select(col("src_domain").as("src"), col("dst_domain").as("dst"))
       .distinct()
-      .localCheckpoint(false)
-    val nodes = edges.select(col("src"))
-      .union(edges.select(col("dst").as("src")))
-    graft.operators.Dedup.pagerankOn(edges, nodes = Some(nodes))
+    graft.operators.Dedup.pagerankOn(edges, directed = true)
       .select(col("doc_id").as("domain"), col("degree").as("out_degree"),
         col("pr"))
   }

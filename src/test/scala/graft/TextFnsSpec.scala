@@ -131,4 +131,26 @@ class TextFnsSpec extends SparkTestBase {
     // the emulation does see the drift: the Java classes under RE2 count \x0B
     assert((re2Count(BpeTokenRe), re2Count(PunctRe)) == (4, 1))
   }
+
+  // chat_dedup's key collapses whitespace runs (Java `\s` in Spark); the
+  // DuckDB twin's collapse class, read under RE2, must collapse the same
+  // runs, \x0B included, or a vertical tab splits one prompt into two keys.
+  test("chat_dedup's prompt key and its twin agree on Hi\\x0Bthere  you") {
+    import java.util.regex.Pattern
+    val text = s"Hi${0x0B.toChar}there  you"
+    val Collapse = """regexp_replace\(content, '([^']*)', ' ', 'g'\)""".r.unanchored
+    val cls = graft.operators.Chat.chatDedupSql match {
+      case Collapse(c) => c
+      case _ => fail("no whitespace collapse in chatDedupSql")
+    }
+    // RE2 reads `\s` as [\t\n\f\r ]; DuckDB's trim strips spaces only
+    val twin = Pattern.compile(cls.replace("\\s", "[\\t\\n\\f\\r ]")).matcher(text)
+      .replaceAll(" ").replaceAll("^ +| +$", "").toLowerCase
+    assert(twin == "hi there you")
+    val keys = Seq(text).toDF("content")
+      .select(array(struct(lit("user").as("role"), col("content"))).as("messages"))
+      .select(graft.operators.Chat.promptKeyCol, md5Long(lit(twin)))
+      .head()
+    assert(keys.getLong(0) == keys.getLong(1))
+  }
 }

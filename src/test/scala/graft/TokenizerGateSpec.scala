@@ -42,7 +42,7 @@ class TokenizerGateSpec extends AnyFunSuite {
       """  |    CAST(len(regexp_extract_all(text, '[^\\p{L}\\p{N}\\s]')) AS BIGINT) AS n_punct""")
     assert(inline.filter(copiesIn(_).isEmpty).isEmpty)
     val otherRules = Seq(
-      """val canon = "lower(trim(regexp_replace(content, '\\s+', ' ', 'g')))"""",
+      """val canon = s"lower(trim(regexp_replace(content, '${TextFns.WsClass}+', ' ', 'g')))"""",
       """  |                                          '\\s+', ' '))))""",
       """  "<[^>]*>", " ")), "\\s+", " ")).as("anchor"))""",
       """  regexp_replace(c, "^\\s+|\\s+$", "")""",
