@@ -19,12 +19,13 @@ import graft.sources.Corpus
   * cannot substring), makes merges plain string concatenation, and both
   * engines' `hex()` emit identical uppercase digits.
   *
-  * Scale: the reference discipline of the char-level loop
-  * (TextAnalysis.bpeMerges) — train on the DISTINCT-word frequency table
+  * Training and serving are the char-level family's own code with a
+  * byte symbolizer: the one pair-merge trainer
+  * ([[TextAnalysis.trainMerges]]) over the DISTINCT-word frequency table
   * (vocabulary-sized, ~10⁷ rows at 100 TB; the corpus explode behind it
-  * runs once, materialized), one bounded argmax collect per round,
-  * serving encode once per distinct word then a token-keyed equi-join
-  * back to corpus grain. */
+  * runs once, materialized), and encode once per distinct word, then the
+  * one token-keyed rollup back to corpus grain
+  * ([[TextAnalysis.encodeRollup]]). */
 object Bbpe {
 
   /** Distinct raw-word frequency table with the word's UTF-8 hex string —
@@ -81,57 +82,16 @@ object Bbpe {
   private[operators] def hexSyms(h: String): IndexedSeq[String] =
     h.grouped(2).toIndexedSeq
 
-  /** Driver-contract query (rows-only BY DESIGN — the same iterative
-    * data-dependent argmax fixpoint as `bpe_merges`, not expressible as
-    * one SQL query): the ordered byte-level merge table. Each round is one
-    * aggregation over the vocabulary-sized symbol frame + a ONE-row
-    * argmax collect; ties break (count desc, left, right) — the hex
-    * alphabet makes that a deterministic byte-wise order. lineage
-    * truncation every 4 rounds (the components pattern). */
+  /** Driver-contract query (rows-only BY DESIGN, the `bpe_merges`
+    * argument): the ordered byte-level merge table — the one pair-merge
+    * trainer ([[TextAnalysis.trainMerges]]) over the ≥ 2-byte words, one
+    * symbol per byte; argmax ties break (count desc, left, right), which
+    * the hex alphabet makes a deterministic byte-wise order. */
   def bbpeMerges(spark: SparkSession, dir: String): DataFrame =
-    Materialized.frame(spark, dir, "bbpeMerges") {
-      import spark.implicits._
-      val base = wordFreq(spark, dir)
-        .where(length(col("h")) >= 4)
-        .select(col("freq"), col("h"))
-      val nWords = base.count()
-      // bounded argmax fixpoint over the vocabulary frame — iterative-loop
-      // execution profile (Scale.loop, see Dedup.pagerankOn)
-      val merges = Scale.loop(spark) { lp =>
-      lp.sized(nWords)
-      var syms = lp.rebind(base).as[(Long, String)]
-        .map { case (f, h) => (f, hexSyms(h)) }
-      val merges = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, String, String, Long)]
-      var round = 1
-      var exhausted = false
-      while (round <= BbpeMergeRounds && !exhausted) {
-        val best = syms.toDF("freq", "syms")
-          .where(size(col("syms")) >= 2)
-          .select(col("freq"), explode(expr(
-            "transform(sequence(1, size(syms) - 1), " +
-              "i -> struct(syms[i-1] AS l, syms[i] AS r))")).as("p"))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum(col("freq")).as("cnt"))
-          .orderBy(col("cnt").desc, col("l"), col("r"))
-          .limit(1).collect()
-        if (best.isEmpty) exhausted = true
-        else {
-          val (l, r, cnt) = (best.head.getString(0), best.head.getString(1),
-            best.head.getLong(2))
-          merges += ((round.toLong, l, r, cnt))
-          syms = syms.map { case (f, s) =>
-            (f, TextAnalysis.mergePairIn(s, l, r)) }
-          if (round % 4 == 0) syms = lp.checkpoint(syms, eager = true)
-          round += 1
-        }
-      }
-      merges
-      }
-      merges.toSeq.toDF("merge_ix", "left", "right", "pair_count")
-        .select(col("merge_ix"), col("left"), col("right"),
-          concat(col("left"), col("right")).as("merged"), col("pair_count"))
-    }
+    Materialized.frame(spark, dir, "bbpeMerges")(TextAnalysis.bpeMergeTable(
+      wordFreq(spark, dir).where(length(col("h")) >= 4) // ≥ 2 bytes
+        .select(col("h"), col("freq")),
+      hexSyms, BbpeMergeRounds))
 
   // ---- #25t-o serving encode + fertility (rows-only; spec-brute-forced) --
   /** Driver-contract query (rows-only, same design argument as
@@ -144,25 +104,14 @@ object Bbpe {
   def bbpeEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val encodedVocab = Materialized.frame(spark, dir, "bbpeEncodedVocab") {
-      val merges = bbpeMerges(spark, dir).select("merge_ix", "left", "right")
-        .collect().sortBy(_.getLong(0))
-        .map(r => (r.getString(1), r.getString(2))).toIndexedSeq
-      val bc = spark.sparkContext.broadcast(merges)
+      val replay = TextAnalysis.bpeReplay(bbpeMerges(spark, dir))
       wordFreq(spark, dir)
         .select(col("word"), col("h")).as[(String, String)]
         .map { case (w, h) =>
-          val syms = bc.value.foldLeft(hexSyms(h)) {
-            case (s, (l, r)) => TextAnalysis.mergePairIn(s, l, r)
-          }
-          (w, h.length.toLong / 2, syms.length.toLong)
-        }.toDF("word", "n_bytes", "n_syms")
+          (w, h.length.toLong / 2, replay(hexSyms(h)).length.toLong) }
+        .toDF("term", "n_bytes", "n_bbpe_syms")
     }
-    Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), explode(wsTokens(col("text"))).as("word"))
-      .join(encodedVocab, Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_words"),
-        sum(col("n_bytes")).cast("long").as("n_bytes"),
-        sum(col("n_syms")).cast("long").as("n_bbpe_syms"))
+    TextAnalysis.encodeRollup(Corpus.table(spark, dir, "documents"),
+      wsTokens(col("text")), encodedVocab)
   }
 }

@@ -2487,11 +2487,14 @@ object Relational {
     * EXPLORATION happens inside the per-row intersection — never as
     * shuffled rows; shuffle volume is |edges| + 2·|adjacency| instead of
     * |wedges|. Identical output triples to the wedge-closure form. */
+  /** Adjacency-list entries per chunk in [[copurchaseTriClosure]]. */
+  val CopurchaseAdjChunkEntries = 4000000L
+
   /** Closed-triangle enumeration over an (part_a < part_b) edge frame via
     * sorted greater-neighbor adjacency lists (r13). Degree guard (r14;
     * VERDICT r13 #4): a hub vertex's full list is an O(degree) array built
-    * in ONE task — above `graft.copurchaseAdjChunkEntries` (default 4M
-    * entries ≈ 32 MB of longs) the lists split into `nChunks` pieces keyed
+    * in ONE task — above [[CopurchaseAdjChunkEntries]] (4M entries ≈
+    * 32 MB of longs) the lists split into `nChunks` pieces keyed
     * by a deterministic hash of the NEIGHBOR id, and the closure
     * intersects per MATCHING chunk: any common closing vertex hashes to
     * the same chunk on both sides, so the (ta, tb, tc) multiset is
@@ -2528,14 +2531,13 @@ object Relational {
       : DataFrame =
     Materialized.frame(spark, dir, "copurchaseTriFrame") {
       val e = copurchaseEdges(spark, dir)
-      val bound = spark.conf.getOption("graft.copurchaseAdjChunkEntries")
-        .flatMap(_.toLongOption).getOrElse(4000000L)
       // one cheap agg over the cached edge frame decides the guard; the
       // max out-degree also bounds every adjacency list's array size
       val maxDeg = e.groupBy(col("part_a")).agg(count(lit(1)).as("d"))
         .agg(coalesce(max(col("d")), lit(0L)).as("m"))
         .collect()(0).getLong(0)
-      val nChunks = math.max(1L, (maxDeg + bound - 1) / math.max(bound, 1L))
+      val nChunks = math.max(1L,
+        (maxDeg + CopurchaseAdjChunkEntries - 1) / CopurchaseAdjChunkEntries)
       copurchaseTriClosure(e, nChunks)
     }
 

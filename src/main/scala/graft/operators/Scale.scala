@@ -73,67 +73,10 @@ object Scale {
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(table)
 
-  /** Distributed DENSE RANK over arbitrary key columns without a
-    * single-partition window (the unpartitioned-WindowExec scale-killer
-    * PlanLintSpec bans): range-repartition on the keys, local dense ranks
-    * per partition, then per-partition offsets from a collected
-    * one-row-per-partition stats pass, adjusting when a key run spans a
-    * partition boundary. Driver state is O(partitions). Rank is 1-based,
-    * dense, and independent of the (sampled, possibly nondeterministic)
-    * range boundaries. */
-  def denseRankByRange(df: DataFrame, keyCols: Seq[String],
-      rankCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val np = math.max(spark.conf.get("spark.sql.shuffle.partitions").toInt, 1)
-    val sorted = df.repartitionByRange(np, keyCols.map(col): _*)
-      .sortWithinPartitions(keyCols.map(col): _*)
-    val schema = sorted.schema
-    val keyIdx = keyCols.map(schema.fieldIndex)
-    val rdd = sorted.rdd
-    def keyOf(r: org.apache.spark.sql.Row): Seq[Any] = keyIdx.map(r.get)
-    // pass 1: per-partition distinct-key count + first/last key
-    val stats = rdd.mapPartitionsWithIndex { (p, it) =>
-      var n = 0L
-      var first: Seq[Any] = null
-      var prev: Seq[Any] = null
-      it.foreach { r =>
-        val k = keyOf(r)
-        if (prev == null || k != prev) { n += 1; if (first == null) first = k }
-        prev = k
-      }
-      Iterator.single((p, n, Option(first), Option(prev)))
-    }.collect().sortBy(_._1)
-    val offsets = Array.ofDim[Long](stats.length)
-    var acc = 0L
-    var lastKey: Option[Seq[Any]] = None
-    stats.foreach { case (p, n, f, l) =>
-      // a key run continuing across the boundary shares the previous rank
-      val off = if (f.isDefined && f == lastKey) acc - 1 else acc
-      offsets(p) = off
-      acc = off + n
-      if (l.isDefined) lastKey = l
-    }
-    val bc = spark.sparkContext.broadcast(offsets)
-    val ranked = rdd.mapPartitionsWithIndex { (p, it) =>
-      val off = bc.value(p)
-      var prev: Seq[Any] = null
-      var ld = 0L
-      it.map { r =>
-        val k = keyOf(r)
-        if (prev == null || k != prev) ld += 1
-        prev = k
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (off + ld))
-      }
-    }
-    spark.createDataFrame(ranked, org.apache.spark.sql.types.StructType(
-      schema.fields :+ org.apache.spark.sql.types.StructField(
-        rankCol, org.apache.spark.sql.types.LongType, nullable = false)))
-  }
-
-  /** Distributed EXCLUSIVE prefix sums of `valCol` in `idCol` order — the
-    * same two-pass shape as [[denseRankByRange]] (range partition, local
-    * cumulative, O(partitions) collected offsets); the global-window-free
-    * way to lay documents end-to-end into one address space. */
+  /** Distributed EXCLUSIVE prefix sums of `valCol` in `idCol` order:
+    * range partition, local cumulative sums, then per-partition offsets
+    * from O(partitions) collected totals — the global-window-free way to
+    * lay documents end-to-end into one address space. */
   def exclusivePrefixSums(df: DataFrame, idCol: String, valCol: String,
       outCol: String): DataFrame = {
     val spark = df.sparkSession

@@ -2007,7 +2007,10 @@ object Similarity {
     // the 13 matvec passes each embed a fresh literal block (the rotated
     // V), so every round recompiles its codegen fragments and replans
     // under AQE — the iterative-loop profile (Scale.loop, see
-    // Dedup.pagerankOn) runs them on a size-derived layout
+    // Dedup.pagerankOn) runs them on a size-derived layout. Codegen stays
+    // on (no roundLiterals): interpreting the per-row dot products costs
+    // more than compiling each round (first run at sf0.1, 4 cores: 11.3 s
+    // compiled against 13.4 s interpreted)
     val nVecs = e0.count()
     Scale.loop(spark) { lp =>
     lp.sized(nVecs * (dim + 1L))

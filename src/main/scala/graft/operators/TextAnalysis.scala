@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns._
@@ -1220,6 +1220,16 @@ object TextAnalysis {
        |JOIN sizes nb ON i.src_b = nb.source""".stripMargin
 
   // ---- #25t-b tokenizer-training pair statistics (first BPE merge) ------
+  /** The `[a-z]+` word-frequency table `(word, freq)`: a filter of the
+    * shared materialized term-count frame (same tokenization, no second
+    * corpus tokenize). The char-level tokenizer families (BPE, WordPiece,
+    * unigram-LM) train on it and encode its words; restricting to ASCII
+    * letters keeps character indexing engine-neutral. */
+  private[operators] def alphaWordFreq(spark: SparkSession, dir: String): DataFrame =
+    termCounts(spark, dir)
+      .where(col("term").rlike("^[a-z]+$"))
+      .select(col("term").as("word"), col("n").as("freq"))
+
   /** The first iteration of BPE tokenizer training: the corpus-frequency-
     * weighted counts of adjacent character pairs inside words — the
     * statistic each merge round maximizes. Restricted to ASCII-letter words
@@ -1234,21 +1244,14 @@ object TextAnalysis {
     * vocabulary size, the same trick the anagram reduce uses. */
   val BpePairTopN = 20
 
-  def bpePairCounts(spark: SparkSession, dir: String): DataFrame = {
-    // the [a-z]{2,} word-frequency table is a filter of the shared
-    // materialized term-count frame (same tokenization) — no second
-    // corpus tokenize
-    val wordFreq = termCounts(spark, dir)
-      .where(col("term").rlike("^[a-z]+$") && length(col("term")) >= 2)
-      .select(col("term").as("word"), col("n").as("freq"))
-    wordFreq
+  def bpePairCounts(spark: SparkSession, dir: String): DataFrame =
+    alphaWordFreq(spark, dir).where(length(col("word")) >= 2)
       .select(col("freq"), explode(expr(
         "transform(sequence(1, length(word) - 1), i -> substring(word, i, 2))"))
         .as("pair"))
       .groupBy("pair").agg(sum(col("freq")).as("pair_count"))
       .orderBy(col("pair_count").desc, col("pair"))
       .limit(BpePairTopN)
-  }
   val bpePairCountsSql: String =
     s"""WITH w AS (
        |  SELECT t.w AS word
@@ -1265,44 +1268,137 @@ object TextAnalysis {
        |FROM p GROUP BY 1
        |ORDER BY pair_count DESC, pair LIMIT $BpePairTopN""".stripMargin
 
-  // ---- #25t-c full BPE tokenizer-training loop ---------------------------
-  /** The complete iterative BPE merge-training loop (`bpe_pair_counts` is
-    * its single-round statistic): `BpeMergeRounds` rounds of
-    * count-weighted-adjacent-pairs → argmax → apply-merge, producing the
-    * ordered merge table a tokenizer ships. Each round is one distributed
-    * aggregation over the VOCABULARY-sized symbol-sequence frame (the
-    * standard BPE-training reduction: train on the word-frequency table,
-    * never the corpus — the corpus-sized explode happened once, in the
-    * shared materialized term-count frame). The driver collects exactly ONE
-    * row per round (the argmax pair — the same bounded per-round collect as
-    * Lloyd centroid training); merges apply greedily left-to-right
-    * non-overlapping, the reference BPE semantics. Deterministic: argmax
-    * ties break on (count desc, left, right), no RNG anywhere.
-    *
-    * Scale: at 100 TB the word-frequency table is ~10⁷ rows (vocabulary,
-    * not corpus) — each round's pair explode/agg is a small job, and
-    * `localCheckpoint` every 4 rounds truncates the per-round `map`
-    * lineage exactly like the connected-components rounds. Rows-only
-    * driver check BY DESIGN: an iterative data-dependent argmax fixpoint
-    * (round N's aggregation input depends on round N-1's argmax result
-    * applied to every row) is not expressible in one SQL query — a
-    * recursive CTE cannot re-aggregate globally per step; the spec
-    * brute-forces the full merge table against an independent plain-Scala
-    * BPE on the collected word list instead. */
-  val BpeMergeRounds = 12
-
-  /** Greedy left-to-right non-overlapping single-pair merge — the
-    * reference semantics ("aaa" under a+a → "aa","a"). */
-  private[operators] def mergePairIn(
-      s: IndexedSeq[String], l: String, r: String): IndexedSeq[String] = {
+  // ---- the pair-merge trainer (BPE, byte-level BPE, WordPiece) -----------
+  /** Greedy left-to-right non-overlapping merge of the pair (l, r) into
+    * `fused` — the reference semantics ("aaa" under a+a → "aa","a"). BPE
+    * fuses to l + r; WordPiece strips r's `##` continuation prefix. */
+  private[operators] def mergePairIn(s: IndexedSeq[String], l: String,
+      r: String, fused: String): IndexedSeq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
     while (i < s.length) {
-      if (i + 1 < s.length && s(i) == l && s(i + 1) == r) { out += (l + r); i += 2 }
+      if (i + 1 < s.length && s(i) == l && s(i + 1) == r) { out += fused; i += 2 }
       else { out += s(i); i += 1 }
     }
     out.toIndexedSeq
   }
+
+  /** Freq-weighted adjacent-symbol pair counts `(l, r, pair_count)` of a
+    * `(freq, syms)` frame — the statistic every merge round ranks. */
+  private[operators] def pairCounts(symsDf: DataFrame): DataFrame =
+    // single-symbol words guard: sequence(1, 0) is DESCENDING in Spark
+    // ([1,0] — not empty), which would fabricate null-symbol pairs
+    symsDf.where(size(col("syms")) >= 2)
+      .select(col("freq"), explode(expr(
+        "transform(sequence(1, size(syms) - 1), " +
+          "i -> struct(syms[i-1] AS l, syms[i] AS r))")).as("p"))
+      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      .agg(sum(col("freq")).as("pair_count"))
+
+  /** The iterative greedy pair-merge trainer behind BPE, byte-level BPE
+    * and WordPiece (they differ only in `symbolize`, `fuse` and `rank`).
+    * `words` is a `(word, freq)` frame; each round ranks the current
+    * `(freq, syms)` frame with `rank` (its first two columns are the pair),
+    * collects the ONE top row (the same bounded per-round collect as Lloyd
+    * centroid training) and merges that pair in every word; it stops after
+    * `rounds` merges or when no pair is left, and returns the winning rows
+    * in round order.
+    *
+    * Scale: training runs on the word-frequency table, never the corpus
+    * (the corpus-sized explode happened once, in the table behind
+    * `words`): at 100 TB that is ~10⁷ rows, so each round is a small job.
+    * The loop runs in one [[Scale.loop]] scope sized by the word count;
+    * `localCheckpoint` every 4 rounds truncates the per-round `map`
+    * lineage (the connected-components pattern). The per-round plan text
+    * is round-invariant (the pair rides in the map closure, not a
+    * literal), so codegen stays on. Rows-only BY DESIGN: round N's
+    * aggregation input depends on round N−1's argmax applied to every
+    * row, which one SQL query cannot express (a recursive CTE cannot
+    * re-aggregate globally per step); the specs brute-force each merge
+    * table against plain-Scala trainers instead. */
+  private[operators] def trainMerges(words: DataFrame,
+      symbolize: String => IndexedSeq[String], fuse: (String, String) => String,
+      rank: DataFrame => DataFrame, rounds: Int): IndexedSeq[Row] = {
+    val nWords = words.count()
+    Scale.loop(words.sparkSession) { lp =>
+      val cs = lp.sized(nWords)
+      import cs.implicits._
+      var syms = lp.rebind(words).as[(String, Long)]
+        .map { case (w, f) => (f, symbolize(w)) }
+      val won = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var exhausted = false
+      while (won.size < rounds && !exhausted)
+        rank(syms.toDF("freq", "syms")).limit(1).collect().headOption match {
+          case None => exhausted = true
+          case Some(best) =>
+            won += best
+            val (l, r) = (best.getString(0), best.getString(1))
+            val fused = fuse(l, r)
+            syms = syms.map { case (f, s) => (f, mergePairIn(s, l, r, fused)) }
+            if (won.size % 4 == 0) syms = lp.checkpoint(syms, eager = true)
+        }
+      won.toIndexedSeq
+    }
+  }
+
+  /** The ordered merge table `(merge_ix, left, right, merged, pair_count)`
+    * of count-ranked BPE over `words` (argmax ties on (count desc, left,
+    * right), fused symbol l + r) — char-level and byte-level BPE differ
+    * only in `symbolize`. */
+  private[operators] def bpeMergeTable(words: DataFrame,
+      symbolize: String => IndexedSeq[String], rounds: Int): DataFrame = {
+    val spark = words.sparkSession
+    import spark.implicits._
+    trainMerges(words, symbolize, _ + _,
+        pairCounts(_).orderBy(col("pair_count").desc, col("l"), col("r")),
+        rounds)
+      .zipWithIndex.map { case (b, i) =>
+        (i + 1L, b.getString(0), b.getString(1), b.getLong(2)) }
+      .toDF("merge_ix", "left", "right", "pair_count")
+      .select(col("merge_ix"), col("left"), col("right"),
+        concat(col("left"), col("right")).as("merged"), col("pair_count"))
+  }
+
+  /** Replays a BPE merge table on a symbol sequence in merge order — the
+    * serving half of char- and byte-level BPE. The table is ≤ its round
+    * count of pairs, so the returned function carries it by value. */
+  private[operators] def bpeReplay(
+      table: DataFrame): IndexedSeq[String] => IndexedSeq[String] = {
+    val merges = table.select("merge_ix", "left", "right")
+      .collect().sortBy(_.getLong(0))
+      .map(r => (r.getString(1), r.getString(2))).toIndexedSeq
+    s => merges.foldLeft(s) { case (acc, (l, r)) => mergePairIn(acc, l, r, l + r) }
+  }
+
+  /** The serving rollup of every tokenizer family: explode the per-doc
+    * token array `toks` of `docs` into `(doc_id, term)`, equi-join the
+    * tokens to an encoded vocabulary `(term, <per-word counts>)` (encoding
+    * ran ONCE PER DISTINCT WORD; tokens outside the vocabulary drop), and
+    * aggregate back to doc grain — the matched token count `n_words`,
+    * then the sum of every vocabulary column under its own name. The
+    * vocabulary is ~10⁷ rows at 100 TB: a plain shuffle join, or a
+    * broadcast if it is top-K-capped. `toks` is exploded where it is
+    * computed: over a projected array attribute the optimizer would infer
+    * a non-empty filter and tokenize every document twice. */
+  private[operators] def encodeRollup(docs: DataFrame, toks: Column,
+      vocab: DataFrame): DataFrame = {
+    val sums = vocab.columns.toSeq.filter(_ != "term")
+      .map(c => sum(col(c)).cast("long").as(c))
+    docs.select(col("doc_id"), explode(toks).as("term"))
+      .join(vocab, Seq("term"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_words"), sums: _*)
+  }
+
+  // ---- #25t-c full BPE tokenizer-training loop ---------------------------
+  /** The complete iterative BPE merge-training loop (`bpe_pair_counts` is
+    * its single-round statistic): [[BpeMergeRounds]] rounds of the
+    * [[trainMerges]] fixpoint over the `[a-z]{2,}` word table, one symbol
+    * per character, producing the ordered merge table a tokenizer ships. */
+  val BpeMergeRounds = 12
+
+  /** One symbol per character ("abc" → a, b, c). */
+  private def charSyms(w: String): IndexedSeq[String] = w.split("").toIndexedSeq
 
   // the merge table and the encoded vocabulary are per-corpus training
   // artifacts exactly like Lloyd centroids / the LSH signature frame:
@@ -1310,51 +1406,9 @@ object TextAnalysis {
   // invocation re-ran the full 12-round loop (2.3 s steady at sf0.1) and
   // bpe_encode re-ran it AGAIN for its merge-table collect
   def bpeMerges(spark: SparkSession, dir: String): DataFrame =
-    Materialized.frame(spark, dir, "bpeMerges")(bpeMergesUncached(spark, dir))
-
-  private def bpeMergesUncached(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val base = termCounts(spark, dir)
-      .where(col("term").rlike("^[a-z]+$") && length(col("term")) >= 2)
-      .select(col("n").as("freq"), split(col("term"), "").as("syms"))
-    val nWords = base.count()
-    // bounded argmax fixpoint over the vocabulary frame — iterative-loop
-    // execution profile (Scale.loop, see Dedup.pagerankOn)
-    val merges = Scale.loop(spark) { lp =>
-    lp.sized(nWords)
-    var syms = lp.rebind(base).as[(Long, IndexedSeq[String])]
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var round = 1
-    var exhausted = false
-    while (round <= BpeMergeRounds && !exhausted) {
-      // single-symbol words guard: sequence(1, 0) is DESCENDING in Spark
-      // ([1,0] — not empty), which would fabricate null-symbol pairs
-      val best = syms.toDF("freq", "syms")
-        .where(size(col("syms")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(1, size(syms) - 1), " +
-            "i -> struct(syms[i-1] AS l, syms[i] AS r))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (l, r, cnt) = (best.head.getString(0), best.head.getString(1),
-          best.head.getLong(2))
-        merges += ((round.toLong, l, r, cnt))
-        syms = syms.map { case (f, s) => (f, mergePairIn(s, l, r)) }
-        // truncate the growing per-round map lineage (components pattern)
-        if (round % 4 == 0) syms = lp.checkpoint(syms, eager = true)
-        round += 1
-      }
-    }
-    merges
-    }
-    merges.toSeq.toDF("merge_ix", "left", "right", "pair_count")
-      .select(col("merge_ix"), col("left"), col("right"),
-        concat(col("left"), col("right")).as("merged"), col("pair_count"))
-  }
+    Materialized.frame(spark, dir, "bpeMerges")(bpeMergeTable(
+      alphaWordFreq(spark, dir).where(length(col("word")) >= 2),
+      charSyms, BpeMergeRounds))
 
   // ---- #25t-d BPE encode (tokenizer serving path) ------------------------
   /** Applies the [[bpeMerges]]-trained merge table to the corpus — the
@@ -1362,48 +1416,25 @@ object TextAnalysis {
     * encode). Per document: encodable words, their characters, and the
     * symbol count after all merges, i.e. the fertility statistic
     * (symbols per word) that decides whether a tokenizer fits a corpus.
-    *
-    * Scale: the merge table is ≤[[BpeMergeRounds]] rows (a bounded driver
-    * collect, same as Lloyd centroids), and encoding runs ONCE PER DISTINCT
-    * WORD on the vocabulary-sized term frame — never per token. The
-    * corpus-sized token stream then equi-joins the encoded vocabulary on
-    * the term key (vocabulary is ~10⁷ rows at 100 TB: a plain shuffle
-    * join, or a broadcast if the vocab is top-K-capped) and aggregates
-    * straight back to doc grain. Rows-only BY DESIGN: the merge table is
-    * an iterative argmax fixpoint ([[bpeMerges]]), so no single SQL oracle
-    * can reproduce the encoding; the spec instead proves (a) encode∘train
-    * reproduces the training fixpoint and (b) agreement with an
-    * independent in-memory BPE. */
+    * Encoding runs once per distinct `[a-z]+` word, then
+    * [[encodeRollup]] over the shared `lowerToks` frame. Rows-only BY
+    * DESIGN: the merge table is an iterative argmax fixpoint, so no single
+    * SQL oracle can reproduce the encoding; the spec instead proves (a)
+    * encode∘train reproduces the training fixpoint and (b) agreement with
+    * an independent in-memory BPE. */
   def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // EAGER at construction by design: resolving the merge table IS a
-    // (cached) training job, like Lloyd centroids. The broadcast is
-    // ≤BpeMergeRounds tuples and must outlive this (lazy) DataFrame, so it
-    // is left to session teardown rather than destroy()'d here. The
-    // encoded vocabulary is itself a materialized per-corpus artifact —
-    // steady runs pay only the corpus-grain join + rollup below.
+    // (cached) training job, like Lloyd centroids. The encoded vocabulary
+    // is itself a materialized per-corpus artifact — steady runs pay only
+    // the corpus-grain join + rollup.
     val encodedVocab = Materialized.frame(spark, dir, "bpeEncodedVocab") {
-      val merges = bpeMerges(spark, dir).select("merge_ix", "left", "right")
-        .collect().sortBy(_.getLong(0))
-        .map(r => (r.getString(1), r.getString(2))).toIndexedSeq
-      val bc = spark.sparkContext.broadcast(merges)
-      termCounts(spark, dir)
-        .where(col("term").rlike("^[a-z]+$"))
-        .select(col("term")).as[String]
-        .map { w =>
-          val syms = bc.value.foldLeft(w.split("").toIndexedSeq: IndexedSeq[String]) {
-            case (s, (l, r)) => mergePairIn(s, l, r)
-          }
-          (w, syms.length.toLong)
-        }.toDF("term", "n_syms")
+      val replay = bpeReplay(bpeMerges(spark, dir))
+      alphaWordFreq(spark, dir).select(col("word")).as[String]
+        .map(w => (w, w.length.toLong, replay(charSyms(w)).length.toLong))
+        .toDF("term", "n_chars", "n_bpe_syms")
     }
-    lowerToks(spark, dir)
-      .select(col("doc_id"), explode(col("toks")).as("term"))
-      .join(encodedVocab, Seq("term"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_words"),
-        sum(length(col("term"))).cast("long").as("n_chars"),
-        sum(col("n_syms")).cast("long").as("n_bpe_syms"))
+    encodeRollup(lowerToks(spark, dir), col("toks"), encodedVocab)
   }
 
   // ---- #24b vocabulary coverage / out-of-vocabulary rate -----------------

@@ -44,7 +44,8 @@ import graft.sources.Corpus
   * centroids / the BPE merge table). The corpus is touched only by the
   * serving join in [[unigramEncode]]: encode once per distinct word, then
   * equi-join the corpus token stream on the term key and aggregate back
-  * to doc grain — identical shape to `bpe_encode`.
+  * to doc grain — the rollup all four tokenizer families share
+  * ([[TextAnalysis.encodeRollup]]).
   *
   * Driver checks: `unigram_seed_counts` (the round-0 statistic) is fully
   * SQL-expressible and oracled, like `bpe_pair_counts`. The EM fixpoint
@@ -61,12 +62,6 @@ object Unigram {
   val UnigramVocabK = 48
   val UnigramSeedTopN = 20
 
-  /** The [a-z]+ word-frequency table off the shared term frame. */
-  private def wordFreq(spark: SparkSession, dir: String): DataFrame =
-    TextAnalysis.termCounts(spark, dir)
-      .where(col("term").rlike("^[a-z]+$"))
-      .select(col("term").as("word"), col("n").as("freq"))
-
   /** All substring pieces (length 1..[[MaxPieceLen]]) of a `word` column,
     * one row per occurrence position. */
   private def pieceExplode: org.apache.spark.sql.Column =
@@ -77,7 +72,7 @@ object Unigram {
 
   /** Occurrence-weighted substring-piece counts — the seed statistic. */
   private def seedCounts(spark: SparkSession, dir: String): DataFrame =
-    wordFreq(spark, dir)
+    TextAnalysis.alphaWordFreq(spark, dir)
       .select(col("freq"), pieceExplode.as("piece"))
       .groupBy("piece").agg(sum(col("freq")).as("piece_count"))
 
@@ -155,7 +150,7 @@ object Unigram {
       dir: String): (Map[String, Long], Set[String]) =
     Materialized.value(spark, dir, "unigramTrainedState") {
       import spark.implicits._
-      val wf0 = wordFreq(spark, dir)
+      val wf0 = TextAnalysis.alphaWordFreq(spark, dir)
       val nWords = wf0.count()
       // bounded EM fixpoint over the vocabulary frame — iterative-loop
       // execution profile (Scale.loop, see Dedup.pagerankOn)
@@ -208,27 +203,19 @@ object Unigram {
   /** Serving half (rows-only, brute-forced in spec): Viterbi-encode the
     * corpus under the trained vocabulary — per document, encodable words,
     * their characters, and the piece count (the fertility numerator).
-    * Same vocabulary-then-join shape as `bpe_encode`: encode once per
-    * DISTINCT word, equi-join the corpus token stream, aggregate to doc
-    * grain. */
+    * Encode once per DISTINCT word, then the rollup every tokenizer
+    * family shares ([[TextAnalysis.encodeRollup]]). */
   def unigramEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val encodedVocab = Materialized.frame(spark, dir, "unigramEncodedVocab") {
       val (vocab, _) = trainedState(spark, dir)
       val bc = spark.sparkContext.broadcast(scoresOf(vocab))
-      TextAnalysis.termCounts(spark, dir)
-        .where(col("term").rlike("^[a-z]+$"))
-        .select(col("term")).as[String]
-        .map(w => (w, viterbi(w, bc.value).length.toLong))
-        .toDF("term", "n_syms")
+      TextAnalysis.alphaWordFreq(spark, dir).select(col("word")).as[String]
+        .map(w => (w, w.length.toLong, viterbi(w, bc.value).length.toLong))
+        .toDF("term", "n_chars", "n_uni_syms")
     }
-    Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"), explode(lowerTokens(col("text"))).as("term"))
-      .join(encodedVocab, Seq("term"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_words"),
-        sum(length(col("term"))).cast("long").as("n_chars"),
-        sum(col("n_syms")).cast("long").as("n_uni_syms"))
+    TextAnalysis.encodeRollup(TextAnalysis.lowerToks(spark, dir), col("toks"),
+      encodedVocab)
   }
 
   /** Fertility comparison of the two trained tokenizer families per

@@ -2,18 +2,19 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.TextFns.{lowerTokens, sqlLowerTokens}
+import graft.functions.TextFns.sqlLowerTokens
 import graft.sources.Corpus
 
 /** WordPiece tokenizer training + serving — the THIRD production tokenizer
   * family next to BPE and unigram-LM (Schuster & Nakajima 2012; the
-  * BERT-family tokenizer). Same training loop shape as BPE but a different
-  * objective: each round merges the adjacent symbol pair maximizing the
-  * LIKELIHOOD score count(ab) / (count(a)·count(b)) instead of the raw
-  * pair count — the pair whose fusion most improves a unigram LM of the
-  * symbol stream. Serving differs too: WordPiece encodes by greedy
-  * LONGEST-MATCH-FIRST against the final vocabulary (the actual BERT
-  * runtime algorithm), not by replaying merges.
+  * BERT-family tokenizer). Trained by BPE's own pair-merge trainer
+  * ([[TextAnalysis.trainMerges]]) with a different ranking: each round
+  * merges the adjacent symbol pair maximizing the LIKELIHOOD score
+  * count(ab) / (count(a)·count(b)) instead of the raw pair count — the
+  * pair whose fusion most improves a unigram LM of the symbol stream.
+  * Serving differs too: WordPiece encodes by greedy LONGEST-MATCH-FIRST
+  * against the final vocabulary (the actual BERT runtime algorithm), not
+  * by replaying merges.
   *
   * Pinned variant (spec-locked in PipelineOpsSpec):
   *  - Train on the [a-z]+ word-frequency table (the shared materialized
@@ -33,8 +34,8 @@ import graft.sources.Corpus
   * frame producing two bounded aggregations (pair inventory + symbol
   * inventory, both piece-bounded) joined piece-keyed, with exactly ONE
   * argmax row collected (the Lloyd/BPE pattern); the corpus is touched
-  * only by the serving join (encode once per DISTINCT word, equi-join the
-  * token stream, aggregate to doc grain — the `bpe_encode` shape).
+  * only by the serving rollup ([[TextAnalysis.encodeRollup]], shared by
+  * all four tokenizer families).
   *
   * Driver checks: `wordpiece_pair_scores` (the round-0 statistic over the
   * initial symbolization) is fully SQL-expressible and oracled, like
@@ -49,53 +50,24 @@ object Wordpiece {
   val WpMergeRounds = 12
   val WpPairTopN = 20
 
-  /** The [a-z]+ word-frequency table off the shared term frame. */
-  private def wordFreq(spark: SparkSession, dir: String): DataFrame =
-    TextAnalysis.termCounts(spark, dir)
-      .where(col("term").rlike("^[a-z]+$"))
-      .select(col("term").as("word"), col("n").as("freq"))
-
   /** WordPiece symbolization of a word string (driver/executor side). */
   private[operators] def wpSyms(w: String): IndexedSeq[String] =
     w.substring(0, 1) +: (1 until w.length).map(i => "##" + w.charAt(i))
 
-  /** Greedy left-to-right non-overlapping merge of (l, r) in a symbol
-    * sequence; the fused symbol strips r's continuation prefix. */
-  private[operators] def mergeWpIn(
-      s: IndexedSeq[String], l: String, r: String): IndexedSeq[String] = {
-    val fused = l + r.stripPrefix("##")
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < s.length) {
-      if (i + 1 < s.length && s(i) == l && s(i + 1) == r) { out += fused; i += 2 }
-      else { out += s(i); i += 1 }
-    }
-    out.toIndexedSeq
-  }
+  /** The fused symbol of a merge: r's continuation prefix is stripped. */
+  private def wpFuse(l: String, r: String): String = l + r.stripPrefix("##")
 
-  /** (pair frame, symbol frame) of a (freq, syms) symbol dataset — the two
-    * bounded aggregations each training round needs. */
-  private def roundStats(symsDf: DataFrame): (DataFrame, DataFrame) = {
-    val pairs = symsDf
-      .where(size(col("syms")) >= 2)
-      .select(col("freq"), explode(expr(
-        "transform(sequence(1, size(syms) - 1), " +
-          "i -> struct(syms[i-1] AS l, syms[i] AS r))")).as("p"))
-      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-      .agg(sum(col("freq")).as("pair_count"))
+  /** Scored pair frame of a (freq, syms) symbol frame, in rank order
+    * (score_e6 desc, pair_count desc, l, r): the pair counts joined to
+    * both endpoint symbol counts with the exact ×10⁶ likelihood ratio —
+    * the two bounded aggregations each training round needs. The symbol
+    * frame is piece-bounded → broadcast onto the pair frame. */
+  private def scoredPairs(symsDf: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graft.ExactMath.intDivWide
     val syms = symsDf
       .select(col("freq"), explode(col("syms")).as("sym"))
       .groupBy(col("sym")).agg(sum(col("freq")).as("sym_count"))
-    (pairs, syms)
-  }
-
-  /** Scored pair frame: pairs joined to both endpoint symbol counts with
-    * the exact ×10⁶ likelihood ratio. The symbol frame is piece-bounded →
-    * broadcast onto the pair frame. */
-  private def scoredPairs(symsDf: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.ExactMath.intDivWide
-    val (pairs, syms) = roundStats(symsDf)
-    pairs
+    TextAnalysis.pairCounts(symsDf)
       .join(broadcast(syms.select(col("sym").as("l"),
         col("sym_count").as("l_count"))), Seq("l"))
       .join(broadcast(syms.select(col("sym").as("r"),
@@ -106,6 +78,8 @@ object Wordpiece {
         // products are formed in DECIMAL(38,0) (ADVICE r11)
         intDivWide(col("pair_count"), lit(1000000L),
           col("l_count"), col("r_count")).as("score_e6"))
+      .orderBy(col("score_e6").desc, col("pair_count").desc, col("l"),
+        col("r"))
   }
 
   /** Driver-contract query (oracled, the `bpe_pair_counts` pattern): the
@@ -115,14 +89,12 @@ object Wordpiece {
     // single-char words contribute symbol mass but no pairs; Spark's
     // sequence(2, 1) is DESCENDING (not empty) so the concat is sliced
     // back to the word's true length
-    scoredPairs(wordFreq(spark, dir)
+    scoredPairs(TextAnalysis.alphaWordFreq(spark, dir)
       .select(col("freq"), expr(
         """slice(concat(array(substring(word, 1, 1)),
           |  transform(sequence(2, length(word)),
           |    i -> concat('##', substring(word, i, 1)))), 1, length(word))"""
           .stripMargin).as("syms")))
-      .orderBy(col("score_e6").desc, col("pair_count").desc, col("l"),
-        col("r"))
       .limit(WpPairTopN)
   val wordpiecePairScoresSql: String =
     s"""WITH w AS (
@@ -158,44 +130,16 @@ object Wordpiece {
   private[operators] def trainedState(spark: SparkSession, dir: String)
       : (IndexedSeq[(Long, String, String, Long, Long)], Set[String]) =
     Materialized.value(spark, dir, "wordpieceTrainedState") {
-      val wf = wordFreq(spark, dir)
-      val nWords = wf.count()
-      // bounded argmax fixpoint over the vocabulary frame — iterative-loop
-      // execution profile (Scale.loop, see Dedup.pagerankOn): each
-      // round is one fixed-shape score+argmax job whose AQE planning
-      // round-trips dominate on a vocabulary-sized frame
-      Scale.loop(spark) { lp =>
-      val cs = lp.sized(nWords)
-      import cs.implicits._
-      var syms = lp.rebind(wf).as[(String, Long)]
-        .map { case (w, f) => (f, wpSyms(w)) }
+      import spark.implicits._
+      val wf = TextAnalysis.alphaWordFreq(spark, dir)
+      val merges = TextAnalysis.trainMerges(wf, wpSyms, wpFuse, scoredPairs,
+          WpMergeRounds)
+        .zipWithIndex.map { case (b, i) => (i + 1L, b.getString(0),
+          b.getString(1), b.getLong(2), b.getLong(3)) }
       // initial inventory (bounded collect: ≤ 2·|charset| rows)
-      val charInv = syms.toDF("freq", "syms")
-        .select(explode(col("syms")).as("sym")).distinct()
-        .collect().map(_.getString(0)).toSet
-      val merges = scala.collection.mutable
-        .ArrayBuffer.empty[(Long, String, String, Long, Long)]
-      var round = 1
-      var exhausted = false
-      while (round <= WpMergeRounds && !exhausted) {
-        val best = scoredPairs(syms.toDF("freq", "syms"))
-          .orderBy(col("score_e6").desc, col("pair_count").desc, col("l"),
-            col("r"))
-          .limit(1).collect()
-        if (best.isEmpty) exhausted = true
-        else {
-          val (l, r, cnt, sc) = (best.head.getString(0),
-            best.head.getString(1), best.head.getLong(2),
-            best.head.getLong(3))
-          merges += ((round.toLong, l, r, cnt, sc))
-          syms = syms.map { case (f, s) => (f, mergeWpIn(s, l, r)) }
-          // truncate per-round map lineage (the BPE/components pattern)
-          if (round % 4 == 0) syms = lp.checkpoint(syms, eager = true)
-          round += 1
-        }
-      }
-      (merges.toIndexedSeq, charInv)
-      }
+      val charInv = wf.as[(String, Long)].flatMap { case (w, _) => wpSyms(w) }
+        .distinct().collect().toSet
+      (merges, charInv)
     }
 
   /** Driver-contract query (rows-only, brute-forced in spec): the ordered
@@ -236,35 +180,25 @@ object Wordpiece {
     * (initial chars + every merged symbol) — per document, encodable
     * words, their characters, total WordPiece symbols (UNK words
     * contribute one symbol) and the UNK word count. Encode once per
-    * DISTINCT word, equi-join the corpus token stream, aggregate to doc
-    * grain — the `bpe_encode` shape. */
+    * DISTINCT word, then the shared rollup to doc grain
+    * ([[TextAnalysis.encodeRollup]]). */
   def wordpieceEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val encodedVocab = Materialized.frame(spark, dir, "wordpieceEncodedVocab") {
       val (merges, charInv) = trainedState(spark, dir)
-      val vocab = charInv ++
-        merges.map { case (_, l, r, _, _) => l + r.stripPrefix("##") }
+      val vocab = charInv ++ merges.map { case (_, l, r, _, _) => wpFuse(l, r) }
       val maxLen = (vocab.map(_.stripPrefix("##").length) + 1).max
       val bc = spark.sparkContext.broadcast((vocab, maxLen))
-      TextAnalysis.termCounts(spark, dir)
-        .where(col("term").rlike("^[a-z]+$"))
-        .select(col("term")).as[String]
+      TextAnalysis.alphaWordFreq(spark, dir).select(col("word")).as[String]
         .map { w =>
           greedyEncode(w, bc.value._1, bc.value._2) match {
-            case Some(n) => (w, n.toLong, 0L)
-            case None => (w, 1L, 1L)
+            case Some(n) => (w, w.length.toLong, n.toLong, 0L)
+            case None => (w, w.length.toLong, 1L, 1L)
           }
-        }.toDF("term", "n_syms", "unk")
+        }.toDF("term", "n_chars", "n_wp_syms", "n_unk_words")
     }
-    Corpus.table(spark, dir, "documents")
-      .select(col("doc_id"),
-        explode(lowerTokens(col("text"))).as("term"))
-      .join(encodedVocab, Seq("term"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_words"),
-        sum(length(col("term"))).cast("long").as("n_chars"),
-        sum(col("n_syms")).cast("long").as("n_wp_syms"),
-        sum(col("unk")).cast("long").as("n_unk_words"))
+    TextAnalysis.encodeRollup(TextAnalysis.lowerToks(spark, dir), col("toks"),
+      encodedVocab)
   }
 
   /** Three-way fertility face-off of the trained tokenizer families per

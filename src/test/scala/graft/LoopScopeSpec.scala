@@ -29,9 +29,9 @@ class LoopScopeSpec extends SparkTestBase {
     "ann_ivf" -> "ivfCentroids",
     "pq_quantize" -> "pqCodebooks",
     "embedding_pca" -> "pcaModelFit",
-    "bpe_merges" -> "bpeMergesUncached",
-    "bbpe_merges" -> "bbpeMerges",
-    "wordpiece_merges" -> "Wordpiece.trainedState",
+    "bpe_merges" -> "trainMerges (BPE)",
+    "bbpe_merges" -> "trainMerges (byte-level BPE)",
+    "wordpiece_merges" -> "trainMerges (WordPiece)",
     "unigram_vocab" -> "Unigram.trainedState",
     "suffix_repeats" -> "SuffixRepeats censuses + levels")
 

@@ -34,20 +34,6 @@ class ScaleSpec extends SparkTestBase {
     assert(salted == direct && salted.nonEmpty)
   }
 
-  test("denseRankByRange equals a single-partition dense_rank") {
-    val df = (1 to 5000)
-      .map(i => (s"k${i % 137}", (i % 11).toLong, i.toLong))
-      .toDF("a", "b", "payload")
-    val got = Scale.denseRankByRange(df, Seq("a", "b"), "rk")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
-    val expected = df
-      .withColumn("rk", org.apache.spark.sql.functions.dense_rank().over(
-        org.apache.spark.sql.expressions.Window.orderBy($"a", $"b")))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getInt(3).toLong).toMap
-    assert(got.size == expected.size)
-    expected.foreach { case (k, v) => assert(got(k) == v, s"rank for $k") }
-  }
-
   test("exclusivePrefixSums equals a running total in id order") {
     val df = (1L to 999L).map(i => (i, i % 7 + 1)).toDF("id", "len")
     val got = Scale.exclusivePrefixSums(df, "id", "len", "off")

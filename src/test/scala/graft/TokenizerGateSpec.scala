@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Spark's `split`, and an inline `[^A-Za-z0-9\s]` counts a vertical tab
   * as a symbol in DuckDB only. Whitespace collapse
   * (`regexp_replace(…, '\s+', ' ')`) is a different rule and is not
-  * matched. Specs keep their own reference chains and are not scanned. */
+  * matched. The same holds for the tokenizer trainers' building blocks:
+  * one adjacent-pair explode, one `[a-z]+` word table, one merge
+  * function. Specs keep their own reference chains and are not scanned. */
 class TokenizerGateSpec extends AnyFunSuite {
 
   /** Each inline form of the tokenizer, matched per source line. */
@@ -54,15 +56,23 @@ class TokenizerGateSpec extends AnyFunSuite {
     assert(otherRules.filter(copiesIn(_).nonEmpty).isEmpty)
   }
 
-  test("the whitespace tokenizer is written only in TextFns.scala") {
+  private lazy val mainSources: Seq[Path] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"${root.toAbsolutePath} is not a directory")
-    val files: Seq[Path] = {
-      val walk = Files.walk(root)
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
-    val (defs, rest) = files.partition(_.getFileName.toString == "TextFns.scala")
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  /** `file:line: text` of every main source line `re` matches. */
+  private def linesMatching(re: scala.util.matching.Regex): Seq[String] = for {
+    f <- mainSources
+    (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+    if re.findFirstIn(line).isDefined
+  } yield s"$f:${i + 1}: ${line.trim}"
+
+  test("the whitespace tokenizer is written only in TextFns.scala") {
+    val (defs, rest) = mainSources.partition(_.getFileName.toString == "TextFns.scala")
     assert(defs.size == 1 && rest.size > 50)
     // the definitions themselves are what the gate matches
     val defined = Files.readAllLines(defs.head).asScala.flatMap(copiesIn).toSet
@@ -74,5 +84,21 @@ class TokenizerGateSpec extends AnyFunSuite {
       what <- copiesIn(line)
     } yield s"$f:${i + 1}: $what: ${line.trim}"
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  /** One pair-merge trainer for BPE, byte-level BPE and WordPiece: the
+    * adjacent-pair explode, the `[a-z]+` word-frequency filter and the
+    * merge function are each written once (`TextAnalysis.pairCounts`,
+    * `alphaWordFreq`, `mergePairIn`). DuckDB `regexp_matches` strings in
+    * the oracles are a different engine's twin and are not matched. */
+  test("the merge trainer's pair explode, word table and merge function are written once") {
+    val explode = linesMatching(
+      """struct\(\s*syms\[i\s*-\s*1\]\s+AS\s+l\s*,\s*syms\[i\]\s+AS\s+r\s*\)""".r)
+    assert(explode.size == 1, explode.mkString("\n", "\n", ""))
+    val wordTable = linesMatching("""rlike\(\s*"\^\[a-z\]\+\$"\s*\)""".r)
+    assert(wordTable.size == 1, wordTable.mkString("\n", "\n", ""))
+    val merges = linesMatching("""def\s+merge\w*In\b""".r)
+    assert(merges.size == 1 && merges.head.contains("def mergePairIn"),
+      merges.mkString("\n", "\n", ""))
   }
 }
