@@ -137,13 +137,14 @@ object Anagrams {
   // Map-only: the per-doc word set is row-local (exactly the reference's
   // in-memory map per split), so sort-distinct happens inside the row —
   // no (doc, word) exchange. Population guard (≥1 token) matches the
-  // explode+groupBy form.
+  // explode+groupBy form; it is tested where the tokens are computed (a
+  // doc without tokens explodes a null to no row), since a filter on the
+  // token count would be pushed under the projection and tokenize twice.
   def docUniqueWords(spark: SparkSession, dir: String): DataFrame =
     Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), lowerTokens(col("text")).as("toks"))
-      .where(size(col("toks")) > 0)
-      .select(col("doc_id"),
-        array_join(array_sort(array_distinct(col("toks"))), " ").as("words"))
+      .select(col("doc_id"), explode(when(size(col("toks")) > 0,
+        array(array_join(array_sort(array_distinct(col("toks"))), " ")))).as("words"))
   val docUniqueWordsSql =
     s"""SELECT doc_id,
        |  list_aggr(list_sort(list(DISTINCT t.w)), 'string_agg', ' ') AS words

@@ -44,10 +44,12 @@ object Curation {
   private[operators] def segments(spark: SparkSession, dir: String): DataFrame =
     Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), lowerTokens(col("text")).as("toks"))
-      .where(size(col("toks")) >= 1)
       // join/count key is the shared 60-bit md5, not the segment text:
-      // shuffle bytes per row are 8, not ~SegLen words
-      .select(col("doc_id"), explode(segHashArr).as("sh"))
+      // shuffle bytes per row are 8, not ~SegLen words. A doc without
+      // tokens explodes a null and yields no row: a filter on the token
+      // count would be pushed under the projection and tokenize twice
+      .select(col("doc_id"),
+        explode(when(size(col("toks")) >= 1, segHashArr)).as("sh"))
 
   /** Materialized (doc_id, sh) segment-hash frame: compact (two longs per
     * segment), tokenized once per (session, corpus) and shared by every
@@ -74,8 +76,9 @@ object Curation {
   def trimSegments(spark: SparkSession, dir: String): DataFrame = {
     val segsP = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), lowerTokens(col("text")).as("toks"))
-      .where(size(col("toks")) >= 1)
-      .select(col("doc_id"), posexplode(segStrArr).as(Seq("pos", "seg")))
+      // tested where the tokens are computed, as in `segments`
+      .select(col("doc_id"),
+        posexplode(when(size(col("toks")) >= 1, segStrArr)).as(Seq("pos", "seg")))
       .withColumn("sh", md5Long(col("seg")))
     segsP
       .withColumn("n", count(lit(1)).over(
@@ -501,9 +504,10 @@ object Curation {
     // twice and cost 16 s steady — this shape is ZERO-exchange (the only
     // post-scan operator is the 6-rows-per-doc explode) and the 100 TB
     // story collapses to "runs at scan speed".
+    // a doc shorter than the smallest grain has no stats and explodes to
+    // no row, so no token-count filter (which would tokenize twice)
     Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), lowerTokens(col("text")).as("toks"))
-      .where(size(col("toks")) >= 1)
       .select(col("doc_id"),
         tokCharsCol.as("tok_chars"),
         explode(gopherRepStatsArr).as("g"))
@@ -1144,10 +1148,9 @@ object Curation {
     * `TextAnalysis.gramFrame`, for corpora that are not the canonical
     * `documents` table (e.g. a benchmark file read via `JsonlSource`). */
   def gramsOf(df: DataFrame, k: Int): DataFrame =
-    df.select(col("doc_id"), lowerTokens(col("text")).as("toks"))
-      .where(size(col("toks")) >= k)
-      .select(col("doc_id"), explode(
-        org.apache.spark.sql.graft.WordGrams(col("toks"), k)).as("gram"))
+    // a doc of fewer than k tokens has no grams and explodes to no row
+    df.select(col("doc_id"), explode(
+      org.apache.spark.sql.graft.WordGrams(lowerTokens(col("text")), k)).as("gram"))
 
   /** `decontaminate` with the probe set supplied by the caller — the
     * production shape, where the benchmark arrives as a file (see

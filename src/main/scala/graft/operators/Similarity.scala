@@ -427,9 +427,9 @@ object Similarity {
     * from one shard and could be near-identical.) Two Lloyd rounds refine
     * them — measured recall@10 vs the exact ann_topk is in BASELINE.md. */
   def ivfCentroids(spark: SparkSession, dir: String): DataFrame =
-    // trained once per (session, corpus) — ann_ivf, embedding_clusters and
-    // cluster_purity all quantize against the same 16-row frame (at scale:
-    // train once, broadcast everywhere).
+    // trained once per (session, corpus); the ivfCells index assigns
+    // against the same 16-row frame (at scale: train once, broadcast
+    // everywhere).
     // r14: the 2-round Lloyd is a bounded fixpoint — it runs under the
     // iterative-loop execution profile (Scale.loop, the pagerankOn
     // discipline: AQE planning jobs and 32-way tiny exchanges dominated
@@ -479,63 +479,76 @@ object Similarity {
        |), ${sqlLloyd("seeds", "a1", "r1", "c1")},
        |${sqlLloyd("c1", "a2", "r2", "cents")}""".stripMargin
 
-  /** The 100 TB SERVING layout of [[annIvf]], demonstrated: the cell
-    * assignments written to disk hive-partitioned by `cid` (the once-per-
-    * snapshot indexing job), probed by a query whose nprobe cell list
-    * arrives through a broadcast join — Spark's dynamic partition pruning
-    * then reads ONLY the probed cells' directories, never the full index.
-    * Returns the same ranked rows as the in-session [[annIvf]]; ScaleSpec
-    * locks both the row equality and the `dynamicpruning` PartitionFilter
-    * on the index scan. */
+  /** The IVF index: every vector's cell under [[ivfCentroids]], as
+    * (vec_id, cid, embedding, label, cent_cos), assigned once per
+    * (session, corpus); `cent_cos` is the raw cosine to the cell's
+    * centroid. IVF's point is that the assignment is the index and only
+    * the probe runs per query, so every reader of a vector's cell (the IVF
+    * probes, the cluster diagnostics, SemDeDup, the IVF-PQ layout) reads
+    * this frame; the Lloyd rounds are the only other assignment. */
+  private[graft] def ivfCells(spark: SparkSession, dir: String): DataFrame =
+    Materialized.frame(spark, dir, "ivfCells") {
+      argminCid(Corpus.table(spark, dir, "embeddings")
+          .select("vec_id", "embedding", "label"),
+        ivfCentroids(spark, dir), Seq("embedding", "label", "c"))
+        .select(col("vec_id"), col("cid"), col("embedding"), col("label"),
+          cosExpr("embedding", "c").as("cent_cos"))
+    }
+
+  /** The IVF query: the lowest vec_id's vector, as (qid, qv). */
+  private def ivfQuery(spark: SparkSession, dir: String): DataFrame =
+    ivfCells(spark, dir).orderBy("vec_id").limit(1)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+
+  /** Probe selection: the IvfProbes cells nearest the query `q`, as
+    * (cid, qid, qv, qdist), ties to the lower cid. `q` is one row, so a
+    * top-IvfProbes sort picks the same cells as a rank window per qid,
+    * without the window's exchange and job. */
+  private def probeCells(spark: SparkSession, dir: String, q: DataFrame): DataFrame =
+    ivfCentroids(spark, dir).crossJoin(broadcast(q))
+      .withColumn("qdist", l2sq("qv", "c"))
+      .orderBy(col("qdist"), col("cid")).limit(IvfProbes)
+      .select(col("cid"), col("qid"), col("qv"), col("qdist"))
+
+  /** The 100 TB SERVING layout of [[annIvf]], demonstrated: the
+    * [[ivfCells]] index written to disk hive-partitioned by `cid` (the
+    * once-per-snapshot indexing job), probed by a query whose nprobe cell
+    * list arrives through a broadcast join — Spark's dynamic partition
+    * pruning then reads ONLY the probed cells' directories, never the full
+    * index. Returns the same ranked rows as the in-session [[annIvf]];
+    * ScaleSpec locks both the row equality and the `dynamicpruning`
+    * PartitionFilter on the index scan. */
   private[graft] def ivfProbeFromDisk(spark: SparkSession, dir: String,
       out: String): DataFrame = {
-    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
-    val cents = ivfCentroids(spark, dir)
-    // index build: one map-side assignment pass, written partitioned by cell
     Scale.writePartitioned(
-      argminCid(e, cents, Seq("embedding")), out, "cid")
+      ivfCells(spark, dir).select("vec_id", "cid", "embedding"), out, "cid")
     val index = spark.read.parquet(out)
-    val q = e.orderBy("vec_id").limit(1)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val wq = Window.partitionBy("qid").orderBy(col("qdist"), col("cid"))
-    val probes = cents.crossJoin(broadcast(q))
-      .withColumn("qdist", l2sq("qv", "c"))
-      .withColumn("qrn", row_number().over(wq)).where(col("qrn") <= IvfProbes)
-      .select(col("cid"), col("qid"), col("qv"))
+    // Spark plans dynamic partition pruning only when the probe side holds
+    // a filter it deems selective, and a limit is none: the probe list
+    // keeps only cells at a finite distance, which every probed cell is
+    val probes = probeCells(spark, dir, ivfQuery(spark, dir))
+      .where(col("qdist") < Double.PositiveInfinity)
     topkRanked(index.join(broadcast(probes), "cid")
       .where(col("vec_id") =!= col("qid"))
       .select(col("vec_id"), cosExpr("embedding", "qv").as("cos")))
   }
 
-  def annIvf(spark: SparkSession, dir: String): DataFrame = {
-    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
-    val cents = ivfCentroids(spark, dir)
-    val q = e.orderBy("vec_id").limit(1)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    // probe cells: IvfProbes nearest centroids to the query
-    val wq = Window.partitionBy("qid").orderBy(col("qdist"), col("cid"))
-    val probes = cents.crossJoin(broadcast(q))
-      .withColumn("qdist", l2sq("qv", "c"))
-      .withColumn("qrn", row_number().over(wq)).where(col("qrn") <= IvfProbes)
-      .select(col("cid"), col("qid"), col("qv"))
-    // assign every vector to its cell, keep only probed cells
-    val assigned = argminCid(e, cents, Seq("embedding"))
-    topkRanked(assigned.join(probes, "cid")
+  /** IVF ANN: a probe of the [[ivfCells]] index — only the query's
+    * IvfProbes nearest cells are scored, and no vector is assigned. */
+  def annIvf(spark: SparkSession, dir: String): DataFrame =
+    topkRanked(ivfCells(spark, dir)
+      .join(broadcast(probeCells(spark, dir, ivfQuery(spark, dir))), "cid")
       .where(col("vec_id") =!= col("qid"))
       .select(col("vec_id"), cosExpr("embedding", "qv").as("cos")))
-  }
   /** Corpus clustering via the same learned coarse quantizer: cluster
     * sizes + mean cosine of members to their centroid (training-data
-    * diversity diagnostics). */
-  def embeddingClusters(spark: SparkSession, dir: String): DataFrame = {
-    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
-    val cents = ivfCentroids(spark, dir)
-    argminCid(e, cents, Seq("embedding", "c"))
+    * diversity diagnostics), one aggregate over the [[ivfCells]] index. */
+  def embeddingClusters(spark: SparkSession, dir: String): DataFrame =
+    ivfCells(spark, dir)
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n_members"),
-        round(avg(cosExpr("embedding", "c")), 4)
+        round(avg(col("cent_cos")), 4)
           .cast("decimal(14,4)").cast("double").as("avg_cos_to_centroid"))
-  }
   val embeddingClustersSql: String =
     s"""WITH $ivfCentroidsCte, assigned AS (
        |  SELECT vec_id, embedding, cid, c FROM (
@@ -553,14 +566,11 @@ object Similarity {
   /** Cluster purity against the embeddings' ground-truth labels: per cell,
     * member count and the majority-label fraction under the same learned
     * quantizer — the diagnostic that tells a curation pipeline whether the
-    * coarse cells align with semantic groups. Same assignment join as
-    * embeddingClusters (broadcast centroids), plus two label-keyed
-    * aggregations (≤ |cells|·|labels| intermediate rows). */
-  def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
-    val e = Corpus.table(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"), col("label"))
-    val cents = ivfCentroids(spark, dir)
-    argminCid(e, cents, Seq("label"))
+    * coarse cells align with semantic groups. Reads the cells and labels
+    * of the [[ivfCells]] index, plus two label-keyed aggregations
+    * (≤ |cells|·|labels| intermediate rows). */
+  def clusterPurity(spark: SparkSession, dir: String): DataFrame =
+    ivfCells(spark, dir)
       .groupBy(col("cid"), col("label")).agg(count(lit(1)).as("cl"))
       .groupBy("cid")
       .agg(sum(col("cl")).as("n_members"), max(col("cl")).as("n_majority"))
@@ -568,7 +578,6 @@ object Similarity {
         // §6: exact basis points, not round(DOUBLE)
         graft.functions.TextFns.bp(col("n_majority"), col("n_members"))
           .as("purity_bp"))
-  }
   val clusterPuritySql: String =
     s"""WITH $ivfCentroidsCte, assigned AS (
        |  SELECT vec_id, label, cid FROM (
@@ -591,12 +600,11 @@ object Similarity {
     * drops or sampling weights: per cluster, the top terms by
     * cluster-level TF-IDF, where the "documents" of the IDF are the
     * clusters themselves (vec_id ≡ doc_id links the modalities, the
-    * semantic_lexical_agreement convention). Plan shape: centroid
-    * assignment is the shared broadcast argmin (map-only over the
-    * embeddings scan); the assignment frame (two ints per doc) joins the
-    * documents scan PER-DOC before tokenization, so the corpus explode
-    * runs once and the only corpus-sized shuffle is the (cid, term)
-    * rollup with map-side partials. Every IDF input after that is
+    * semantic_lexical_agreement convention). Plan shape: each doc's cell
+    * comes from the [[ivfCells]] index; the cell frame (two ints per
+    * doc) joins the documents scan PER-DOC before tokenization, so the
+    * corpus explode runs once and the only corpus-sized shuffle is the
+    * (cid, term) rollup with map-side partials. Every IDF input after that is
     * cluster-bounded (≤ |cells|·|vocab| rows). Ranking follows the
     * tfidf_top_terms discipline — score pinned to DECIMAL(14,4) before
     * the (score, term) rank so a last-ulp ln() difference between libm
@@ -605,10 +613,7 @@ object Similarity {
     * sees a corpus-sized key. */
   val ClusterTopicsTopN = 5
   def clusterTopics(spark: SparkSession, dir: String): DataFrame = {
-    val cents = ivfCentroids(spark, dir)
-    val assigned = argminCid(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding"),
-      cents, Seq.empty)
-      .withColumnRenamed("vec_id", "doc_id")
+    val assigned = ivfCells(spark, dir).select(col("vec_id").as("doc_id"), col("cid"))
     val terms = Corpus.table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .join(assigned, "doc_id")
@@ -681,16 +686,14 @@ object Similarity {
   /** Which sources feed which semantic clusters — the contingency a
     * cluster-aware mixing decision reads next to [[clusterTopics]]' labels:
     * per (cid, source), member count plus the share of the cluster and the
-    * share of the source, both in exact basis points (§6). Assignment is
-    * the shared broadcast argmin; the per-doc source attach is a doc-keyed
-    * equi-join (co-located with the embedding store's layout at 100 TB);
+    * share of the source, both in exact basis points (§6). Each doc's cell
+    * comes from the [[ivfCells]] index; the per-doc source attach is a
+    * doc-keyed equi-join (co-located with the embedding store's layout at 100 TB);
     * everything after the (cid, source) rollup operates on
     * ≤ |cells|·|sources| rows, where the two share windows are bounded
     * frames, not corpus windows. */
   def clusterSourceMix(spark: SparkSession, dir: String): DataFrame = {
-    val assigned = argminCid(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding"),
-      ivfCentroids(spark, dir), Seq.empty)
-      .withColumnRenamed("vec_id", "doc_id")
+    val assigned = ivfCells(spark, dir).select(col("vec_id").as("doc_id"), col("cid"))
     val wc = Window.partitionBy("cid")
     val ws = Window.partitionBy("source")
     Corpus.table(spark, dir, "documents")
@@ -730,16 +733,13 @@ object Similarity {
     * cos ~0.51 — so the dropped set is non-vacuous at every test SF). */
   val SemThr = 0.35
 
-  /** Assignment + centroid-cosine, materialized per corpus: feeds both
-    * sides of the pair join, the final projection, and the sweep. */
+  /** The [[ivfCells]] index with its centroid-cosine pinned to 6 decimals:
+    * feeds both sides of the pair join, the final projection, and the
+    * sweep. A projection of the index, so the index stays the one stored
+    * copy of the embeddings. */
   private def semAssigned(spark: SparkSession, dir: String): DataFrame =
-    Materialized.frame(spark, dir, "semAssigned") {
-      argminCid(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding"),
-          ivfCentroids(spark, dir), Seq("embedding", "c"))
-        .withColumn("ccos", round(cosExpr("embedding", "c"), 6)
-          .cast("decimal(14,6)").cast("double"))
-        .select("vec_id", "cid", "embedding", "ccos")
-    }
+    ivfCells(spark, dir).select(col("vec_id"), col("cid"), col("embedding"),
+      round(col("cent_cos"), 6).cast("decimal(14,6)").cast("double").as("ccos"))
 
   /** SemDeDup (Abbas et al. 2023): semantic near-duplicate removal via
     * within-cluster pairwise cosine under the SHARED learned coarse
@@ -807,10 +807,11 @@ object Similarity {
     * centroid-cosine sits more than 2σ from ITS CELL's mean is flagged —
     * the per-cell analogue of event_anomalies, run before trusting
     * cell-level curation. The test is EXACT integer arithmetic end to end:
-    * ccos is already a pinned 6-decimal value (the materialized semdedup
-    * assignment), recovered as an e6 integer, and |x−μ| > 2σ is evaluated
-    * as (x·n−S)² > 4·(n·Q−S²) over DECIMAL(38,0) — no float anywhere, so
-    * the flag set is bit-identical in both engines. Per-cell moments are
+    * ccos is already a pinned 6-decimal value (semdedup's centroid-cosine
+    * over the [[ivfCells]] index), recovered as an e6 integer, and
+    * |x−μ| > 2σ is evaluated as (x·n−S)² > 4·(n·Q−S²) over DECIMAL(38,0)
+    * — no float anywhere, so the flag set is bit-identical in both
+    * engines. Per-cell moments are
     * one agg on ≤IvfK keys that broadcasts back; Q aggregates in decimal
     * so the sum can't overflow at any corpus size. */
   def embeddingOutliers(spark: SparkSession, dir: String): DataFrame = {
@@ -865,7 +866,7 @@ object Similarity {
     * with its basis-point drop rate. The exists-rule dropped set equals
     * the distinct per-pair LOSERS (the more-central member of each
     * qualifying pair), so one pair frame at the loosest rung — built from
-    * the same materialized assignment [[semdedup]] reads — serves every
+    * the same [[ivfCells]] index [[semdedup]] reads — serves every
     * rung via a 5-row broadcast; no per-rung corpus pass, no re-quantize. */
   def semdedupSweep(spark: SparkSession, dir: String): DataFrame = {
     val assigned = semAssigned(spark, dir)
@@ -1268,29 +1269,20 @@ object Similarity {
     * reaches the fold exchange, carrying PqM small ints instead of the
     * float vector. */
   /** Materialized IVF-PQ index layout (cell, vec_id, m, cid): the codes
-    * table joined to the coarse-cell assignment — the on-disk layout a
-    * build job writes partitioned by cell, so a probe is partition
+    * table joined to the [[ivfCells]] index's cells — the on-disk layout
+    * a build job writes partitioned by cell, so a probe is partition
     * pruning. The vec_id-keyed join runs once per (session, corpus). */
   def ivfPqLayout(spark: SparkSession, dir: String): DataFrame =
     Materialized.frame(spark, dir, "ivfPqLayout") {
       val n = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding").count()
       pqCodes(spark, dir).select(col("vec_id"), col("m"), col("cid"))
-        .join(argminCid(Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding"),
-            ivfCentroids(spark, dir), Seq.empty)
-          .withColumnRenamed("cid", "cell"), "vec_id")
+        .join(ivfCells(spark, dir).select(col("vec_id"), col("cid").as("cell")), "vec_id")
         .coalesce(Scale.loopParts(spark, n * PqM))
     }
 
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val e = Corpus.table(spark, dir, "embeddings").select("vec_id", "embedding")
-    val cents = ivfCentroids(spark, dir)
-    val q = e.orderBy("vec_id").limit(1)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val wq = Window.partitionBy("qid").orderBy(col("qdist"), col("cid"))
-    val probes = cents.crossJoin(broadcast(q))
-      .withColumn("qdist", l2sq("qv", "c"))
-      .withColumn("qrn", row_number().over(wq)).where(col("qrn") <= IvfProbes)
-      .select(col("cid").as("cell"), col("qid"))
+    val q = ivfQuery(spark, dir)
+    val probes = probeCells(spark, dir, q).select(col("cid").as("cell"), col("qid"))
     val qSub = subVecs(q.select(col("qid").as("vec_id"), col("qv").as("embedding")))
       .select(col("vec_id").as("qid"), col("m"), col("sv").as("qsv"))
     val dtab = qSub.join(pqCodebooks(spark, dir), "m")

@@ -42,7 +42,8 @@ class CodegenCacheSpec extends SparkTestBase {
       Session.CodegenCacheEntries.toString)
     // a key's first run builds the session's shared caches; its second run
     // plans over materialized caches and may still compile new classes
-    // (ann_ivf does), its later runs should not
+    // (dedup_minhash does, and ann_ivf in most sessions although it only
+    // probes its stored cell index), its later runs should not
     round(Keys)
     round(Keys.reverse)
     // Spark's default cap of 100 could not hold this many: the session's

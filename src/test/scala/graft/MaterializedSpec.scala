@@ -136,9 +136,11 @@ class MaterializedSpec extends SparkTestBase {
   test("query results do not depend on the order that builds the shared artifacts") {
     val sf = "/root/testdata/sf0.001"
     // keys that share artifacts: the vocabulary, the LSH chain, the
-    // centroids, the tokenized corpus with the DSIR model, the gram counts
+    // centroids with the IVF cell index, the tokenized corpus with the
+    // DSIR model, the gram counts
     val sample = Seq("anagram_groups", "dedup_minhash", "dedup_components", "ann_ivf",
-      "dsir_weights", "kn3_perplexity", "tfidf_top_terms", "longest_repeat")
+      "cluster_purity", "semdedup", "dsir_weights", "kn3_perplexity", "tfidf_top_terms",
+      "longest_repeat")
     def run(order: Seq[String]): Map[String, (Long, String)] =
       order.map(q => q -> ClusterSmoke.fingerprint(SparkEntry.queries(q)(spark, sf))).toMap
     Materialized.clearAll()

@@ -58,8 +58,8 @@ class ScaleSpec extends SparkTestBase {
       val plan = planOf(q)
       assert(plan.contains("TakeOrderedAndProject"), s"$q lost its partial top-k:\n$plan")
     }
-    // these three have no window operator at all (ann_ivf keeps windows
-    // partitioned by vec_id for the cell assignment — those are fine)
+    // these three have no window operator at all (nor has ann_ivf, which
+    // probes the stored cell index; SimilaritySpec pins its plan)
     Seq("ann_topk", "ann_lsh", "word_bigrams").foreach { q =>
       val plan = planOf(q)
       assert(!plan.contains("Window"),

@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import graft.operators.{Dedup, Similarity}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 class SimilaritySpec extends SparkTestBase {
   import spark.implicits._
@@ -65,6 +69,62 @@ class SimilaritySpec extends SparkTestBase {
     assert(rows.contains(2L) && rows(2L) > 0.9)
     assert(!rows.contains(3L) && !rows.contains(4L))
     assert(rows.values.forall(_ >= Similarity.RangeTau))
+  }
+
+  /** Walks a query's own executed plan, AQE stages included; a cached
+    * frame's build plan sits below its InMemoryTableScan and is not walked. */
+  private object PlanNodes extends AdaptiveSparkPlanHelper {
+    def apply(p: SparkPlan): Seq[SparkPlan] = collect(p) { case n => n }
+  }
+
+  test("ann_ivf probes the materialized cell index: no per-query assignment, no window") {
+    val df = Similarity.annIvf(spark, "/root/testdata/sf0.001")
+    assert(df.collect().length == Similarity.TopK)
+    val nodes = PlanNodes(df.queryExecution.executedPlan)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(nodes.exists(_.nodeName == "InMemoryTableScan"), plan)
+    assert(!nodes.exists(_.nodeName == "Window"), plan)
+    val assigning = nodes.filter(_.nodeName == "BroadcastNestedLoopJoin").filter { j =>
+      PlanNodes(j).exists {
+        case s: FileSourceScanExec => s.relation.location.rootPaths
+          .exists(_.toString.contains("embeddings.parquet"))
+        case _ => false
+      }
+    }
+    assert(assigning.isEmpty, s"ann_ivf re-assigns the embeddings per query:\n$plan")
+  }
+
+  /** Code lines of `src/main/scala` (comment and SQL-string lines
+    * skipped) as (file, line number, enclosing def, text). */
+  private lazy val mainCode: Seq[(String, Int, String, String)] = {
+    val Def = """^\s*(?:(?:private|protected)(?:\[\w+\])?\s+)?(?:lazy\s+)?def\s+(\w+)""".r.unanchored
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    files.flatMap { f =>
+      var owner = ""
+      Files.readAllLines(f).asScala.zipWithIndex.flatMap { case (line, i) =>
+        line match { case Def(name) => owner = name; case _ => () }
+        val t = line.trim
+        if (Seq("*", "/*", "//", "|").exists(t.startsWith)) None
+        else Some((f.toString, i + 1, owner, line))
+      }
+    }
+  }
+
+  test("source gate: the cell index is the one assignment, probe selection is written once") {
+    def show(ls: Seq[(String, Int, String, String)]) =
+      ls.map { case (f, n, d, l) => s"$f:$n ($d): ${l.trim}" }.mkString("\n", "\n", "")
+    assert(mainCode.nonEmpty)
+    val assigners = mainCode.filter { case (_, _, _, l) =>
+      l.contains("argminCid(") && !l.contains("def argminCid(") }
+    assert(assigners.map(_._3).sorted == Seq("ivfCells", "lloydRound"), show(assigners))
+    // the query-to-centroid distance and the IvfProbes cut: once each, in
+    // probeCells; no rank column picks probes anywhere
+    val probes = mainCode.filter { case (_, _, _, l) =>
+      l.contains("l2sq(\"qv\"") || l.contains("\"qrn\"") ||
+        (l.contains("IvfProbes") && !l.contains("val IvfProbes")) }
+    assert(probes.map(_._3) == Seq("probeCells", "probeCells"), show(probes))
   }
 
   test("IVF ANN probes nearest cells only (partial recall by design)") {
